@@ -7,7 +7,7 @@ and link-density scores; the densest subtree is kept as the main content.
 
 Pure Python (stdlib ``html`` for entity decoding only); deterministic:
 ties break on document order.  Runs vectorized at the Arrow-batch level
-inside ``mapInPandas`` alongside the PDF kernel.
+inside ``mapInArrow`` alongside the PDF kernel.
 """
 
 from __future__ import annotations

@@ -85,7 +85,7 @@ class RemoteVlmEngine(OcrEngine):
     """OpenAI-compatible /chat/completions OCR client.
 
     Plugs into the same ``recognize_batch`` interface as the stub, so
-    ``extract_docs_batch`` / ``ocr_batch`` need zero changes to run
+    the extraction core (``extract_job._parse_batch``) needs zero changes to run
     against a real vLLM/SiliconFlow endpoint:
 
         engine = RemoteVlmEngine(base_url, api_key, model)

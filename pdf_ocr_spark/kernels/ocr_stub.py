@@ -9,7 +9,7 @@ OpenAI-compatible VLM endpoint batched per partition
 has no OCR models, so the stub is a pure deterministic function: fixture
 "scanned" pages embed their ground-truth text in the image stream behind a
 marker, and unknown images produce a stable fingerprint line.  The Spark
-plumbing around it — partition-batched ``mapInPandas``, one engine init per
+plumbing around it — partition-batched ``mapInArrow``, one engine init per
 executor python worker, confidence filtering — is real and is what the
 benchmark measures.
 """

@@ -12,9 +12,8 @@ match on the same regexes."""
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -25,6 +24,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from pdf_ocr_spark.pipeline.extract_job import kernel_route, per_doc
 
 ROBOTS_RULE_SCHEMA = StructType(
     [
@@ -39,27 +40,16 @@ ROBOTS_RULE_SCHEMA = StructType(
 )
 
 
-def _rules_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+@per_doc()
+def robots_rule_rows(domain, body):
     from pdf_ocr_spark.kernels.robots import parse_robots
 
-    cols = [f.name for f in ROBOTS_RULE_SCHEMA.fields]
-    for batch in batches:
-        rows = []
-        for domain, body in zip(batch["domain"], batch["body"]):
-            try:
-                text = (
-                    bytes(body).decode("utf-8", "replace")
-                    if not isinstance(body, str)
-                    else body
-                )
-                for r in parse_robots(text):
-                    rows.append(
-                        (domain, r.agent, r.allow, r.pattern, r.regex,
-                         r.specificity, r.order)
-                    )
-            except Exception:  # noqa: BLE001 — poison robots must not raise
-                continue
-        yield pd.DataFrame(rows, columns=cols)
+    for r in parse_robots(_robots_text(body)):
+        yield (domain, r.agent, r.allow, r.pattern, r.regex, r.specificity, r.order)
+
+
+def _robots_text(body) -> str:
+    return body if isinstance(body, str) else body.decode("utf-8", "replace")
 
 
 def robots_rules(
@@ -68,10 +58,8 @@ def robots_rules(
     """robots(domain, body) → one row per Allow/Disallow rule with its
     anchored RE2-safe regex and specificity (kernel parse per RFC 9309,
     including the empty-Disallow allow-all group sentinel)."""
-    from pdf_ocr_spark.pipeline.extract_job import kernel_route
-
     return kernel_route(
-        robots_df, _rules_batch, ROBOTS_RULE_SCHEMA,
+        robots_df, robots_rule_rows, ROBOTS_RULE_SCHEMA,
         key="domain", cols=("domain", "body"),
         num_partitions=num_partitions,
     )
@@ -156,24 +144,12 @@ DELAY_SCHEMA = StructType(
 )
 
 
-def _delays_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+@per_doc()
+def crawl_delay_rows(domain, body):
     from pdf_ocr_spark.kernels.robots import parse_crawl_delays
 
-    cols = [f.name for f in DELAY_SCHEMA.fields]
-    for batch in batches:
-        rows = []
-        for domain, body in zip(batch["domain"], batch["body"]):
-            try:
-                text = (
-                    bytes(body).decode("utf-8", "replace")
-                    if not isinstance(body, str)
-                    else body
-                )
-                for agent, delay in parse_crawl_delays(text):
-                    rows.append((domain, agent, delay))
-            except Exception:  # noqa: BLE001 — poison robots must not raise
-                continue
-        yield pd.DataFrame(rows, columns=cols)
+    for agent, delay in parse_crawl_delays(_robots_text(body)):
+        yield (domain, agent, delay)
 
 
 def robots_delays(
@@ -182,10 +158,8 @@ def robots_delays(
     """robots(domain, body) → per-agent-group Crawl-delay seconds — the
     politeness rate limit a frontier scheduler divides each domain's
     fetch budget by."""
-    from pdf_ocr_spark.pipeline.extract_job import kernel_route
-
     return kernel_route(
-        robots_df, _delays_batch, DELAY_SCHEMA,
+        robots_df, crawl_delay_rows, DELAY_SCHEMA,
         key="domain", cols=("domain", "body"),
         num_partitions=num_partitions,
     )
@@ -200,24 +174,12 @@ SITEMAP_SCHEMA = StructType(
 )
 
 
-def _sitemaps_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+@per_doc()
+def robots_sitemap_rows(domain, body):
     from pdf_ocr_spark.kernels.robots import parse_sitemaps
 
-    cols = [f.name for f in SITEMAP_SCHEMA.fields]
-    for batch in batches:
-        rows = []
-        for domain, body in zip(batch["domain"], batch["body"]):
-            try:
-                text = (
-                    bytes(body).decode("utf-8", "replace")
-                    if not isinstance(body, str)
-                    else body
-                )
-                for i, u in enumerate(parse_sitemaps(text)):
-                    rows.append((domain, u, i))
-            except Exception:  # noqa: BLE001 — poison robots must not raise
-                continue
-        yield pd.DataFrame(rows, columns=cols)
+    for i, u in enumerate(parse_sitemaps(_robots_text(body))):
+        yield (domain, u, i)
 
 
 def robots_sitemaps(
@@ -225,10 +187,8 @@ def robots_sitemaps(
 ) -> DataFrame:
     """robots(domain, body) → declared Sitemap URLs (document order) —
     the frontier-seeding discovery source alongside extracted links."""
-    from pdf_ocr_spark.pipeline.extract_job import kernel_route
-
     return kernel_route(
-        robots_df, _sitemaps_batch, SITEMAP_SCHEMA,
+        robots_df, robots_sitemap_rows, SITEMAP_SCHEMA,
         key="domain", cols=("domain", "body"),
         num_partitions=num_partitions,
     )
@@ -244,21 +204,12 @@ SITEMAP_URL_SCHEMA = StructType(
 )
 
 
-def _sitemap_urls_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+@per_doc()
+def sitemap_url_rows(url, body):
     from pdf_ocr_spark.kernels.robots import parse_sitemap_xml
 
-    cols = [f.name for f in SITEMAP_URL_SCHEMA.fields]
-    for batch in batches:
-        rows = []
-        for url, body in zip(batch["url"], batch["body"]):
-            try:
-                for loc, lastmod, kind in parse_sitemap_xml(
-                    bytes(body) if body is not None else b""
-                ):
-                    rows.append((url, loc, lastmod, kind))
-            except Exception:  # noqa: BLE001 — poison sitemaps must not raise
-                continue
-        yield pd.DataFrame(rows, columns=cols)
+    for loc, lastmod, kind in parse_sitemap_xml(body):
+        yield (url, loc, lastmod, kind)
 
 
 def sitemap_urls(
@@ -268,10 +219,8 @@ def sitemap_urls(
     lastmod and whether the entry is a page ('url') or a nested sitemap
     ('sitemap', which the fetch loop enqueues recursively).  Gzipped
     documents decompress in-kernel."""
-    from pdf_ocr_spark.pipeline.extract_job import kernel_route
-
     return kernel_route(
-        sitemaps_df, _sitemap_urls_batch, SITEMAP_URL_SCHEMA,
+        sitemaps_df, sitemap_url_rows, SITEMAP_URL_SCHEMA,
         key="url", cols=("url", "body"),
         num_partitions=num_partitions,
     )
@@ -326,21 +275,12 @@ FEED_ITEM_SCHEMA = StructType(
 )
 
 
-def _feed_items_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+@per_doc()
+def feed_item_rows(url, body):
     from pdf_ocr_spark.kernels.robots import parse_feed
 
-    cols = [f.name for f in FEED_ITEM_SCHEMA.fields]
-    for batch in batches:
-        rows = []
-        for url, body in zip(batch["url"], batch["body"]):
-            try:
-                for link, title, date in parse_feed(
-                    bytes(body) if body is not None else b""
-                ):
-                    rows.append((url, link, title, date))
-            except Exception:  # noqa: BLE001 — poison feeds must not raise
-                continue
-        yield pd.DataFrame(rows, columns=cols)
+    for link, title, date in parse_feed(body):
+        yield (url, link, title, date)
 
 
 def feed_items(
@@ -350,10 +290,8 @@ def feed_items(
     third frontier channel next to sitemaps and page links; feeds
     surface NEW content fastest, so their items seed the high-priority
     queue.  RSS and Atom both parse; gzip transparent."""
-    from pdf_ocr_spark.pipeline.extract_job import kernel_route
-
     return kernel_route(
-        feeds_df, _feed_items_batch, FEED_ITEM_SCHEMA,
+        feeds_df, feed_item_rows, FEED_ITEM_SCHEMA,
         key="url", cols=("url", "body"),
         num_partitions=num_partitions,
     )

@@ -13,10 +13,14 @@ partition-local).  The HOT PATH is fully fused:
          inside the UDF rather than as a shuffle)
      → sink: parquet (Iceberg-compatible layout) + lineage sidecar
 
-A page-level route (``extract_batch`` → ``ocr_batch`` →
-``assemble_documents``) is kept as the page-table API and as the
-semantics oracle for the fused path; tests assert both emit identical
-documents.
+One semantic core, :func:`_parse_batch`, turns payloads into pages; the
+document rows (:func:`doc_rows`) and the page rows (:func:`page_rows`)
+are both derived from its output, so the page table and the document
+table cannot drift apart.  Every kernel route — documents, pages, and
+the side tables (blocks, rasters, HTML metadata, …) — runs through
+:func:`kernel_route`: one salted repartition and one ``mapInArrow``
+stage through the one Arrow adapter, :func:`arrow_map`; the side routes
+isolate poison documents through :func:`per_doc`.
 
 Resume (J3, the north rule): restarts anti-join the input against the
 already-committed output's urls — only the remainder is processed.
@@ -29,10 +33,11 @@ boilerplate-stripped main text with no page headers — HTML is unpaginated).
 
 from __future__ import annotations
 
+import functools
 import os
-from typing import Iterator, Optional
+from itertools import repeat
+from typing import Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -63,16 +68,21 @@ PAGE_SCHEMA = StructType(
     ]
 )
 
-DOC_SCHEMA_COLS = [
-    "url",
-    "content_kind",
-    "extracted_text",
-    "n_pages",
-    "n_blocks",
-    "n_chars",
-    "status",
-    "failure_reason",
-]
+
+DOC_SCHEMA = StructType(
+    [
+        StructField("url", StringType()),
+        StructField("content_kind", StringType()),
+        StructField("extracted_text", StringType()),
+        StructField("n_pages", IntegerType()),
+        StructField("n_blocks", IntegerType()),
+        StructField("n_chars", IntegerType()),
+        StructField("status", StringType()),
+        StructField("failure_reason", StringType()),
+        StructField("n_bytes", LongType()),
+        StructField("n_ocr_pages", IntegerType()),
+    ]
+)
 
 
 _GC_TUNED = False
@@ -125,6 +135,7 @@ def looks_like_pdf(data: bytes) -> bool:
     )
 
 
+
 def _tune_worker_gc() -> None:
     """Once per executor python worker: freeze the post-import heap out of
     the cyclic collector and raise its thresholds.  The kernels allocate
@@ -142,235 +153,253 @@ def _tune_worker_gc() -> None:
     _GC_TUNED = True
 
 
-def extract_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Arrow-batched document extractor (runs on executors).
+def _record_batch(rows: list, arrow_schema):
+    """Row tuples → one RecordBatch typed by ``arrow_schema``."""
+    import pyarrow as pa
 
-    One call per Arrow batch; per-document try/except so a poison row
-    yields a lineage row, never a task failure (SURVEY.md §4.1)."""
-    # imports inside: the function must be self-contained for pickling
+    cols = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+
+
+def arrow_map(rows_fn, schema: StructType):
+    """The one Arrow adapter: wraps a rows function — one plain list per
+    input column in, row tuples out — as a ``mapInArrow`` body whose
+    output types come from ``to_arrow_schema(schema)``.  No pandas layer
+    appears in the worker (the pandas adapter it replaced measured 10–18%
+    lower pipeline throughput at 8/32 cores on the synthetic corpus)."""
+
+    def run(batches):
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        _tune_worker_gc()
+        arrow_schema = to_arrow_schema(schema)
+        for rb in batches:
+            yield _record_batch(
+                rows_fn(*(c.to_pylist() for c in rb.columns)), arrow_schema
+            )
+
+    return run
+
+
+def per_doc(gate: Optional[str] = None):
+    """The one per-document wrapper: turns ``fn(key, payload)`` — a
+    generator of row tuples for one document — into a rows function over
+    a batch (``rows_fn(keys, payloads, *passthrough)``).
+
+    ``gate`` skips the payloads a route has no kernel for: ``'pdf'``
+    keeps sniffed PDFs only, ``'html'`` keeps non-empty non-PDFs only.  A
+    document whose kernel raises ends there — rows it already yielded
+    stay, the rest of the batch goes on (poison-row isolation, SURVEY.md
+    §4.1).  Input columns after the payload pass through unchanged onto
+    every row of their document."""
+
+    def wrap(fn):
+        @functools.wraps(fn)
+        def rows_fn(keys, payloads, *passthrough):
+            out = []
+            extras = zip(*passthrough) if passthrough else repeat(())
+            for key, payload, extra in zip(keys, payloads, extras):
+                data = b"" if payload is None else payload
+                if gate == "pdf" and not looks_like_pdf(data):
+                    continue
+                if gate == "html" and (not data or looks_like_pdf(data)):
+                    continue
+                try:
+                    for row in fn(key, data):
+                        out.append(row + extra)
+                except Exception:  # noqa: BLE001 — poison-row isolation
+                    continue
+            return out
+
+        return rows_fn
+
+    return wrap
+
+
+def _parse_batch(urls, payloads, ranges=None) -> list:
+    """The one extraction core: a batch of payloads → documents of pages.
+
+    Each document is ``(url, kind, status, reason, n_bytes, pages)`` with
+    pages ``[page_num, text, n_blocks, was_ocr, ocr_failure]`` in page
+    order; :func:`page_rows` and :func:`doc_rows` are both derived from
+    it.  The payload is sniffed (:func:`looks_like_pdf`) into
+    ``extract_pdf`` or ``extract_html``; a row with a ``(page_lo,
+    page_hi)`` range is a giant PDF slice whose page numbers stay global.
+
+    OCR batching: all image-only pages of the batch go to the engine as
+    ONE ``recognize_batch`` call (the reference's batched-inference
+    pattern, /root/reference/pdf_ocr_with_silicon_remote_vllm.py:162-232).
+    An engine failure marks only its page (``ocr_failure``); the document
+    row turns it into the typed transient failure."""
     from pdf_ocr_spark.kernels.html_extract import extract_html
+    from pdf_ocr_spark.kernels.ocr_stub import get_engine, ocr_page_text
     from pdf_ocr_spark.kernels.pdf.extract import extract_pdf
 
-    _tune_worker_gc()
-
-    for pdf_batch in batches:
-        rows = []
-        for url, payload in zip(pdf_batch["url"], pdf_batch["html"]):
-            data = bytes(payload) if payload is not None else b""
-            n_bytes = len(data)
-            try:
-                if looks_like_pdf(data):
-                    doc = extract_pdf(data)
-                    if doc.status != "ok":
-                        rows.append(
-                            (url, "pdf", 0, None, 0, False, None,
-                             "failed", doc.failure_reason, n_bytes)
-                        )
-                        continue
-                    for p in doc.pages:
-                        rows.append(
-                            (url, "pdf", p.page_num,
-                             None if p.needs_ocr else p.text,
-                             p.n_blocks, p.needs_ocr, p.ocr_payload,
-                             "ok", None, n_bytes)
-                        )
-                else:
-                    text, status, reason = extract_html(data)
-                    rows.append(
-                        (url, "html", 1, text if status == "ok" else None,
-                         text.count("\n") + 1 if text else 0, False, None,
-                         status, reason, n_bytes)
-                    )
-            except Exception as e:  # noqa: BLE001 — poison-row isolation
-                rows.append(
-                    (url, "unknown", 0, None, 0, False, None,
-                     "failed", f"kernel_crash: {type(e).__name__}", n_bytes)
-                )
-        yield pd.DataFrame(rows, columns=[f.name for f in PAGE_SCHEMA.fields])
-
-
-def ocr_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Batched OCR inference over image-only pages (K2).
-
-    The engine is initialized lazily once per executor python worker —
-    the reference's load-model-once pattern
-    (/root/reference/parse_student_answers.py:143-175).  In production the
-    stub is swapped for a PaddleOCR/vLLM client; batching shape
-    (many pages per call) mirrors the remote-VLM script's per-page calls
-    amortized per partition
-    (/root/reference/pdf_ocr_with_silicon_remote_vllm.py:162-232)."""
-    from pdf_ocr_spark.kernels.ocr_stub import get_engine, ocr_page_text
-
-    engine = get_engine()
-    for pdf_batch in batches:
-        mask = pdf_batch["needs_ocr"].fillna(False).astype(bool)
-        if not mask.any():
-            # pure pass-through batch: no inference, no copies
-            yield pdf_batch.assign(ocr_payload=None)
-            continue
-        images = [
-            bytes(b) if b is not None else None
-            for b in pdf_batch.loc[mask, "ocr_payload"]
-        ]
-        results = engine.recognize_batch(images)
-        texts = [ocr_page_text(boxes) for boxes in results]
-        out = pdf_batch.copy()
-        for i, t in zip(out.index[mask], texts):
-            if t is None:  # engine failure marker — NOT a blank page
-                out.loc[i, "status"] = "failed"
-                out.loc[i, "failure_reason"] = OCR_FAILED_REASON
+    docs = []
+    ocr_jobs = []  # (page, payload)
+    for url, payload, rng in zip(urls, payloads, ranges or repeat(None)):
+        data = bytes(payload) if payload is not None else b""
+        n_bytes = len(data)
+        try:
+            if rng is not None or looks_like_pdf(data):
+                doc = extract_pdf(data, *rng) if rng is not None else extract_pdf(data)
+                if doc.status != "ok":
+                    docs.append((url, "pdf", "failed", doc.failure_reason, n_bytes, []))
+                    continue
+                pages = []
+                for p in doc.pages:
+                    page = [p.page_num, None if p.needs_ocr else p.text,
+                            p.n_blocks, p.needs_ocr, None]
+                    if p.needs_ocr:
+                        ocr_jobs.append((page, p.ocr_payload))
+                    pages.append(page)
+                docs.append((url, "pdf", "ok", None, n_bytes, pages))
             else:
-                out.loc[i, "page_text"] = t
-        # needs_ocr stays True as the was-OCR marker (the text is filled in)
-        # so assemble_documents / lineage_metrics count n_ocr_pages the same
-        # on every route — matches extract_range_batch's contract
-        out["ocr_payload"] = None
-        yield out
+                text, status, reason = extract_html(data)
+                n_blocks = text.count("\n") + 1 if text else 0
+                docs.append(
+                    (url, "html", status, reason, n_bytes,
+                     [[1, text if status == "ok" else None, n_blocks, False, None]])
+                )
+        except Exception as e:  # noqa: BLE001 — poison-row isolation
+            # a range row is a PDF by construction (the page-count pass)
+            docs.append(
+                (url, "unknown" if rng is None else "pdf", "failed",
+                 f"kernel_crash: {type(e).__name__}", n_bytes, [])
+            )
+    if ocr_jobs:
+        results = get_engine().recognize_batch([p for _, p in ocr_jobs])
+        for (page, _), boxes in zip(ocr_jobs, results):
+            text = ocr_page_text(boxes)
+            if text is None:  # engine failure after retries → typed failure
+                page[4] = OCR_FAILED_REASON
+            else:
+                page[1] = text
+    return docs
 
 
-DOC_SCHEMA = StructType(
-    [
-        StructField("url", StringType()),
-        StructField("content_kind", StringType()),
-        StructField("extracted_text", StringType()),
-        StructField("n_pages", IntegerType()),
-        StructField("n_blocks", IntegerType()),
-        StructField("n_chars", IntegerType()),
-        StructField("status", StringType()),
-        StructField("failure_reason", StringType()),
-        StructField("n_bytes", LongType()),
-        StructField("n_ocr_pages", IntegerType()),
-    ]
-)
+def page_rows(urls, payloads, *page_range) -> list:
+    """PAGE_SCHEMA rows of the core's output: one per page, or one page-0
+    row for a document that failed before it had pages.  ``needs_ocr``
+    stays True on OCR'd pages as the was-OCR marker (the text is filled
+    in), so lineage counts OCR pages the same on every route.  Optional
+    ``page_lo, page_hi`` columns restrict each row to a page range."""
+    rows = []
+    ranges = list(zip(*page_range)) or None
+    for url, kind, status, reason, n_bytes, pages in _parse_batch(
+        urls, payloads, ranges
+    ):
+        if status == "failed" and not pages:
+            rows.append((url, kind, 0, None, 0, False, None, "failed", reason, n_bytes))
+        for num, text, n_blocks, was_ocr, ocr_failure in pages:
+            rows.append(
+                (url, kind, num, text, n_blocks, was_ocr, None,
+                 "failed" if ocr_failure else status,
+                 ocr_failure or reason, n_bytes)
+            )
+    return rows
+
+
+def doc_rows(urls, payloads, *passthrough) -> list:
+    """DOC_SCHEMA rows of the core's output, one per input row in input
+    order; trailing input columns pass through onto their row."""
+    rows = []
+    for url, kind, status, reason, n_bytes, pages in _parse_batch(urls, payloads):
+        ocr_failure = next((p[4] for p in pages if p[4]), None)
+        if ocr_failure:
+            status, reason = "failed", ocr_failure
+        rows.append(
+            _assemble_doc(url, kind, [p[:3] for p in pages], status, reason,
+                          n_bytes, sum(p[3] for p in pages))
+        )
+    if passthrough:
+        rows = [r + x for r, x in zip(rows, zip(*passthrough))]
+    return rows
 
 
 def _assemble_doc(
     url: str,
     kind: str,
-    pages: list,  # [(page_num, text_or_None, n_blocks)] in page order
+    pages: list,  # [(page_num, text_or_None, n_blocks)]
     status: str,
     reason,
     n_bytes: int,
     n_ocr: int = 0,
 ) -> tuple:
-    """Kernel-side twin of :func:`assemble_documents` — MUST keep the
-    byte-identical text semantics (v2's '# 第 {i} 页\\n\\n…\\n\\n' chunks
-    for PDFs, raw concatenation for unpaginated HTML)."""
+    """One DOC_SCHEMA row: v2's '# 第 {i} 页\\n\\n…\\n\\n' page chunks for
+    PDFs (``page_header``), raw concatenation for unpaginated HTML."""
+    from pdf_ocr_spark.kernels.pdf.extract import page_header
+
     if status == "failed":
         return (url, kind, None, 0, 0, 0, "failed", reason, n_bytes, 0)
     pages = sorted(pages, key=lambda p: p[0])
     if kind == "pdf":
-        text = "".join(
-            "# 第 %d 页\n\n%s\n\n" % (p, t if t is not None else "")
-            for p, t, _ in pages
-        )
+        text = "".join(page_header(p, t or "") for p, t, _ in pages)
     else:
-        text = "".join(t if t is not None else "" for _, t, _ in pages)
+        text = "".join(t or "" for _, t, _ in pages)
     n_pages = max(p for p, _, _ in pages)
     n_blocks = sum(b for _, _, b in pages)
     return (url, kind, text, n_pages, n_blocks, len(text), "ok", None, n_bytes, n_ocr)
 
 
-def _parse_batch(urls, payloads, engine):
-    """Shared fused-extractor core: parse + batched OCR + per-doc
-    assembly for one batch of documents.  Returns (doc_rows, engine).
-
-    OCR batching semantics: all image-only pages of the batch go to the
-    engine as ONE ``recognize_batch`` call (the reference's
-    batched-inference pattern,
-    /root/reference/pdf_ocr_with_silicon_remote_vllm.py:162-232)."""
-    from pdf_ocr_spark.kernels.html_extract import extract_html
-    from pdf_ocr_spark.kernels.ocr_stub import get_engine, ocr_page_text
-    from pdf_ocr_spark.kernels.pdf.extract import extract_pdf
-
-    docs = []  # (url, kind, pages[(num,text,n_blocks)], status, reason, n_bytes)
-    ocr_jobs = []  # (doc_idx, page_slot, payload)
-    for url, payload in zip(urls, payloads):
-        data = bytes(payload) if payload is not None else b""
-        n_bytes = len(data)
-        try:
-            if looks_like_pdf(data):
-                doc = extract_pdf(data)
-                if doc.status != "ok":
-                    docs.append((url, "pdf", [], "failed", doc.failure_reason, n_bytes))
-                    continue
-                pages = []
-                for p in doc.pages:
-                    if p.needs_ocr:
-                        ocr_jobs.append((len(docs), len(pages), p.ocr_payload))
-                        pages.append([p.page_num, None, p.n_blocks])
-                    else:
-                        pages.append([p.page_num, p.text, p.n_blocks])
-                docs.append((url, "pdf", pages, "ok", None, n_bytes))
-            else:
-                text, status, reason = extract_html(data)
-                n_blocks = text.count("\n") + 1 if text else 0
-                docs.append(
-                    (url, "html",
-                     [[1, text if status == "ok" else None, n_blocks]],
-                     status, reason, n_bytes)
-                )
-        except Exception as e:  # noqa: BLE001 — poison-row isolation
-            docs.append(
-                (url, "unknown", [], "failed",
-                 f"kernel_crash: {type(e).__name__}", n_bytes)
-            )
-    ocr_counts = [0] * len(docs)
-    if ocr_jobs:
-        if engine is None:
-            engine = get_engine()
-        results = engine.recognize_batch([p for _, _, p in ocr_jobs])
-        for (di, slot, _), boxes in zip(ocr_jobs, results):
-            text = ocr_page_text(boxes)
-            if text is None:  # engine failure after retries → typed failure
-                u, k, _pages, _s, _r, nb = docs[di]
-                docs[di] = (u, k, [], "failed", OCR_FAILED_REASON, nb)
-                continue
-            if docs[di][3] == "failed":
-                continue  # a sibling page already failed this document
-            docs[di][2][slot][1] = text
-            ocr_counts[di] += 1
-    return [_assemble_doc(*d, n_ocr=c) for d, c in zip(docs, ocr_counts)], engine
-
-
-def extract_docs_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Fused document extractor, pandas flavor (``mapInPandas``)."""
-    _tune_worker_gc()
-    engine = None
-    for pdf_batch in batches:
-        rows, engine = _parse_batch(pdf_batch["url"], pdf_batch["html"], engine)
-        yield pd.DataFrame(rows, columns=[f.name for f in DOC_SCHEMA.fields])
-
-
 def extract_docs_arrow(batches):
-    """Fused document extractor, Arrow flavor (``mapInArrow``) — the HOT
-    path: skips the pandas construction/conversion on both sides of the
-    worker (measured +10–18% pipeline throughput over ``mapInPandas`` at
-    8/32 cores on the synthetic corpus).
+    """Fused document extractor (``mapInArrow`` body of the HOT path):
+    parse, batched OCR and per-doc assembly in one Arrow pass.  The
+    explicit ``repartition(xxhash64(url))`` already co-locates whole
+    documents, so the per-url aggregation is partition-local by
+    construction and runs inside this UDF."""
+    return arrow_map(doc_rows, DOC_SCHEMA)(batches)
 
-    The page-level route (``extract_batch`` → ``ocr_batch`` →
-    ``assemble_documents``) round-trips every page row through Arrow twice
-    and shuffles again for the groupBy; but the explicit
-    ``repartition(xxhash64(url))`` already co-locates whole documents, so
-    the aggregation is partition-local by construction and runs inside
-    this UDF."""
-    import pyarrow as pa
 
-    _tune_worker_gc()
-    engine = None
-    types = (
-        pa.string(), pa.string(), pa.string(), pa.int32(), pa.int32(),
-        pa.int32(), pa.string(), pa.string(), pa.int64(), pa.int32(),
-    )
-    names = [f.name for f in DOC_SCHEMA.fields]
-    for rb in batches:
-        rows, engine = _parse_batch(
-            rb.column(0).to_pylist(), rb.column(1).to_pylist(), engine
+def kernel_route(
+    pages_df: DataFrame,
+    rows_fn,
+    schema: StructType,
+    key: str = "url",
+    cols: tuple = ("url", "html"),
+    num_partitions: Optional[int] = None,
+) -> DataFrame:
+    """The shared plan shape of every kernel extraction route: scan
+    pruned to ``cols`` → ONE salted repartition on ``xxhash64(key)``
+    (bounds giant-payload skew; the job's single planned shuffle) → one
+    ``mapInArrow`` stage running ``rows_fn`` through :func:`arrow_map`.
+    Changing the salting key or the parallelism floor happens HERE, once,
+    for all routes."""
+    df = pages_df.select(*cols)
+    if num_partitions is None:
+        num_partitions = max(
+            pages_df.sparkSession.sparkContext.defaultParallelism, 8
         )
-        cols = list(zip(*rows)) if rows else [[] for _ in names]
-        yield pa.record_batch(
-            [pa.array(c, t) for c, t in zip(cols, types)], names=names
-        )
+    df = df.repartition(num_partitions, F.xxhash64(key))
+    return df.mapInArrow(arrow_map(rows_fn, schema), schema=schema)
+
+
+def extract_documents(
+    pages_df: DataFrame, num_partitions: Optional[int] = None
+) -> DataFrame:
+    """Full pipeline: pages table → document-level extraction results.
+
+    Physical plan: scan → repartition(P, xxhash64(url)) → ONE fused
+    mapInArrow stage (parse + batched OCR + per-doc assembly).  A single
+    shuffle total; no groupBy, no second Arrow round-trip, no pandas
+    layer in the worker."""
+    return kernel_route(pages_df, doc_rows, DOC_SCHEMA, num_partitions=num_partitions)
+
+
+def extract_pages(
+    pages_df: DataFrame,
+    num_partitions: Optional[int] = None,
+) -> DataFrame:
+    """pages(url, html, …) → page-level extraction rows (PAGE_SCHEMA).
+
+    Same plan as the document route — the explicit ``repartition(P,
+    xxhash64(url))`` is the single planned shuffle (it spreads documents
+    uniformly regardless of input file layout, bounding skew from giant
+    PDFs, SURVEY.md §4.1) and parse + OCR run in one python stage."""
+    return kernel_route(pages_df, page_rows, PAGE_SCHEMA, num_partitions=num_partitions)
 
 
 BLOCK_SCHEMA = StructType(
@@ -386,9 +415,19 @@ BLOCK_SCHEMA = StructType(
 )
 
 
-def extract_blocks_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Block-level extractor (runs on executors): one row per typed layout
-    block with bbox + confidence — the reference's blocks JSON sink
+@per_doc("pdf")
+def _parsed_pdfs(url, data):
+    """(url, DocExtract) for every PDF of the batch that parses."""
+    from pdf_ocr_spark.kernels.pdf.extract import extract_pdf
+
+    doc = extract_pdf(data)
+    if doc.status == "ok":
+        yield (url, doc)
+
+
+def block_rows(urls, payloads) -> list:
+    """Block-level rows: one per typed layout block with bbox + confidence
+    — the reference's blocks JSON sink
     (/root/reference/pdf_ocr_with_boxes_v3.py:220-227,374-377,430-441)
     as a queryable table (SURVEY.md §1.3 documents → pages → blocks).
 
@@ -401,80 +440,39 @@ def extract_blocks_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFra
     OCR-failed pages emit no rows — the doc-level route carries the typed
     ``ocr_failed`` failure."""
     from pdf_ocr_spark.kernels.ocr_stub import OCR_MIN_CONFIDENCE, get_engine
-    from pdf_ocr_spark.kernels.pdf.extract import extract_pdf
 
-    _tune_worker_gc()
-    engine = None
-    cols = [f.name for f in BLOCK_SCHEMA.fields]
-    for pdf_batch in batches:
-        rows = []
-        ocr_jobs = []  # (url, page_num, payload)
-        for url, payload in zip(pdf_batch["url"], pdf_batch["html"]):
-            data = bytes(payload) if payload is not None else b""
-            if not looks_like_pdf(data):
-                continue
-            try:
-                doc = extract_pdf(data)
-            except Exception:  # noqa: BLE001 — poison-row isolation
-                continue
-            if doc.status != "ok":
-                continue
-            for blk in doc.blocks:
-                rows.append(
-                    (url, blk.page_num, blk.block_index, blk.type,
-                     [float(v) for v in blk.bbox], blk.text, blk.confidence)
-                )
-            for p in doc.pages:
-                if p.needs_ocr:
-                    ocr_jobs.append((url, p.page_num, p.ocr_payload))
-        if ocr_jobs:
-            if engine is None:
-                engine = get_engine()
-            results = engine.recognize_batch([p for _, _, p in ocr_jobs])
-            for (url, pnum, _), boxes in zip(ocr_jobs, results):
-                if boxes is None:
-                    continue  # OCR failed — typed failure lives doc-level
-                idx = 0
-                for text, conf in boxes:
-                    if conf > OCR_MIN_CONFIDENCE and text.strip():
-                        rows.append((url, pnum, idx, "ocr", None, text, float(conf)))
-                        idx += 1
-        yield pd.DataFrame(rows, columns=cols)
-
-
-def kernel_route(
-    pages_df: DataFrame,
-    batch_fn,
-    schema: StructType,
-    key: str = "url",
-    cols: tuple = ("url", "html"),
-    num_partitions: Optional[int] = None,
-) -> DataFrame:
-    """The shared plan shape of every kernel extraction route: scan
-    pruned to ``cols`` → ONE salted repartition on ``xxhash64(key)``
-    (bounds giant-payload skew; the job's single planned shuffle) → one
-    python stage running ``batch_fn``.  Changing the salting key or the
-    parallelism floor happens HERE, once, for all routes."""
-    df = pages_df.select(*cols)
-    if num_partitions is None:
-        num_partitions = max(
-            pages_df.sparkSession.sparkContext.defaultParallelism, 8
+    rows = []
+    ocr_jobs = []  # (url, page_num, payload)
+    for url, doc in _parsed_pdfs(urls, payloads):
+        for blk in doc.blocks:
+            rows.append(
+                (url, blk.page_num, blk.block_index, blk.type,
+                 [float(v) for v in blk.bbox], blk.text, blk.confidence)
+            )
+        ocr_jobs.extend(
+            (url, p.page_num, p.ocr_payload) for p in doc.pages if p.needs_ocr
         )
-    df = df.repartition(num_partitions, F.xxhash64(key))
-    return df.mapInPandas(batch_fn, schema=schema)
+    if ocr_jobs:
+        results = get_engine().recognize_batch([p for _, _, p in ocr_jobs])
+        for (url, pnum, _), boxes in zip(ocr_jobs, results):
+            if boxes is None:
+                continue  # OCR failed — typed failure lives doc-level
+            idx = 0
+            for text, conf in boxes:
+                if conf > OCR_MIN_CONFIDENCE and text.strip():
+                    rows.append((url, pnum, idx, "ocr", None, text, float(conf)))
+                    idx += 1
+    return rows
 
 
 def extract_blocks(
     pages_df: DataFrame, num_partitions: Optional[int] = None
 ) -> DataFrame:
     """pages(url, html, …) → block-level table: one row per layout block.
-
-    Same plan shape as the document route — scan pruned to (url, html),
-    one salted repartition, one python stage — so the blocks table scales
+    Same plan shape as the document route, so the blocks table scales
     exactly like the hot path."""
     return kernel_route(
-        pages_df, extract_blocks_batch, BLOCK_SCHEMA,
-        num_partitions=num_partitions,
+        pages_df, block_rows, BLOCK_SCHEMA, num_partitions=num_partitions
     )
 
 
@@ -489,7 +487,8 @@ COMPOSITE_SCHEMA = StructType(
 )
 
 
-def extract_composites_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+@per_doc("pdf")
+def composite_rows(url, data):
     """Composite-block renderer (v4 semantics): per table/figure on a
     page, the reference's exact composite string —
     'table caption: …\\ntable body: …\\ntable footnote: …' /
@@ -499,34 +498,21 @@ def extract_composites_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.Dat
     from pdf_ocr_spark.kernels.pdf.extract import extract_pdf
     from pdf_ocr_spark.kernels.pdf.layout import composite_text
 
-    _tune_worker_gc()
-    cols = [f.name for f in COMPOSITE_SCHEMA.fields]
-    for pdf_batch in batches:
-        rows = []
-        for url, payload in zip(pdf_batch["url"], pdf_batch["html"]):
-            data = bytes(payload) if payload is not None else b""
-            if not looks_like_pdf(data):
-                continue
-            try:
-                doc = extract_pdf(data)
-            except Exception:  # noqa: BLE001 — poison-row isolation
-                continue
-            if doc.status != "ok":
-                continue
-            for page, idx, text in composite_text(doc.blocks):
-                kind = "image" if text.startswith("image caption:") else "table"
-                rows.append((url, page, idx, kind, text))
-        yield pd.DataFrame(rows, columns=cols)
+    doc = extract_pdf(data)
+    if doc.status != "ok":
+        return
+    for page, idx, text in composite_text(doc.blocks):
+        kind = "image" if text.startswith("image caption:") else "table"
+        yield (url, page, idx, kind, text)
 
 
 def extract_composites(
     pages_df: DataFrame, num_partitions: Optional[int] = None
 ) -> DataFrame:
     """pages(url, html, …) → composite-block table (v4): one row per
-    table/figure with its rendered caption/body/footnote string.  Same
-    plan shape as the other extraction routes."""
+    table/figure with its rendered caption/body/footnote string."""
     return kernel_route(
-        pages_df, extract_composites_batch, COMPOSITE_SCHEMA,
+        pages_df, composite_rows, COMPOSITE_SCHEMA,
         num_partitions=num_partitions,
     )
 
@@ -543,10 +529,11 @@ RASTER_SCHEMA = StructType(
 )
 
 
-def extract_rasters_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Page rasterizer route (runs on executors): renders every PDF page
-    to the deterministic coverage bitmap (kernels/pdf/raster.py — the
-    from-scratch twin of the reference's pdf_to_images,
+@per_doc("pdf")
+def raster_rows(url, data):
+    """Page rasterizer: renders every PDF page to the deterministic
+    coverage bitmap (kernels/pdf/raster.py — the from-scratch twin of the
+    reference's pdf_to_images,
     /root/reference/pdf_ocr_with_boxes_v3.py:144-158) and emits its
     dimensions, ink-pixel count, and full-bitmap digest.  One row per
     page; non-PDF and failed docs emit nothing (they carry no geometry)."""
@@ -557,31 +544,25 @@ def extract_rasters_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFr
     from pdf_ocr_spark.kernels.pdf.extract import MAX_PAGES
     from pdf_ocr_spark.kernels.pdf.raster import parse_pgm, rasterize_page
 
-    _tune_worker_gc()
-    cols = [f.name for f in RASTER_SCHEMA.fields]
-    for pdf_batch in batches:
-        rows = []
-        for url, payload in zip(pdf_batch["url"], pdf_batch["html"]):
-            data = bytes(payload) if payload is not None else b""
-            if not looks_like_pdf(data):
-                continue
-            try:
-                doc = PDFDocument(data)
-                for i, pd_ in enumerate(doc.pages()[:MAX_PAGES], 1):
-                    res = interpret_page(doc, pd_)
-                    pgm = rasterize_page(
-                        res.glyphs, res.rules, res.image_draws,
-                        res.width, res.height,
-                        image_payloads=res.images,  # JPEG draws → real luma
-                    )
-                    w, h, px = parse_pgm(pgm)
-                    rows.append(
-                        (url, i, w, h, len(px) - px.count(255),
-                         hashlib.md5(pgm).hexdigest())
-                    )
-            except Exception:  # noqa: BLE001 — poison-row isolation
-                continue
-        yield pd.DataFrame(rows, columns=cols)
+    doc = PDFDocument(data)
+    for i, page in enumerate(doc.pages()[:MAX_PAGES], 1):
+        res = interpret_page(doc, page)
+        pgm = rasterize_page(
+            res.glyphs, res.rules, res.image_draws, res.width, res.height,
+            image_payloads=res.images,  # JPEG draws → real luma
+        )
+        w, h, px = parse_pgm(pgm)
+        yield (url, i, w, h, len(px) - px.count(255), hashlib.md5(pgm).hexdigest())
+
+
+def extract_rasters(
+    pages_df: DataFrame, num_partitions: Optional[int] = None
+) -> DataFrame:
+    """pages(url, html, …) → per-page raster table (S10): dimensions,
+    ink coverage, and bitmap digest of the rendered page."""
+    return kernel_route(
+        pages_df, raster_rows, RASTER_SCHEMA, num_partitions=num_partitions
+    )
 
 
 ORIENTATION_SCHEMA = StructType(
@@ -595,61 +576,31 @@ ORIENTATION_SCHEMA = StructType(
 )
 
 
-def detect_orientation_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """K4 orientation detection route (runs on executors): per PDF page,
-    the content-based OSD verdict (dominant glyph flow direction — the
-    digital-text analogue of the reference's Tesseract image_to_osd,
-    /root/reference/parse_student_answers.py:40-59) plus the vote
-    split.  extract_pdf applies the same verdict internally to
-    re-orient rotated pages before layout; this route makes the
-    detector itself observable/queryable."""
+@per_doc("pdf")
+def orientation_rows(url, data):
+    """K4 orientation detection: per PDF page, the content-based OSD
+    verdict (dominant glyph flow direction — the digital-text analogue of
+    the reference's Tesseract image_to_osd,
+    /root/reference/parse_student_answers.py:40-59) plus the vote split.
+    extract_pdf applies the same verdict internally to re-orient rotated
+    pages before layout; this route makes the detector itself
+    observable/queryable."""
     from pdf_ocr_spark.kernels.pdf.content import dominant_rotation, interpret_page
     from pdf_ocr_spark.kernels.pdf.cos import PDFDocument
     from pdf_ocr_spark.kernels.pdf.extract import MAX_PAGES
 
-    _tune_worker_gc()
-    cols = [f.name for f in ORIENTATION_SCHEMA.fields]
-    for pdf_batch in batches:
-        rows = []
-        for url, payload in zip(pdf_batch["url"], pdf_batch["html"]):
-            data = bytes(payload) if payload is not None else b""
-            if not looks_like_pdf(data):
-                continue
-            try:
-                doc = PDFDocument(data)
-                for i, pd_ in enumerate(doc.pages()[:MAX_PAGES], 1):
-                    res = interpret_page(doc, pd_)
-                    v = res.rot_votes
-                    rows.append(
-                        (url, i, dominant_rotation(v), v[0], v[1] + v[2] + v[3])
-                    )
-            except Exception:  # noqa: BLE001 — poison-row isolation
-                continue
-        yield pd.DataFrame(rows, columns=cols)
+    doc = PDFDocument(data)
+    for i, page in enumerate(doc.pages()[:MAX_PAGES], 1):
+        v = interpret_page(doc, page).rot_votes
+        yield (url, i, dominant_rotation(v), v[0], v[1] + v[2] + v[3])
 
 
 def detect_orientation(
     pages_df: DataFrame, num_partitions: Optional[int] = None
 ) -> DataFrame:
-    """pages(url, html, …) → per-page orientation verdicts (K4).  Same
-    plan shape as the other kernel routes."""
+    """pages(url, html, …) → per-page orientation verdicts (K4)."""
     return kernel_route(
-        pages_df, detect_orientation_batch, ORIENTATION_SCHEMA,
-        num_partitions=num_partitions,
-    )
-
-
-def extract_rasters(
-    pages_df: DataFrame, num_partitions: Optional[int] = None
-) -> DataFrame:
-    """pages(url, html, …) → per-page raster table (S10): dimensions,
-    ink coverage, and bitmap digest of the rendered page.  Same plan
-    shape as the other extraction routes — scan pruned to (url, html),
-    one salted repartition, one python stage."""
-    return kernel_route(
-        pages_df, extract_rasters_batch, RASTER_SCHEMA,
+        pages_df, orientation_rows, ORIENTATION_SCHEMA,
         num_partitions=num_partitions,
     )
 
@@ -666,46 +617,25 @@ HTML_TABLE_SCHEMA = StructType(
 )
 
 
-def extract_html_tables_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """Structured <table> extractor (runs on executors): one row per
-    HTML table with caption, shape, and row-major cells as TSV — the
-    HTML twin of the PDF composite table blocks.  Non-HTML and
-    poison rows emit nothing."""
+@per_doc("html")
+def html_table_rows(url, data):
+    """Structured <table> extractor: one row per HTML table with caption,
+    shape, and row-major cells as TSV — the HTML twin of the PDF
+    composite table blocks."""
     from pdf_ocr_spark.kernels.html_extract import extract_tables
 
-    _tune_worker_gc()
-    cols = [f.name for f in HTML_TABLE_SCHEMA.fields]
-    for pdf_batch in batches:
-        rows = []
-        for url, payload in zip(pdf_batch["url"], pdf_batch["html"]):
-            data = bytes(payload) if payload is not None else b""
-            if not data or looks_like_pdf(data):
-                continue
-            for t in extract_tables(data):
-                rows.append(
-                    (
-                        url,
-                        t.table_index,
-                        t.caption,
-                        t.n_rows,
-                        t.n_cols,
-                        "\n".join("\t".join(r) for r in t.rows),
-                    )
-                )
-        yield pd.DataFrame(rows, columns=cols)
+    for t in extract_tables(data):
+        yield (url, t.table_index, t.caption, t.n_rows, t.n_cols,
+               "\n".join("\t".join(r) for r in t.rows))
 
 
 def extract_html_tables(
     pages_df: DataFrame, num_partitions: Optional[int] = None
 ) -> DataFrame:
     """pages(url, html, …) → HTML tables (url, table_index, caption,
-    n_rows, n_cols, tsv).  Same plan shape as the other extraction
-    routes: scan pruned to (url, html), one salted repartition, one
-    python stage."""
+    n_rows, n_cols, tsv)."""
     return kernel_route(
-        pages_df, extract_html_tables_batch, HTML_TABLE_SCHEMA,
+        pages_df, html_table_rows, HTML_TABLE_SCHEMA,
         num_partitions=num_partitions,
     )
 
@@ -725,39 +655,26 @@ HTML_META_SCHEMA = StructType(
 )
 
 
-def extract_html_meta_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """Head-metadata extractor (runs on executors): one row per HTML
-    page with title / description / canonical / lang / OpenGraph /
-    publish date (trafilatura-style scan).  Non-HTML rows, poison rows,
-    and payloads yielding NO metadata at all (e.g. a JPEG or zip that
-    isn't HTML to begin with) emit nothing."""
+@per_doc("html")
+def html_meta_rows(url, data):
+    """Head metadata: one row per HTML page with title / description /
+    canonical / lang / OpenGraph / publish date (trafilatura-style scan).
+    Payloads yielding NO metadata at all (e.g. a JPEG or zip that isn't
+    HTML to begin with) emit nothing."""
     from pdf_ocr_spark.kernels.html_extract import extract_metadata
 
-    _tune_worker_gc()
-    cols = [f.name for f in HTML_META_SCHEMA.fields]
-    for pdf_batch in batches:
-        rows = []
-        for url, payload in zip(pdf_batch["url"], pdf_batch["html"]):
-            data = bytes(payload) if payload is not None else b""
-            if not data or looks_like_pdf(data):
-                continue
-            m = extract_metadata(data)
-            if any(v is not None for v in m):
-                rows.append((url, *m))
-        yield pd.DataFrame(rows, columns=cols)
+    m = extract_metadata(data)
+    if any(v is not None for v in m):
+        yield (url, *m)
 
 
 def extract_html_meta(
     pages_df: DataFrame, num_partitions: Optional[int] = None
 ) -> DataFrame:
     """pages(url, html, …) → head metadata (url, title, description,
-    canonical, lang, og_title, og_image, published).  Same plan shape
-    as the other extraction routes: scan pruned to (url, html), one
-    salted repartition, one python stage."""
+    canonical, lang, og_title, og_image, published, robots)."""
     return kernel_route(
-        pages_df, extract_html_meta_batch, HTML_META_SCHEMA,
+        pages_df, html_meta_rows, HTML_META_SCHEMA,
         num_partitions=num_partitions,
     )
 
@@ -776,38 +693,24 @@ JSONLD_SCHEMA = StructType(
 )
 
 
-def extract_jsonld_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """Structured-data extractor (runs on executors): one row per
-    schema.org JSON-LD entity node — @type, name/headline,
-    datePublished, plus a valid flag so malformed embeds stay visible
-    to coverage accounting.  Non-HTML and JSON-LD-free pages emit
-    nothing."""
+@per_doc("html")
+def jsonld_rows(url, data):
+    """Structured data: one row per schema.org JSON-LD entity node —
+    @type, name/headline, datePublished, plus a valid flag so malformed
+    embeds stay visible to coverage accounting."""
     from pdf_ocr_spark.kernels.html_extract import extract_jsonld
 
-    _tune_worker_gc()
-    cols = [f.name for f in JSONLD_SCHEMA.fields]
-    for pdf_batch in batches:
-        rows = []
-        for url, payload in zip(pdf_batch["url"], pdf_batch["html"]):
-            data = bytes(payload) if payload is not None else b""
-            if not data or looks_like_pdf(data):
-                continue
-            for b in extract_jsonld(data):
-                rows.append((url, *b))
-        yield pd.DataFrame(rows, columns=cols)
+    for b in extract_jsonld(data):
+        yield (url, *b)
 
 
 def extract_structured_data(
     pages_df: DataFrame, num_partitions: Optional[int] = None
 ) -> DataFrame:
     """pages(url, html, …) → JSON-LD entities (url, block_index,
-    node_index, ld_type, name, date_published, valid, raw_md5).  Same
-    single-shuffle plan shape as the other extraction routes."""
+    node_index, ld_type, name, date_published, valid, raw_md5)."""
     return kernel_route(
-        pages_df, extract_jsonld_batch, JSONLD_SCHEMA,
-        num_partitions=num_partitions,
+        pages_df, jsonld_rows, JSONLD_SCHEMA, num_partitions=num_partitions
     )
 
 
@@ -821,38 +724,24 @@ HREFLANG_SCHEMA = StructType(
 )
 
 
-def extract_hreflang_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """hreflang extractor (runs on executors): one row per
-    ``<link rel=alternate hreflang>`` annotation in document order —
-    the cross-language page mapping a multilingual crawl clusters
-    translations by.  Non-HTML and annotation-free pages emit
-    nothing."""
+@per_doc("html")
+def hreflang_rows(url, data):
+    """One row per ``<link rel=alternate hreflang>`` annotation in
+    document order — the cross-language page mapping a multilingual
+    crawl clusters translations by."""
     from pdf_ocr_spark.kernels.html_extract import extract_hreflang
 
-    _tune_worker_gc()
-    cols = [f.name for f in HREFLANG_SCHEMA.fields]
-    for pdf_batch in batches:
-        rows = []
-        for url, payload in zip(pdf_batch["url"], pdf_batch["html"]):
-            data = bytes(payload) if payload is not None else b""
-            if not data or looks_like_pdf(data):
-                continue
-            for i, (hreflang, href) in enumerate(extract_hreflang(data)):
-                rows.append((url, i, hreflang, href))
-        yield pd.DataFrame(rows, columns=cols)
+    for i, (hreflang, href) in enumerate(extract_hreflang(data)):
+        yield (url, i, hreflang, href)
 
 
 def extract_hreflang_links(
     pages_df: DataFrame, num_partitions: Optional[int] = None
 ) -> DataFrame:
     """pages(url, html, …) → hreflang annotations (url, ord, hreflang,
-    href).  Same single-shuffle plan shape as the other extraction
-    routes."""
+    href)."""
     return kernel_route(
-        pages_df, extract_hreflang_batch, HREFLANG_SCHEMA,
-        num_partitions=num_partitions,
+        pages_df, hreflang_rows, HREFLANG_SCHEMA, num_partitions=num_partitions
     )
 
 
@@ -868,36 +757,23 @@ MICRODATA_SCHEMA = StructType(
 )
 
 
-def extract_microdata_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """Microdata extractor (runs on executors): one row per itemprop
-    in the page's schema.org microdata trees — the attribute-based
-    structured-data channel next to JSON-LD.  Non-HTML and
-    microdata-free pages emit nothing."""
+@per_doc("html")
+def microdata_rows(url, data):
+    """One row per itemprop in the page's schema.org microdata trees —
+    the attribute-based structured-data channel next to JSON-LD."""
     from pdf_ocr_spark.kernels.html_extract import extract_microdata
 
-    _tune_worker_gc()
-    cols = [f.name for f in MICRODATA_SCHEMA.fields]
-    for pdf_batch in batches:
-        rows = []
-        for url, payload in zip(pdf_batch["url"], pdf_batch["html"]):
-            data = bytes(payload) if payload is not None else b""
-            if not data or looks_like_pdf(data):
-                continue
-            for p in extract_microdata(data):
-                rows.append((url, *p))
-        yield pd.DataFrame(rows, columns=cols)
+    for p in extract_microdata(data):
+        yield (url, *p)
 
 
 def extract_microdata_rows(
     pages_df: DataFrame, num_partitions: Optional[int] = None
 ) -> DataFrame:
     """pages(url, html, …) → microdata property rows (url, item_index,
-    item_type, prop, value, source) — same single-shuffle route shape
-    as :func:`extract_structured_data`."""
+    item_type, prop, value, source)."""
     return kernel_route(
-        pages_df, extract_microdata_batch, MICRODATA_SCHEMA,
+        pages_df, microdata_rows, MICRODATA_SCHEMA,
         num_partitions=num_partitions,
     )
 
@@ -913,36 +789,23 @@ FORM_SCHEMA = StructType(
 )
 
 
-def extract_forms_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """AcroForm field extractor (runs on executors): one row per
-    terminal form field — data that never reaches the text layer when
-    fields lack appearance streams.  Non-PDF and poison rows emit
-    nothing."""
+@per_doc("pdf")
+def form_rows(url, data):
+    """AcroForm fields: one row per terminal form field — data that never
+    reaches the text layer when fields lack appearance streams."""
     from pdf_ocr_spark.kernels.pdf.forms import extract_form_fields
 
-    _tune_worker_gc()
-    cols = [f.name for f in FORM_SCHEMA.fields]
-    for pdf_batch in batches:
-        rows = []
-        for url, payload in zip(pdf_batch["url"], pdf_batch["html"]):
-            data = bytes(payload) if payload is not None else b""
-            if not data or not looks_like_pdf(data):
-                continue
-            for i, fld in enumerate(extract_form_fields(data)):
-                rows.append((url, i, fld.name, fld.field_type, fld.value))
-        yield pd.DataFrame(rows, columns=cols)
+    for i, fld in enumerate(extract_form_fields(data)):
+        yield (url, i, fld.name, fld.field_type, fld.value)
 
 
 def extract_forms(
     pages_df: DataFrame, num_partitions: Optional[int] = None
 ) -> DataFrame:
     """pages(url, html, …) → AcroForm fields (url, field_index, name,
-    field_type, value).  Same plan shape as every extraction route."""
+    field_type, value)."""
     return kernel_route(
-        pages_df, extract_forms_batch, FORM_SCHEMA,
-        num_partitions=num_partitions,
+        pages_df, form_rows, FORM_SCHEMA, num_partitions=num_partitions
     )
 
 
@@ -970,52 +833,31 @@ OUTLINE_SCHEMA = StructType(
 )
 
 
-def extract_doc_info_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
+@per_doc("pdf")
+def doc_info_rows(url, data):
     """Trailer /Info metadata per PDF (title/author/dates + page count)
     — quality/dedup signals the content stream doesn't carry."""
     from pdf_ocr_spark.kernels.pdf.docinfo import extract_doc_info
 
-    _tune_worker_gc()
-    cols = [f.name for f in DOC_INFO_SCHEMA.fields]
-    for pdf_batch in batches:
-        rows = []
-        for url, payload in zip(pdf_batch["url"], pdf_batch["html"]):
-            data = bytes(payload) if payload is not None else b""
-            if not data or not looks_like_pdf(data):
-                continue
-            rows.append((url, *extract_doc_info(data)))
-        yield pd.DataFrame(rows, columns=cols)
+    yield (url, *extract_doc_info(data))
 
 
-def extract_outline_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
+@per_doc("pdf")
+def outline_rows(url, data):
     """Outline (bookmark) items per PDF — the document's own table of
     contents, the section-boundary signal for structure-aware chunking
     of long documents.  Outline-less PDFs emit nothing."""
     from pdf_ocr_spark.kernels.pdf.docinfo import extract_outline
 
-    _tune_worker_gc()
-    cols = [f.name for f in OUTLINE_SCHEMA.fields]
-    for pdf_batch in batches:
-        rows = []
-        for url, payload in zip(pdf_batch["url"], pdf_batch["html"]):
-            data = bytes(payload) if payload is not None else b""
-            if not data or not looks_like_pdf(data):
-                continue
-            for it in extract_outline(data):
-                rows.append((url, it.order, it.level, it.title, it.page_num))
-        yield pd.DataFrame(rows, columns=cols)
+    for it in extract_outline(data):
+        yield (url, it.order, it.level, it.title, it.page_num)
 
 
 def extract_doc_info(
     pages_df: DataFrame, num_partitions: Optional[int] = None
 ) -> DataFrame:
     return kernel_route(
-        pages_df, extract_doc_info_batch, DOC_INFO_SCHEMA,
-        num_partitions=num_partitions,
+        pages_df, doc_info_rows, DOC_INFO_SCHEMA, num_partitions=num_partitions
     )
 
 
@@ -1023,8 +865,7 @@ def extract_outline(
     pages_df: DataFrame, num_partitions: Optional[int] = None
 ) -> DataFrame:
     return kernel_route(
-        pages_df, extract_outline_batch, OUTLINE_SCHEMA,
-        num_partitions=num_partitions,
+        pages_df, outline_rows, OUTLINE_SCHEMA, num_partitions=num_partitions
     )
 
 
@@ -1040,36 +881,23 @@ ANNOT_SCHEMA = StructType(
 )
 
 
-def extract_annots_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
+@per_doc("pdf")
+def annot_rows(url, data):
     """Comment-layer annotations per PDF (sticky notes, highlights with
     text, free-text remarks) — reviewer content the text layer never
     carries.  Link/Widget annots belong to the frontier/forms
     extractors; geometry-only markup is skipped."""
     from pdf_ocr_spark.kernels.pdf.docinfo import extract_annotations
 
-    _tune_worker_gc()
-    cols = [f.name for f in ANNOT_SCHEMA.fields]
-    for pdf_batch in batches:
-        rows = []
-        for url, payload in zip(pdf_batch["url"], pdf_batch["html"]):
-            data = bytes(payload) if payload is not None else b""
-            if not data or not looks_like_pdf(data):
-                continue
-            for a in extract_annotations(data):
-                rows.append(
-                    (url, a.page_num, a.order, a.subtype, a.contents, a.author)
-                )
-        yield pd.DataFrame(rows, columns=cols)
+    for a in extract_annotations(data):
+        yield (url, a.page_num, a.order, a.subtype, a.contents, a.author)
 
 
 def extract_annotations_route(
     pages_df: DataFrame, num_partitions: Optional[int] = None
 ) -> DataFrame:
     return kernel_route(
-        pages_df, extract_annots_batch, ANNOT_SCHEMA,
-        num_partitions=num_partitions,
+        pages_df, annot_rows, ANNOT_SCHEMA, num_partitions=num_partitions
     )
 
 
@@ -1085,149 +913,32 @@ LINK_SCHEMA = StructType(
 )
 
 
-def extract_links_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+@per_doc()
+def link_rows(url, data):
     """Crawl-frontier extractor: one row per outgoing hyperlink — HTML
     anchor hrefs (with the rel=nofollow/ugc/sponsored opt-out flag) plus
     PDF /Annots Link URIs, document order preserved."""
     from pdf_ocr_spark.kernels.html_extract import extract_links_attrs
     from pdf_ocr_spark.kernels.pdf.extract import extract_pdf
 
-    _tune_worker_gc()
-    cols = [f.name for f in LINK_SCHEMA.fields]
-    for pdf_batch in batches:
-        rows = []
-        for url, payload in zip(pdf_batch["url"], pdf_batch["html"]):
-            data = bytes(payload) if payload is not None else b""
-            try:
-                if looks_like_pdf(data):
-                    doc = extract_pdf(data)
-                    if doc.status == "ok":
-                        for i, u in enumerate(doc.links):
-                            rows.append((url, u, i, "pdf", False, ""))
-                else:
-                    for i, (u, nf, at) in enumerate(extract_links_attrs(data)):
-                        rows.append((url, u, i, "html", nf, at))
-            except Exception:  # noqa: BLE001 — poison-row isolation
-                continue
-        yield pd.DataFrame(rows, columns=cols)
+    if looks_like_pdf(data):
+        doc = extract_pdf(data)
+        if doc.status == "ok":
+            for i, u in enumerate(doc.links):
+                yield (url, u, i, "pdf", False, "")
+    else:
+        for i, (u, nf, at) in enumerate(extract_links_attrs(data)):
+            yield (url, u, i, "html", nf, at)
 
 
 def extract_links(
     pages_df: DataFrame, num_partitions: Optional[int] = None
 ) -> DataFrame:
     """pages(url, html, …) → outgoing-link edges (url, link, index,
-    source_kind) — same plan shape as the other extraction routes."""
+    source_kind, nofollow, anchor_text)."""
     return kernel_route(
-        pages_df, extract_links_batch, LINK_SCHEMA,
-        num_partitions=num_partitions,
+        pages_df, link_rows, LINK_SCHEMA, num_partitions=num_partitions
     )
-
-
-def extract_pages(
-    pages_df: DataFrame,
-    num_partitions: Optional[int] = None,
-) -> DataFrame:
-    """pages(url, html, …) → page-level extraction rows.
-
-    The explicit ``repartition(P, xxhash64(url))`` is the job's single
-    planned shuffle: it spreads documents uniformly regardless of input
-    file layout, bounding skew from giant PDFs (SURVEY.md §4.1)."""
-    df = pages_df.select("url", "html")
-    if num_partitions is None:
-        num_partitions = max(pages_df.sparkSession.sparkContext.defaultParallelism, 8)
-    df = df.repartition(num_partitions, F.xxhash64("url"))
-    extracted = df.mapInPandas(extract_batch, schema=PAGE_SCHEMA)
-
-    # OCR stage: a pass-through mapInPandas on the SAME partitioning — no
-    # shuffle, no branch (a filter+union here would execute the expensive
-    # extractor twice); batches with no image-only pages flow through
-    # untouched, batches with them run one batched inference call
-    return extracted.mapInPandas(ocr_batch, schema=PAGE_SCHEMA)
-
-
-def assemble_documents(page_rows: DataFrame) -> DataFrame:
-    """Page rows → one row per url with the final extracted_text.
-
-    All built-ins (A1/A2): ordered ``collect_list(struct(page, text))`` →
-    ``array_sort`` → per-page header via ``transform`` + ``format_string``
-    (v2's '# 第 {i} 页' chunk, pdf_ocr_with_boxes_v2.py:697) →
-    ``array_join``.  HTML rows skip headers (unpaginated)."""
-    pages = page_rows.groupBy("url").agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    F.col("page").alias("page"),
-                    F.coalesce(F.col("page_text"), F.lit("")).alias("page_text"),
-                )
-            )
-        ).alias("pages"),
-        F.max("content_kind").alias("content_kind"),
-        F.sum("n_blocks").cast("int").alias("n_blocks"),
-        F.max(F.col("page")).cast("int").alias("n_pages"),
-        F.min("status").alias("status"),  # 'failed' < 'ok'
-        F.max("failure_reason").alias("failure_reason"),
-        F.max("n_bytes").alias("n_bytes"),
-        F.sum(F.when(F.col("needs_ocr"), 1).otherwise(0))
-        .cast("int")
-        .alias("n_ocr_pages"),  # range route keeps needs_ocr as was-OCR marker
-    )
-    pdf_text = F.array_join(
-        F.transform(
-            F.col("pages"),
-            lambda s: F.format_string("# 第 %d 页\n\n%s\n\n", s.page, s.page_text),
-        ),
-        "",
-    )
-    html_text = F.array_join(F.transform(F.col("pages"), lambda s: s.page_text), "")
-    extracted = (
-        F.when(F.col("status") == "failed", F.lit(None).cast("string"))
-        .when(F.col("content_kind") == "pdf", pdf_text)
-        .otherwise(html_text)
-    )
-    return pages.select(
-        "url",
-        "content_kind",
-        extracted.alias("extracted_text"),
-        F.when(F.col("status") == "failed", F.lit(0))
-        .otherwise(F.col("n_pages"))
-        .alias("n_pages"),
-        F.when(F.col("status") == "failed", F.lit(0))
-        .otherwise(F.coalesce(F.col("n_blocks"), F.lit(0)))
-        .alias("n_blocks"),
-        F.coalesce(F.length(extracted), F.lit(0)).alias("n_chars"),
-        "status",
-        "failure_reason",
-        "n_bytes",
-        F.when(F.col("status") == "failed", F.lit(0))
-        .otherwise(F.col("n_ocr_pages"))
-        .cast("int")
-        .alias("n_ocr_pages"),
-    )
-
-
-def extract_documents(
-    pages_df: DataFrame, num_partitions: Optional[int] = None
-) -> DataFrame:
-    """Full pipeline: pages table → document-level extraction results.
-
-    Physical plan: scan → repartition(P, xxhash64(url)) → ONE fused
-    mapInArrow stage (parse + batched OCR + per-doc assembly).  A single
-    shuffle total; no groupBy, no second Arrow round-trip, no pandas
-    layer in the worker."""
-    df = pages_df.select("url", "html")
-    if num_partitions is None:
-        num_partitions = max(pages_df.sparkSession.sparkContext.defaultParallelism, 8)
-    df = df.repartition(num_partitions, F.xxhash64("url"))
-    return df.mapInArrow(extract_docs_arrow, schema=DOC_SCHEMA)
-
-
-def extract_documents_paged(
-    pages_df: DataFrame, num_partitions: Optional[int] = None
-) -> DataFrame:
-    """Page-level route (extract → OCR stage → groupBy assemble).  Kept
-    for the page-table API and as the semantics oracle for the fused
-    path — tests assert both produce identical rows."""
-    return assemble_documents(extract_pages(pages_df, num_partitions))
 
 
 RANGE_SCHEMA = StructType(
@@ -1238,74 +949,37 @@ RANGE_SCHEMA = StructType(
 )
 
 
-def count_pages_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def page_count_rows(urls, payloads) -> list:
     """Cheap structural pass over giant PDFs: page count only (xref +
-    page-tree walk, no content decode)."""
+    page-tree walk, no content decode; 0 on malformed input)."""
     from pdf_ocr_spark.kernels.pdf.extract import count_pdf_pages
 
-    _tune_worker_gc()
-    for pdf_batch in batches:
-        yield pd.DataFrame(
-            {
-                "url": pdf_batch["url"],
-                "n_pages": [
-                    count_pdf_pages(bytes(p) if p is not None else b"")
-                    for p in pdf_batch["html"]
-                ],
-            }
-        )
+    return [
+        (u, count_pdf_pages(p if p is not None else b""))
+        for u, p in zip(urls, payloads)
+    ]
 
 
-def extract_range_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Page-range extractor for giant documents: each input row is
-    (url, html, page_lo, page_hi); emits PAGE_SCHEMA rows with GLOBAL page
-    numbers.  OCR runs inline (batched) like the fused extractor;
-    ``needs_ocr`` is kept True on OCR'd rows as a was-OCR marker for
-    lineage (the text is already filled in)."""
-    from pdf_ocr_spark.kernels.ocr_stub import get_engine, ocr_page_text
-    from pdf_ocr_spark.kernels.pdf.extract import extract_pdf
+def _merge_ranges(table):
+    """``groupBy(url).applyInArrow`` body of the giant-document route:
+    one giant's page rows from every range → its document row, through
+    the same :func:`_assemble_doc` as the fused route.  A failed range
+    fails the whole document with the greatest failure reason."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    _tune_worker_gc()
-    engine = None
-    cols = [f.name for f in PAGE_SCHEMA.fields]
-    for pdf_batch in batches:
-        rows = []
-        ocr_slots = []  # (row_idx, payload)
-        for url, payload, lo, hi in zip(
-            pdf_batch["url"], pdf_batch["html"],
-            pdf_batch["page_lo"], pdf_batch["page_hi"],
-        ):
-            data = bytes(payload) if payload is not None else b""
-            n_bytes = len(data)
-            try:
-                doc = extract_pdf(data, int(lo), int(hi))
-                if doc.status != "ok":
-                    rows.append((url, "pdf", 0, None, 0, False, None,
-                                 "failed", doc.failure_reason, n_bytes))
-                    continue
-                for p in doc.pages:
-                    if p.needs_ocr:
-                        ocr_slots.append((len(rows), p.ocr_payload))
-                        rows.append([url, "pdf", p.page_num, None, p.n_blocks,
-                                     True, None, "ok", None, n_bytes])
-                    else:
-                        rows.append((url, "pdf", p.page_num, p.text, p.n_blocks,
-                                     False, None, "ok", None, n_bytes))
-            except Exception as e:  # noqa: BLE001
-                rows.append((url, "pdf", 0, None, 0, False, None,
-                             "failed", f"kernel_crash: {type(e).__name__}", n_bytes))
-        if ocr_slots:
-            if engine is None:
-                engine = get_engine()
-            results = engine.recognize_batch([p for _, p in ocr_slots])
-            for (ri, _), boxes in zip(ocr_slots, results):
-                text = ocr_page_text(boxes)
-                if text is None:  # engine failure marker → typed failure
-                    rows[ri][7] = "failed"
-                    rows[ri][8] = OCR_FAILED_REASON
-                else:
-                    rows[ri][3] = text
-        yield pd.DataFrame(rows, columns=cols)
+    p = table.to_pydict()
+    reasons = [r for r in p["failure_reason"] if r is not None]
+    row = _assemble_doc(
+        p["url"][0],
+        max(p["content_kind"]),
+        list(zip(p["page"], p["page_text"], p["n_blocks"])),
+        "failed" if "failed" in p["status"] else "ok",
+        max(reasons, default=None),
+        max(p["n_bytes"]),
+        sum(p["needs_ocr"]),
+    )
+    return pa.Table.from_batches([_record_batch([row], to_arrow_schema(DOC_SCHEMA))])
 
 
 def extract_documents_split(
@@ -1343,7 +1017,9 @@ def extract_documents_split(
     # consumer.  Registered for release by the NEXT call (or an explicit
     # release_split_cache()) so repeated runs hold at most one cache.
     release_split_cache()
-    counts = giants.mapInPandas(count_pages_batch, schema=RANGE_SCHEMA).persist()
+    counts = giants.mapInArrow(
+        arrow_map(page_count_rows, RANGE_SCHEMA), schema=RANGE_SCHEMA
+    ).persist()
     _live_split_caches.append(counts)
     ranges = (
         giants.join(counts, "url")
@@ -1357,17 +1033,19 @@ def extract_documents_split(
         )
         .withColumn("page_hi", F.col("page_lo") + F.lit(pages_per_task - 1))
     )
-    page_rows = ranges.repartition(
+    range_pages = ranges.repartition(
         num_partitions, F.xxhash64("url", "page_lo")
-    ).mapInPandas(extract_range_batch, schema=PAGE_SCHEMA)
+    ).mapInArrow(arrow_map(page_rows, PAGE_SCHEMA), schema=PAGE_SCHEMA)
     # failed count-pass giants (n_pages == 0) still need a failure row
     failed_giants = (
         giants.join(counts, "url")
         .filter(F.col("n_pages") <= 0)
         .select("url", "html")
     )
-    giant_docs = assemble_documents(page_rows).unionByName(
-        extract_documents(failed_giants, num_partitions)
+    giant_docs = (
+        range_pages.groupBy("url")
+        .applyInArrow(_merge_ranges, schema=DOC_SCHEMA)
+        .unionByName(extract_documents(failed_giants, num_partitions))
     )
     return normal_docs.unionByName(giant_docs)
 

@@ -61,7 +61,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def _golden(name: str) -> str:
-    """Path of a frozen kernel golden (tools/freeze_goldens.py) — the
+    """Path of a frozen kernel golden (tools/freeze.py) — the
     DuckDB oracle for non-SQL-expressible kernels reads these."""
     return _os.path.join(
         _os.path.dirname(_os.path.abspath(__file__)), "fixtures", f"{name}_golden.parquet"
@@ -4212,41 +4212,7 @@ def q_link_host_graph(spark, sf_dir):
     frontier.  One filter + one map-side-combined groupBy; the oracle
     replays the identical host regexp (RE2 both sides) and aggregation.
     """
-    from pdf_ocr_spark.operators.graph import host_graph
-
-    extracted = spark.read.parquet(_golden("link_edges")).select(
-        "url", "link", "nofollow"
-    )
-    # Synthetic multi-host edges (the golden corpus is one site): cross-
-    # host links, a relative path, a mailto (must drop), an uppercase
-    # host with a port, and a userinfo URL — every shape host_expr
-    # normalizes.  Replayed verbatim by the oracle.
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 400)
-    i = F.col("doc_id")
-    src = F.concat(
-        F.lit("https://site"), (i % 11).cast("string"),
-        F.lit(".example.org/page/"), i.cast("string"),
-    )
-    m = i % 5
-    link = (
-        F.when(m == 0, F.concat(
-            F.lit("https://site"), ((i * 3) % 11).cast("string"),
-            F.lit(".example.org/x/"), i.cast("string")))
-        .when(m == 1, F.concat(F.lit("/local/"), (i % 7).cast("string")))
-        .when(m == 2, F.concat(
-            F.lit("mailto:user"), i.cast("string"), F.lit("@example.org")))
-        .when(m == 3, F.concat(
-            F.lit("HTTPS://CDN.Example.NET:8080/asset?id="),
-            (i % 13).cast("string")))
-        .otherwise(F.concat(
-            F.lit("https://u:p@site"), (i % 4).cast("string"),
-            F.lit(".example.org/auth")))
-    )
-    synth = d.select(
-        src.alias("url"), link.alias("link"),
-        (i % 3 == 0).alias("nofollow"),
-    )
-    return host_graph(extracted.unionByName(synth))
+    return _host_graph_input(spark, sf_dir)
 
 
 _HOST_SQL_RE = "^[a-z][a-z0-9+.-]*://(?:[^/?#]*@)?([^/:?#]+)"
@@ -6020,7 +5986,7 @@ def q_warc_cdx(spark, sf_dir):
     Pages sort into ONE archive partition so the byte layout (hence
     offsets) is pinned; production indexing is per-file parallel, no
     shuffle.  Oracle = frozen kernel replay of pages → WARC → CDX
-    (tools/freeze_cdx_golden.py); a test slices every (offset, length)
+    (tools/freeze.py); a test slices every (offset, length)
     back out of the archive and re-parses it."""
     from pdf_ocr_spark.fixtures.genpages import gen_cdx_rows
     from pdf_ocr_spark.sources.warc import pages_to_warc, warc_cdx
@@ -6073,7 +6039,7 @@ def q_warc_redirects(spark, sf_dir):
     scheme-relative (//host), root-relative, and path-relative forms;
     200s, Location-less 3xxs, and conversion records are ignored.
     Per-archive map, no shuffle.  Oracle = frozen kernel golden
-    (tools/freeze_redirects_golden.py)."""
+    (tools/freeze.py)."""
     from pdf_ocr_spark.fixtures.genpages import gen_redirect_archive
     from pdf_ocr_spark.sources.warc import warc_redirects
 
@@ -6313,7 +6279,7 @@ FROM documents WHERE doc_id < 200
 
 def _media_corpus(spark, n: int = 50):
     """Media universe for the multimodal queries: synthetic corpus
-    payloads as opaque blobs (must match tools/freeze_goldens.media_rows
+    payloads as opaque blobs (must match tools/freeze.media_rows
     — the frozen-golden oracle recomputes the same rows kernel-side)."""
     from pdf_ocr_spark.fixtures.genpages import gen_rows
 
@@ -6446,7 +6412,7 @@ def q_extract_quality(spark, sf_dir):
     the frozen self-contained HTML fixture.  The Spark side re-runs the
     DISTRIBUTED extractor on the frozen html bytes; the oracle replays
     the metric arithmetic over the frozen in-process extraction
-    (tools/freeze_extract_quality_golden.py) — so the gate pins kernel
+    (tools/freeze.py) — so the gate pins kernel
     determinism AND the metric math cross-engine.  Multiset token
     matching (per-(url, token) count minimums), 6-dp rounded ratios."""
     from pdf_ocr_spark.pipeline.extract_job import extract_documents
@@ -6548,7 +6514,7 @@ def q_extract_corpus(spark, sf_dir):
     """The flagship operator: full extraction pipeline over the
     deterministic synthetic pages corpus (PDF glyph/simple/scan + HTML +
     broken rows).  Oracle = frozen golden computed by running the SAME
-    UDF body in-process (tools/freeze_goldens.py) — a full value-hash
+    UDF body in-process (tools/freeze.py) — a full value-hash
     gate on the distributed pipeline, text bytes pinned via md5."""
     from pdf_ocr_spark.fixtures.genpages import gen_rows
     from pdf_ocr_spark.pipeline.extract_job import extract_documents
@@ -6624,7 +6590,7 @@ def q_sink_wat_export(spark, sf_dir):
     WARC headers, HTTP status/mime, and HTML title + outgoing links
     from the same from-scratch kernels the pipeline uses) → parsed back
     to rows.  Oracle = the frozen kernel replay of the same chain
-    (tools/freeze_wat_golden.py); the value hash pins writer, WAT
+    (tools/freeze.py); the value hash pins writer, WAT
     builder, and parser together.  Rows carry no byte offsets, so the
     gate is archive-partitioning-independent."""
     from pdf_ocr_spark.fixtures.genpages import gen_rows
@@ -6662,11 +6628,11 @@ def q_text_compression(spark, sf_dir):
     miss.  Arrow-batched pandas UDF (the same deliberate exception as
     NFC: nothing built-in can compress), zero shuffle, fixed level 6 so
     the ratio is platform-reproducible.  Oracle = frozen kernel golden
-    (tools/freeze_compression_golden.py)."""
+    (tools/freeze.py)."""
     from pdf_ocr_spark.fixtures.genpages import gen_html_meta_rows
     from pdf_ocr_spark.operators.text_analysis import compression_signals
 
-    rows = gen_html_meta_rows(48)  # must match the freeze tool's N_DOCS
+    rows = gen_html_meta_rows(48)  # must match its entry in tools/freeze.py
     pages = spark.createDataFrame(
         [(r["url"], bytearray(r["html"])) for r in rows],
         schema="url string, html binary",
@@ -6688,7 +6654,7 @@ def q_wet_cdx(spark, sf_dir):
     of the extracted text, byte ranges) together.  One sorted archive
     partition pins the byte layout; production indexing is per-file
     parallel.  Oracle = frozen kernel replay of the same three stages
-    (tools/freeze_wet_cdx_golden.py)."""
+    (tools/freeze.py)."""
     from pdf_ocr_spark.fixtures.genpages import gen_rows
     from pdf_ocr_spark.pipeline.extract_job import extract_documents
     from pdf_ocr_spark.sources.warc import pages_to_warc, warc_cdx
@@ -6809,7 +6775,7 @@ def _blocks_corpus_df(spark):
     from pdf_ocr_spark.fixtures.genpages import gen_rows
     from pdf_ocr_spark.pipeline.extract_job import extract_blocks
 
-    rows = gen_rows(60)  # must match tools/freeze_blocks_golden.py N_DOCS
+    rows = gen_rows(60)  # must match its entry in tools/freeze.py
     pages = spark.createDataFrame(
         [(r["url"], bytearray(r["html"])) for r in rows],
         schema="url string, html binary",
@@ -6821,7 +6787,7 @@ def q_blocks_table(spark, sf_dir):
     """Block-level table (SURVEY §1.3 documents → pages → blocks): one row
     per typed layout block with bbox + confidence, computed by the
     distributed pipeline; the oracle reads the frozen kernel golden
-    (tools/freeze_blocks_golden.py) — value-hash equality proves the
+    (tools/freeze.py) — value-hash equality proves the
     Spark route reproduces the kernel byte-for-byte.  Mirrors the
     reference blocks JSON sink
     (/root/reference/pdf_ocr_with_boxes_v3.py:220-227,374-377)."""
@@ -6874,11 +6840,11 @@ def q_blocks_composite(spark, sf_dir):
     Table typing comes from ruled-grid detection, image blocks from
     draw-time CTM bboxes, captions/footnotes from geometric adjacency
     (kernels/pdf/layout.py attach_captions/composite_text).  Oracle =
-    frozen kernel golden (tools/freeze_composites_golden.py)."""
+    frozen kernel golden (tools/freeze.py)."""
     from pdf_ocr_spark.fixtures.genpages import gen_composite_rows
     from pdf_ocr_spark.pipeline.extract_job import extract_composites
 
-    rows = gen_composite_rows(45)  # must match the freeze tool's N_DOCS
+    rows = gen_composite_rows(45)  # must match its entry in tools/freeze.py
     pages = spark.createDataFrame(
         [(r["url"], bytearray(r["html"])) for r in rows],
         schema="url string, html binary",
@@ -6899,7 +6865,7 @@ def q_raster_pages(spark, sf_dir):
     /root/reference/pdf_ocr_with_boxes_v3.py:144-158) with dimensions,
     ink-pixel count, and the full-bitmap md5.  Corpus = standard mix +
     vector-only line-art docs (the class the rasterizer unlocks for
-    OCR).  Oracle = frozen kernel golden (tools/freeze_goldens.py) —
+    OCR).  Oracle = frozen kernel golden (tools/freeze.py) —
     value-hash equality pins every pixel of every page."""
     from pdf_ocr_spark.fixtures.genpages import gen_raster_rows
     from pdf_ocr_spark.pipeline.extract_job import extract_rasters
@@ -7197,11 +7163,11 @@ def q_html_tables(spark, sf_dir):
     shape, and row-major cells as TSV, computed by the distributed
     pipeline (extract_html_tables; same single-shuffle plan shape as the
     hot path).  Tableless pages emit nothing.  Oracle = frozen kernel
-    golden (tools/freeze_html_tables_golden.py)."""
+    golden (tools/freeze.py)."""
     from pdf_ocr_spark.fixtures.genpages import gen_html_table_rows
     from pdf_ocr_spark.pipeline.extract_job import extract_html_tables
 
-    rows = gen_html_table_rows(40)  # must match the freeze tool's N_DOCS
+    rows = gen_html_table_rows(40)  # must match its entry in tools/freeze.py
     pages = spark.createDataFrame(
         [(r["url"], bytearray(r["html"])) for r in rows],
         schema="url string, html binary",
@@ -7226,11 +7192,11 @@ def q_html_meta(spark, sf_dir):
     single-shuffle plan shape as the hot path).  Exercises quoted /
     unquoted attributes, entity decoding, a UTF-16LE page, and
     metadata-free shells.  Oracle = frozen kernel golden
-    (tools/freeze_html_meta_golden.py)."""
+    (tools/freeze.py)."""
     from pdf_ocr_spark.fixtures.genpages import gen_html_meta_rows
     from pdf_ocr_spark.pipeline.extract_job import extract_html_meta
 
-    rows = gen_html_meta_rows(48)  # must match the freeze tool's N_DOCS
+    rows = gen_html_meta_rows(48)  # must match its entry in tools/freeze.py
     pages = spark.createDataFrame(
         [(r["url"], bytearray(r["html"])) for r in rows],
         schema="url string, html binary",
@@ -7314,11 +7280,11 @@ def q_html_jsonld(spark, sf_dir):
     top-level arrays, @graph wrappers, attribute parameters, uppercase
     tags, non-ld scripts (ignored), and JSON-LD-free pages (nothing).
     Same single-shuffle route shape as the hot path.  Oracle = frozen
-    kernel golden (tools/freeze_jsonld_golden.py)."""
+    kernel golden (tools/freeze.py)."""
     from pdf_ocr_spark.fixtures.genpages import gen_jsonld_rows
     from pdf_ocr_spark.pipeline.extract_job import extract_structured_data
 
-    rows = gen_jsonld_rows(56)  # must match the freeze tool's N_DOCS
+    rows = gen_jsonld_rows(56)  # must match its entry in tools/freeze.py
     pages = spark.createDataFrame(
         [(r["url"], bytearray(r["html"])) for r in rows],
         schema="url string, html binary",
@@ -7345,11 +7311,11 @@ def q_html_microdata(spark, sf_dir):
     valued itemscope, uppercase attributes, orphan itemprops (skipped),
     a decoy inside a quoted attribute value, truncated pages, and
     microdata-free pages.  Oracle = frozen kernel golden
-    (tools/freeze_microdata_golden.py)."""
+    (tools/freeze.py)."""
     from pdf_ocr_spark.fixtures.genpages import gen_microdata_rows
     from pdf_ocr_spark.pipeline.extract_job import extract_microdata_rows
 
-    rows = gen_microdata_rows(48)  # must match the freeze tool's N_DOCS
+    rows = gen_microdata_rows(48)  # must match its entry in tools/freeze.py
     pages = spark.createDataFrame(
         [(r["url"], bytearray(r["html"])) for r in rows],
         schema="url string, html binary",
@@ -7376,7 +7342,7 @@ def q_noindex_gate(spark, sf_dir):
     from pdf_ocr_spark.fixtures.genpages import gen_html_meta_rows
     from pdf_ocr_spark.pipeline.extract_job import extract_html_meta
 
-    rows = gen_html_meta_rows(48)  # must match the freeze tool's N_DOCS
+    rows = gen_html_meta_rows(48)  # must match its entry in tools/freeze.py
     pages = spark.createDataFrame(
         [(r["url"], bytearray(r["html"])) for r in rows],
         schema="url string, html binary",
@@ -7414,11 +7380,11 @@ def q_pdf_forms(spark, sf_dir):
     UTF-16BE/PDFDoc text-string decoding).  Form data never reaches the
     text layer when fields lack appearance streams; skipping it loses
     real content at crawl scale.  Formless PDFs and HTML emit nothing.
-    Oracle = frozen kernel golden (tools/freeze_forms_golden.py)."""
+    Oracle = frozen kernel golden (tools/freeze.py)."""
     from pdf_ocr_spark.fixtures.genpages import gen_form_rows
     from pdf_ocr_spark.pipeline.extract_job import extract_forms
 
-    rows = gen_form_rows(36)  # must match the freeze tool's N_DOCS
+    rows = gen_form_rows(36)  # must match its entry in tools/freeze.py
     pages = spark.createDataFrame(
         [(r["url"], bytearray(r["html"])) for r in rows],
         schema="url string, html binary",
@@ -7441,11 +7407,11 @@ def q_pdf_doc_info(spark, sf_dir):
     dates + page count) through the distributed pipeline — the
     quality/dedup signals the content stream doesn't carry; info-less
     PDFs emit all-null fields, non-PDFs emit nothing.  Oracle = frozen
-    kernel golden (tools/freeze_docmeta_golden.py)."""
+    kernel golden (tools/freeze.py)."""
     from pdf_ocr_spark.fixtures.genpages import gen_docmeta_rows
     from pdf_ocr_spark.pipeline.extract_job import extract_doc_info
 
-    rows = gen_docmeta_rows(36)  # must match the freeze tool's N_DOCS
+    rows = gen_docmeta_rows(36)  # must match its entry in tools/freeze.py
     pages = spark.createDataFrame(
         [(r["url"], bytearray(r["html"])) for r in rows],
         schema="url string, html binary",
@@ -7533,11 +7499,11 @@ def q_pdf_annotations(spark, sf_dir):
     order, decoded /Contents (UTF-16BE supported) and author.  Link and
     Widget annots route to the frontier/forms extractors; geometry-only
     markup emits nothing.  Oracle = frozen kernel golden
-    (tools/freeze_annots_golden.py)."""
+    (tools/freeze.py)."""
     from pdf_ocr_spark.fixtures.genpages import gen_annot_rows
     from pdf_ocr_spark.pipeline.extract_job import extract_annotations_route
 
-    rows = gen_annot_rows(36)  # must match the freeze tool's N_DOCS
+    rows = gen_annot_rows(36)  # must match its entry in tools/freeze.py
     pages = spark.createDataFrame(
         [(r["url"], bytearray(r["html"])) for r in rows],
         schema="url string, html binary",
@@ -7562,7 +7528,7 @@ def q_canonical_collapse(spark, sf_dir):
     from pdf_ocr_spark.operators.dedup import canonical_url_collapse
     from pdf_ocr_spark.pipeline.extract_job import extract_html_meta
 
-    rows = gen_html_meta_rows(48)  # must match the freeze tool's N_DOCS
+    rows = gen_html_meta_rows(48)  # must match its entry in tools/freeze.py
     pages = spark.createDataFrame(
         [(r["url"], bytearray(r["html"])) for r in rows]
         + [(r["url"] + "?m=1", bytearray(r["html"])) for r in rows],
@@ -7733,11 +7699,11 @@ def q_robots_rules(spark, sf_dir):
     """robots.txt rule tables through the distributed route (RFC 9309
     parse: agent groups, Allow/Disallow, wildcard/end-anchor patterns,
     empty-Disallow allow-all sentinel) — oracle = frozen kernel golden
-    (tools/freeze_robots_golden.py)."""
+    (tools/freeze.py)."""
     from pdf_ocr_spark.fixtures.genpages import gen_robots_rows
     from pdf_ocr_spark.operators.frontier import robots_rules
 
-    robots, _ = gen_robots_rows(25)  # must match the freeze tool
+    robots, _ = gen_robots_rows(25)  # must match its entry in tools/freeze.py
     df = spark.createDataFrame(
         [(r["domain"], bytearray(r["body"])) for r in robots],
         schema="domain string, body binary",
@@ -7802,7 +7768,7 @@ def q_sitemap_urls(spark, sf_dir):
     from pdf_ocr_spark.fixtures.genpages import gen_sitemap_rows
     from pdf_ocr_spark.operators.frontier import sitemap_urls
 
-    rows = gen_sitemap_rows(20)  # must match the freeze tool
+    rows = gen_sitemap_rows(20)  # must match its entry in tools/freeze.py
     df = spark.createDataFrame(
         [(r["url"], bytearray(r["body"])) for r in rows],
         schema="url string, body binary",
@@ -8105,36 +8071,9 @@ def q_link_harmonic(spark, sf_dir):
     edges; distances by two unrolled relational min-plus steps; 1/d
     through DECIMAL sums.  The oracle replays host rollup, min-plus,
     and the harmonic sum in one nested CTE."""
-    from pdf_ocr_spark.operators.graph import harmonic_centrality, host_graph
+    from pdf_ocr_spark.operators.graph import harmonic_centrality
 
-    extracted = spark.read.parquet(_golden("link_edges")).select(
-        "url", "link", "nofollow"
-    )
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 400)
-    i = F.col("doc_id")
-    src = F.concat(
-        F.lit("https://site"), (i % 11).cast("string"),
-        F.lit(".example.org/page/"), i.cast("string"),
-    )
-    m = i % 5
-    link = (
-        F.when(m == 0, F.concat(
-            F.lit("https://site"), ((i * 3) % 11).cast("string"),
-            F.lit(".example.org/x/"), i.cast("string")))
-        .when(m == 1, F.concat(F.lit("/local/"), (i % 7).cast("string")))
-        .when(m == 2, F.concat(
-            F.lit("mailto:user"), i.cast("string"), F.lit("@example.org")))
-        .when(m == 3, F.concat(
-            F.lit("HTTPS://CDN.Example.NET:8080/asset?id="),
-            (i % 13).cast("string")))
-        .otherwise(F.concat(
-            F.lit("https://u:p@site"), (i % 4).cast("string"),
-            F.lit(".example.org/auth")))
-    )
-    synth = d.select(
-        src.alias("url"), link.alias("link"), (i % 3 == 0).alias("nofollow")
-    )
-    hg = host_graph(extracted.unionByName(synth)).select(
+    hg = _host_graph_input(spark, sf_dir).select(
         F.col("src_host").alias("src"), F.col("dst_host").alias("dst")
     )
     return harmonic_centrality(hg, radius=3, prec=10)
@@ -8462,37 +8401,10 @@ def q_link_harmonic_hyperball(spark, sf_dir):
     replacing the exact pair table with 2^b registers per node at
     10⁸ hosts.  Oracle replays register init, three merge rounds, the
     estimator, the growth sum, AND the exact min-plus."""
-    from pdf_ocr_spark.operators.graph import harmonic_centrality, host_graph
+    from pdf_ocr_spark.operators.graph import harmonic_centrality
     from pdf_ocr_spark.operators import sketches as SK
 
-    extracted = spark.read.parquet(_golden("link_edges")).select(
-        "url", "link", "nofollow"
-    )
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 400)
-    i = F.col("doc_id")
-    src = F.concat(
-        F.lit("https://site"), (i % 11).cast("string"),
-        F.lit(".example.org/page/"), i.cast("string"),
-    )
-    m = i % 5
-    link = (
-        F.when(m == 0, F.concat(
-            F.lit("https://site"), ((i * 3) % 11).cast("string"),
-            F.lit(".example.org/x/"), i.cast("string")))
-        .when(m == 1, F.concat(F.lit("/local/"), (i % 7).cast("string")))
-        .when(m == 2, F.concat(
-            F.lit("mailto:user"), i.cast("string"), F.lit("@example.org")))
-        .when(m == 3, F.concat(
-            F.lit("HTTPS://CDN.Example.NET:8080/asset?id="),
-            (i % 13).cast("string")))
-        .otherwise(F.concat(
-            F.lit("https://u:p@site"), (i % 4).cast("string"),
-            F.lit(".example.org/auth")))
-    )
-    synth = d.select(
-        src.alias("url"), link.alias("link"), (i % 3 == 0).alias("nofollow")
-    )
-    hg = host_graph(extracted.unionByName(synth)).select(
+    hg = _host_graph_input(spark, sf_dir).select(
         F.col("src_host").alias("src"), F.col("dst_host").alias("dst")
     )
     hb = SK.hyperball_harmonic(hg, radius=3, b=6)
@@ -8560,11 +8472,11 @@ def q_feed_items(spark, sf_dir):
     alternate links beat rel=self decoys; gzipped feeds decompress
     in-kernel; broken docs emit nothing.  Feeds are the freshest
     frontier-discovery channel next to sitemaps and page links.
-    Oracle = frozen kernel golden (tools/freeze_feeds_golden.py)."""
+    Oracle = frozen kernel golden (tools/freeze.py)."""
     from pdf_ocr_spark.fixtures.genpages import gen_feed_rows
     from pdf_ocr_spark.operators.frontier import feed_items
 
-    rows = gen_feed_rows(24)  # must match the freeze tool's N_DOCS
+    rows = gen_feed_rows(24)  # must match its entry in tools/freeze.py
     df = spark.createDataFrame(
         [(r["url"], bytearray(r["body"])) for r in rows],
         schema="url string, body binary",
@@ -8735,7 +8647,7 @@ def q_pipeline_end_to_end(spark, sf_dir):
     dedup (canonical per normalized fingerprint) → clean-corpus
     accounting per content kind.  Oracle = frozen golden computed by a
     THIRD engine (in-process kernel + python-re quality twins +
-    hashlib dedup, tools/freeze_goldens.py) — so Spark, DuckDB-read
+    hashlib dedup, tools/freeze.py) — so Spark, DuckDB-read
     golden, and plain python all agree on the full composition."""
     from pdf_ocr_spark.fixtures.genpages import gen_rows
     from pdf_ocr_spark.operators import text_analysis as TT
@@ -9303,37 +9215,9 @@ def q_link_communities(spark, sf_dir):
     link-farm clusters joined by a stray edge.  Deterministic
     (synchronous update, min-label tie-break, no RNG); the oracle
     unrolls both rounds as SQL over the identical graph."""
-    from pdf_ocr_spark.operators.graph import host_graph, label_propagation
+    from pdf_ocr_spark.operators.graph import label_propagation
 
-    extracted = spark.read.parquet(_golden("link_edges")).select(
-        "url", "link", "nofollow"
-    )
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 400)
-    i = F.col("doc_id")
-    src = F.concat(
-        F.lit("https://site"), (i % 11).cast("string"),
-        F.lit(".example.org/page/"), i.cast("string"),
-    )
-    m = i % 5
-    link = (
-        F.when(m == 0, F.concat(
-            F.lit("https://site"), ((i * 3) % 11).cast("string"),
-            F.lit(".example.org/x/"), i.cast("string")))
-        .when(m == 1, F.concat(F.lit("/local/"), (i % 7).cast("string")))
-        .when(m == 2, F.concat(
-            F.lit("mailto:user"), i.cast("string"), F.lit("@example.org")))
-        .when(m == 3, F.concat(
-            F.lit("HTTPS://CDN.Example.NET:8080/asset?id="),
-            (i % 13).cast("string")))
-        .otherwise(F.concat(
-            F.lit("https://u:p@site"), (i % 4).cast("string"),
-            F.lit(".example.org/auth")))
-    )
-    synth = d.select(
-        src.alias("url"), link.alias("link"),
-        (i % 3 == 0).alias("nofollow"),
-    )
-    hg = host_graph(extracted.unionByName(synth))
+    hg = _host_graph_input(spark, sf_dir)
     out = label_propagation(hg, "src_host", "dst_host", rounds=2)
     return out.select(F.col("node").alias("host"), "community")
 
@@ -9378,11 +9262,11 @@ def q_hreflang_alternates(spark, sf_dir):
     cliques, broken reciprocity, one-way hubs, uppercase/unquoted/
     entity-encoded markup, an alternate-feed decoy (no hreflang — must
     not emit), and annotation-free pages.  Oracle = frozen kernel
-    golden (tools/freeze_hreflang_golden.py)."""
+    golden (tools/freeze.py)."""
     from pdf_ocr_spark.fixtures.genpages import gen_hreflang_rows
     from pdf_ocr_spark.pipeline.extract_job import extract_hreflang_links
 
-    rows = gen_hreflang_rows(18)  # must match the freeze tool's N_CLUSTERS
+    rows = gen_hreflang_rows(18)  # must match its entry in tools/freeze.py
     pages = spark.createDataFrame(
         [(r["url"], bytearray(r["html"])) for r in rows],
         schema="url string, html binary",
@@ -9451,14 +9335,18 @@ FROM per_url p LEFT JOIN rstats r ON r.url = p.url
 
 
 def _host_graph_input(spark, sf_dir):
-    """The shared host-graph input: golden link edges + the synthetic
-    multi-host corpus (verbatim the q_link_host_graph construction,
-    replayed by _EDGE_SYNTH_SQL)."""
+    """The shared host-graph input of every link_* query: golden link
+    edges + the synthetic multi-host corpus, rolled up by host_graph
+    (replayed by _EDGE_SYNTH_SQL)."""
     from pdf_ocr_spark.operators.graph import host_graph
 
     extracted = spark.read.parquet(_golden("link_edges")).select(
         "url", "link", "nofollow"
     )
+    # Synthetic multi-host edges (the golden corpus is one site): cross-
+    # host links, a relative path, a mailto (must drop), an uppercase
+    # host with a port, and a userinfo URL — every shape host_expr
+    # normalizes.  Replayed verbatim by the oracle.
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 400)
     i = F.col("doc_id")
     src = F.concat(
@@ -10399,7 +10287,7 @@ REGISTRY: Dict[str, Tuple[QueryFn, Optional[str]]] = {
     "url_domain_counts": (q_url_domain_counts, SQL_URL_DOMAIN_COUNTS),
     # multimodal
     # non-SQL-expressible kernels: oracle = frozen kernel golden
-    # (tools/freeze_goldens.py) → full value-hash gate
+    # (tools/freeze.py) → full value-hash gate
     "multimodal_meta": (q_multimodal_meta, SQL_MULTIMODAL_META),
     "multimodal_frames": (q_multimodal_frames, SQL_MULTIMODAL_FRAMES),
     "multimodal_resize": (q_multimodal_resize, SQL_MULTIMODAL_RESIZE),

@@ -37,7 +37,12 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from pdf_ocr_spark.pipeline.extract_job import DOC_SCHEMA, extract_docs_arrow
+from pdf_ocr_spark.pipeline.extract_job import (
+    DOC_SCHEMA,
+    doc_rows,
+    extract_documents,
+    kernel_route,
+)
 
 #: schema of the Common-Crawl-style pages table (BASELINE.json input_hint)
 PAGES_SCHEMA = StructType(
@@ -77,13 +82,7 @@ def stream_extract(
         reader = reader.option("ignoreCorruptFiles", "true")
     pages = reader.parquet(input_path)
 
-    if num_partitions is None:
-        num_partitions = max(spark.sparkContext.defaultParallelism, 8)
-    docs = (
-        pages.select("url", "html")
-        .repartition(num_partitions, F.xxhash64("url"))
-        .mapInArrow(extract_docs_arrow, schema=DOC_SCHEMA)
-    )
+    docs = extract_documents(pages, num_partitions)
 
     writer = (
         docs.writeStream.format("parquet")
@@ -241,15 +240,7 @@ def stream_feed_frontier(
     State stays bounded: the watermark ages out link-dedup state after
     a day — re-discoveries beyond that are acceptable (the fetch loop's
     snapshot-table anti-join is the durable guard)."""
-    from pyspark.sql.types import (
-        BinaryType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
-    from pdf_ocr_spark.operators.frontier import _feed_items_batch, FEED_ITEM_SCHEMA
+    from pdf_ocr_spark.operators.frontier import FEED_ITEM_SCHEMA, feed_item_rows
 
     schema = StructType(
         [
@@ -263,19 +254,19 @@ def stream_feed_frontier(
         .option("ignoreCorruptFiles", "true")
         .parquet(feeds_path)
     )
-    if num_partitions is None:
-        num_partitions = max(spark.sparkContext.defaultParallelism, 8)
+    # the batch route's feed parser, with the fetch timestamp passed
+    # through onto every item for the watermark
     items = (
-        feeds.select("url", "body", "fetched_at")
-        .repartition(num_partitions, F.xxhash64("url"))
-        .mapInPandas(
-            _stream_feed_batch,
+        kernel_route(
+            feeds, feed_item_rows,
             # a LOCAL schema: StructType.add mutates the receiver, and
             # FEED_ITEM_SCHEMA is the shared batch-route schema
-            schema=StructType(
+            StructType(
                 list(FEED_ITEM_SCHEMA.fields)
                 + [StructField("fetched_at", TimestampType())]
             ),
+            cols=("url", "body", "fetched_at"),
+            num_partitions=num_partitions,
         )
         .withWatermark("fetched_at", "1 day")
         .dropDuplicatesWithinWatermark(["link"])
@@ -291,63 +282,14 @@ def stream_feed_frontier(
     return writer.start()
 
 
-def _stream_feed_batch(batches):
-    """Feed-parse kernel for the streaming route: same parser as the
-    batch ``_feed_items_batch``, carrying the fetch timestamp through
-    for the watermark."""
-    import pandas as pd
-
-    from pdf_ocr_spark.kernels.robots import parse_feed
-
-    for batch in batches:
-        rows = []
-        for url, body, ts in zip(batch["url"], batch["body"], batch["fetched_at"]):
-            try:
-                for link, title, date in parse_feed(
-                    bytes(body) if body is not None else b""
-                ):
-                    rows.append((url, link, title, date, ts))
-            except Exception:  # noqa: BLE001
-                continue
-        yield pd.DataFrame(
-            rows, columns=["feed", "link", "title", "date", "fetched_at"]
-        )
-
-
 #: DOC_SCHEMA plus the input row's capture timestamp, passed through the
-#: extractor 1:1 (``_parse_batch`` emits exactly one doc row per input
-#: row, in input order) — WET conversion records must carry the ORIGINAL
-#: WARC-Date of the capture they convert, like Common Crawl's WET product.
+#: extractor 1:1 (``doc_rows`` carries trailing input columns onto the
+#: doc row of their input row) — WET conversion records must carry the
+#: ORIGINAL WARC-Date of the capture they convert, like Common Crawl's WET
+#: product.
 DOC_TS_SCHEMA = StructType(
     list(DOC_SCHEMA.fields) + [StructField("warc_ts", TimestampType())]
 )
-
-
-def extract_docs_with_ts_arrow(batches):
-    """Arrow extractor over (url, warc_ts, html) batches: the fused
-    extractor's output columns plus the untouched per-row ``warc_ts``.
-    No join needed — the kernel's 1:1 input-order contract makes the
-    timestamp a pure column pass-through (zero extra shuffle, unlike a
-    join-back-by-url inside every micro-batch)."""
-    import pyarrow as pa
-
-    from pdf_ocr_spark.pipeline.extract_job import _parse_batch, _tune_worker_gc
-
-    _tune_worker_gc()
-    engine = None
-    types = (
-        pa.string(), pa.string(), pa.string(), pa.int32(), pa.int32(),
-        pa.int32(), pa.string(), pa.string(), pa.int64(), pa.int32(),
-    )
-    names = [f.name for f in DOC_SCHEMA.fields] + ["warc_ts"]
-    for rb in batches:
-        rows, engine = _parse_batch(
-            rb.column(0).to_pylist(), rb.column(2).to_pylist(), engine
-        )
-        cols = list(zip(*rows)) if rows else [[] for _ in types]
-        arrays = [pa.array(c, t) for c, t in zip(cols, types)]
-        arrays.append(rb.column(1))
-        yield pa.record_batch(arrays, names=names)
 
 
 def stream_wet_export(
@@ -381,12 +323,9 @@ def stream_wet_export(
         "ignoreCorruptFiles", "true"
     )
     pages = reader.parquet(input_path)
-    if num_partitions is None:
-        num_partitions = max(spark.sparkContext.defaultParallelism, 8)
-    docs = (
-        pages.select("url", "warc_ts", "html")
-        .repartition(num_partitions, F.xxhash64("url"))
-        .mapInArrow(extract_docs_with_ts_arrow, schema=DOC_TS_SCHEMA)
+    docs = kernel_route(
+        pages, doc_rows, DOC_TS_SCHEMA,
+        cols=("url", "html", "warc_ts"), num_partitions=num_partitions,
     )
 
     def _emit(batch_df: DataFrame, batch_id: int) -> None:
@@ -445,13 +384,7 @@ def stream_quality_gate(
         "ignoreCorruptFiles", "true"
     )
     pages = reader.parquet(input_path)
-    if num_partitions is None:
-        num_partitions = max(spark.sparkContext.defaultParallelism, 8)
-    docs = (
-        pages.select("url", "html")
-        .repartition(num_partitions, F.xxhash64("url"))
-        .mapInArrow(extract_docs_arrow, schema=DOC_SCHEMA)
-    )
+    docs = extract_documents(pages, num_partitions)
     model_local = [
         (int(r[0]), int(r[1]), int(r[2]), r[3]) for r in model_rows
     ]

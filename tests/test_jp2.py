@@ -253,14 +253,13 @@ class TestPipelineIntegration:
         decodes real pixels; the stub recognizes the marker; the
         truncated doc falls back to the fingerprint, not a failure."""
         from pdf_ocr_spark.fixtures.genpages import gen_jpx_scan_rows
-        from pdf_ocr_spark.pipeline.extract_job import extract_batch, ocr_batch
+        from pdf_ocr_spark.pipeline.extract_job import PAGE_SCHEMA, page_rows
 
         rows = gen_jpx_scan_rows()
-        batch = pd.DataFrame({"url": [r["url"] for r in rows],
-                              "html": [bytes(r["html"]) for r in rows]})
-        pages = pd.concat(list(extract_batch(iter([batch]))),
-                          ignore_index=True)
-        pages = pd.concat(list(ocr_batch(iter([pages]))), ignore_index=True)
+        pages = pd.DataFrame(
+            page_rows([r["url"] for r in rows], [bytes(r["html"]) for r in rows]),
+            columns=PAGE_SCHEMA.fieldNames(),
+        )
         assert (pages["status"] == "ok").all()
         assert pages["needs_ocr"].all()
         by_url = pages.set_index(["url", "page"])["page_text"]

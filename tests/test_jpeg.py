@@ -474,14 +474,13 @@ def test_pixelcode_rejects_non_marker():
 
 def test_jpeg_scan_pipeline_roundtrip():
     from pdf_ocr_spark.fixtures.genpages import gen_jpeg_scan_rows
-    from pdf_ocr_spark.pipeline.extract_job import extract_batch, ocr_batch
+    from pdf_ocr_spark.pipeline.extract_job import PAGE_SCHEMA, page_rows
 
     rows = gen_jpeg_scan_rows()
-    batch = pd.DataFrame(
-        {"url": [r["url"] for r in rows], "html": [bytes(r["html"]) for r in rows]}
+    pages = pd.DataFrame(
+        page_rows([r["url"] for r in rows], [bytes(r["html"]) for r in rows]),
+        columns=PAGE_SCHEMA.fieldNames(),
     )
-    pages = pd.concat(list(extract_batch(iter([batch]))), ignore_index=True)
-    pages = pd.concat(list(ocr_batch(iter([pages]))), ignore_index=True)
     assert bool(pages["needs_ocr"].all())
     assert (pages["status"] == "ok").all()
     # every intact page (baseline, progressive, AND cmyk) recovers its

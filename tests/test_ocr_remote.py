@@ -167,14 +167,13 @@ def test_ocr_failure_surfaces_as_typed_doc_failure(vlm_server, monkeypatch):
     """Pipeline contract: an OCR-failed page makes the DOCUMENT a typed
     'ocr_failed' failure (resume retries it) — never an ok doc with
     silently-empty text."""
-    import pandas as pd
-
     import pdf_ocr_spark.kernels.ocr_stub as stub
     from pdf_ocr_spark.fixtures.genpages import make_scan_pdf
     from pdf_ocr_spark.kernels.ocr_remote import RemoteVlmEngine
     from pdf_ocr_spark.pipeline.extract_job import (
+        DOC_SCHEMA,
         OCR_FAILED_REASON,
-        extract_docs_batch,
+        doc_rows,
     )
 
     monkeypatch.setenv("SPARK_GRAFT_OCR_URL", vlm_server)
@@ -189,9 +188,8 @@ def test_ocr_failure_surfaces_as_typed_doc_failure(vlm_server, monkeypatch):
     try:
         _FakeVlm.fail_count = 99
         pdf = make_scan_pdf(["unreachable text"])
-        batch = pd.DataFrame({"url": ["u://scan"], "html": [pdf]})
-        out = pd.concat(list(extract_docs_batch(iter([batch]))))
-        row = out.iloc[0]
+        (row,) = doc_rows(["u://scan"], [pdf])
+        row = dict(zip(DOC_SCHEMA.fieldNames(), row))
         assert row["status"] == "failed"
         assert row["failure_reason"] == OCR_FAILED_REASON
         assert row["extracted_text"] is None
@@ -200,17 +198,17 @@ def test_ocr_failure_surfaces_as_typed_doc_failure(vlm_server, monkeypatch):
         monkeypatch.setattr(stub, "_ENGINE", None)
 
 
-def test_ocr_batch_paged_route_marks_failure(vlm_server, monkeypatch):
-    """The page-level route too: an OCR-failed page row becomes
-    status='failed' with the typed reason, not a silently-blank page."""
-    import pandas as pd
-
+def test_page_rows_mark_ocr_failure_per_page(vlm_server, monkeypatch):
+    """The page-level rows: an OCR-failed page row becomes
+    status='failed' with the typed reason, not a silently-blank page,
+    while its text sibling page stays ok."""
     import pdf_ocr_spark.kernels.ocr_stub as stub
+    import pdf_ocr_spark.kernels.pdf.extract as pdf_extract
     from pdf_ocr_spark.kernels.ocr_remote import RemoteVlmEngine
     from pdf_ocr_spark.pipeline.extract_job import (
         OCR_FAILED_REASON,
         PAGE_SCHEMA,
-        ocr_batch,
+        page_rows,
     )
 
     monkeypatch.setenv("SPARK_GRAFT_OCR_URL", vlm_server)
@@ -222,21 +220,24 @@ def test_ocr_batch_paged_route_marks_failure(vlm_server, monkeypatch):
         self._sleep = lambda s: None
 
     monkeypatch.setattr(RemoteVlmEngine, "__init__", fast_init)
+    # one image-only page next to one text page
+    doc = pdf_extract.DocExtract(
+        "ok", None, 2,
+        [pdf_extract.PageExtract(1, "", 0, True, b"IMG", 612.0, 792.0),
+         pdf_extract.PageExtract(2, "text page", 3, False, None, 612.0, 792.0)],
+        [],
+    )
+    monkeypatch.setattr(pdf_extract, "extract_pdf", lambda data, *rng: doc)
     try:
         _FakeVlm.fail_count = 99
-        cols = [f.name for f in PAGE_SCHEMA.fields]
-        batch = pd.DataFrame(
-            [
-                ("u://a", "pdf", 1, None, 0, True, b"IMG", "ok", None, 10),
-                ("u://a", "pdf", 2, "text page", 3, False, None, "ok", None, 10),
-            ],
-            columns=cols,
-        )
-        out = pd.concat(list(ocr_batch(iter([batch]))))
-        failed = out[out["page"] == 1].iloc[0]
+        rows = [dict(zip(PAGE_SCHEMA.fieldNames(), r))
+                for r in page_rows(["u://a"], [b"%PDF-1.7 two pages"])]
+        failed, text = sorted(rows, key=lambda r: r["page"])
         assert failed["status"] == "failed"
         assert failed["failure_reason"] == OCR_FAILED_REASON
-        assert out[out["page"] == 2].iloc[0]["status"] == "ok"
+        assert failed["page_text"] is None
+        assert text["status"] == "ok"
+        assert text["page_text"] == "text page"
     finally:
         _FakeVlm.fail_count = 0
         monkeypatch.setattr(stub, "_ENGINE", None)
@@ -268,23 +269,20 @@ def test_resume_retries_transient_ocr_failures(spark):
 def test_pipeline_env_swap(vlm_server, monkeypatch):
     """With SPARK_GRAFT_OCR_URL set, the fused extractor UDF body routes
     scan-PDF pages to the remote engine instead of the stub.  Driven by
-    calling ``extract_docs_batch`` exactly as the executor does (env vars
+    calling the extraction core's ``doc_rows`` exactly as the executor does (env vars
     cannot reach ALREADY-RUNNING reused python workers mid-session — on a
     cluster the variable ships via spark.executorEnv at submit time)."""
-    import pandas as pd
-
     import pdf_ocr_spark.kernels.ocr_stub as stub
     from pdf_ocr_spark.fixtures.genpages import make_scan_pdf
-    from pdf_ocr_spark.pipeline.extract_job import extract_docs_batch
+    from pdf_ocr_spark.pipeline.extract_job import DOC_SCHEMA, doc_rows
 
     monkeypatch.setenv("SPARK_GRAFT_OCR_URL", vlm_server)
     monkeypatch.setattr(stub, "_ENGINE", None)  # force lazy re-init
     try:
         _FakeVlm.fail_count = 0
         pdf = make_scan_pdf(["remote ocr target"])
-        batch = pd.DataFrame({"url": ["u://scan"], "html": [pdf]})
-        out = pd.concat(list(extract_docs_batch(iter([batch]))))
-        row = out.iloc[0]
+        (row,) = doc_rows(["u://scan"], [pdf])
+        row = dict(zip(DOC_SCHEMA.fieldNames(), row))
         assert row["status"] == "ok"
         assert "line one of" in row["extracted_text"]  # remote engine ran
         assert "line two" in row["extracted_text"]

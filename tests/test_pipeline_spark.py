@@ -96,24 +96,20 @@ def test_resume_anti_join(spark, corpus_parquet, tmp_path):
     assert resumed == single
 
 
-def test_fused_equals_paged_route(spark, corpus_parquet, docs_df):
-    """The fused single-stage extractor (hot path) and the page-level
-    route (extract → OCR → groupBy assemble) emit identical documents —
-    the paged route is the semantics oracle for the fusion."""
-    from pdf_ocr_spark.pipeline.extract_job import extract_documents_paged
+def test_page_route_equals_local_core(spark, corpus_parquet, corpus_rows):
+    """The Spark page route emits exactly the extraction core's page rows
+    computed locally on the same payloads — the local core is the oracle
+    for the distributed stage (parse + OCR in one python stage)."""
+    from pdf_ocr_spark.pipeline.extract_job import extract_pages, page_rows
 
     pages = spark.read.parquet(corpus_parquet)
-    cols = [
-        "url", "content_kind", "extracted_text", "n_pages",
-        "n_blocks", "n_chars", "status", "failure_reason", "n_bytes",
-        "n_ocr_pages",
-    ]
-    fused = {r["url"]: tuple(r[c] for c in cols) for r in docs_df.select(cols).collect()}
-    paged = {
-        r["url"]: tuple(r[c] for c in cols)
-        for r in extract_documents_paged(pages).select(cols).collect()
-    }
-    assert fused == paged
+    got = sorted(tuple(r) for r in extract_pages(pages, num_partitions=4).collect())
+    local = sorted(
+        page_rows([r["url"] for r in corpus_rows],
+                  [bytes(r["html"]) for r in corpus_rows])
+    )
+    assert len(local) > len(corpus_rows)  # multi-page docs fan out
+    assert got == local
 
 
 def test_doc_lineage_metrics(spark, corpus_parquet):
@@ -316,13 +312,16 @@ def test_html_mentioning_pdf_magic_routes_as_html(spark):
 def test_plan_has_single_planned_shuffle(spark, corpus_parquet):
     """The page-level plan shows exactly the one explicit repartition
     (hashpartitioning on xxhash64(url)); extraction + OCR are
-    partition-local (SURVEY.md §4.3)."""
+    partition-local in one python stage (SURVEY.md §4.3)."""
     from pdf_ocr_spark.pipeline.extract_job import extract_pages
 
     pages = spark.read.parquet(corpus_parquet)
     plan = extract_pages(pages, num_partitions=8)._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1
     assert "xxhash64" in plan
+    # parse + OCR run in ONE python stage: exactly one python map node
+    assert plan.count("MapInArrow") == 1, plan
+    assert "MapInPandas" not in plan
 
 
 def test_column_pruning_reaches_scan(spark, corpus_parquet):

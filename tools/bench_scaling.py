@@ -12,7 +12,7 @@ Each parallelism level runs in its OWN subprocess (fresh JVM), pinned
 with taskset to exactly that many cores (JVM service threads included —
 an honest N-core-cluster stand-in). Two untimed warmup runs reach steady
 state, then best-of-3 of the timed job:
-    read parquet → repartition(N, xxhash64(url)) → fused mapInPandas
+    read parquet → repartition(N, xxhash64(url)) → fused mapInArrow
     (parse + batched OCR + per-doc assembly) → noop sink
 """
 
@@ -239,8 +239,8 @@ def ceiling(procs: int, n_docs: int = N_DOCS) -> float:
 
 
 def _ceiling_work(args):
-    """Runs the EXACT executor UDF body (extract_docs_batch: parse +
-    batched OCR + per-doc assembly over pandas batches) outside Spark —
+    """Runs the EXACT executor UDF body (extract_docs_arrow: parse +
+    batched OCR + per-doc assembly over Arrow record batches) outside Spark —
     so fraction-of-ceiling isolates only Spark's transport/scheduling.
     Batches are sliced to the session's Arrow batch size."""
     urls, htmls = args

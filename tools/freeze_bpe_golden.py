@@ -1,4 +1,4 @@
-"""Freeze the BPE goldens: an INDEPENDENT pure-python byte-pair-
+"""The independent BPE twin behind the BPE goldens: an INDEPENDENT pure-python byte-pair-
 encoding implementation (classic Sennrich et al. 2016 algorithm —
 dict-of-tuples pair statistics, no Spark, no shared code with
 ``operators/tokenizer.py`` beyond the corpus fixture) run over
@@ -14,28 +14,19 @@ Pinned semantics (both implementations):
 - merge application: greedy left-to-right single pass
 - stop when the best pair's freq < 2
 
-Rerun (and commit) only when semantics intentionally change:
-    python tools/freeze_bpe_golden.py
+``tools/freeze.py`` writes the goldens from ``train``/``encode``; rerun
+(and commit) only when semantics intentionally change:
+    python tools/freeze.py bpe_merges bpe_encode
 """
 
 from __future__ import annotations
 
-import os
 import re
-import sys
 from collections import Counter
 from typing import Dict, List, Tuple
 
-import pandas as pd
+from pdf_ocr_spark.operators.tokenizer import END
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from pdf_ocr_spark.operators.tokenizer import END, fixture_corpus  # noqa: E402
-
-FIXTURES = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "pdf_ocr_spark", "fixtures",
-)
 N_MERGES = 12
 
 
@@ -88,28 +79,3 @@ def encode(text: str, merges) -> List[str]:
             syms = _merge_word(syms, l, r)
         toks.extend(syms)
     return toks
-
-
-def main() -> None:
-    corpus = fixture_corpus()
-    merges = train(corpus)
-    pd.DataFrame(
-        merges, columns=["rank", "left", "right", "freq"]
-    ).astype({"rank": "int64", "freq": "int64"}).to_parquet(
-        os.path.join(FIXTURES, "bpe_merges_golden.parquet"), index=False
-    )
-    enc = [
-        (doc_id, len(toks), " ".join(toks))
-        for doc_id, text in corpus
-        for toks in [encode(text, merges)]
-    ]
-    pd.DataFrame(enc, columns=["doc_id", "n_tokens", "tokens"]).astype(
-        {"doc_id": "int64", "n_tokens": "int64"}
-    ).to_parquet(os.path.join(FIXTURES, "bpe_encode_golden.parquet"), index=False)
-    print(f"froze {len(merges)} merges; encode rows={len(enc)}")
-    for m in merges:
-        print("  ", m)
-
-
-if __name__ == "__main__":
-    main()

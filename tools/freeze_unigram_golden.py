@@ -1,4 +1,4 @@
-"""Freeze the unigram-LM tokenizer goldens: an INDEPENDENT pure-python
+"""The independent twin behind the unigram-LM tokenizer goldens: an INDEPENDENT pure-python
 implementation of Viterbi hard-EM unigram training (SentencePiece
 family, Kudo 2018 — dict/loop statistics, no Spark, no shared code with
 ``operators/unigram.py`` beyond the corpus fixture) run over
@@ -20,29 +20,18 @@ Pinned semantics (both implementations):
 - hard EM: ROUNDS iterations; zero-count pieces dropped unless
   single-char (kept, count floored to 1); final prune to VOCAB_SIZE
 
-Rerun (and commit) only when semantics intentionally change:
-    python tools/freeze_unigram_golden.py
+``tools/freeze.py`` writes the goldens from ``train``/``encode``; rerun
+(and commit) only when semantics intentionally change:
+    python tools/freeze.py unigram_vocab unigram_encode
 """
 
 from __future__ import annotations
 
 import math
-import os
 import re
-import sys
 from collections import Counter
 from typing import Dict, List, Tuple
 
-import pandas as pd
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from pdf_ocr_spark.operators.tokenizer import fixture_corpus  # noqa: E402
-
-FIXTURES = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "pdf_ocr_spark", "fixtures",
-)
 VOCAB_SIZE = 40
 ROUNDS = 2
 MAX_PIECE_LEN = 4
@@ -136,23 +125,3 @@ def encode(corpus: List[Tuple[int, str]],
             toks.extend(_viterbi(w, logp))
         rows.append((doc_id, len(toks), " ".join(toks)))
     return rows
-
-
-def main() -> None:
-    corpus = fixture_corpus()
-    vocab = train(corpus)
-    pd.DataFrame(vocab, columns=["piece", "freq"]).astype(
-        {"piece": "string", "freq": "int64"}
-    ).to_parquet(os.path.join(FIXTURES, "unigram_vocab_golden.parquet"),
-                 index=False)
-    enc = encode(corpus, vocab)
-    pd.DataFrame(enc, columns=["doc_id", "n_tokens", "tokens"]).astype(
-        {"doc_id": "int64", "n_tokens": "int64", "tokens": "string"}
-    ).to_parquet(os.path.join(FIXTURES, "unigram_encode_golden.parquet"),
-                 index=False)
-    print(f"vocab: {len(vocab)} pieces; top: {vocab[:8]}")
-    print(f"encode: {len(enc)} docs; doc0: {enc[0]}")
-
-
-if __name__ == "__main__":
-    main()

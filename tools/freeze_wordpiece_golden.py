@@ -1,4 +1,4 @@
-"""Freeze the WordPiece tokenizer goldens: an INDEPENDENT pure-python
+"""The independent twin behind the WordPiece tokenizer goldens: an INDEPENDENT pure-python
 implementation of likelihood-criterion WordPiece training (Schuster &
 Nakajima 2012; BERT) — dict/loop statistics, no Spark, no shared code
 with ``operators/wordpiece.py`` beyond the corpus fixture — run over
@@ -19,29 +19,17 @@ Pinned semantics (both implementations):
 - encode: greedy longest-prefix MaxMatch, ## continuation, whole-word
   [UNK] on any unmatched position
 
-Rerun (and commit) only when semantics intentionally change:
-    python tools/freeze_wordpiece_golden.py
+``tools/freeze.py`` writes the goldens from ``train``/``encode``; rerun
+(and commit) only when semantics intentionally change:
+    python tools/freeze.py wordpiece_vocab wordpiece_encode
 """
 
 from __future__ import annotations
 
-import os
 import re
-import sys
 from collections import Counter
 from typing import Dict, List, Tuple
 
-import pandas as pd
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from pdf_ocr_spark.operators.tokenizer import fixture_corpus  # noqa: E402
-from pdf_ocr_spark.operators.wordpiece import eval_corpus  # noqa: E402  (corpus fixture only)
-
-FIXTURES = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "pdf_ocr_spark", "fixtures",
-)
 N_MERGES = 8
 MIN_FREQ = 2
 QUANTUM = 1_000_000_000_000
@@ -131,24 +119,3 @@ def encode(corpus, vocab) -> List[Tuple[int, int, str]]:
             toks.extend(max_match(w, vset, max_len))
         rows.append((doc_id, len(toks), " ".join(toks)))
     return rows
-
-
-def main() -> None:
-    corpus = fixture_corpus()
-    merges, vocab = train(corpus)
-    pd.DataFrame(vocab, columns=["piece", "freq"]).astype(
-        {"piece": "string", "freq": "int64"}
-    ).to_parquet(os.path.join(FIXTURES, "wordpiece_vocab_golden.parquet"),
-                 index=False)
-    enc = encode(eval_corpus(), vocab)
-    pd.DataFrame(enc, columns=["doc_id", "n_tokens", "tokens"]).astype(
-        {"doc_id": "int64", "n_tokens": "int64", "tokens": "string"}
-    ).to_parquet(os.path.join(FIXTURES, "wordpiece_encode_golden.parquet"),
-                 index=False)
-    print(f"merges: {len(merges)}; first: {merges[:5]}")
-    print(f"vocab: {len(vocab)} pieces; top: {vocab[:8]}")
-    print(f"encode: doc0: {enc[0]}")
-
-
-if __name__ == "__main__":
-    main()
