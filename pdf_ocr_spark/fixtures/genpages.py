@@ -972,7 +972,7 @@ def gen_raster_rows(n: int = 60, n_vector: int = 5) -> List[dict]:
     """Corpus for the raster queries: the standard mix (gen_rows) plus
     ``n_vector`` vector-only line-art docs — the page class whose OCR
     routing only exists because of the rasterizer."""
-    rows = gen_rows(n)
+    rows = gen_rows(n, include_ref_pdf=False)
     for s in range(n_vector):
         rows.append(
             dict(
@@ -1136,7 +1136,7 @@ def gen_orientation_rows(n: int = 40) -> List[dict]:
     """Corpus for the K4 orientation query: the standard mix (every page
     upright → rotation 0) plus one baked-rotation doc per angle and its
     upright twin."""
-    rows = gen_rows(n)
+    rows = gen_rows(n, include_ref_pdf=False)
     lines = ["alpha bravo charlie", "delta echo foxtrot", "golf hotel india"]
     for angle in (0, 90, 180, 270):
         rows.append(
@@ -1461,7 +1461,7 @@ def gen_link_rows() -> List[dict]:
     """Corpus for the link-graph queries: the standard 100-doc mix plus
     dedicated pages exercising the rel=nofollow/ugc/sponsored link-level
     opt-outs (absent from the generic HTML fixtures)."""
-    rows = gen_rows(100)
+    rows = gen_rows(100, include_ref_pdf=False)
     rel_pages = [
         (
             "https://example.test/links/rel/00000",
@@ -1678,7 +1678,9 @@ def _kind_for(i: int) -> str:
 
 def gen_rows(n: int, seed: int = 42, include_ref_pdf: bool = True) -> List[dict]:
     """Deterministic pages-table rows.  Row 0 (optionally) carries the
-    reference sample PDF verbatim; the rest cycle through the kind mix."""
+    reference sample PDF verbatim; the rest cycle through the kind mix.
+    The named corpora (:data:`CORPORA`) never include that file, so no
+    golden depends on whether it exists."""
     rows: List[dict] = []
     base_ts = datetime.datetime(2025, 1, 1, 0, 0, 0)
     ref_bytes: Optional[bytes] = None
@@ -2250,3 +2252,76 @@ def gen_hreflang_rows(n: int, seed: int = 37) -> List[dict]:
                 )
             )
     return rows
+
+
+def gen_quality_rows(n: int) -> List[dict]:
+    """Self-contained boilerplate HTML pages (each with its OWN rng
+    stream) with the article ground truth as ``true_text``."""
+    rows = []
+    for i in range(n):
+        html, true_text = make_html_page(random.Random(777000 + i),
+                                         ("en", "ja", "zh")[i % 3])
+        rows.append(dict(url=f"https://example.test/quality/{i:06d}",
+                         html=html, true_text=true_text))
+    return rows
+
+
+# -- named corpora -------------------------------------------------------------
+
+
+def _mix(n: int) -> List[dict]:
+    return gen_rows(n, include_ref_pdf=False)
+
+
+def _mirrored(rows: List[dict]) -> List[dict]:
+    """``rows`` plus every 3rd row again under a ``zz-mirror://`` url —
+    the recrawl/mirror case that makes a dedup leg load-bearing."""
+    return rows + [dict(r, url="zz-mirror://" + r["url"]) for r in rows[::3]]
+
+
+def _overlay_boxes(rows: List[dict]) -> List[dict]:
+    """One single-box page per row for the SVG overlay sink: the first
+    24 characters of the row's text at y = 30pt × (row index mod 20)."""
+    return [
+        dict(url=f"doc://{i}", page=i % 3 + 1, text=(r["text"] or "")[:24],
+             y=float(i % 20) * 30.0)
+        for i, r in enumerate(rows)
+    ]
+
+
+#: Corpus name → zero-argument row builder with its size pinned.  The
+#: registry queries (``queries._corpus``) and ``tools/freeze.py`` read
+#: their rows from here by name, so a golden and the query its oracle
+#: serves always see the same corpus.
+CORPORA = {
+    "mix_60": lambda: _mix(60),
+    "mix_100": lambda: _mix(100),
+    "mix_150": lambda: _mix(150),
+    "mix_150_mirrored": lambda: _mirrored(_mix(150)),
+    "media": lambda: [dict(media_id=i, blob=r["html"])
+                      for i, r in enumerate(_mix(50))],
+    "overlay_boxes": lambda: _overlay_boxes(_mix(60)),
+    "rasters": gen_raster_rows,
+    "orientation": gen_orientation_rows,
+    "links": gen_link_rows,
+    "composites": lambda: gen_composite_rows(45),
+    "html_tables": lambda: gen_html_table_rows(40),
+    "html_meta": lambda: gen_html_meta_rows(48),
+    "jsonld": lambda: gen_jsonld_rows(56),
+    "microdata": lambda: gen_microdata_rows(48),
+    "hreflang": lambda: gen_hreflang_rows(18),
+    "forms": lambda: gen_form_rows(36),
+    "docmeta": lambda: gen_docmeta_rows(36),
+    "annots": lambda: gen_annot_rows(36),
+    "jpeg_scans": gen_jpeg_scan_rows,
+    "ccitt_scans": gen_ccitt_scan_rows,
+    "jpx_scans": gen_jpx_scan_rows,
+    "jbig2_scans": gen_jbig2_scan_rows,
+    "cdx": gen_cdx_rows,
+    "redirect_archive": lambda: [dict(warc=gen_redirect_archive())],
+    "robots": lambda: gen_robots_rows(25)[0],
+    "robots_urls": lambda: [dict(url=u) for u in gen_robots_rows(25)[1]],
+    "sitemaps": lambda: gen_sitemap_rows(20),
+    "feeds": lambda: gen_feed_rows(24),
+    "quality": lambda: gen_quality_rows(60),
+}

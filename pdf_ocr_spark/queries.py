@@ -68,6 +68,28 @@ def _golden(name: str) -> str:
     )
 
 
+#: Spark type of every fixture-row field a query reads
+_CORPUS_TYPES = {
+    "url": "string", "domain": "string", "warc_ts": "timestamp",
+    "html": "binary", "body": "binary", "warc": "binary", "blob": "binary",
+    "text": "string", "lang": "string", "media_id": "long", "page": "int",
+    "y": "double",
+}
+
+
+def _corpus(spark: SparkSession, name: str, *cols: str) -> DataFrame:
+    """A named fixture corpus (``fixtures.genpages.CORPORA`` — the rows
+    tools/freeze.py builds the goldens from) as a frame of ``cols``,
+    ``url, html`` unless given.  A field a row lacks is NULL."""
+    from pdf_ocr_spark.fixtures.genpages import CORPORA
+
+    cols = cols or ("url", "html")
+    return spark.createDataFrame(
+        [tuple(r.get(c) for c in cols) for r in CORPORA[name]()],
+        schema=", ".join(f"{c} {_CORPUS_TYPES[c]}" for c in cols),
+    )
+
+
 def _dec_sum_sql(expr: str, r: int = 2) -> str:
     # round the exact DECIMAL, cast to double AFTER: rounding the double
     # instead diverges between engines at exact .xx5 boundaries (Spark
@@ -5988,24 +6010,9 @@ def q_warc_cdx(spark, sf_dir):
     shuffle.  Oracle = frozen kernel replay of pages → WARC → CDX
     (tools/freeze.py); a test slices every (offset, length)
     back out of the archive and re-parses it."""
-    from pdf_ocr_spark.fixtures.genpages import gen_cdx_rows
     from pdf_ocr_spark.sources.warc import pages_to_warc, warc_cdx
 
-    rows = gen_cdx_rows()
-    pages = spark.createDataFrame(
-        [
-            (
-                r["url"],
-                r["warc_ts"],
-                bytearray(r["html"]) if r["html"] is not None else None,
-                r["text"],
-                None,
-            )
-            for r in rows
-        ],
-        schema="url string, warc_ts timestamp, html binary, text string,"
-               " lang string",
-    )
+    pages = _corpus(spark, "cdx", "url", "warc_ts", "html", "text", "lang")
     archives = pages_to_warc(pages.repartition(1).sortWithinPartitions("url"))
     return warc_cdx(
         archives.select(
@@ -6040,13 +6047,9 @@ def q_warc_redirects(spark, sf_dir):
     200s, Location-less 3xxs, and conversion records are ignored.
     Per-archive map, no shuffle.  Oracle = frozen kernel golden
     (tools/freeze.py)."""
-    from pdf_ocr_spark.fixtures.genpages import gen_redirect_archive
     from pdf_ocr_spark.sources.warc import warc_redirects
 
-    archives = spark.createDataFrame(
-        [(bytearray(gen_redirect_archive()),)], schema="warc binary"
-    )
-    return warc_redirects(archives)
+    return warc_redirects(_corpus(spark, "redirect_archive", "warc"))
 
 
 SQL_WARC_REDIRECTS = f"""
@@ -6277,17 +6280,10 @@ FROM documents WHERE doc_id < 200
 """
 
 
-def _media_corpus(spark, n: int = 50):
+def _media_corpus(spark):
     """Media universe for the multimodal queries: synthetic corpus
-    payloads as opaque blobs (must match tools/freeze.media_rows
-    — the frozen-golden oracle recomputes the same rows kernel-side)."""
-    from pdf_ocr_spark.fixtures.genpages import gen_rows
-
-    rows = [
-        (i, bytearray(r["html"]) if r["html"] is not None else None)
-        for i, r in enumerate(gen_rows(n))
-    ]
-    return spark.createDataFrame(rows, schema="media_id long, blob binary")
+    payloads as opaque blobs."""
+    return _corpus(spark, "media", "media_id", "blob")
 
 
 def q_multimodal_frames(spark, sf_dir):
@@ -6368,14 +6364,9 @@ def q_sink_overlay_svg(spark, sf_dir):
     """S7 annotated-overlay sink (SVG): the distributed grouped-map
     renderer vs the overlay kernel run locally — oracle = frozen golden
     (md5 + length of the deterministic markup per page)."""
-    from pdf_ocr_spark.fixtures.genpages import gen_rows
     from pdf_ocr_spark.operators.sinks import render_overlays
 
-    rows = [
-        (f"doc://{i}", i % 3 + 1, (r["text"] or "")[:24], float(i % 20) * 30.0)
-        for i, r in enumerate(gen_rows(60))
-    ]
-    src = spark.createDataFrame(rows, "url string, page int, text string, y double")
+    src = _corpus(spark, "overlay_boxes", "url", "page", "text", "y")
     blocks = src.select(
         "url",
         "page",
@@ -6516,15 +6507,9 @@ def q_extract_corpus(spark, sf_dir):
     broken rows).  Oracle = frozen golden computed by running the SAME
     UDF body in-process (tools/freeze.py) — a full value-hash
     gate on the distributed pipeline, text bytes pinned via md5."""
-    from pdf_ocr_spark.fixtures.genpages import gen_rows
     from pdf_ocr_spark.pipeline.extract_job import extract_documents
 
-    rows = gen_rows(150)
-    pages = spark.createDataFrame(
-        [(r["url"], r["warc_ts"], bytearray(r["html"]), r["text"], r["lang"]) for r in rows],
-        schema="url string, warc_ts timestamp, html binary, text string, lang string",
-    )
-    docs = extract_documents(pages)
+    docs = extract_documents(_corpus(spark, "mix_150"))
     return docs.select(
         "url",
         "content_kind",
@@ -6552,16 +6537,10 @@ def q_sink_wet_export(spark, sf_dir):
     extraction golden's md5 per url (docs with non-empty extracted
     text, which is exactly the set WET emits) — so the hash pins the
     extractor AND the writer AND the reader in one gate."""
-    from pdf_ocr_spark.fixtures.genpages import gen_rows
     from pdf_ocr_spark.pipeline.extract_job import extract_documents
     from pdf_ocr_spark.sources.warc import PAGES_DDL, pages_to_warc, warc_pages_batch
 
-    rows = gen_rows(150)
-    pages = spark.createDataFrame(
-        [(r["url"], r["warc_ts"], bytearray(r["html"]), r["text"], r["lang"]) for r in rows],
-        schema="url string, warc_ts timestamp, html binary, text string, lang string",
-    )
-    docs = extract_documents(pages)
+    docs = extract_documents(_corpus(spark, "mix_150"))
     wet_in = docs.select(
         "url",
         F.timestamp_seconds(F.lit(1735689600)).alias("warc_ts"),
@@ -6593,23 +6572,9 @@ def q_sink_wat_export(spark, sf_dir):
     (tools/freeze.py); the value hash pins writer, WAT
     builder, and parser together.  Rows carry no byte offsets, so the
     gate is archive-partitioning-independent."""
-    from pdf_ocr_spark.fixtures.genpages import gen_rows
     from pdf_ocr_spark.sources.warc import pages_to_warc, warc_to_wat, wat_to_rows
 
-    rows = gen_rows(150)
-    pages = spark.createDataFrame(
-        [
-            (
-                r["url"],
-                r["warc_ts"],
-                bytearray(r["html"]) if r["html"] is not None else None,
-                r["text"],
-                r["lang"],
-            )
-            for r in rows
-        ],
-        schema="url string, warc_ts timestamp, html binary, text string, lang string",
-    )
+    pages = _corpus(spark, "mix_150", "url", "warc_ts", "html", "text", "lang")
     arcs = pages_to_warc(pages.repartition(4, "url"))
     return wat_to_rows(warc_to_wat(arcs))
 
@@ -6629,15 +6594,9 @@ def q_text_compression(spark, sf_dir):
     NFC: nothing built-in can compress), zero shuffle, fixed level 6 so
     the ratio is platform-reproducible.  Oracle = frozen kernel golden
     (tools/freeze.py)."""
-    from pdf_ocr_spark.fixtures.genpages import gen_html_meta_rows
     from pdf_ocr_spark.operators.text_analysis import compression_signals
 
-    rows = gen_html_meta_rows(48)  # must match its entry in tools/freeze.py
-    pages = spark.createDataFrame(
-        [(r["url"], bytearray(r["html"])) for r in rows],
-        schema="url string, html binary",
-    )
-    return compression_signals(pages)
+    return compression_signals(_corpus(spark, "html_meta"))
 
 
 SQL_TEXT_COMPRESSION = f"""
@@ -6655,17 +6614,10 @@ def q_wet_cdx(spark, sf_dir):
     partition pins the byte layout; production indexing is per-file
     parallel.  Oracle = frozen kernel replay of the same three stages
     (tools/freeze.py)."""
-    from pdf_ocr_spark.fixtures.genpages import gen_rows
     from pdf_ocr_spark.pipeline.extract_job import extract_documents
     from pdf_ocr_spark.sources.warc import pages_to_warc, warc_cdx
 
-    rows = gen_rows(150)
-    pages = spark.createDataFrame(
-        [(r["url"], bytearray(r["html"]) if r["html"] is not None else None)
-         for r in rows],
-        schema="url string, html binary",
-    )
-    docs = extract_documents(pages)
+    docs = extract_documents(_corpus(spark, "mix_150"))
     wet_in = docs.select(
         "url",
         F.timestamp_seconds(F.lit(1735689600)).alias("warc_ts"),
@@ -6772,15 +6724,9 @@ _BLOCKS_GOLDEN = _golden("blocks")
 
 
 def _blocks_corpus_df(spark):
-    from pdf_ocr_spark.fixtures.genpages import gen_rows
     from pdf_ocr_spark.pipeline.extract_job import extract_blocks
 
-    rows = gen_rows(60)  # must match its entry in tools/freeze.py
-    pages = spark.createDataFrame(
-        [(r["url"], bytearray(r["html"])) for r in rows],
-        schema="url string, html binary",
-    )
-    return extract_blocks(pages)
+    return extract_blocks(_corpus(spark, "mix_60"))
 
 
 def q_blocks_table(spark, sf_dir):
@@ -6841,15 +6787,9 @@ def q_blocks_composite(spark, sf_dir):
     draw-time CTM bboxes, captions/footnotes from geometric adjacency
     (kernels/pdf/layout.py attach_captions/composite_text).  Oracle =
     frozen kernel golden (tools/freeze.py)."""
-    from pdf_ocr_spark.fixtures.genpages import gen_composite_rows
     from pdf_ocr_spark.pipeline.extract_job import extract_composites
 
-    rows = gen_composite_rows(45)  # must match its entry in tools/freeze.py
-    pages = spark.createDataFrame(
-        [(r["url"], bytearray(r["html"])) for r in rows],
-        schema="url string, html binary",
-    )
-    return extract_composites(pages)
+    return extract_composites(_corpus(spark, "composites"))
 
 
 SQL_BLOCKS_COMPOSITE = f"""
@@ -6867,21 +6807,30 @@ def q_raster_pages(spark, sf_dir):
     vector-only line-art docs (the class the rasterizer unlocks for
     OCR).  Oracle = frozen kernel golden (tools/freeze.py) —
     value-hash equality pins every pixel of every page."""
-    from pdf_ocr_spark.fixtures.genpages import gen_raster_rows
     from pdf_ocr_spark.pipeline.extract_job import extract_rasters
 
-    rows = gen_raster_rows()
-    pages = spark.createDataFrame(
-        [(r["url"], bytearray(r["html"])) for r in rows],
-        schema="url string, html binary",
-    )
-    return extract_rasters(pages)
+    return extract_rasters(_corpus(spark, "rasters"))
 
 
 SQL_RASTER_PAGES = f"""
 SELECT url, page_num, raster_w, raster_h, ink_px, raster_md5
 FROM read_parquet('{_golden("rasters")}')
 """
+
+
+def _scan_ocr(spark, corpus: str) -> DataFrame:
+    """The page route over a scan corpus, each page's recognized text
+    pinned by md5 (the q_*_scan_ocr queries)."""
+    from pdf_ocr_spark.pipeline.extract_job import extract_pages
+
+    p = extract_pages(_corpus(spark, corpus), num_partitions=8)
+    return p.select(
+        "url",
+        F.col("page").cast("int").alias("page"),
+        F.md5(F.coalesce(F.col("page_text"), F.lit(""))).alias("ocr_md5"),
+        "needs_ocr",
+        "status",
+    )
 
 
 def q_jpeg_scan_ocr(spark, sf_dir):
@@ -6894,22 +6843,7 @@ def q_jpeg_scan_ocr(spark, sf_dir):
     carries a truncated JPEG: its page must emit the deterministic
     fingerprint fallback, not a task failure.  Oracle = frozen kernel
     golden — value-hash pins every page's recognized text."""
-    from pdf_ocr_spark.fixtures.genpages import gen_jpeg_scan_rows
-    from pdf_ocr_spark.pipeline.extract_job import extract_pages
-
-    rows = gen_jpeg_scan_rows()
-    pages = spark.createDataFrame(
-        [(r["url"], bytearray(r["html"])) for r in rows],
-        schema="url string, html binary",
-    )
-    p = extract_pages(pages, num_partitions=8)
-    return p.select(
-        "url",
-        F.col("page").cast("int").alias("page"),
-        F.md5(F.coalesce(F.col("page_text"), F.lit(""))).alias("ocr_md5"),
-        "needs_ocr",
-        "status",
-    )
+    return _scan_ocr(spark, "jpeg_scans")
 
 
 SQL_JPEG_SCAN_OCR = f"""
@@ -6924,15 +6858,9 @@ def q_jpeg_scan_raster(spark, sf_dir):
     luma resampled into each image draw rect (raster.py _blit_image) —
     full-bitmap md5 pins every pixel, so the DCT/Huffman/IDCT output is
     value-hash verified through the distributed route."""
-    from pdf_ocr_spark.fixtures.genpages import gen_jpeg_scan_rows
     from pdf_ocr_spark.pipeline.extract_job import extract_rasters
 
-    rows = gen_jpeg_scan_rows()
-    pages = spark.createDataFrame(
-        [(r["url"], bytearray(r["html"])) for r in rows],
-        schema="url string, html binary",
-    )
-    return extract_rasters(pages)
+    return extract_rasters(_corpus(spark, "jpeg_scans"))
 
 
 SQL_JPEG_SCAN_RASTER = f"""
@@ -6955,22 +6883,7 @@ def q_ccitt_scan_ocr(spark, sf_dir):
     back to the deterministic fingerprint, not a task failure).
     Oracle = frozen kernel golden — value-hash pins every page's
     recognized text."""
-    from pdf_ocr_spark.fixtures.genpages import gen_ccitt_scan_rows
-    from pdf_ocr_spark.pipeline.extract_job import extract_pages
-
-    rows = gen_ccitt_scan_rows()
-    pages = spark.createDataFrame(
-        [(r["url"], bytearray(r["html"])) for r in rows],
-        schema="url string, html binary",
-    )
-    p = extract_pages(pages, num_partitions=8)
-    return p.select(
-        "url",
-        F.col("page").cast("int").alias("page"),
-        F.md5(F.coalesce(F.col("page_text"), F.lit(""))).alias("ocr_md5"),
-        "needs_ocr",
-        "status",
-    )
+    return _scan_ocr(spark, "ccitt_scans")
 
 
 SQL_CCITT_SCAN_OCR = f"""
@@ -6984,15 +6897,9 @@ def q_ccitt_scan_raster(spark, sf_dir):
     corpus rendered by the coverage rasterizer with the T.6 decoder's
     luma resampled into each image draw rect — full-bitmap md5 pins the
     MMR mode/run decode pixel-for-pixel through the distributed route."""
-    from pdf_ocr_spark.fixtures.genpages import gen_ccitt_scan_rows
     from pdf_ocr_spark.pipeline.extract_job import extract_rasters
 
-    rows = gen_ccitt_scan_rows()
-    pages = spark.createDataFrame(
-        [(r["url"], bytearray(r["html"])) for r in rows],
-        schema="url string, html binary",
-    )
-    return extract_rasters(pages)
+    return extract_rasters(_corpus(spark, "ccitt_scans"))
 
 
 SQL_CCITT_SCAN_RASTER = f"""
@@ -7016,22 +6923,7 @@ def q_jpx_scan_ocr(spark, sf_dir):
     a truncated stream (must fall back to the deterministic
     fingerprint, not a task failure).  Oracle = frozen kernel golden —
     value-hash pins every page's recognized text."""
-    from pdf_ocr_spark.fixtures.genpages import gen_jpx_scan_rows
-    from pdf_ocr_spark.pipeline.extract_job import extract_pages
-
-    rows = gen_jpx_scan_rows()
-    pages = spark.createDataFrame(
-        [(r["url"], bytearray(r["html"])) for r in rows],
-        schema="url string, html binary",
-    )
-    p = extract_pages(pages, num_partitions=8)
-    return p.select(
-        "url",
-        F.col("page").cast("int").alias("page"),
-        F.md5(F.coalesce(F.col("page_text"), F.lit(""))).alias("ocr_md5"),
-        "needs_ocr",
-        "status",
-    )
+    return _scan_ocr(spark, "jpx_scans")
 
 
 SQL_JPX_SCAN_OCR = f"""
@@ -7046,15 +6938,9 @@ def q_jpx_scan_raster(spark, sf_dir):
     luma resampled into each image draw rect — full-bitmap md5 pins the
     MQ decode, tier-1 passes and inverse 5/3 DWT pixel-for-pixel
     through the distributed route."""
-    from pdf_ocr_spark.fixtures.genpages import gen_jpx_scan_rows
     from pdf_ocr_spark.pipeline.extract_job import extract_rasters
 
-    rows = gen_jpx_scan_rows()
-    pages = spark.createDataFrame(
-        [(r["url"], bytearray(r["html"])) for r in rows],
-        schema="url string, html binary",
-    )
-    return extract_rasters(pages)
+    return extract_rasters(_corpus(spark, "jpx_scans"))
 
 
 SQL_JPX_SCAN_RASTER = f"""
@@ -7080,22 +6966,7 @@ def q_jbig2_scan_ocr(spark, sf_dir):
     fingerprint, not a task failure).  With this branch all FOUR
     real-world scan codecs (DCT, CCITT, JPX, JBIG2) decode to pixels.
     Oracle = frozen kernel golden — value-hash pins every page's text."""
-    from pdf_ocr_spark.fixtures.genpages import gen_jbig2_scan_rows
-    from pdf_ocr_spark.pipeline.extract_job import extract_pages
-
-    rows = gen_jbig2_scan_rows()
-    pages = spark.createDataFrame(
-        [(r["url"], bytearray(r["html"])) for r in rows],
-        schema="url string, html binary",
-    )
-    p = extract_pages(pages, num_partitions=8)
-    return p.select(
-        "url",
-        F.col("page").cast("int").alias("page"),
-        F.md5(F.coalesce(F.col("page_text"), F.lit(""))).alias("ocr_md5"),
-        "needs_ocr",
-        "status",
-    )
+    return _scan_ocr(spark, "jbig2_scans")
 
 
 SQL_JBIG2_SCAN_OCR = f"""
@@ -7110,15 +6981,9 @@ def q_jbig2_scan_raster(spark, sf_dir):
     decoder's luma resampled into each image draw rect — full-bitmap
     md5 pins the arithmetic template decode pixel-for-pixel through the
     distributed route."""
-    from pdf_ocr_spark.fixtures.genpages import gen_jbig2_scan_rows
     from pdf_ocr_spark.pipeline.extract_job import extract_rasters
 
-    rows = gen_jbig2_scan_rows()
-    pages = spark.createDataFrame(
-        [(r["url"], bytearray(r["html"])) for r in rows],
-        schema="url string, html binary",
-    )
-    return extract_rasters(pages)
+    return extract_rasters(_corpus(spark, "jbig2_scans"))
 
 
 SQL_JBIG2_SCAN_RASTER = f"""
@@ -7137,15 +7002,9 @@ def q_page_orientation(spark, sf_dir):
     angle; extract_pdf applies the same verdict to re-orient those pages
     (tests prove text byte-parity with the upright twin).  Oracle =
     frozen kernel golden."""
-    from pdf_ocr_spark.fixtures.genpages import gen_orientation_rows
     from pdf_ocr_spark.pipeline.extract_job import detect_orientation
 
-    rows = gen_orientation_rows()
-    pages = spark.createDataFrame(
-        [(r["url"], bytearray(r["html"])) for r in rows],
-        schema="url string, html binary",
-    )
-    return detect_orientation(pages)
+    return detect_orientation(_corpus(spark, "orientation"))
 
 
 SQL_PAGE_ORIENTATION = f"""
@@ -7164,15 +7023,9 @@ def q_html_tables(spark, sf_dir):
     pipeline (extract_html_tables; same single-shuffle plan shape as the
     hot path).  Tableless pages emit nothing.  Oracle = frozen kernel
     golden (tools/freeze.py)."""
-    from pdf_ocr_spark.fixtures.genpages import gen_html_table_rows
     from pdf_ocr_spark.pipeline.extract_job import extract_html_tables
 
-    rows = gen_html_table_rows(40)  # must match its entry in tools/freeze.py
-    pages = spark.createDataFrame(
-        [(r["url"], bytearray(r["html"])) for r in rows],
-        schema="url string, html binary",
-    )
-    return extract_html_tables(pages)
+    return extract_html_tables(_corpus(spark, "html_tables"))
 
 
 SQL_HTML_TABLES = f"""
@@ -7193,15 +7046,9 @@ def q_html_meta(spark, sf_dir):
     unquoted attributes, entity decoding, a UTF-16LE page, and
     metadata-free shells.  Oracle = frozen kernel golden
     (tools/freeze.py)."""
-    from pdf_ocr_spark.fixtures.genpages import gen_html_meta_rows
     from pdf_ocr_spark.pipeline.extract_job import extract_html_meta
 
-    rows = gen_html_meta_rows(48)  # must match its entry in tools/freeze.py
-    pages = spark.createDataFrame(
-        [(r["url"], bytearray(r["html"])) for r in rows],
-        schema="url string, html binary",
-    )
-    return extract_html_meta(pages)
+    return extract_html_meta(_corpus(spark, "html_meta"))
 
 
 SQL_HTML_META = f"""
@@ -7225,14 +7072,9 @@ def q_page_freshness(spark, sf_dir):
     invalid ('2024-02-30'), which would raise CAST_INVALID_INPUT under
     ANSI mode — those fall into the 'unknown' bucket instead (the
     DuckDB twin mirrors with TRY_CAST)."""
-    from pdf_ocr_spark.fixtures.genpages import gen_html_meta_rows
     from pdf_ocr_spark.pipeline.extract_job import extract_html_meta
 
-    rows = gen_html_meta_rows(48)
-    pages = spark.createDataFrame(
-        [(r["url"], bytearray(r["html"])) for r in rows],
-        schema="url string, html binary",
-    )
+    pages = _corpus(spark, "html_meta")
     meta = extract_html_meta(pages)
     ok = F.col("published").rlike(r"^\d{4}-(0[1-9]|1[0-2])-(0[1-9]|[12]\d|3[01])")
     pub = F.when(ok, F.try_to_date(F.substring("published", 1, 10)))
@@ -7281,15 +7123,9 @@ def q_html_jsonld(spark, sf_dir):
     tags, non-ld scripts (ignored), and JSON-LD-free pages (nothing).
     Same single-shuffle route shape as the hot path.  Oracle = frozen
     kernel golden (tools/freeze.py)."""
-    from pdf_ocr_spark.fixtures.genpages import gen_jsonld_rows
     from pdf_ocr_spark.pipeline.extract_job import extract_structured_data
 
-    rows = gen_jsonld_rows(56)  # must match its entry in tools/freeze.py
-    pages = spark.createDataFrame(
-        [(r["url"], bytearray(r["html"])) for r in rows],
-        schema="url string, html binary",
-    )
-    return extract_structured_data(pages)
+    return extract_structured_data(_corpus(spark, "jsonld"))
 
 
 SQL_HTML_JSONLD = f"""
@@ -7312,15 +7148,9 @@ def q_html_microdata(spark, sf_dir):
     a decoy inside a quoted attribute value, truncated pages, and
     microdata-free pages.  Oracle = frozen kernel golden
     (tools/freeze.py)."""
-    from pdf_ocr_spark.fixtures.genpages import gen_microdata_rows
     from pdf_ocr_spark.pipeline.extract_job import extract_microdata_rows
 
-    rows = gen_microdata_rows(48)  # must match its entry in tools/freeze.py
-    pages = spark.createDataFrame(
-        [(r["url"], bytearray(r["html"])) for r in rows],
-        schema="url string, html binary",
-    )
-    return extract_microdata_rows(pages)
+    return extract_microdata_rows(_corpus(spark, "microdata"))
 
 
 SQL_HTML_MICRODATA = f"""
@@ -7339,14 +7169,9 @@ def q_noindex_gate(spark, sf_dir):
     list, a codegen'd filter computes eligibility; the oracle REPLAYS
     the eligibility logic in SQL over the frozen kernel golden, so the
     gate itself is second-implementation checked."""
-    from pdf_ocr_spark.fixtures.genpages import gen_html_meta_rows
     from pdf_ocr_spark.pipeline.extract_job import extract_html_meta
 
-    rows = gen_html_meta_rows(48)  # must match its entry in tools/freeze.py
-    pages = spark.createDataFrame(
-        [(r["url"], bytearray(r["html"])) for r in rows],
-        schema="url string, html binary",
-    )
+    pages = _corpus(spark, "html_meta")
     toks = F.split(F.col("robots"), ",")
     blocked = F.array_contains(toks, "noindex") | F.array_contains(
         toks, "none"
@@ -7381,15 +7206,9 @@ def q_pdf_forms(spark, sf_dir):
     text layer when fields lack appearance streams; skipping it loses
     real content at crawl scale.  Formless PDFs and HTML emit nothing.
     Oracle = frozen kernel golden (tools/freeze.py)."""
-    from pdf_ocr_spark.fixtures.genpages import gen_form_rows
     from pdf_ocr_spark.pipeline.extract_job import extract_forms
 
-    rows = gen_form_rows(36)  # must match its entry in tools/freeze.py
-    pages = spark.createDataFrame(
-        [(r["url"], bytearray(r["html"])) for r in rows],
-        schema="url string, html binary",
-    )
-    return extract_forms(pages)
+    return extract_forms(_corpus(spark, "forms"))
 
 
 SQL_PDF_FORMS = f"""
@@ -7408,15 +7227,9 @@ def q_pdf_doc_info(spark, sf_dir):
     quality/dedup signals the content stream doesn't carry; info-less
     PDFs emit all-null fields, non-PDFs emit nothing.  Oracle = frozen
     kernel golden (tools/freeze.py)."""
-    from pdf_ocr_spark.fixtures.genpages import gen_docmeta_rows
     from pdf_ocr_spark.pipeline.extract_job import extract_doc_info
 
-    rows = gen_docmeta_rows(36)  # must match its entry in tools/freeze.py
-    pages = spark.createDataFrame(
-        [(r["url"], bytearray(r["html"])) for r in rows],
-        schema="url string, html binary",
-    )
-    return extract_doc_info(pages)
+    return extract_doc_info(_corpus(spark, "docmeta"))
 
 
 SQL_PDF_DOC_INFO = f"""
@@ -7431,15 +7244,9 @@ def q_pdf_outline(spark, sf_dir):
     /First→/Next sibling walks, /Dest arrays AND /A GoTo actions,
     UTF-16BE titles; the section-boundary signal for structure-aware
     chunking.  Oracle = frozen kernel golden."""
-    from pdf_ocr_spark.fixtures.genpages import gen_docmeta_rows
     from pdf_ocr_spark.pipeline.extract_job import extract_outline
 
-    rows = gen_docmeta_rows(36)
-    pages = spark.createDataFrame(
-        [(r["url"], bytearray(r["html"])) for r in rows],
-        schema="url string, html binary",
-    )
-    return extract_outline(pages)
+    return extract_outline(_corpus(spark, "docmeta"))
 
 
 SQL_PDF_OUTLINE = f"""
@@ -7456,14 +7263,9 @@ def q_outline_sections(spark, sf_dir):
     instead of blind byte windows.  Windows partition per url."""
     from pyspark.sql.window import Window
 
-    from pdf_ocr_spark.fixtures.genpages import gen_docmeta_rows
     from pdf_ocr_spark.pipeline.extract_job import extract_doc_info, extract_outline
 
-    rows = gen_docmeta_rows(36)
-    pages = spark.createDataFrame(
-        [(r["url"], bytearray(r["html"])) for r in rows],
-        schema="url string, html binary",
-    )
+    pages = _corpus(spark, "docmeta")
     ol = extract_outline(pages).filter(F.col("level") == 1)
     info = extract_doc_info(pages).select("url", "n_pages")
     w = Window.partitionBy("url").orderBy("order")
@@ -7500,15 +7302,9 @@ def q_pdf_annotations(spark, sf_dir):
     Widget annots route to the frontier/forms extractors; geometry-only
     markup emits nothing.  Oracle = frozen kernel golden
     (tools/freeze.py)."""
-    from pdf_ocr_spark.fixtures.genpages import gen_annot_rows
     from pdf_ocr_spark.pipeline.extract_job import extract_annotations_route
 
-    rows = gen_annot_rows(36)  # must match its entry in tools/freeze.py
-    pages = spark.createDataFrame(
-        [(r["url"], bytearray(r["html"])) for r in rows],
-        schema="url string, html binary",
-    )
-    return extract_annotations_route(pages)
+    return extract_annotations_route(_corpus(spark, "annots"))
 
 
 SQL_PDF_ANNOTATIONS = f"""
@@ -7524,16 +7320,11 @@ def q_canonical_collapse(spark, sf_dir):
     <link rel=canonical> collapse to one group, canonical-less pages
     stand alone.  One map-side-combined shuffle on the group key.
     Oracle = the frozen html_meta golden mirrored in SQL."""
-    from pdf_ocr_spark.fixtures.genpages import gen_html_meta_rows
     from pdf_ocr_spark.operators.dedup import canonical_url_collapse
     from pdf_ocr_spark.pipeline.extract_job import extract_html_meta
 
-    rows = gen_html_meta_rows(48)  # must match its entry in tools/freeze.py
-    pages = spark.createDataFrame(
-        [(r["url"], bytearray(r["html"])) for r in rows]
-        + [(r["url"] + "?m=1", bytearray(r["html"])) for r in rows],
-        schema="url string, html binary",
-    )
+    pages = _corpus(spark, "html_meta")
+    pages = pages.union(pages.withColumn("url", F.concat("url", F.lit("?m=1"))))
     return canonical_url_collapse(extract_html_meta(pages))
 
 
@@ -7561,15 +7352,9 @@ def q_pages_table(spark, sf_dir):
     """Pages-level table (SURVEY §1.3 documents → PAGES → blocks): the
     page-route output with text pinned by md5; oracle = frozen kernel
     golden, so the distributed page route is value-hash verified too."""
-    from pdf_ocr_spark.fixtures.genpages import gen_rows
     from pdf_ocr_spark.pipeline.extract_job import extract_pages
 
-    rows = gen_rows(100)
-    pages = spark.createDataFrame(
-        [(r["url"], bytearray(r["html"]) if r["html"] is not None else None)
-         for r in rows],
-        schema="url string, html binary",
-    )
+    pages = _corpus(spark, "mix_100")
     p = extract_pages(pages, num_partitions=8)
     return p.select(
         "url",
@@ -7596,16 +7381,9 @@ def q_link_edges(spark, sf_dir):
     """Crawl-frontier link graph: one row per outgoing hyperlink (HTML
     anchors with the rel=nofollow/ugc/sponsored opt-out flag + PDF
     /Annots Link URIs), oracle = frozen kernel golden."""
-    from pdf_ocr_spark.fixtures.genpages import gen_link_rows
     from pdf_ocr_spark.pipeline.extract_job import extract_links
 
-    rows = gen_link_rows()
-    pages = spark.createDataFrame(
-        [(r["url"], bytearray(r["html"]) if r["html"] is not None else None)
-         for r in rows],
-        schema="url string, html binary",
-    )
-    return extract_links(pages)
+    return extract_links(_corpus(spark, "links"))
 
 
 SQL_LINK_EDGES = f"""
@@ -7700,15 +7478,9 @@ def q_robots_rules(spark, sf_dir):
     parse: agent groups, Allow/Disallow, wildcard/end-anchor patterns,
     empty-Disallow allow-all sentinel) — oracle = frozen kernel golden
     (tools/freeze.py)."""
-    from pdf_ocr_spark.fixtures.genpages import gen_robots_rows
     from pdf_ocr_spark.operators.frontier import robots_rules
 
-    robots, _ = gen_robots_rows(25)  # must match its entry in tools/freeze.py
-    df = spark.createDataFrame(
-        [(r["domain"], bytearray(r["body"])) for r in robots],
-        schema="domain string, body binary",
-    )
-    return robots_rules(df)
+    return robots_rules(_corpus(spark, "robots", "domain", "body"))
 
 
 SQL_ROBOTS_RULES = f"""
@@ -7723,15 +7495,9 @@ def q_robots_delays(spark, sf_dir):
     """Per-agent-group Crawl-delay directives (the de-facto politeness
     extension a frontier scheduler rate-limits by) through the
     distributed route — oracle = frozen kernel golden."""
-    from pdf_ocr_spark.fixtures.genpages import gen_robots_rows
     from pdf_ocr_spark.operators.frontier import robots_delays
 
-    robots, _ = gen_robots_rows(25)
-    df = spark.createDataFrame(
-        [(r["domain"], bytearray(r["body"])) for r in robots],
-        schema="domain string, body binary",
-    )
-    return robots_delays(df)
+    return robots_delays(_corpus(spark, "robots", "domain", "body"))
 
 
 SQL_ROBOTS_DELAYS = f"""
@@ -7743,15 +7509,9 @@ FROM read_parquet('{_golden("robots_delays")}')
 def q_robots_sitemaps(spark, sf_dir):
     """Sitemap URLs declared in robots.txt (frontier seeding) through the
     distributed route — oracle = frozen kernel golden."""
-    from pdf_ocr_spark.fixtures.genpages import gen_robots_rows
     from pdf_ocr_spark.operators.frontier import robots_sitemaps
 
-    robots, _ = gen_robots_rows(25)
-    df = spark.createDataFrame(
-        [(r["domain"], bytearray(r["body"])) for r in robots],
-        schema="domain string, body binary",
-    )
-    return robots_sitemaps(df)
+    return robots_sitemaps(_corpus(spark, "robots", "domain", "body"))
 
 
 SQL_ROBOTS_SITEMAPS = f"""
@@ -7765,15 +7525,9 @@ def q_sitemap_urls(spark, sf_dir):
     urlsets (plain + gzipped), sitemapindex children (kind='sitemap',
     fetched recursively), lastmod, entity-decoded locs; broken docs emit
     nothing.  Oracle = frozen kernel golden."""
-    from pdf_ocr_spark.fixtures.genpages import gen_sitemap_rows
     from pdf_ocr_spark.operators.frontier import sitemap_urls
 
-    rows = gen_sitemap_rows(20)  # must match its entry in tools/freeze.py
-    df = spark.createDataFrame(
-        [(r["url"], bytearray(r["body"])) for r in rows],
-        schema="url string, body binary",
-    )
-    return sitemap_urls(df)
+    return sitemap_urls(_corpus(spark, "sitemaps", "url", "body"))
 
 
 SQL_SITEMAP_URLS = f"""
@@ -7789,16 +7543,11 @@ def q_robots_frontier(spark, sf_dir):
     The oracle RECOMPUTES the verdicts in DuckDB from the frozen rules
     and URL fixtures — an independent implementation of the matcher, not
     a read-back of answers."""
-    from pdf_ocr_spark.fixtures.genpages import gen_robots_rows
     from pdf_ocr_spark.operators.frontier import frontier_allowed, robots_rules
 
-    robots, urls = gen_robots_rows(25)
-    robots_df = spark.createDataFrame(
-        [(r["domain"], bytearray(r["body"])) for r in robots],
-        schema="domain string, body binary",
-    )
-    urls_df = spark.createDataFrame([(u,) for u in urls], schema="url string")
-    return frontier_allowed(urls_df, robots_rules(robots_df), agent="graftbot")
+    rules = robots_rules(_corpus(spark, "robots", "domain", "body"))
+    urls = _corpus(spark, "robots_urls", "url")
+    return frontier_allowed(urls, rules, agent="graftbot")
 
 
 SQL_ROBOTS_FRONTIER = f"""
@@ -8473,15 +8222,9 @@ def q_feed_items(spark, sf_dir):
     in-kernel; broken docs emit nothing.  Feeds are the freshest
     frontier-discovery channel next to sitemaps and page links.
     Oracle = frozen kernel golden (tools/freeze.py)."""
-    from pdf_ocr_spark.fixtures.genpages import gen_feed_rows
     from pdf_ocr_spark.operators.frontier import feed_items
 
-    rows = gen_feed_rows(24)  # must match its entry in tools/freeze.py
-    df = spark.createDataFrame(
-        [(r["url"], bytearray(r["body"])) for r in rows],
-        schema="url string, body binary",
-    )
-    return feed_items(df)
+    return feed_items(_corpus(spark, "feeds", "url", "body"))
 
 
 SQL_FEED_ITEMS = f"""
@@ -8649,22 +8392,12 @@ def q_pipeline_end_to_end(spark, sf_dir):
     THIRD engine (in-process kernel + python-re quality twins +
     hashlib dedup, tools/freeze.py) — so Spark, DuckDB-read
     golden, and plain python all agree on the full composition."""
-    from pdf_ocr_spark.fixtures.genpages import gen_rows
     from pdf_ocr_spark.operators import text_analysis as TT
     from pdf_ocr_spark.pipeline.extract_job import dedup_extracted, extract_documents
 
-    rows = gen_rows(150)
     # every 3rd page also appears under a mirror url (the recrawl/mirror
     # case) so the dedup leg is load-bearing: n_clean < n_quality
-    data = [
-        (r["url"], bytearray(r["html"]) if r["html"] is not None else None)
-        for r in rows
-    ] + [
-        ("zz-mirror://" + r["url"],
-         bytearray(r["html"]) if r["html"] is not None else None)
-        for i, r in enumerate(rows) if i % 3 == 0
-    ]
-    pages = spark.createDataFrame(data, schema="url string, html binary")
+    pages = _corpus(spark, "mix_150_mirrored")
     ok = extract_documents(pages).filter(F.col("status") == "ok")
     feats = TT.gopher_quality(
         ok.select(F.col("url").alias("doc_id"), F.col("extracted_text").alias("text")),
@@ -8693,15 +8426,9 @@ def q_extract_lineage_totals(spark, sf_dir):
     the per-partition sidecar rows — oracle = frozen kernel golden (the
     per-bucket rows get their own golden via the deterministic url-md5
     bucket key, see q_extract_lineage)."""
-    from pdf_ocr_spark.fixtures.genpages import gen_rows
     from pdf_ocr_spark.pipeline.extract_job import extract_pages, lineage_metrics
 
-    rows = gen_rows(150)
-    pages = spark.createDataFrame(
-        [(r["url"], bytearray(r["html"]) if r["html"] is not None else None)
-         for r in rows],
-        schema="url string, html binary",
-    )
+    pages = _corpus(spark, "mix_150")
     m = lineage_metrics(extract_pages(pages, num_partitions=8))
     return m.agg(
         F.sum("n_docs").cast("long").alias("n_docs"),
@@ -8726,15 +8453,9 @@ def q_extract_lineage(spark, sf_dir):
     DETERMINISTIC url-md5 bucket (engine- and partitioning-independent),
     so the per-part rows value-hash against a frozen in-process golden
     instead of the weaker rows-only check."""
-    from pdf_ocr_spark.fixtures.genpages import gen_rows
     from pdf_ocr_spark.pipeline.extract_job import extract_pages, lineage_metrics
 
-    rows = gen_rows(150)
-    pages = spark.createDataFrame(
-        [(r["url"], bytearray(r["html"]) if r["html"] is not None else None)
-         for r in rows],
-        schema="url string, html binary",
-    )
+    pages = _corpus(spark, "mix_150")
     m = lineage_metrics(
         extract_pages(pages, num_partitions=8), deterministic_buckets=8
     )
@@ -9263,15 +8984,9 @@ def q_hreflang_alternates(spark, sf_dir):
     entity-encoded markup, an alternate-feed decoy (no hreflang — must
     not emit), and annotation-free pages.  Oracle = frozen kernel
     golden (tools/freeze.py)."""
-    from pdf_ocr_spark.fixtures.genpages import gen_hreflang_rows
     from pdf_ocr_spark.pipeline.extract_job import extract_hreflang_links
 
-    rows = gen_hreflang_rows(18)  # must match its entry in tools/freeze.py
-    pages = spark.createDataFrame(
-        [(r["url"], bytearray(r["html"])) for r in rows],
-        schema="url string, html binary",
-    )
-    return extract_hreflang_links(pages)
+    return extract_hreflang_links(_corpus(spark, "hreflang"))
 
 
 SQL_HREFLANG_ALTERNATES = f"""
@@ -10094,7 +9809,7 @@ SELECT shard_key, shard_index,
        printf('%s/shard-%05d.jsonl', shard_key, shard_index)
          AS shard_path,
        count(*) AS n_docs,
-       sum(n_bytes) AS n_bytes,
+       CAST(sum(n_bytes) AS BIGINT) AS n_bytes,
        min(doc_id) AS first_id,
        max(doc_id) AS last_id,
        md5(string_agg(h, '' ORDER BY doc_id)) AS content_md5

@@ -987,7 +987,8 @@ def http_header_records(
     """WARC bytes → [(url, warc_date, http_status, x_robots_tag)] for
     response records.  The header block is parsed BEFORE body handling
     (the whole point: the verdict must not require decoding bodies);
-    records without the header yield ''."""
+    records without the header yield '', repeated headers join with
+    ', ' (one ``noindex`` line plus one ``noarchive`` line is common)."""
     out: List[Tuple[str, Optional[str], int, str]] = []
     chunks = (
         list(_iter_gzip_members(data))
@@ -1021,7 +1022,11 @@ def http_header_records(
                 continue
             sep = payload.find(_CRLF2)
             head = payload[: sep if sep >= 0 else len(payload)]
-            http = _parse_headers(head)
+            tags = [
+                v.strip().decode("latin-1", "replace")
+                for k, _, v in (line.partition(b":") for line in head.split(b"\r\n"))
+                if k.strip().lower() == b"x-robots-tag"
+            ]
             line_end = head.find(b"\r\n")
             status_line = head[: line_end if line_end >= 0 else len(head)]
             parts = status_line.split(None, 2)
@@ -1030,8 +1035,7 @@ def http_header_records(
             except (IndexError, ValueError):
                 status = 0
             out.append(
-                (uri, headers.get("warc-date"), status,
-                 http.get("x-robots-tag", ""))
+                (uri, headers.get("warc-date"), status, ", ".join(tags))
             )
     return out
 

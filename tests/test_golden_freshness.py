@@ -8,24 +8,14 @@ import os
 import pyarrow.parquet as pq
 import pytest
 
-from tests.conftest import REF_PDF
 from tools.freeze import GOLDENS, golden_path
 
 # 12–22 s each to build: the codec decoders at full page resolution
 SLOW = {"jpeg_rasters", "ccitt_rasters", "jpx_rasters", "jbig2_rasters"}
 
-# built from genpages.gen_rows, whose row 0 is the reference PDF
-FROM_GEN_ROWS = {
-    "blocks", "extract_corpus", "pages_table", "lineage_totals",
-    "lineage_parts", "pipeline_e2e", "multimodal_frames", "sink_overlay",
-    "rasters", "orientation", "wat", "wet_cdx",
-}
-
 
 @pytest.mark.parametrize("name", sorted(set(GOLDENS) - SLOW))
 def test_golden_is_fresh(name):
-    if name in FROM_GEN_ROWS and not os.path.exists(REF_PDF):
-        pytest.skip("built from gen_rows; its row 0 is the absent reference PDF")
     buf = io.BytesIO()
     GOLDENS[name]().to_parquet(buf, index=False)
     buf.seek(0)

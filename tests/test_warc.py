@@ -517,7 +517,8 @@ def test_revisit_sink_deterministic_bytes(spark):
 def test_x_robots_tag_header_channel(spark):
     """X-Robots-Tag written into the response envelope reads back via
     http_header_records; the agent-prefix strip never eats the
-    unavailable_after directive (whose VALUE also contains ':')."""
+    unavailable_after directive (whose VALUE also contains ':'), and
+    repeated headers on one record all survive, joined with ', '."""
     from pdf_ocr_spark.sources.warc import (
         http_header_records, write_warc_record)
 
@@ -531,12 +532,17 @@ def test_x_robots_tag_header_channel(spark):
             "https://x.test/c", "2025-01-05T00:00:00Z", b"<p>c</p>",
             extra_http_headers=[
                 ("X-Robots-Tag", "unavailable_after: 2025-07-01")]),
+        write_warc_record(
+            "https://x.test/d", "2025-01-05T00:00:00Z", b"<p>d</p>",
+            extra_http_headers=[("X-Robots-Tag", "noindex"),
+                                ("X-Robots-Tag", "noarchive")]),
     ])
     rows = http_header_records(recs)
     assert [(u, s, t) for u, _d, s, t in rows] == [
         ("https://x.test/a", 200, "noindex"),
         ("https://x.test/b", 200, ""),
         ("https://x.test/c", 200, "unavailable_after: 2025-07-01"),
+        ("https://x.test/d", 200, "noindex, noarchive"),
     ]
     # distributed round trip: tag column → archive → header rows
     df = spark.createDataFrame(

@@ -6,14 +6,16 @@ a rows-only check.
 Every golden is computed WITHOUT Spark: the same row functions the
 distributed routes run inside ``mapInArrow`` (``pipeline.extract_job``,
 ``operators.frontier``), or the kernels and the independent tokenizer
-twins, run in-process over the repo's own deterministic corpora
-(``fixtures/genpages``).  The gate therefore compares the DISTRIBUTED
-pipeline against a local execution and never depends on the driver's
-testdata seeds.
+twins, run in-process over the repo's own deterministic corpora.  The
+gate therefore compares the DISTRIBUTED pipeline against a local
+execution and never depends on the testdata seeds, nor on any file
+outside the repo.
 
-One table, ``GOLDENS``: fixture file name → frame builder.
-``tests/test_golden_freshness.py`` rebuilds the entries and compares
-them to the committed files.
+One table, ``GOLDENS``: fixture file name → frame builder.  Each builder
+takes its rows by name from ``fixtures.genpages.CORPORA`` — the same
+table the registry queries read theirs from, so which rows feed a golden
+is declared once.  ``tests/test_golden_freshness.py`` rebuilds the
+entries and compares them to the committed files.
 
 Rerun (and commit the results) only when kernel semantics intentionally
 change:
@@ -26,7 +28,6 @@ from __future__ import annotations
 
 import hashlib
 import os
-import random
 import re
 import sys
 
@@ -34,7 +35,7 @@ import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pdf_ocr_spark.fixtures import genpages as G  # noqa: E402
+from pdf_ocr_spark.fixtures.genpages import CORPORA  # noqa: E402
 from pdf_ocr_spark.operators import frontier as FR  # noqa: E402
 from pdf_ocr_spark.pipeline import extract_job as EJ  # noqa: E402
 
@@ -67,8 +68,8 @@ def _run(rows_fn, schema, rows, key="url", col="html") -> pd.DataFrame:
     return pd.DataFrame(rows_fn(keys, payloads), columns=schema.fieldNames())
 
 
-def _route(gen, rows_fn, schema, sort, key="url", col="html"):
-    return lambda: _sorted(_run(rows_fn, schema, gen(), key, col), sort)
+def _route(corpus, rows_fn, schema, sort, key="url", col="html"):
+    return lambda: _sorted(_run(rows_fn, schema, CORPORA[corpus](), key, col), sort)
 
 
 def _pages(rows) -> pd.DataFrame:
@@ -83,8 +84,8 @@ def _docs(rows) -> pd.DataFrame:
 
 
 def extract_corpus() -> pd.DataFrame:
-    """The flagship query's golden: document rows over gen_rows(150)."""
-    out = _docs(G.gen_rows(150))
+    """The flagship query's golden: document rows over the 150-doc mix."""
+    out = _docs(CORPORA["mix_150"]())
     out["text_md5"] = _md5(out["extracted_text"])
     return _sorted(
         out[["url", "content_kind", "status", "n_pages", "n_blocks",
@@ -94,9 +95,9 @@ def extract_corpus() -> pd.DataFrame:
 
 
 def pages_table() -> pd.DataFrame:
-    """documents → PAGES → blocks: page rows over gen_rows(100), page
+    """documents → PAGES → blocks: page rows over the 100-doc mix, page
     text pinned by md5."""
-    pages = _pages(G.gen_rows(100))
+    pages = _pages(CORPORA["mix_100"]())
     pages["page_md5"] = _md5(pages["page_text"])
     return _sorted(
         pages[["url", "content_kind", "page", "page_md5", "n_blocks",
@@ -118,14 +119,14 @@ def _lineage(g: pd.DataFrame) -> dict:
 def lineage_totals() -> pd.DataFrame:
     """Corpus-wide lineage totals (partition-independent, unlike the
     per-partition sidecar rows)."""
-    return pd.DataFrame([_lineage(_pages(G.gen_rows(150)))])
+    return pd.DataFrame([_lineage(_pages(CORPORA["mix_150"]()))])
 
 
 def lineage_parts() -> pd.DataFrame:
     """Per-bucket lineage rows with the DETERMINISTIC part key (first 8
     hex chars of md5(url) mod 8 — engine- and partitioning-independent),
     grouped with pandas (must match q_extract_lineage)."""
-    pages = _pages(G.gen_rows(150))
+    pages = _pages(CORPORA["mix_150"]())
     pages["part_id"] = [
         int(hashlib.md5(u.encode("utf-8")).hexdigest()[:8], 16) % 8
         for u in pages["url"]
@@ -144,12 +145,7 @@ def pipeline_e2e() -> pd.DataFrame:
     of both Spark and DuckDB."""
     from pdf_ocr_spark.operators import text_analysis as T
 
-    rows = G.gen_rows(150)
-    mirrors = [
-        dict(r, url="zz-mirror://" + r["url"])
-        for i, r in enumerate(rows) if i % 3 == 0
-    ]
-    docs = _docs(rows + mirrors)
+    docs = _docs(CORPORA["mix_150_mirrored"]())
     ok = docs[docs["status"] == "ok"].copy()
 
     def cnt(pattern: str, text: str) -> int:
@@ -197,12 +193,12 @@ def pipeline_e2e() -> pd.DataFrame:
     )
 
 
-def _scan_ocr(gen):
+def _scan_ocr(corpus):
     """Real-pixel scan branch: the codec decodes the image, the stub
     recognizes the pixel-grid marker (must match q_*_scan_ocr)."""
 
     def build() -> pd.DataFrame:
-        pages = _pages(gen())
+        pages = _pages(CORPORA[corpus]())
         pages["ocr_md5"] = _md5(pages["page_text"])
         return _sorted(
             pages[["url", "page", "ocr_md5", "needs_ocr", "status"]],
@@ -213,26 +209,21 @@ def _scan_ocr(gen):
 
 
 def extract_quality() -> pd.DataFrame:
-    """Self-contained boilerplate HTML pages (make_html_page with its OWN
-    rng stream) plus the article ground truth and the in-process kernel
-    extraction; q_extract_quality scores the distributed extractor
-    against ``true_text``."""
+    """Self-contained boilerplate HTML pages plus the article ground
+    truth and the in-process kernel extraction; q_extract_quality scores
+    the distributed extractor against ``true_text``."""
     from pdf_ocr_spark.kernels.html_extract import extract_html
 
     rows = []
-    for i in range(60):
-        payload, true_text = G.make_html_page(random.Random(777000 + i),
-                                              ("en", "ja", "zh")[i % 3])
-        extracted, status, _ = extract_html(payload)
-        assert status == "ok", (i, status)
-        rows.append(
-            (f"https://example.test/quality/{i:06d}", payload, true_text, extracted)
-        )
+    for r in CORPORA["quality"]():
+        extracted, status, _ = extract_html(r["html"])
+        assert status == "ok", (r["url"], status)
+        rows.append((r["url"], r["html"], r["true_text"], extracted))
     return pd.DataFrame(rows, columns=["url", "html", "true_text", "extracted_text"])
 
 
 def blocks() -> pd.DataFrame:
-    out = _run(EJ.block_rows, EJ.BLOCK_SCHEMA, G.gen_rows(60))
+    out = _run(EJ.block_rows, EJ.BLOCK_SCHEMA, CORPORA["mix_60"]())
     # bbox exploded into scalar columns: array-typed value hashing differs
     # between engines; four doubles compare exactly
     for i, c in enumerate(["x0", "y0", "x1", "y1"]):
@@ -244,19 +235,16 @@ def blocks() -> pd.DataFrame:
 # -- media and sinks ---------------------------------------------------------
 
 
-def media_rows(n: int = 50):
+def media_rows():
     """Shared media universe for the multimodal queries: (media_id, blob)
-    from the synthetic corpus payloads (must match queries._media_corpus)."""
-    return [
-        (i, bytes(r["html"]) if r["html"] is not None else None)
-        for i, r in enumerate(G.gen_rows(n))
-    ]
+    from the synthetic corpus payloads."""
+    return [(r["media_id"], r["blob"]) for r in CORPORA["media"]()]
 
 
 def multimodal_frames() -> pd.DataFrame:
     from pdf_ocr_spark.operators.multimodal import decode_frames_batch
 
-    rows = media_rows(50)
+    rows = media_rows()
     batch = pd.DataFrame({"media_id": [m for m, _ in rows], "blob": [b for _, b in rows]})
     out = pd.concat(list(decode_frames_batch(iter([batch]))), ignore_index=True)
     out["feature_sum"] = [round(sum(f), 6) for f in out["feature"]]
@@ -264,17 +252,17 @@ def multimodal_frames() -> pd.DataFrame:
 
 
 def sink_overlay() -> pd.DataFrame:
-    """The S7 SVG sink: the overlay kernel over the same synthetic
-    single-box pages q_sink_overlay_svg builds."""
+    """The S7 SVG sink: the overlay kernel over the single-box pages
+    q_sink_overlay_svg renders."""
     from pdf_ocr_spark.operators.sinks import overlay_svg
 
     recs = []
-    for i, r in enumerate(G.gen_rows(60)):
-        y = float(i % 20) * 30.0
+    for r in CORPORA["overlay_boxes"]():
+        y = r["y"]
         quad = [[10.0, y], [200.0, y], [200.0, y + 20.0], [10.0, y + 20.0]]
-        svg = overlay_svg(612.0, 792.0, [((r["text"] or "")[:24], quad)])
+        svg = overlay_svg(612.0, 792.0, [(r["text"], quad)])
         recs.append(
-            (f"doc://{i}", i % 3 + 1,
+            (r["url"], r["page"],
              hashlib.md5(svg.encode("utf-8")).hexdigest(), len(svg))
         )
     return pd.DataFrame(recs, columns=["url", "page", "svg_md5", "svg_len"])
@@ -285,7 +273,7 @@ def compression() -> pd.DataFrame:
     function — q_text_compression's oracle reads this)."""
     from pdf_ocr_spark.kernels.textstats import compression_ratio
 
-    rows = G.gen_html_meta_rows(48)
+    rows = CORPORA["html_meta"]()
     return _sorted(
         pd.DataFrame(
             {
@@ -328,14 +316,15 @@ def _cdx_frame(archive: bytes, filename: str) -> pd.DataFrame:
 def cdx() -> pd.DataFrame:
     """pages → WARC archive (one sorted partition, so the byte layout is
     pinned) → CDX index (must match q_warc_cdx)."""
-    rows = sorted(G.gen_cdx_rows(), key=lambda r: r["url"])
+    rows = sorted(CORPORA["cdx"](), key=lambda r: r["url"])
     return _cdx_frame(_pages_to_warc(rows), "part-00000.warc")
 
 
 def redirects() -> pd.DataFrame:
     from pdf_ocr_spark.sources.warc import REDIRECT_COLUMNS, redirect_records
 
-    out = pd.DataFrame(redirect_records(G.gen_redirect_archive()), columns=REDIRECT_COLUMNS)
+    (archive,) = CORPORA["redirect_archive"]()
+    out = pd.DataFrame(redirect_records(archive["warc"]), columns=REDIRECT_COLUMNS)
     out["status"] = out["status"].astype("Int32")
     return out
 
@@ -346,7 +335,7 @@ def wat() -> pd.DataFrame:
     may repartition freely."""
     from pdf_ocr_spark.sources.warc import WAT_ROW_COLUMNS, warc_to_wat_bytes, wat_rows
 
-    _, wat_bytes = warc_to_wat_bytes(_pages_to_warc(G.gen_rows(150)))
+    _, wat_bytes = warc_to_wat_bytes(_pages_to_warc(CORPORA["mix_150"]()))
     out = pd.DataFrame(wat_rows(wat_bytes), columns=WAT_ROW_COLUMNS)
     out["status"] = out["status"].astype("Int32")
     out["n_links"] = out["n_links"].astype("int64")
@@ -358,7 +347,7 @@ def wet_cdx() -> pd.DataFrame:
     match q_wet_cdx; the date is timestamp_seconds(1735689600))."""
     from pdf_ocr_spark.sources.warc import write_warc_bytes
 
-    docs = _docs(G.gen_rows(150))
+    docs = _docs(CORPORA["mix_150"]())
     recs = sorted(
         (u, "2025-01-01T00:00:00Z", t.encode("utf-8"))
         for u, t in zip(docs["url"], docs["extracted_text"])
@@ -438,15 +427,11 @@ def wordpiece_encode() -> pd.DataFrame:
 
 
 def robots_urls() -> pd.DataFrame:
-    return pd.DataFrame({"url": G.gen_robots_rows(25)[1]})
-
-
-def _robots():
-    return G.gen_robots_rows(25)[0]  # must match q_robots_rules / q_robots_frontier
+    return pd.DataFrame(CORPORA["robots_urls"](), columns=["url"])
 
 
 #: fixture name → builder; the file is ``fixtures/<name>_golden.parquet``.
-#: Each corpus size must match the registry query that reads the golden.
+#: A route entry names its corpus in ``fixtures.genpages.CORPORA``.
 GOLDENS = {
     "extract_corpus": extract_corpus,
     "pages_table": pages_table,
@@ -455,55 +440,55 @@ GOLDENS = {
     "pipeline_e2e": pipeline_e2e,
     "extract_quality": extract_quality,
     "blocks": blocks,
-    "composites": _route(lambda: G.gen_composite_rows(45), EJ.composite_rows,
-                         EJ.COMPOSITE_SCHEMA, ["url", "page_num", "block_index"]),
-    "rasters": _route(G.gen_raster_rows, EJ.raster_rows, EJ.RASTER_SCHEMA,
+    "composites": _route("composites", EJ.composite_rows, EJ.COMPOSITE_SCHEMA,
+                         ["url", "page_num", "block_index"]),
+    "rasters": _route("rasters", EJ.raster_rows, EJ.RASTER_SCHEMA,
                       ["url", "page_num"]),
-    "orientation": _route(G.gen_orientation_rows, EJ.orientation_rows,
+    "orientation": _route("orientation", EJ.orientation_rows,
                           EJ.ORIENTATION_SCHEMA, ["url", "page_num"]),
-    "link_edges": _route(G.gen_link_rows, EJ.link_rows, EJ.LINK_SCHEMA,
+    "link_edges": _route("links", EJ.link_rows, EJ.LINK_SCHEMA,
                          ["url", "link_index"]),
-    "html_tables": _route(lambda: G.gen_html_table_rows(40), EJ.html_table_rows,
+    "html_tables": _route("html_tables", EJ.html_table_rows,
                           EJ.HTML_TABLE_SCHEMA, ["url", "table_index"]),
-    "html_meta": _route(lambda: G.gen_html_meta_rows(48), EJ.html_meta_rows,
-                        EJ.HTML_META_SCHEMA, "url"),
-    "jsonld": _route(lambda: G.gen_jsonld_rows(56), EJ.jsonld_rows,
-                     EJ.JSONLD_SCHEMA, ["url", "block_index", "node_index"]),
-    "microdata": _route(lambda: G.gen_microdata_rows(48), EJ.microdata_rows,
-                        EJ.MICRODATA_SCHEMA, ["url", "item_index", "prop"]),
-    "hreflang": _route(lambda: G.gen_hreflang_rows(18), EJ.hreflang_rows,
-                       EJ.HREFLANG_SCHEMA, ["url", "ord"]),
-    "pdf_forms": _route(lambda: G.gen_form_rows(36), EJ.form_rows,
-                        EJ.FORM_SCHEMA, ["url", "field_index"]),
-    "pdf_doc_info": _route(lambda: G.gen_docmeta_rows(36), EJ.doc_info_rows,
-                           EJ.DOC_INFO_SCHEMA, "url"),
-    "pdf_outline": _route(lambda: G.gen_docmeta_rows(36), EJ.outline_rows,
-                          EJ.OUTLINE_SCHEMA, ["url", "order"]),
-    "pdf_annotations": _route(lambda: G.gen_annot_rows(36), EJ.annot_rows,
-                              EJ.ANNOT_SCHEMA, ["url", "order"]),
-    "jpeg_scan_ocr": _scan_ocr(G.gen_jpeg_scan_rows),
-    "ccitt_scan_ocr": _scan_ocr(G.gen_ccitt_scan_rows),
-    "jpx_scan_ocr": _scan_ocr(G.gen_jpx_scan_rows),
-    "jbig2_scan_ocr": _scan_ocr(G.gen_jbig2_scan_rows),
-    "jpeg_rasters": _route(G.gen_jpeg_scan_rows, EJ.raster_rows, EJ.RASTER_SCHEMA,
+    "html_meta": _route("html_meta", EJ.html_meta_rows, EJ.HTML_META_SCHEMA,
+                        "url"),
+    "jsonld": _route("jsonld", EJ.jsonld_rows, EJ.JSONLD_SCHEMA,
+                     ["url", "block_index", "node_index"]),
+    "microdata": _route("microdata", EJ.microdata_rows, EJ.MICRODATA_SCHEMA,
+                        ["url", "item_index", "prop"]),
+    "hreflang": _route("hreflang", EJ.hreflang_rows, EJ.HREFLANG_SCHEMA,
+                       ["url", "ord"]),
+    "pdf_forms": _route("forms", EJ.form_rows, EJ.FORM_SCHEMA,
+                        ["url", "field_index"]),
+    "pdf_doc_info": _route("docmeta", EJ.doc_info_rows, EJ.DOC_INFO_SCHEMA,
+                           "url"),
+    "pdf_outline": _route("docmeta", EJ.outline_rows, EJ.OUTLINE_SCHEMA,
+                          ["url", "order"]),
+    "pdf_annotations": _route("annots", EJ.annot_rows, EJ.ANNOT_SCHEMA,
+                              ["url", "order"]),
+    "jpeg_scan_ocr": _scan_ocr("jpeg_scans"),
+    "ccitt_scan_ocr": _scan_ocr("ccitt_scans"),
+    "jpx_scan_ocr": _scan_ocr("jpx_scans"),
+    "jbig2_scan_ocr": _scan_ocr("jbig2_scans"),
+    "jpeg_rasters": _route("jpeg_scans", EJ.raster_rows, EJ.RASTER_SCHEMA,
                            ["url", "page_num"]),
-    "ccitt_rasters": _route(G.gen_ccitt_scan_rows, EJ.raster_rows, EJ.RASTER_SCHEMA,
+    "ccitt_rasters": _route("ccitt_scans", EJ.raster_rows, EJ.RASTER_SCHEMA,
                             ["url", "page_num"]),
-    "jpx_rasters": _route(G.gen_jpx_scan_rows, EJ.raster_rows, EJ.RASTER_SCHEMA,
+    "jpx_rasters": _route("jpx_scans", EJ.raster_rows, EJ.RASTER_SCHEMA,
                           ["url", "page_num"]),
-    "jbig2_rasters": _route(G.gen_jbig2_scan_rows, EJ.raster_rows, EJ.RASTER_SCHEMA,
+    "jbig2_rasters": _route("jbig2_scans", EJ.raster_rows, EJ.RASTER_SCHEMA,
                             ["url", "page_num"]),
-    "robots_rules": _route(_robots, FR.robots_rule_rows, FR.ROBOTS_RULE_SCHEMA,
+    "robots_rules": _route("robots", FR.robots_rule_rows, FR.ROBOTS_RULE_SCHEMA,
                            ["domain", "rule_order", "agent"], "domain", "body"),
-    "robots_delays": _route(_robots, FR.crawl_delay_rows, FR.DELAY_SCHEMA,
+    "robots_delays": _route("robots", FR.crawl_delay_rows, FR.DELAY_SCHEMA,
                             ["domain", "agent"], "domain", "body"),
-    "robots_sitemaps": _route(_robots, FR.robots_sitemap_rows, FR.SITEMAP_SCHEMA,
+    "robots_sitemaps": _route("robots", FR.robots_sitemap_rows, FR.SITEMAP_SCHEMA,
                               ["domain", "sm_index"], "domain", "body"),
     "robots_urls": robots_urls,
-    "sitemap_urls": _route(lambda: G.gen_sitemap_rows(20), FR.sitemap_url_rows,
-                           FR.SITEMAP_URL_SCHEMA, ["sitemap", "loc"], "url", "body"),
-    "feed_items": _route(lambda: G.gen_feed_rows(24), FR.feed_item_rows,
-                         FR.FEED_ITEM_SCHEMA, ["feed", "link"], "url", "body"),
+    "sitemap_urls": _route("sitemaps", FR.sitemap_url_rows, FR.SITEMAP_URL_SCHEMA,
+                           ["sitemap", "loc"], "url", "body"),
+    "feed_items": _route("feeds", FR.feed_item_rows, FR.FEED_ITEM_SCHEMA,
+                         ["feed", "link"], "url", "body"),
     "multimodal_frames": multimodal_frames,
     "sink_overlay": sink_overlay,
     "compression": compression,
