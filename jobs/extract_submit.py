@@ -7,20 +7,25 @@ Usage:
     spark-submit --master <cluster-or-local[N]> \\
         --py-files dist/pdf_ocr_spark.zip \\
         jobs/extract_submit.py \\
-        --input  /path/to/pages_parquet \\
-        --output /path/to/docs_parquet \\
-        [--sidecar /path/to/lineage_parquet] \\
+        --input  /path/to/pages \\
+        --output /path/to/docs_table \\
+        [--input-format parquet|warc|jsonl] \\
+        [--snapshot-log | --sidecar /path/to/lineage_parquet] \\
         [--partitions 512] [--buckets 64] [--split-giants]
+    spark-submit ... jobs/extract_submit.py --output /path/to/docs_table \\
+        --compact                               # fold snapshot-log runs
 
-The job is checkpoint-resumable: rerunning with the same --output
-anti-joins the committed urls and processes only the remainder.  On a
-cluster, export SPARK_GRAFT_OCR_URL via --conf spark.executorEnv to swap
-the OCR stub for the remote VLM engine.
+The plain parquet table (lineage to --sidecar) and the --snapshot-log
+table run through the same checkpointed driver: rerunning with the same
+--output anti-joins the committed urls and processes only the
+remainder.  On a cluster, export SPARK_GRAFT_OCR_URL via --conf
+spark.executorEnv to swap the OCR stub for the remote VLM engine.
 """
 
 from __future__ import annotations
 
 import argparse
+import functools
 import json
 import sys
 import time
@@ -66,27 +71,19 @@ def main() -> None:
 
         n = compact_table(spark, args.output,
                           target_partitions=args.partitions or 32)
-    elif args.snapshot_log:
-        from pdf_ocr_spark.pipeline.snapshot_log import run_extraction_snapshot
-
-        n = run_extraction_snapshot(
-            spark,
-            args.input,
-            args.output,
-            num_partitions=args.partitions,
-            partition_buckets=args.buckets,
-            split_giants=args.split_giants,
-            giant_bytes=args.giant_bytes,
-            input_format=args.input_format,
-        )
     else:
         from pdf_ocr_spark.pipeline.extract_job import run_extraction
+        from pdf_ocr_spark.pipeline.snapshot_log import run_extraction_snapshot
 
-        n = run_extraction(
+        run = (
+            run_extraction_snapshot
+            if args.snapshot_log
+            else functools.partial(run_extraction, sidecar_path=args.sidecar)
+        )
+        n = run(
             spark,
             args.input,
             args.output,
-            sidecar_path=args.sidecar,
             num_partitions=args.partitions,
             partition_buckets=args.buckets,
             split_giants=args.split_giants,

@@ -1,31 +1,15 @@
 """Text-analysis primitives for the training-data pipeline operators:
-language ID, quality scoring, token counting, fingerprinting, shingling.
+script-class language ID and the zlib compression-ratio signal.
 
-Pure Python/regex, shared by the Spark operators in
-``pdf_ocr_spark.operators.text_analysis`` and usable standalone so tests
-can assert local-vs-Spark equivalence.  Where an operator needs a DuckDB
-oracle, the Spark side uses built-in SQL functions with IDENTICAL
-semantics instead of these helpers; these are the reference
-implementations and the building blocks for the UDF paths.
+Pure Python, usable standalone.  ``compression_ratio`` is the body of
+the ``compression_signals`` UDF in ``pdf_ocr_spark.operators.text_analysis``
+(nothing built-in can compress); the Spark language ID is a JVM-side
+column expression mirroring ``detect_lang``.
 """
 
 from __future__ import annotations
 
-import hashlib
-import re
-import struct
-from typing import Dict, Iterable, List, Set, Tuple
-
-# BPE-ish word/token splitter: word runs, number runs, single CJK chars,
-# or one non-space symbol — a deterministic approximation of byte-pair
-# tokenizer segment boundaries.
-TOKEN_RE = re.compile(
-    r"[A-Za-z]+|[0-9]+|[぀-ヿ㐀-鿿豈-﫿]|[^\sA-Za-z0-9]"
-)
-
-_STOPWORDS_EN = frozenset(
-    "the a an and or of to in is are was were be been it this that with for on as at by from".split()
-)
+from typing import Dict
 
 _SCRIPT_RANGES = {
     "hiragana": (0x3040, 0x309F),
@@ -76,113 +60,6 @@ def detect_lang(text: str) -> str:
     if h["latin"] > 0:
         return "en"
     return "unknown"
-
-
-def tokenize(text: str) -> List[str]:
-    return TOKEN_RE.findall(text)
-
-
-def token_count(text: str) -> int:
-    return len(TOKEN_RE.findall(text))
-
-
-def quality_score(text: str) -> float:
-    """Composite [0,1] quality score: length band, alpha ratio, punctuation
-    ratio, stopword presence, mean word length sanity — the standard
-    pre-training quality gates."""
-    n = len(text)
-    if n == 0:
-        return 0.0
-    length_score = min(n / 500.0, 1.0)
-    alpha = sum(1 for c in text if c.isalpha())
-    alpha_ratio = alpha / n
-    punct = sum(1 for c in text if c in ".,;:!?，。、！？")
-    punct_ratio = punct / n
-    punct_score = 1.0 if 0.002 <= punct_ratio <= 0.3 else 0.3
-    words = [w.lower() for w in re.findall(r"[A-Za-z]+", text)]
-    if words:
-        stop_ratio = sum(1 for w in words if w in _STOPWORDS_EN) / len(words)
-        stop_score = min(stop_ratio / 0.2, 1.0)
-        mean_len = sum(len(w) for w in words) / len(words)
-        wl_score = 1.0 if 2.0 <= mean_len <= 12.0 else 0.2
-    else:
-        stop_score = 0.5  # non-latin text: neutral
-        wl_score = 1.0
-    return round(
-        0.3 * length_score + 0.25 * alpha_ratio + 0.15 * punct_score
-        + 0.15 * stop_score + 0.15 * wl_score,
-        6,
-    )
-
-
-# -- fingerprints / hashing ---------------------------------------------------
-
-
-def normalize_for_fingerprint(text: str) -> str:
-    return re.sub(r"\s+", " ", text.strip().lower())
-
-
-def fingerprint_md5(text: str) -> str:
-    """Content fingerprint over normalized text (exact-dup key)."""
-    return hashlib.md5(normalize_for_fingerprint(text).encode("utf-8")).hexdigest()
-
-
-def _h64(data: bytes, seed: int = 0) -> int:
-    """Stable 64-bit hash from blake2b (keyed by seed)."""
-    d = hashlib.blake2b(data, digest_size=8, key=struct.pack("<q", seed)).digest()
-    return struct.unpack("<Q", d)[0]
-
-
-def char_shingles(text: str, k: int = 5) -> Set[str]:
-    norm = normalize_for_fingerprint(text)
-    if len(norm) < k:
-        return {norm} if norm else set()
-    return {norm[i : i + k] for i in range(len(norm) - k + 1)}
-
-
-def minhash_signature(text: str, num_perm: int = 64, k: int = 5) -> List[int]:
-    """MinHash over k-char shingles with num_perm independent hashes."""
-    shingles = [s.encode("utf-8") for s in char_shingles(text, k)]
-    if not shingles:
-        return [0] * num_perm
-    return [min(_h64(s, seed) for s in shingles) for seed in range(num_perm)]
-
-
-def minhash_bands(sig: List[int], bands: int = 16) -> List[Tuple[int, int]]:
-    """(band_index, band_hash) pairs for LSH bucketing."""
-    rows = len(sig) // bands
-    out = []
-    for b in range(bands):
-        chunk = sig[b * rows : (b + 1) * rows]
-        h = _h64(struct.pack(f"<{len(chunk)}Q", *chunk), seed=b)
-        out.append((b, h))
-    return out
-
-
-def simhash64(text: str) -> int:
-    """64-bit SimHash over tokens (weighted bit votes)."""
-    votes = [0] * 64
-    for tok in tokenize(normalize_for_fingerprint(text)):
-        h = _h64(tok.encode("utf-8"), seed=1)
-        for bit in range(64):
-            votes[bit] += 1 if (h >> bit) & 1 else -1
-    out = 0
-    for bit in range(64):
-        if votes[bit] > 0:
-            out |= 1 << bit
-    return out
-
-
-def hamming64(a: int, b: int) -> int:
-    return bin(a ^ b).count("1")
-
-
-def jaccard(a: Set[str], b: Set[str]) -> float:
-    if not a and not b:
-        return 1.0
-    inter = len(a & b)
-    union = len(a) + len(b) - inter
-    return inter / union if union else 0.0
 
 
 def compression_ratio(data: bytes, level: int = 6) -> float:

@@ -22,27 +22,19 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from pdf_ocr_spark.pipeline.session import CacheOwner
+
 
 class BoundedUniverseError(ValueError):
     """An all-pairs helper was fed more rows than its bound — at scale
     that plan is quadratic; use the LSH-composed variant instead."""
 
 
-# candidate-pair DataFrames persisted by jaccard_on_candidates; bounded to
-# the most recent entry (each call releases its predecessor) so loops over
-# corpora cannot accumulate cached candidate sets
-_live_candidate_caches: List[DataFrame] = []
-
-
-def release_candidate_cache() -> None:
-    """Unpersist every candidate-pair cache owned by this module (at most
-    one: the latest ``jaccard_on_candidates`` call's)."""
-    while _live_candidate_caches:
-        df = _live_candidate_caches.pop()
-        try:
-            df.unpersist(blocking=False)
-        except Exception:  # noqa: BLE001 — session may already be stopped
-            pass
+# candidate-pair DataFrames persisted by jaccard_on_candidates (and the
+# shingle arrays of containment_candidates); bounded to the most recent
+# call's, so loops over corpora cannot accumulate cached candidate sets
+_candidate_caches = CacheOwner()
+release_candidate_cache = _candidate_caches.release
 
 
 def _guard_bounded(df: DataFrame, max_rows: Optional[int], composed_hint: str) -> None:
@@ -69,8 +61,14 @@ def _h64(col, salt: str):
 
 def normalized(col):
     """Normalization shared by every dedup signature: lower + collapse
-    whitespace + trim (kernels/textstats.py normalize_for_fingerprint)."""
+    whitespace + trim (``_NORM_SQL`` in queries.py is the oracle twin)."""
     return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
+
+
+def fingerprint(col):
+    """The content fingerprint every exact-dedup, datacard and stream gate
+    keys on: md5 of the :func:`normalized` text."""
+    return F.md5(normalized(col))
 
 
 def shingles(col, k: int = 5):
@@ -101,7 +99,7 @@ def shingles(col, k: int = 5):
 def exact_duplicates(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Exact dedup: md5 fingerprint of normalized text → groups with >1
     member.  Output: (fingerprint, n_docs, canonical_id=min id)."""
-    fp = F.md5(normalized(F.col(text_col))).alias("fingerprint")
+    fp = fingerprint(F.col(text_col)).alias("fingerprint")
     return (
         docs.select(fp, F.col(id_col))
         .groupBy("fingerprint")
@@ -496,8 +494,9 @@ def incremental_dedup(
     rides the join's output partitioning — no third exchange.  Appending
     ``kept`` rows' fingerprints back to the store closes the loop for
     the next snapshot."""
-    fingerprint = F.md5(normalized(F.col(text_col))).alias("fingerprint")
-    new_fp = new_docs.select(F.col(id_col), fingerprint)
+    new_fp = new_docs.select(
+        F.col(id_col), fingerprint(F.col(text_col)).alias("fingerprint")
+    )
     seen = (
         seen_fingerprints.select("fingerprint")
         .distinct()
@@ -533,7 +532,7 @@ def dedup_paragraphs(
         F.col(id_col).alias("doc_id"),
         F.posexplode(F.split(F.col(text_col), r"\n\n")).alias("idx", "para"),
     ).filter(F.trim("para") != "")
-    fp = F.md5(normalized(F.col("para")))
+    fp = fingerprint(F.col("para"))
     w = Window.partitionBy(fp).orderBy("doc_id", "idx")
     marked = paras.withColumn("rn", F.row_number().over(w))
     return (
@@ -586,7 +585,7 @@ def strip_domain_boilerplate(
         F.col(domain_col).alias("domain"),
         F.posexplode(F.split(F.col(text_col), r"\n\n")).alias("idx", "para"),
     ).filter(F.trim("para") != "")
-    paras = paras.withColumn("fp", F.md5(normalized(F.col("para"))))
+    paras = paras.withColumn("fp", fingerprint(F.col("para")))
     dom_pages = docs.groupBy(F.col(domain_col).alias("domain")).agg(
         F.countDistinct(id_col).alias("n_dom_pages")
     )
@@ -712,8 +711,7 @@ def jaccard_on_candidates(
     returned plan before the next call, or the later call's eviction
     makes the earlier plan recompute its candidates (correct, slower)."""
     release_candidate_cache()
-    pairs = pairs.persist()
-    _live_candidate_caches.append(pairs)
+    pairs = _candidate_caches.cache(pairs)
     involved = (
         pairs.select(F.col("doc_a").alias(id_col))
         .unionByName(pairs.select(F.col("doc_b").alias(id_col)))
@@ -1305,7 +1303,7 @@ def snapshot_delta(
     exchange, so only (url, 16-byte md5) rows move — never text."""
     fp = lambda d: d.select(  # noqa: E731
         F.col(url_col).alias("url"),
-        F.md5(normalized(F.col(text_col))).alias("fp"),
+        fingerprint(F.col(text_col)).alias("fp"),
     )
     o = fp(old_docs).withColumnRenamed("fp", "fp_old")
     n = fp(new_docs).withColumnRenamed("fp", "fp_new")
@@ -1359,13 +1357,14 @@ def containment_pairs(
     jaccard) for pairs whose max containment ≥ threshold; containment_a
     = share of A's shingles found in B."""
     release_candidate_cache()  # same cache-ownership protocol as
-    sh_arr = docs.select(      # jaccard_on_candidates: at most ONE live
-        F.col(id_col).alias("doc_id"),
-        F.array_distinct(
-            F.transform(shingles(F.col(text_col), k), _hbase40)
-        ).alias("sh_arr"),
-    ).persist()
-    _live_candidate_caches.append(sh_arr)
+    sh_arr = _candidate_caches.cache(  # jaccard_on_candidates: at most
+        docs.select(                   # ONE live candidate cache
+            F.col(id_col).alias("doc_id"),
+            F.array_distinct(
+                F.transform(shingles(F.col(text_col), k), _hbase40)
+            ).alias("sh_arr"),
+        )
+    )
     sh = sh_arr.select("doc_id", F.explode("sh_arr").alias("sh"))
     dfreq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
     if max_df is not None:

@@ -15,38 +15,18 @@ formulation) — documented, identical in the oracle.
 
 from __future__ import annotations
 
-from typing import List
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pdf_ocr_spark.pipeline.session import CacheOwner
 
 # node/seed tables persisted by the iterative solvers below; bounded to the
 # most recent call's (each public entry point releases its predecessor's),
 # so a long-lived driver looping over graphs cannot accumulate cached node
-# tables — the same ownership protocol as dedup.release_candidate_cache().
-_live_graph_caches: List[DataFrame] = []
-
-
-def release_graph_cache() -> None:
-    """Unpersist every node/seed cache owned by this module (at most the
-    latest solver call's).  Results returned by the solvers stay CORRECT
-    after release — the cache is purely a recompute-avoidance for the
-    fixed iteration loops — so callers may release as soon as the result
-    is materialized."""
-    while _live_graph_caches:
-        df = _live_graph_caches.pop()
-        try:
-            df.unpersist(blocking=False)
-        except Exception:  # noqa: BLE001 — session may already be stopped
-            pass
-
-
-def _cache(df: DataFrame) -> DataFrame:
-    """persist() + register for release by the NEXT solver call (or an
-    explicit release_graph_cache())."""
-    df = df.persist()
-    _live_graph_caches.append(df)
-    return df
+# tables.
+_graph_caches = CacheOwner()
+release_graph_cache = _graph_caches.release
+_cache = _graph_caches.cache
 
 
 def pagerank(

@@ -21,12 +21,6 @@ from pdf_ocr_spark.operators.dedup import _hbase40
 _M = 10_000  # rate resolution: 0.01%
 
 
-def hash_keep_expr(key: Column, rate: float) -> Column:
-    """True for a deterministic ``rate`` fraction of keys (same verdict
-    for the same key on every run, engine, and partitioning)."""
-    return (_hbase40(key.cast("string")) % _M) < int(round(rate * _M))
-
-
 def stratified_sample(
     df: DataFrame,
     rates: Dict[str, float],
@@ -104,7 +98,7 @@ def temperature_mix_apply(
 ) -> DataFrame:
     """Apply :func:`temperature_mix_rates` verdicts to the corpus:
     deterministic hash-threshold keep at 1e-6 resolution (same hash
-    family as :func:`hash_keep_expr`; resume-stable, engine-exact).
+    family as :func:`stratified_sample`; resume-stable, engine-exact).
     The rates table is one row per language — broadcast join, then a
     codegen'd filter; no shuffle of the corpus."""
     thr = F.round(F.col("sample_rate") * 1_000_000, 0).cast("long")

@@ -1,8 +1,7 @@
 """Text-analysis operators: language ID, quality scoring, token counting,
 fingerprinting — all as JVM-side column expressions (regexp_count +
 arithmetic) so they run inside whole-stage codegen AND are reproducible
-verbatim in the DuckDB oracle.  The pure-Python reference implementations
-live in kernels/textstats.py.
+verbatim in the DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -11,8 +10,10 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# token pattern shared with kernels.textstats.TOKEN_RE (RE2-safe: works
-# identically under Java regex and DuckDB's RE2)
+from pdf_ocr_spark.operators.dedup import fingerprint
+
+# token pattern: word runs, number runs, or one non-space symbol (RE2-safe:
+# works identically under Java regex and DuckDB's RE2)
 TOKEN_PATTERN = r"[A-Za-z]+|[0-9]+|[^\sA-Za-z0-9]"
 
 _HIRAGANA = r"[぀-ゟ]"
@@ -649,12 +650,6 @@ def domain_expr(norm_url: Column) -> Column:
     return F.regexp_extract(norm_url, r"^[a-z][a-z0-9+.-]*://([^/:?#]+)", 1)
 
 
-def fingerprint_expr(col: Column) -> Column:
-    """Content fingerprint: md5 of lowercased, whitespace-collapsed text
-    (kernels.textstats.fingerprint_md5 parity)."""
-    return F.md5(F.trim(F.regexp_replace(F.lower(col), r"\s+", " ")))
-
-
 def corpus_datacard(
     docs: DataFrame,
     text_col: str = "text",
@@ -675,7 +670,7 @@ def corpus_datacard(
         token_count_expr(F.col(text_col)).alias("_tok"),
         F.length(text_col).alias("_chars"),
         gopher_pass_expr(F.col(text_col)).cast("int").alias("_pass"),
-        fingerprint_expr(F.col(text_col)).alias("_fp"),
+        fingerprint(F.col(text_col)).alias("_fp"),
     )
     agg = per_doc.groupBy(*group_cols).agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -774,7 +769,7 @@ def domain_reputation(
     per_doc = docs.select(
         F.col(domain_col).alias("domain"),
         gopher_pass_expr(F.col(text_col)).cast("int").alias("_pass"),
-        fingerprint_expr(F.col(text_col)).alias("_fp"),
+        fingerprint(F.col(text_col)).alias("_fp"),
         F.regexp_count(F.col(text_col), F.lit(WORD_PATTERN_SPLIT)).alias("_words"),
     )
     agg = per_doc.groupBy("domain").agg(

@@ -36,7 +36,7 @@ from __future__ import annotations
 import functools
 import os
 from itertools import repeat
-from typing import Optional
+from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -52,6 +52,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from pdf_ocr_spark.pipeline.session import CacheOwner
 
 PAGE_SCHEMA = StructType(
     [
@@ -89,23 +91,10 @@ _GC_TUNED = False
 
 # page-count tables persisted by extract_documents_split (the count pass
 # feeds both the ranges join and the failed-giants join); bounded to the
-# most recent call's — the same cache-ownership protocol as
-# dedup.release_candidate_cache(), so a long-lived driver looping over
-# corpora cannot accumulate cached count tables.
-_live_split_caches: list = []
-
-
-def release_split_cache() -> None:
-    """Unpersist every giant-doc page-count cache owned by this module
-    (at most the latest extract_documents_split call's).  Plans stay
-    correct after release — the cache only avoids re-running the count
-    pass once per consumer."""
-    while _live_split_caches:
-        df = _live_split_caches.pop()
-        try:
-            df.unpersist(blocking=False)
-        except Exception:  # noqa: BLE001 — session may already be stopped
-            pass
+# most recent call's, so a long-lived driver looping over corpora cannot
+# accumulate cached count tables.
+_split_caches = CacheOwner()
+release_split_cache = _split_caches.release
 
 
 # typed TRANSIENT failure: the OCR engine gave up on a page after retries.
@@ -1017,10 +1006,11 @@ def extract_documents_split(
     # consumer.  Registered for release by the NEXT call (or an explicit
     # release_split_cache()) so repeated runs hold at most one cache.
     release_split_cache()
-    counts = giants.mapInArrow(
-        arrow_map(page_count_rows, RANGE_SCHEMA), schema=RANGE_SCHEMA
-    ).persist()
-    _live_split_caches.append(counts)
+    counts = _split_caches.cache(
+        giants.mapInArrow(
+            arrow_map(page_count_rows, RANGE_SCHEMA), schema=RANGE_SCHEMA
+        )
+    )
     ranges = (
         giants.join(counts, "url")
         .filter(F.col("n_pages") > 0)
@@ -1099,10 +1089,10 @@ def dedup_extracted(docs: DataFrame, mark_only: bool = False) -> DataFrame:
     One shuffle on the fingerprint; failed rows (no text) pass through
     untouched.  ``mark_only=True`` keeps every row and adds
     ``is_canonical`` instead of filtering (lets downstream decide)."""
-    from pdf_ocr_spark.operators.dedup import normalized
+    from pdf_ocr_spark.operators.dedup import fingerprint
 
     fp = F.when(
-        F.col("status") == "ok", F.md5(normalized(F.col("extracted_text")))
+        F.col("status") == "ok", fingerprint(F.col("extracted_text"))
     )
     w = Window.partitionBy(fp).orderBy("url")
     marked = docs.withColumn(
@@ -1130,16 +1120,16 @@ def dedup_incremental(
     the anti-join is a sort-merge shuffle on the fingerprint; writing
     the table ``bucketBy(fp)`` (see tests/test_bucketed_join.py) makes
     the history side exchange-free on every subsequent append."""
-    from pdf_ocr_spark.operators.dedup import normalized
+    from pdf_ocr_spark.operators.dedup import fingerprint
 
     if history is not None:
         hist_fp = (
             history.filter(F.col("status") == "ok")
-            .select(F.md5(normalized(F.col("extracted_text"))).alias("fp"))
+            .select(fingerprint(F.col("extracted_text")).alias("fp"))
             .distinct()
         )
         fp = F.when(
-            F.col("status") == "ok", F.md5(normalized(F.col("extracted_text")))
+            F.col("status") == "ok", fingerprint(F.col("extracted_text"))
         )
         new_docs = (
             new_docs.withColumn("_fp", fp)
@@ -1277,6 +1267,62 @@ def read_pages(
     return spark.read.parquet(input_path)
 
 
+def run_job(
+    spark: SparkSession,
+    input_path: str,
+    done: Optional[DataFrame],
+    commit: Callable[[DataFrame, int, DataFrame], None],
+    num_partitions: Optional[int] = None,
+    partition_buckets: Optional[int] = None,
+    split_giants: bool = False,
+    giant_bytes: int = 4 << 20,
+    input_format: str = "parquet",
+    content_dedup: bool = False,
+) -> int:
+    """The one checkpointed run behind every table format: read the
+    pages, anti-join them against ``done`` (the table's committed rows;
+    None for an empty table), extract the remainder (page-range-split
+    over ``giant_bytes`` when ``split_giants``), drop text the table
+    already holds when ``content_dedup`` (:func:`dedup_incremental`) and
+    add the Iceberg-style ``url_bucket = xxhash64(url) % N`` column when
+    ``partition_buckets=N``.  The doc rows are materialized once, counted
+    and handed to ``commit(docs, n, raw_scan)``, the format's own writes
+    in its own order (``raw_scan``: the input before the resume filter).
+    Returns the number of documents APPENDED (0 on a fully-resumed
+    rerun) — no re-scan of the output table."""
+    raw_scan = read_pages(spark, input_path, input_format)
+    pages = raw_scan if done is None else resume_filter(raw_scan, done)
+    if split_giants:
+        docs = extract_documents_split(pages, num_partitions, giant_bytes=giant_bytes)
+    else:
+        docs = extract_documents(pages, num_partitions)
+    if content_dedup:
+        docs = dedup_incremental(docs, history=done)
+    if partition_buckets:
+        docs = docs.withColumn(
+            "url_bucket",
+            F.pmod(F.xxhash64("url"), F.lit(partition_buckets)).cast("int"),
+        )
+    # materialize once; the count, sidecar and table all derive from the
+    # cached rows (SURVEY.md §4.2 double-execution caveat)
+    docs = docs.persist()
+    try:
+        n = docs.count()  # materializes the cache; appended count, no rescan
+        commit(docs, n, raw_scan)
+    finally:
+        docs.unpersist()
+    return n
+
+
+def write_docs(docs: DataFrame, path: str, mode: str) -> None:
+    """Parquet write of doc rows, hive-partitioned on ``url_bucket`` when
+    the rows carry it (the prunable ``bucket(url)`` layout)."""
+    writer = docs.write.mode(mode)
+    if "url_bucket" in docs.columns:
+        writer = writer.partitionBy("url_bucket")
+    writer.parquet(path)
+
+
 def run_extraction(
     spark: SparkSession,
     input_path: str,
@@ -1288,50 +1334,28 @@ def run_extraction(
     giant_bytes: int = 4 << 20,
     input_format: str = "parquet",
 ) -> int:
-    """Checkpointable batch run: resume → extract → append-commit.
+    """Checkpointable batch run (:func:`run_job`) against a plain parquet
+    directory: resume against its rows, append to it.  Returns the number
+    of documents appended."""
 
-    ``partition_buckets``: Iceberg-style ``bucket(url)`` layout — the
-    output is hive-partitioned on ``url_bucket = xxhash64(url) % N`` so a
-    resume scan, a per-bucket compaction, or a downstream co-located join
-    can prune to single buckets.  Returns the number of documents APPENDED
-    by this invocation (0 on a fully-resumed no-op run) — no full re-scan
-    of the output table, which at 10^12 docs would cost more than the
-    incremental run itself."""
-    pages = read_pages(spark, input_path, input_format)
-    if _parquet_exists(output_path):
-        done = spark.read.parquet(output_path)
-        pages = resume_filter(pages, done)
-    if split_giants:
-        docs = extract_documents_split(pages, num_partitions, giant_bytes=giant_bytes)
-    else:
-        docs = extract_documents(pages, num_partitions)
-    if partition_buckets:
-        docs = docs.withColumn(
-            "url_bucket",
-            F.pmod(F.xxhash64("url"), F.lit(partition_buckets)).cast("int"),
-        )
-    # the extractor is expensive: materialize doc rows once, derive the
-    # count, sidecar, and main table from the cached result (SURVEY.md §4.2
-    # double-execution caveat).  ORDER MATTERS: the resume plan reads
-    # output_path, so appending to it invalidates this cache — everything
-    # that consumes `docs` must run BEFORE the main-table write.  The
-    # sidecar therefore commits first (an orphan sidecar entry after a
-    # mid-write crash is harmless lineage; on real Iceberg both writes
-    # share one transaction).
-    docs = docs.persist()
-    try:
-        n = docs.count()  # materializes the cache; appended count, no rescan
+    def commit(docs: DataFrame, n: int, raw_scan: DataFrame) -> None:
+        # ORDER MATTERS: the resume plan reads output_path, so appending
+        # to it invalidates the cached docs — the sidecar therefore
+        # commits first (an orphan sidecar entry after a mid-write crash
+        # is harmless lineage; on real Iceberg both writes share one
+        # transaction).
         if sidecar_path is not None:
             doc_lineage_metrics(docs).withColumn(
                 "run_output", F.lit(output_path)
             ).write.mode("append").parquet(sidecar_path)
-        writer = docs.write.mode("append")
-        if partition_buckets:
-            writer = writer.partitionBy("url_bucket")
-        writer.parquet(output_path)
-    finally:
-        docs.unpersist()
-    return n
+        write_docs(docs, output_path, "append")
+
+    done = spark.read.parquet(output_path) if _parquet_exists(output_path) else None
+    return run_job(
+        spark, input_path, done, commit, num_partitions=num_partitions,
+        partition_buckets=partition_buckets, split_giants=split_giants,
+        giant_bytes=giant_bytes, input_format=input_format,
+    )
 
 
 def _parquet_exists(path: str) -> bool:

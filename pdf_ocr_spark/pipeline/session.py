@@ -1,4 +1,5 @@
-"""SparkSession factory with the engine's scale-oriented defaults.
+"""SparkSession factory with the engine's scale-oriented defaults, and
+the one cache-ownership helper (:class:`CacheOwner`).
 
 Local mode stands in for a multi-executor cluster (the sandbox has no
 cluster); every setting below is the one you'd ship in spark-defaults on a
@@ -15,7 +16,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -61,3 +62,29 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
+
+
+class CacheOwner:
+    """Persist-now, release-on-the-next-call ownership of cached frames:
+    each entry point calls :meth:`release` before caching its own, so a
+    long-lived driver looping over inputs holds at most one call's
+    caches.  Results stay correct after release — the cache only avoids
+    recomputing a frame once per consumer."""
+
+    def __init__(self) -> None:
+        self.live: list = []
+
+    def cache(self, df: DataFrame) -> DataFrame:
+        """persist() + register for release by the next call."""
+        df = df.persist()
+        self.live.append(df)
+        return df
+
+    def release(self) -> None:
+        """Unpersist every cache owned here."""
+        while self.live:
+            df = self.live.pop()
+            try:
+                df.unpersist(blocking=False)
+            except Exception:  # noqa: BLE001 — session may already be stopped
+                pass

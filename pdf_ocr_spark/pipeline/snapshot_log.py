@@ -19,8 +19,9 @@ never poison the table (the directory-listing append mode can't promise
 that).  The manifest is committed via write-temp + ``os.rename`` —
 atomic on POSIX; on real object storage this maps to Iceberg's
 metadata-pointer swap.  The sidecar commits in the SAME manifest as its
-data, closing the orphan-sidecar window run_extraction's append mode
-documents.
+data, closing the orphan-sidecar window of the plain parquet table
+(:func:`~pdf_ocr_spark.pipeline.extract_job.run_extraction`, which
+appends its sidecar before its data).
 
 A compaction manifest may carry ``replaces: [run_id, ...]`` — readers
 then skip the superseded run dirs (see :func:`compact_table`), which is
@@ -36,16 +37,16 @@ invisible orphan — safe but lost work).  Real Iceberg serializes this
 with an optimistic metadata-pointer swap; coordinate concurrent writers
 externally (one driver per table), as with any Hive-style table.
 
-On a cluster with the Iceberg runtime, `run_extraction_snapshot` maps
-1:1 onto `df.writeTo(table).append()` + `MERGE INTO` for retried
-transient failures — and that path is now EXECUTABLE, not just
-documented: :func:`run_extraction_iceberg` drives the same resume →
-extract → append pipeline against a real catalog table when the
-iceberg-spark-runtime jar is on the classpath
-(:func:`iceberg_available`), with this module as the always-available
-fallback.  The sandbox ships no jar, so the Iceberg branch is covered
-by seam tests (writer-call contract + loud unavailable error) plus a
-jar-gated end-to-end test that skips here and runs on a real cluster.
+One run driver, :func:`~pdf_ocr_spark.pipeline.extract_job.run_job`,
+serves every table format; each entry point supplies only its committed
+rows and its commit step.  :func:`run_extraction_snapshot` resumes from
+this log's current snapshot and commits data + sidecars to a fresh run
+dir, then the manifest rename.  :func:`run_extraction_iceberg` resumes
+from a REAL Iceberg catalog table and commits with
+``writeTo(table).create()``/``.append()`` when the iceberg-spark-runtime
+jar is on the classpath (:func:`iceberg_available`), with this log as
+the always-available fallback; without the jar it is covered by seam
+tests plus a jar-gated end-to-end test.
 """
 
 from __future__ import annotations
@@ -57,6 +58,13 @@ from typing import List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from pdf_ocr_spark.pipeline.extract_job import (
+    doc_lineage_metrics,
+    input_split_lineage,
+    run_job,
+    write_docs,
+)
 
 
 def _snapshots_dir(table_path: str) -> str:
@@ -274,10 +282,8 @@ def compact_table(
     df = df.persist()
     try:
         n = df.count()
-        writer = df.coalesce(target_partitions).write.mode("overwrite")
-        if "url_bucket" in df.columns:  # keep the prunable layout
-            writer = writer.partitionBy("url_bucket")
-        writer.parquet(run_dir)
+        # keeps the prunable url_bucket layout when the table has one
+        write_docs(df.coalesce(target_partitions), run_dir, "overwrite")
         commit_run(table_path, run_id, n, replaces=live)
     finally:
         df.unpersist()
@@ -295,8 +301,9 @@ def run_extraction_snapshot(
     input_format: str = "parquet",
     content_dedup: bool = False,
 ) -> int:
-    """Checkpointable batch run against a snapshot-log table: resume →
-    extract → write data+sidecar to a fresh run dir → ATOMIC manifest
+    """Checkpointable batch run (:func:`~pdf_ocr_spark.pipeline.extract_job.run_job`)
+    against a snapshot-log table: resume against the committed snapshot,
+    write data + sidecars to a fresh run dir, then the ATOMIC manifest
     commit.  Returns the number of documents appended by this run.
 
     ``content_dedup=True`` additionally drops documents whose extracted
@@ -308,44 +315,12 @@ def run_extraction_snapshot(
     Kill-and-restart safe at any point: a crash before the manifest
     rename leaves only an invisible orphan run dir; rerunning resumes
     from the last committed snapshot and re-extracts the lost work."""
-    from pdf_ocr_spark.pipeline.extract_job import (
-        dedup_incremental,
-        doc_lineage_metrics,
-        extract_documents,
-        extract_documents_split,
-        input_split_lineage,
-        read_pages,
-        resume_filter,
-    )
-
-    pages = read_pages(spark, input_path, input_format)
-    pages_scan = pages  # single-source plan: input_file_name() is only
-    #                     resolvable before the resume anti-join
-    done = read_snapshot_table(spark, table_path)
-    if done is not None:
-        pages = resume_filter(pages, done)
-    if split_giants:
-        docs = extract_documents_split(pages, num_partitions, giant_bytes=giant_bytes)
-    else:
-        docs = extract_documents(pages, num_partitions)
-    if content_dedup:
-        docs = dedup_incremental(docs, history=done)
-    if partition_buckets:
-        docs = docs.withColumn(
-            "url_bucket",
-            F.pmod(F.xxhash64("url"), F.lit(partition_buckets)).cast("int"),
-        )
-
     run_id = uuid.uuid4().hex[:16]
     run_dir = os.path.join(table_path, "data", run_id)
-    docs = docs.persist()
-    try:
-        n = docs.count()
+
+    def commit(docs: DataFrame, n: int, raw_scan: DataFrame) -> None:
         if n > 0:
-            writer = docs.write.mode("overwrite")  # fresh dir: overwrite=create
-            if partition_buckets:
-                writer = writer.partitionBy("url_bucket")
-            writer.parquet(run_dir)
+            write_docs(docs, run_dir, "overwrite")  # fresh dir: overwrite=create
             doc_lineage_metrics(docs).withColumn(
                 "run_id", F.lit(run_id)
             ).write.mode("overwrite").parquet(os.path.join(run_dir, "_sidecar"))
@@ -353,22 +328,26 @@ def run_extraction_snapshot(
             # (running the full split aggregation just to test emptiness
             # would scan url+length(html) twice — once here, once below)
             has_files = (
-                pages_scan.select(F.input_file_name().alias("f"))
+                raw_scan.select(F.input_file_name().alias("f"))
                 .filter(F.col("f") != "")
                 .limit(1)
                 .count()
             )
             if has_files:
-                input_split_lineage(pages_scan).withColumn(
+                input_split_lineage(raw_scan).withColumn(
                     "run_id", F.lit(run_id)
                 ).write.mode("overwrite").parquet(
                     os.path.join(run_dir, "_sidecar_splits")
                 )
         # the commit point — everything above is invisible until here
         commit_run(table_path, run_id, n)
-    finally:
-        docs.unpersist()
-    return n
+
+    return run_job(
+        spark, input_path, read_snapshot_table(spark, table_path), commit,
+        num_partitions=num_partitions, partition_buckets=partition_buckets,
+        split_giants=split_giants, giant_bytes=giant_bytes,
+        input_format=input_format, content_dedup=content_dedup,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -419,49 +398,40 @@ def run_extraction_iceberg(
     input_format: str = "parquet",
     lineage_table: Optional[str] = None,
 ) -> int:
-    """The checkpointable extraction run against a REAL Iceberg catalog
-    table — the north rule's deployment shape, engaged when the runtime
-    jar is present (:func:`iceberg_available`); otherwise raises
-    RuntimeError pointing at :func:`run_extraction_snapshot` (the
-    parquet snapshot-log fallback with identical semantics).
+    """The checkpointable extraction run
+    (:func:`~pdf_ocr_spark.pipeline.extract_job.run_job`) against a REAL
+    Iceberg catalog table — the north rule's deployment shape, engaged
+    when the runtime jar is present (:func:`iceberg_available`);
+    otherwise raises RuntimeError pointing at
+    :func:`run_extraction_snapshot` (the parquet snapshot-log fallback
+    with identical semantics).
 
-    Same plan as the fallback: read → resume anti-join on committed
-    urls (Iceberg read = current snapshot, so a crashed append — which
-    never committed — is invisible, exactly like an orphan run dir) →
-    single-shuffle extraction → ``writeTo(...).append()`` (one atomic
-    Iceberg commit).  Lineage goes to ``<table>_lineage`` (or
-    ``lineage_table``) as a second append; it trails the data commit,
-    so a crash between the two loses only observability rows, never
-    data consistency."""
-    from pdf_ocr_spark.pipeline.extract_job import (
-        doc_lineage_metrics,
-        extract_documents,
-        read_pages,
-        resume_filter,
-    )
-
+    Resume reads the table's current snapshot, so a crashed append —
+    which never committed — is invisible, exactly like an orphan run
+    dir.  The commit is ``writeTo(...).create()`` on the first run and
+    ``.append()`` after (one atomic Iceberg commit each).  Lineage goes
+    to ``<table>_lineage`` (or ``lineage_table``) as a second append; it
+    trails the data commit, so a crash between the two loses only
+    observability rows, never data consistency."""
     if not iceberg_available(spark):
         raise RuntimeError(
             "iceberg-spark-runtime not on the classpath; use "
             "run_extraction_snapshot (parquet snapshot log, identical "
             "resume/atomicity semantics) or launch with the Iceberg jar"
         )
-    pages = read_pages(spark, input_path, input_format)
     exists = _table_exists(spark, table_ident)
-    if exists:
-        done = spark.table(table_ident)
-        pages = resume_filter(pages, done)
-    docs = extract_documents(pages, num_partitions)
     run_id = uuid.uuid4().hex[:16]
-    docs = docs.persist()
-    try:
-        n = docs.count()
+
+    def commit(docs: DataFrame, n: int, raw_scan: DataFrame) -> None:
         if n > 0 or not exists:
             _append_to_table(docs, table_ident, create=not exists)
         if n > 0:
             lin = doc_lineage_metrics(docs).withColumn("run_id", F.lit(run_id))
             lt = lineage_table or f"{table_ident}_lineage"
             _append_to_table(lin, lt, create=not _table_exists(spark, lt))
-    finally:
-        docs.unpersist()
-    return n
+
+    done = spark.table(table_ident) if exists else None
+    return run_job(
+        spark, input_path, done, commit, num_partitions=num_partitions,
+        input_format=input_format,
+    )

@@ -23,6 +23,7 @@ from pyspark.sql.window import Window
 from pdf_ocr_spark.operators import dedup as D
 from pdf_ocr_spark.operators import similarity as S
 from pdf_ocr_spark.operators import text_analysis as T
+from pdf_ocr_spark.pipeline.session import CacheOwner
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -30,30 +31,11 @@ _NORM_SQL = "trim(regexp_replace(lower({c}), '\\s+', ' ', 'g'))"
 
 # stage frames persisted by multi-action queries (the filter funnels count
 # every stage, so each stage frame is referenced twice); bounded to the
-# most recent query's — the same cache-ownership protocol as
-# dedup.release_candidate_cache(), so a long-lived driver running the
-# registry in a loop holds at most one query's stage caches.
-_live_query_caches: list = []
-
-
-def release_query_cache() -> None:
-    """Unpersist every stage-frame cache owned by this module (at most
-    the latest funnel query's).  Results stay correct after release —
-    the cache only avoids recomputing shared stage frames."""
-    while _live_query_caches:
-        df = _live_query_caches.pop()
-        try:
-            df.unpersist(blocking=False)
-        except Exception:  # noqa: BLE001 — session may already be stopped
-            pass
-
-
-def _qcache(df: DataFrame) -> DataFrame:
-    """persist() + register for release by the next funnel query (or an
-    explicit release_query_cache())."""
-    df = df.persist()
-    _live_query_caches.append(df)
-    return df
+# most recent funnel query's, so a long-lived driver running the registry
+# in a loop holds at most one query's stage caches.
+_query_caches = CacheOwner()
+release_query_cache = _query_caches.release
+_qcache = _query_caches.cache
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -938,7 +920,7 @@ def q_dedup_bloom_prefilter(spark, sf_dir):
     impossible, which is why possibly_seen=false rows may safely skip
     the exact history join."""
     docs = _t(spark, sf_dir, "documents")
-    fp = F.md5(D.normalized(F.col("text"))).alias("fingerprint")
+    fp = D.fingerprint(F.col("text")).alias("fingerprint")
     hist = docs.filter(F.col("doc_id") % 5 != 0).select(fp)
     bloom = D.bloom_build(hist)
     probe = docs.select(F.col("doc_id"), fp)
@@ -1039,7 +1021,7 @@ def q_dedup_incremental(spark, sf_dir):
     hist = _t(spark, sf_dir, "documents").filter(
         (F.col("doc_id") < 100) & (F.col("doc_id") % 4 == 0)
     )
-    seen = hist.select(F.md5(D.normalized(F.col("text"))).alias("fingerprint"))
+    seen = hist.select(D.fingerprint(F.col("text")).alias("fingerprint"))
     return D.incremental_dedup(_docs_with_variants(spark, sf_dir), seen)
 
 
@@ -1463,7 +1445,7 @@ def q_dedup_salted_count(spark, sf_dir):
     """Skew-safe two-phase (salted) aggregation: exact-dup counts per
     content fingerprint where hot keys would bottleneck single reducers."""
     d = _docs_with_variants(spark, sf_dir).select(
-        F.md5(D.normalized(F.col("text"))).alias("fp")
+        D.fingerprint(F.col("text")).alias("fp")
     )
     return D.salted_group_count(d, "fp", salt_buckets=8)
 
@@ -3424,8 +3406,6 @@ def q_filter_funnel(spark, sf_dir):
     should clearCache() between runs."""
     from pyspark.sql.window import Window
 
-    from pdf_ocr_spark.operators.dedup import normalized
-
     release_query_cache()
     base = _t(spark, sf_dir, "documents").select("doc_id", "text")
     docs = _qcache(
@@ -3479,7 +3459,7 @@ def q_filter_funnel(spark, sf_dir):
         .select("doc_id"),
         "doc_id",
     ))
-    wd = Window.partitionBy(F.md5(normalized(F.col("text")))).orderBy("doc_id")
+    wd = Window.partitionBy(D.fingerprint(F.col("text"))).orderBy("doc_id")
     n4df = (
         d3.withColumn("_rn", F.row_number().over(wd))
         .filter(F.col("_rn") == 1)
@@ -3646,8 +3626,6 @@ def q_training_mix(spark, sf_dir):
     fingerprint, and the per-shard pack window — nothing global."""
     from pyspark.sql.window import Window
 
-    from pdf_ocr_spark.operators.dedup import normalized
-
     docs = _t(spark, sf_dir, "documents")
     gq = T.gopher_quality(docs)
     kept1 = docs.join(
@@ -3663,7 +3641,7 @@ def q_training_mix(spark, sf_dir):
         .crossJoin(F.broadcast(cuts))
         .filter(F.col("avg_logprob") > F.col("c1"))
     )
-    wd = Window.partitionBy(F.md5(normalized(F.col("text")))).orderBy("doc_id")
+    wd = Window.partitionBy(D.fingerprint(F.col("text"))).orderBy("doc_id")
     kept3 = (
         kept2.withColumn("_rn", F.row_number().over(wd))
         .filter(F.col("_rn") == 1)
@@ -3824,7 +3802,6 @@ def q_filter_funnel_v2(spark, sf_dir):
     from pyspark.sql.window import Window
 
     from pdf_ocr_spark.operators import quality as Q
-    from pdf_ocr_spark.operators.dedup import normalized
 
     release_query_cache()
     base = _t(spark, sf_dir, "documents").select("doc_id", "text")
@@ -3850,7 +3827,7 @@ def q_filter_funnel_v2(spark, sf_dir):
     ))
     w = Window.partitionBy("fp").orderBy("doc_id")
     d3 = (
-        d2.select("doc_id", F.md5(normalized(F.col("text"))).alias("fp"))
+        d2.select("doc_id", D.fingerprint(F.col("text")).alias("fp"))
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
     )
@@ -4574,12 +4551,12 @@ a AS (
   FROM pts
 )
 SELECT CAST(n AS BIGINT) AS n_points,
-  round((n * sxy - sx * sy) / nullif(n * sxx - sx * sx, 0), 4)
+  round((n * sxy - sx * sy) / nullif(n * sxx - sx * sx, 0), 4) + 0.0
     AS heaps_beta,
   round((sy - (n * sxy - sx * sy) / nullif(n * sxx - sx * sx, 0) * sx) / n,
-        4) AS heaps_logk,
+        4) + 0.0 AS heaps_logk,
   round((n * sxy - sx * sy) * (n * sxy - sx * sy)
-        / nullif((n * sxx - sx * sx) * (n * syy - sy * sy), 0), 4) AS r2
+        / nullif((n * sxx - sx * sx) * (n * syy - sy * sy), 0), 4) + 0.0 AS r2
 FROM a
 """
 
@@ -6243,7 +6220,7 @@ def q_text_fingerprint(spark, sf_dir):
     return (
         _t(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < 200)
-        .select("doc_id", T.fingerprint_expr(F.col("text")).alias("fingerprint"))
+        .select("doc_id", D.fingerprint(F.col("text")).alias("fingerprint"))
     )
 
 

@@ -135,10 +135,10 @@ def stream_dedup_exact(
     which is what keeps it bounded on an unbounded crawl: an exact
     re-crawl of a page weeks later is deduplicated by the BATCH pass over
     the accumulated table, not by streaming state."""
-    from pdf_ocr_spark.operators.dedup import normalized
+    from pdf_ocr_spark.operators.dedup import fingerprint
 
     return (
-        docs.withColumn("fingerprint", F.md5(normalized(F.col(text_col))))
+        docs.withColumn("fingerprint", fingerprint(F.col(text_col)))
         .withColumn(ts_col, F.col(ts_col).cast("timestamp"))
         .withWatermark(ts_col, watermark)
         .dropDuplicatesWithinWatermark(["fingerprint"])
@@ -166,11 +166,11 @@ def stream_incremental_dedup(
     Within-stream duplicates are handled by
     ``dropDuplicatesWithinWatermark`` — state stays watermark-bounded
     on an unbounded stream."""
-    from pdf_ocr_spark.operators.dedup import normalized
+    from pdf_ocr_spark.operators.dedup import fingerprint
 
     seen = seen_fingerprints.select("fingerprint")
     return (
-        docs.withColumn("fingerprint", F.md5(normalized(F.col(text_col))))
+        docs.withColumn("fingerprint", fingerprint(F.col(text_col)))
         .withColumn(ts_col, F.col(ts_col).cast("timestamp"))
         .join(seen, "fingerprint", "left_anti")
         .withWatermark(ts_col, watermark)

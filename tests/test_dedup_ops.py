@@ -322,9 +322,9 @@ def test_candidate_cache_ownership_loop(spark, docs):
         out.count()
         seen.append(n_persistent())
     assert max(seen) <= base + 1  # never more than the one live entry
-    assert len(D._live_candidate_caches) == 1
+    assert len(D._candidate_caches.live) == 1
     D.release_candidate_cache()
-    assert not D._live_candidate_caches
+    assert not D._candidate_caches.live
     assert n_persistent() <= base
 
 

@@ -34,3 +34,18 @@ def test_export_manifest_oracle_bytes_are_bigint(con):
 
     _, sql = REGISTRY["export_manifest"]
     assert str(con.execute(sql).df()["n_bytes"].dtype) == "int64"
+
+
+def test_corpus_heaps_oracle_has_no_negative_zero(con):
+    """DuckDB's round() can return -0.0 where Spark's returns 0.0; the
+    two differ under an exact value hash, so the oracle must not emit a
+    negative zero."""
+    import math
+
+    from pdf_ocr_spark.queries import REGISTRY
+
+    _, sql = REGISTRY["corpus_heaps"]
+    df = con.execute(sql).df()
+    floats = [v for c in df.columns if df[c].dtype.kind == "f" for v in df[c]]
+    assert floats
+    assert not [v for v in floats if v == 0 and math.copysign(1.0, v) < 0]
