@@ -87,7 +87,7 @@ DOC_SCHEMA = StructType(
 )
 
 
-_GC_TUNED = False
+_WORKER_TUNED = False
 
 # page-count tables persisted by extract_documents_split (the count pass
 # feeds both the ranges join and the failed-giants join); bounded to the
@@ -125,21 +125,49 @@ def looks_like_pdf(data: bytes) -> bool:
 
 
 
-def _tune_worker_gc() -> None:
-    """Once per executor python worker: freeze the post-import heap out of
-    the cyclic collector and raise its thresholds.  The kernels allocate
-    millions of small acyclic objects (glyph tuples, token lists); with
-    default thresholds the cyclic GC rescans the heap constantly — pure
-    memory-bandwidth waste that measurably halves many-core throughput
-    (cycles are still collected, just at 200k-allocation granularity)."""
-    global _GC_TUNED
-    if _GC_TUNED:
+def _tune_worker() -> None:
+    """Once per executor python worker (reused across tasks):
+
+    * freeze the post-import heap out of the cyclic collector and raise
+      its thresholds.  The kernels allocate millions of small acyclic
+      objects; with default thresholds the cyclic GC rescans the heap
+      constantly, which measurably halves many-core throughput.
+    * stamp the zip import cache.  PySpark's ``setup_spark_files`` calls
+      ``importlib.invalidate_caches()`` on EVERY task; on CPython < 3.13
+      that makes each of the worker's 16 zipimporters re-read
+      ``pyspark.zip``'s 1,328-entry directory, about 250 ms CPU per task
+      on a 4-core box.  Now an archive is re-read only when its
+      ``(st_mtime_ns, st_size)`` differs from the stamp taken before its
+      last read (or ``stat`` fails), so a rewritten ``addPyFile`` zip is
+      still seen.  CPython 3.13 only drops the cache entry there."""
+    global _WORKER_TUNED
+    if _WORKER_TUNED:
         return
     import gc
+    import sys
+    import zipimport
 
     gc.freeze()
     gc.set_threshold(200_000, 100, 100)
-    _GC_TUNED = True
+    if sys.version_info < (3, 13):
+        reread = zipimport.zipimporter.invalidate_caches
+        stamps = {}
+
+        def invalidate_caches(self):
+            try:
+                st = os.stat(self.archive)
+            except OSError:
+                return reread(self)
+            stamp = (st.st_mtime_ns, st.st_size)
+            files = zipimport._zip_directory_cache.get(self.archive)
+            if files is not None and stamps.get(self.archive) == stamp:
+                self._files = files
+                return
+            stamps[self.archive] = stamp
+            reread(self)
+
+        zipimport.zipimporter.invalidate_caches = invalidate_caches
+    _WORKER_TUNED = True
 
 
 def _record_batch(rows: list, arrow_schema):
@@ -158,12 +186,14 @@ def arrow_map(rows_fn, schema: StructType):
     input column in, row tuples out — as a ``mapInArrow`` body whose
     output types come from ``to_arrow_schema(schema)``.  No pandas layer
     appears in the worker (the pandas adapter it replaced measured 10–18%
-    lower pipeline throughput at 8/32 cores on the synthetic corpus)."""
+    lower pipeline throughput at 8/32 cores on the synthetic corpus).
+    Each task calls :func:`_tune_worker` first; without its zip-cache
+    stamp every task paid about 250 ms CPU on a 4-core box."""
 
     def run(batches):
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        _tune_worker_gc()
+        _tune_worker()
         arrow_schema = to_arrow_schema(schema)
         for rb in batches:
             yield _record_batch(
@@ -957,6 +987,7 @@ def _merge_ranges(table):
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
+    _tune_worker()
     p = table.to_pydict()
     reasons = [r for r in p["failure_reason"] if r is not None]
     row = _assemble_doc(

@@ -9,7 +9,9 @@ cluster); every setting below is the one you'd ship in spark-defaults on a
   * Arrow on, with a small ``maxRecordsPerBatch`` — rows carry multi-MB
     PDF payloads, so batches are sized by bytes-in-flight, not row count
   * python worker reuse on, so kernel/module init (and, in production, an
-    OCR model) happens once per executor python worker
+    OCR model) happens once per executor python worker — and so does
+    ``extract_job._tune_worker``, whose stamp on the zip import cache
+    stops every later task re-reading ``pyspark.zip``'s directory
 """
 
 from __future__ import annotations
