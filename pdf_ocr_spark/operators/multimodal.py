@@ -1,6 +1,7 @@
 """Multimodal column plumbing: image/audio/video as opaque ``binary``
-columns with typed metadata, decoded/feature-extracted via Arrow-batched
-``mapInPandas``.
+columns with typed metadata, decoded/feature-extracted by per-media rows
+functions mapped through the pipeline's one Arrow adapter
+(``extract_job.arrow_map``; a media row whose decode raises drops alone).
 
 The sandbox has no image/audio codecs, so the decode step is a
 deterministic fake behind the same interface a real decoder would use
@@ -14,9 +15,7 @@ base64 data URI from raw image bytes without decoding them either).
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -29,6 +28,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from pdf_ocr_spark.pipeline.extract_job import arrow_map, per_doc
 
 MEDIA_SCHEMA = StructType(
     [
@@ -82,26 +83,18 @@ def _fake_decode_features(blob: bytes, n_frames: int = 4, dim: int = 8):
     return out
 
 
-def decode_frames_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Arrow-batched frame decode: 1 media row → n_frames feature rows
-    (the UDTF-like fan-out shape of SURVEY.md §2.10)."""
-    for batch in batches:
-        rows = []
-        for mid, blob in zip(batch["media_id"], batch["blob"]):
-            data = bytes(blob) if blob is not None else b""
-            try:
-                feats = _fake_decode_features(data)
-            except NotImplementedError:
-                continue
-            for i, f in enumerate(feats):
-                rows.append((int(mid), i, f))
-        yield pd.DataFrame(rows, columns=["media_id", "frame_idx", "feature"])
+@per_doc()
+def _frame_rows(media_id, blob):
+    """Frame decode: 1 media row → n_frames feature rows (the UDTF-like
+    fan-out shape of SURVEY.md §2.10)."""
+    for i, f in enumerate(_fake_decode_features(blob)):
+        yield media_id, i, f
 
 
 def decode_frames(media: DataFrame, id_col: str = "media_id", blob_col: str = "blob") -> DataFrame:
     return media.select(
         F.col(id_col).alias("media_id"), F.col(blob_col).alias("blob")
-    ).mapInPandas(decode_frames_batch, schema=FRAME_SCHEMA)
+    ).mapInArrow(arrow_map(_frame_rows, FRAME_SCHEMA), FRAME_SCHEMA)
 
 
 def sample_frames(
@@ -143,23 +136,14 @@ def _fake_resize(blob: bytes, max_side: int = 64):
     return tw, th, thumb
 
 
-def resize_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Arrow-batched resize: binary in → (dims, binary thumb) out."""
-    for batch in batches:
-        rows = []
-        for mid, blob in zip(batch["media_id"], batch["blob"]):
-            data = bytes(blob) if blob is not None else b""
-            try:
-                tw, th, thumb = _fake_resize(data)
-            except NotImplementedError:
-                continue
-            rows.append((int(mid), tw, th, thumb, len(thumb)))
-        yield pd.DataFrame(
-            rows, columns=["media_id", "width", "height", "thumb", "thumb_bytes"]
-        )
+@per_doc()
+def _resize_rows(media_id, blob):
+    """Resize: binary in → (dims, binary thumb) out."""
+    tw, th, thumb = _fake_resize(blob)
+    yield media_id, tw, th, thumb, len(thumb)
 
 
 def resize_media(media: DataFrame, id_col: str = "media_id", blob_col: str = "blob") -> DataFrame:
     return media.select(
         F.col(id_col).alias("media_id"), F.col(blob_col).alias("blob")
-    ).mapInPandas(resize_batch, schema=RESIZE_SCHEMA)
+    ).mapInArrow(arrow_map(_resize_rows, RESIZE_SCHEMA), RESIZE_SCHEMA)

@@ -9,16 +9,17 @@ overlay sink emits deterministic **SVG** (same geometry, colors, labels —
 pure text, byte-stable) and the double-layer sink writes a real minimal
 **PDF** (image XObject underlay + renderMode-3 invisible text layer)
 using the same from-scratch writer the fixtures use.  Both run as
-grouped-map pandas UDFs: one output document per (url[, page]) group.
+grouped-map ``applyInArrow`` bodies: one output document per (url[,
+page]) group.
 """
 
 from __future__ import annotations
 
 from typing import List, Sequence, Tuple
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 # reference palette shape: COLORS[idx % len(COLORS)]
 # (/root/reference/pdf_ocr_with_boxes_v2.py:428; 8 colors like config.COLORS)
@@ -177,40 +178,57 @@ _SVG_SCHEMA = "url string, page int, svg string"
 _PDF_SCHEMA = "url string, pdf binary, n_pages int"
 
 
+def _group_map(render, ddl: str):
+    """``applyInArrow`` body: one group's rows as column lists →
+    ``render(cols)``'s one output row, typed by ``ddl``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from pdf_ocr_spark.pipeline.extract_job import _record_batch, _tune_worker
+
+    arrow_schema = to_arrow_schema(StructType.fromDDL(ddl))
+
+    def run(table):
+        _tune_worker()
+        row = render(table.to_pydict())
+        return pa.Table.from_batches([_record_batch([row], arrow_schema)])
+
+    return run
+
+
+def _overlay_row(g: dict) -> tuple:
+    boxes = list(zip(g["text"], g["quad"]))
+    svg = overlay_svg(float(g["page_w"][0]), float(g["page_h"][0]), boxes)
+    return g["url"][0], g["page"][0], svg
+
+
 def render_overlays(blocks: DataFrame) -> DataFrame:
     """Grouped-map sink: block rows (url, page, page_w, page_h, text,
     quad array<array<double>>) → one SVG per (url, page).  Debug sink —
     runs on whatever slice you select, never on the extraction hot
     path."""
+    return blocks.groupBy("url", "page").applyInArrow(
+        _group_map(_overlay_row, _SVG_SCHEMA), schema=_SVG_SCHEMA
+    )
 
-    def _render(key, pdf):
-        url, page = key
-        boxes = [(t, q) for t, q in zip(pdf["text"], pdf["quad"])]
-        wv = float(pdf["page_w"].iloc[0]) if len(pdf) else 0.0
-        hv = float(pdf["page_h"].iloc[0]) if len(pdf) else 0.0
-        return pd.DataFrame(
-            {"url": [url], "page": [int(page)], "svg": [overlay_svg(wv, hv, boxes)]}
+
+def _double_layer_row(g: dict) -> tuple:
+    pages = [
+        (
+            float(g["page_w"][i]),
+            float(g["page_h"][i]),
+            g["image"][i] or b"",
+            list(zip(g["texts"][i] or [], g["quads"][i] or [])),
         )
-
-    return blocks.groupBy("url", "page").applyInPandas(_render, schema=_SVG_SCHEMA)
+        for i in sorted(range(len(g["page"])), key=g["page"].__getitem__)
+    ]
+    return g["url"][0], double_layer_pdf(pages), len(pages)
 
 
 def render_double_layer(pages_df: DataFrame) -> DataFrame:
     """Grouped-map sink: page rows (url, page, page_w, page_h, image,
     texts array<string>, quads array<array<array<double>>>) → one
     double-layer PDF per url (pages in order)."""
-
-    def _render(key, pdf):
-        (url,) = key
-        pdf = pdf.sort_values("page")
-        pages = []
-        for _, r in pdf.iterrows():
-            texts = [] if r["texts"] is None else list(r["texts"])
-            quads = [] if r["quads"] is None else list(r["quads"])
-            boxes = list(zip(texts, quads))
-            img = bytes(r["image"]) if r["image"] is not None else b""
-            pages.append((float(r["page_w"]), float(r["page_h"]), img, boxes))
-        out = double_layer_pdf(pages)
-        return pd.DataFrame({"url": [url], "pdf": [out], "n_pages": [len(pages)]})
-
-    return pages_df.groupBy("url").applyInPandas(_render, schema=_PDF_SCHEMA)
+    return pages_df.groupBy("url").applyInArrow(
+        _group_map(_double_layer_row, _PDF_SCHEMA), schema=_PDF_SCHEMA
+    )

@@ -25,8 +25,9 @@ frequency table.  This module splits the work accordingly:
   stays O(1) deep.
 - :func:`bpe_encode` — applies a learned merge list to documents as a
   chain of the same greedy folds, built programmatically in rank order
-  (all codegen'd; for vocabulary-scale merge lists freeze the table
-  into an Arrow pandas UDF instead — the chain is the small-k path).
+  (all codegen'd; for vocabulary-scale merge lists
+  :func:`bpe_encode_arrow` applies the frozen table in one Arrow stage
+  instead — the chain is the small-k path).
 
 Semantics pinned by tests + the pure-python third implementation in
 ``tools/freeze_bpe_golden.py`` (frozen golden = the oracle for the
@@ -37,6 +38,7 @@ application, (freq, left, right) tie-break.
 
 from __future__ import annotations
 
+import re
 from typing import List, Sequence, Tuple
 
 import pyspark.sql.functions as F
@@ -165,9 +167,9 @@ def bpe_encode(
     ``tokens`` is the space-joined subword stream.
 
     The chain depth equals len(merges): the right shape for bounded
-    merge tables (tests/goldens).  Production-size vocabularies freeze
-    the table into an Arrow pandas UDF instead — same semantics, one
-    batch hop."""
+    merge tables (tests/goldens).  Production-size vocabularies use
+    :func:`bpe_encode_arrow` instead — same semantics, one Arrow batch
+    hop."""
     tokens = F.flatten(
         F.transform(
             F.filter(norm_words_expr(F.col(text_col)), lambda w: w != ""),
@@ -192,6 +194,75 @@ def _encode_word_chain(
     return syms
 
 
+def _encode_rows(segment):
+    """The one encode rows function every tokenizer family shares: per
+    document, normalize (lowercase, whitespace runs → one space, split)
+    and concatenate ``segment(word)`` over its words, memoized per word
+    for the task (Heaps'-law-friendly: web batches repeat words
+    heavily).  (ids, texts) → (id, n_tokens, tokens) rows; a NULL text
+    encodes like ``''`` as (0, '')."""
+    space = re.compile(r"\s+")
+    cache: dict = {}
+
+    def rows(ids, texts):
+        out = []
+        for doc_id, text in zip(ids, texts):
+            toks: List[str] = []
+            for w in space.sub(" ", (text or "").lower()).strip().split(" "):
+                if w:
+                    hit = cache.get(w)
+                    if hit is None:
+                        hit = cache[w] = segment(w)
+                    toks.extend(hit)
+            out.append((doc_id, len(toks), " ".join(toks)))
+        return out
+
+    return rows
+
+
+def _encode_docs(
+    docs: DataFrame, segment, text_col: str, id_col: str
+) -> DataFrame:
+    """:func:`_encode_rows` as ONE ``mapInArrow`` stage through the
+    pipeline's Arrow adapter — O(1) plan depth at any vocabulary size.
+    Output (id, n_tokens, tokens), the :func:`bpe_encode` contract."""
+    from pyspark.sql.types import IntegerType, StringType, StructField, \
+        StructType
+
+    from pdf_ocr_spark.pipeline.extract_job import arrow_map
+
+    out_schema = StructType([
+        docs.schema[id_col],
+        StructField("n_tokens", IntegerType(), False),
+        StructField("tokens", StringType(), False),
+    ])
+    return docs.select(id_col, text_col).mapInArrow(
+        arrow_map(_encode_rows(segment), out_schema), out_schema
+    )
+
+
+def _apply_merges(w: str, ordered: Sequence[Tuple[str, str]]) -> List[str]:
+    """One word's symbols after every merge in rank order, each a greedy
+    left-to-right pass (the :func:`bpe_encode` fold, in Python)."""
+    syms = list(w) + [END]
+    present = set(syms)
+    for left, right in ordered:
+        if left not in present or right not in present:
+            continue
+        out: List[str] = []
+        changed = False
+        for s in syms:
+            if out and out[-1] == left and s == right:
+                out[-1] = left + right
+                changed = True
+            else:
+                out.append(s)
+        if changed:
+            syms = out
+            present = set(syms)
+    return syms
+
+
 def bpe_encode_arrow(
     docs: DataFrame,
     merges: Sequence[Tuple[int, str, str, int]],
@@ -201,68 +272,14 @@ def bpe_encode_arrow(
     """The PRODUCTION-VOCAB encode path: same semantics as
     :func:`bpe_encode` (rank-ordered greedy left-to-right passes, the
     contract the python twin in tools/freeze_bpe_golden.py pins) but
-    the frozen merge table is applied inside ONE Arrow-batched
-    ``mapInPandas`` stage instead of a len(merges)-deep codegen chain —
-    the right shape when the vocabulary has thousands of merges (the
-    chain's plan size is linear in k; this path is O(1) plan, O(batch)
-    Python with per-word memoization, Heaps'-law-friendly since web
-    batches repeat words heavily).
+    the frozen merge table is applied inside the shared Arrow encode
+    stage (:func:`_encode_docs`) instead of a len(merges)-deep codegen
+    chain — the right shape when the vocabulary has thousands of merges
+    (the chain's plan size is linear in k; this path is O(1) plan,
+    O(batch) Python).
 
     Output schema matches :func:`bpe_encode`: (id, n_tokens, tokens)."""
-    from pyspark.sql.types import IntegerType, StringType, StructField, \
-        StructType
-
     ordered = [(l, r) for _, l, r, _ in sorted(merges)]
-    out_schema = StructType([
-        docs.schema[id_col],
-        StructField("n_tokens", IntegerType(), False),
-        StructField("tokens", StringType(), False),
-    ])
-    src = docs.select(id_col, text_col)
-
-    def _encode_batches(batches):
-        import re as _re
-
-        cache: dict = {}
-
-        def word_tokens(w: str) -> List[str]:
-            hit = cache.get(w)
-            if hit is not None:
-                return hit
-            syms = list(w) + [END]
-            present = set(syms)
-            for left, right in ordered:
-                if left not in present or right not in present:
-                    continue
-                out: List[str] = []
-                changed = False
-                for s in syms:
-                    if out and out[-1] == left and s == right:
-                        out[-1] = left + right
-                        changed = True
-                    else:
-                        out.append(s)
-                if changed:
-                    syms = out
-                    present = set(syms)
-            cache[w] = syms
-            return syms
-
-        for pdf in batches:
-            ids = pdf[id_col]
-            n_out: List[int] = []
-            t_out: List[str] = []
-            for text in pdf[text_col].astype(str):
-                toks: List[str] = []
-                for w in _re.sub(r"\s+", " ", text.lower()).strip().split(" "):
-                    if w:
-                        toks.extend(word_tokens(w))
-                n_out.append(len(toks))
-                t_out.append(" ".join(toks))
-            import pandas as _pd
-
-            yield _pd.DataFrame(
-                {id_col: ids, "n_tokens": n_out, "tokens": t_out}
-            )
-
-    return src.mapInPandas(_encode_batches, schema=out_schema)
+    return _encode_docs(
+        docs, lambda w: _apply_merges(w, ordered), text_col, id_col
+    )

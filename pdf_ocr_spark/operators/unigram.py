@@ -19,14 +19,14 @@ Scale shape (same discipline as the BPE trainer):
 - seed-piece statistics are a codegen'd substring fan-out over the
   compact (word, cnt) vocabulary table — sublinear in corpus size
   (Heaps' law), map-side-combined groupBy bounded by distinct pieces;
-- each EM round is ONE Arrow-batched ``mapInPandas`` over the weighted
+- each EM round is ONE ``mapInArrow`` stage over the weighted
   word table (broadcast piece scores, per-word Viterbi with
   memoization) followed by a map-side-combined piece groupBy; the
   per-round collect is the vocabulary-scale piece table — the same
   broadcast-shaped output every consumer (the encoder) wants;
-- encoding is one ``mapInPandas`` stage with the frozen piece table —
-  O(1) plan depth at any vocabulary size (the BPE ``bpe_encode_arrow``
-  shape).
+- encoding is the shared Arrow encode stage of ``bpe_encode_arrow``
+  (``tokenizer._encode_docs``) with the frozen piece table — O(1) plan
+  depth at any vocabulary size.
 
 Pinned semantics (mirrored by the twin):
 - normalization: lowercase, whitespace runs → single space, split;
@@ -50,7 +50,11 @@ from typing import Dict, List, Sequence, Tuple
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
-from pdf_ocr_spark.operators.tokenizer import fixture_corpus, word_freq_table
+from pdf_ocr_spark.operators.tokenizer import (
+    _encode_docs,
+    fixture_corpus,
+    word_freq_table,
+)
 
 __all__ = [
     "fixture_corpus", "word_freq_table", "seed_piece_counts",
@@ -146,31 +150,29 @@ def _estep_counts(
 ) -> List[Tuple[str, int]]:
     """One hard-EM E-step over the weighted word table: Viterbi-segment
     every distinct word with the broadcast scores, count pieces along
-    the best path weighted by the word's corpus count.  One Arrow
-    mapInPandas stage + one map-side-combined groupBy; the collect is
+    the best path weighted by the word's corpus count.  One
+    ``mapInArrow`` stage (``extract_job.arrow_map``) + one
+    map-side-combined groupBy; the collect is
     the vocabulary-scale piece table (the M-step's input)."""
     from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from pdf_ocr_spark.pipeline.extract_job import arrow_map
 
     schema = StructType([
         StructField("piece", StringType(), False),
         StructField("cnt", LongType(), False),
     ])
 
-    def _segment_batches(batches):
-        import pandas as _pd
-
-        for pdf in batches:
-            agg: Dict[str, int] = {}
-            for w, c in zip(pdf["w"].astype(str), pdf["cnt"]):
-                for piece in viterbi_segment(w, logp, max_piece_len):
-                    agg[piece] = agg.get(piece, 0) + int(c)
-            yield _pd.DataFrame(
-                {"piece": list(agg.keys()), "cnt": list(agg.values())}
-            )
+    def piece_counts(words, cnts):
+        agg: Dict[str, int] = {}
+        for w, c in zip(words, cnts):
+            for piece in viterbi_segment(w, logp, max_piece_len):
+                agg[piece] = agg.get(piece, 0) + c
+        return list(agg.items())
 
     rows = (
         word_freqs.select("w", "cnt")
-        .mapInPandas(_segment_batches, schema=schema)
+        .mapInArrow(arrow_map(piece_counts, schema), schema)
         .groupBy("piece")
         .agg(F.sum("cnt").alias("cnt"))
         .collect()
@@ -192,7 +194,7 @@ def unigram_train(
 
     Plan: seed substring fan-out (codegen) → map-side-combined piece
     groupBy → TakeOrdered seed selection; then ``rounds`` hard-EM
-    iterations, each ONE mapInPandas Viterbi pass over the compact word
+    iterations, each ONE mapInArrow Viterbi pass over the compact word
     table + one piece groupBy + a vocabulary-scale collect; prune to
     ``vocab_size`` after the final round (single chars always kept)."""
     # the seed scan, the char re-add scan, and every EM round re-read
@@ -239,49 +241,11 @@ def unigram_encode(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Tokenize documents with a learned unigram vocabulary: ONE
-    Arrow-batched ``mapInPandas`` stage (broadcast piece scores,
-    per-word Viterbi with memoization — O(1) plan depth at any
-    vocabulary size, Heaps'-law-friendly since web batches repeat words
-    heavily).  Output (id, n_tokens, tokens), the ``bpe_encode``
-    contract."""
-    from pyspark.sql.types import IntegerType, StringType, StructField, \
-        StructType
-
+    """Tokenize documents with a learned unigram vocabulary: the shared
+    Arrow encode stage (``tokenizer._encode_docs``) with per-word
+    Viterbi over the broadcast piece scores.  Output (id, n_tokens,
+    tokens), the ``bpe_encode`` contract."""
     logp = _log_scores(list(vocab))
-    out_schema = StructType([
-        docs.schema[id_col],
-        StructField("n_tokens", IntegerType(), False),
-        StructField("tokens", StringType(), False),
-    ])
-    src = docs.select(id_col, text_col)
-
-    def _encode_batches(batches):
-        import re as _re
-
-        import pandas as _pd
-
-        cache: Dict[str, List[str]] = {}
-
-        def word_tokens(w: str) -> List[str]:
-            hit = cache.get(w)
-            if hit is None:
-                hit = viterbi_segment(w, logp, max_piece_len)
-                cache[w] = hit
-            return hit
-
-        for pdf in batches:
-            n_out: List[int] = []
-            t_out: List[str] = []
-            for text in pdf[text_col].astype(str):
-                toks: List[str] = []
-                for w in _re.sub(r"\s+", " ", text.lower()).strip().split(" "):
-                    if w:
-                        toks.extend(word_tokens(w))
-                n_out.append(len(toks))
-                t_out.append(" ".join(toks))
-            yield _pd.DataFrame(
-                {id_col: pdf[id_col], "n_tokens": n_out, "tokens": t_out}
-            )
-
-    return src.mapInPandas(_encode_batches, schema=out_schema)
+    return _encode_docs(
+        docs, lambda w: viterbi_segment(w, logp, max_piece_len), text_col, id_col
+    )

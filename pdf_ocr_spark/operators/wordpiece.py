@@ -29,8 +29,9 @@ Scale shape (same discipline as the sibling trainers):
 - the winner (one tiny row, PageRank-convergence-style) folds back into
   the symbol arrays with the shared greedy left-to-right
   ``F.aggregate`` rewrite; ``localCheckpoint`` truncates lineage;
-- encoding is ONE Arrow-batched ``mapInPandas`` stage (broadcast vocab
-  set, per-word memoization) — O(1) plan depth at any vocabulary size.
+- encoding is the shared Arrow encode stage (``tokenizer._encode_docs``:
+  broadcast vocab set, per-word memoization) — O(1) plan depth at any
+  vocabulary size.
 
 Pinned semantics (mirrored by ``tools/freeze_wordpiece_golden.py``):
 - normalization: lowercase, whitespace runs → single space, split;
@@ -51,12 +52,13 @@ the tokenizer itself is the upstream web-scale step this engine adds.
 
 from __future__ import annotations
 
-from typing import Dict, List, Sequence, Tuple
+from typing import List, Sequence, Tuple
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 from pdf_ocr_spark.operators.tokenizer import (
+    _encode_docs,
     _pair_counts,
     fixture_corpus,
     word_freq_table,
@@ -230,48 +232,10 @@ def wordpiece_encode(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Tokenize documents with a learned WordPiece vocabulary: ONE
-    Arrow-batched ``mapInPandas`` stage (broadcast vocab set, per-word
-    memoization — O(1) plan depth at any vocabulary size).  Output
-    (id, n_tokens, tokens), the shared encoder contract."""
-    from pyspark.sql.types import IntegerType, StringType, StructField, \
-        StructType
-
+    """Tokenize documents with a learned WordPiece vocabulary: the shared
+    Arrow encode stage (``tokenizer._encode_docs``) with per-word
+    MaxMatch over the broadcast vocab set.  Output (id, n_tokens,
+    tokens), the shared encoder contract."""
     vset = frozenset(p for p, _ in vocab)
     max_len = max((len(_strip_cont(p)) for p in vset), default=1)
-    out_schema = StructType([
-        docs.schema[id_col],
-        StructField("n_tokens", IntegerType(), False),
-        StructField("tokens", StringType(), False),
-    ])
-    src = docs.select(id_col, text_col)
-
-    def _encode_batches(batches):
-        import re as _re
-
-        import pandas as _pd
-
-        cache: Dict[str, List[str]] = {}
-
-        def word_tokens(w: str) -> List[str]:
-            hit = cache.get(w)
-            if hit is None:
-                hit = max_match(w, vset, max_len)
-                cache[w] = hit
-            return hit
-
-        for pdf in batches:
-            n_out: List[int] = []
-            t_out: List[str] = []
-            for text in pdf[text_col].astype(str):
-                toks: List[str] = []
-                for w in _re.sub(r"\s+", " ", text.lower()).strip().split(" "):
-                    if w:
-                        toks.extend(word_tokens(w))
-                n_out.append(len(toks))
-                t_out.append(" ".join(toks))
-            yield _pd.DataFrame(
-                {id_col: pdf[id_col], "n_tokens": n_out, "tokens": t_out}
-            )
-
-    return src.mapInPandas(_encode_batches, schema=out_schema)
+    return _encode_docs(docs, lambda w: max_match(w, vset, max_len), text_col, id_col)

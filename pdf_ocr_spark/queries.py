@@ -4880,8 +4880,8 @@ FROM d
 
 def q_bpe_encode_arrow(spark, sf_dir):
     """The PRODUCTION-VOCAB encode path (operators/tokenizer.py
-    bpe_encode_arrow): the frozen merge table applied in ONE
-    Arrow-batched mapInPandas stage with per-word memoization instead
+    bpe_encode_arrow): the frozen merge table applied in the ONE
+    shared mapInArrow encode stage with per-word memoization instead
     of the len(merges)-deep codegen chain — the shape a
     thousands-of-merges vocabulary needs (plan size O(1), not O(k)).
     Same oracle as ``bpe_encode``: both paths must reproduce the
@@ -4947,7 +4947,7 @@ def q_unigram_vocab(spark, sf_dir):
     Kudo 2018; Viterbi hard-EM) over the deterministic fixture corpus:
     one corpus-sized word groupBy, a codegen'd substring fan-out over
     the compact vocab table for the seed statistics, then per-round
-    Arrow mapInPandas Viterbi E-steps + map-side-combined piece
+    mapInArrow Viterbi E-steps + map-side-combined piece
     aggregates, coverage-safe pruning to vocab_size.  Oracle = the
     INDEPENDENT pure-python trainer frozen by
     tools/freeze_unigram_golden.py (value hash pins every piece and
@@ -4968,8 +4968,8 @@ SELECT piece, freq FROM read_parquet('{{golden}}')
 
 
 def q_unigram_encode(spark, sf_dir):
-    """Unigram-LM ENCODING with the learned piece table: ONE
-    Arrow-batched mapInPandas stage (broadcast scores, per-word Viterbi
+    """Unigram-LM ENCODING with the learned piece table: the ONE shared
+    mapInArrow encode stage (broadcast scores, per-word Viterbi
     with memoization — O(1) plan depth at any vocabulary size, the
     bpe_encode_arrow shape).  Train + encode in one job; oracle = the
     frozen pure-python twin's token streams (value hash pins every
@@ -5149,7 +5149,7 @@ SELECT piece, freq FROM read_parquet('{{golden}}')
 def q_wordpiece_encode(spark, sf_dir):
     """WordPiece ENCODING (BERT-runtime greedy longest-prefix MaxMatch,
     ## continuation, whole-word [UNK] fallback) with the learned piece
-    table: ONE Arrow-batched mapInPandas stage (broadcast vocab set,
+    table: the ONE shared mapInArrow encode stage (broadcast vocab set,
     per-word memoization — O(1) plan depth at any vocabulary size).
     The eval corpus extends the training fixture with rows the
     vocabulary can only partially cover or not at all, so both the
@@ -5887,7 +5887,7 @@ def q_sink_warc_roundtrip(spark, sf_dir):
     the expected bytes directly, so the value hash pins BOTH codecs:
     any header, length, or body corruption in either direction breaks
     the match."""
-    from pdf_ocr_spark.sources.warc import PAGES_DDL, pages_to_warc, warc_pages_batch
+    from pdf_ocr_spark.sources.warc import archive_pages, pages_to_warc
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     pages = d.select(
@@ -5901,9 +5901,7 @@ def q_sink_warc_roundtrip(spark, sf_dir):
         F.col("lang"),
     )
     archives = pages_to_warc(pages.repartition(4, "url"))
-    back = archives.select(F.col("warc").alias("content")).mapInPandas(
-        warc_pages_batch, schema=PAGES_DDL
-    )
+    back = archive_pages(archives)
     return back.select(
         "url",
         F.md5(F.col("html")).alias("body_md5"),
@@ -6515,7 +6513,7 @@ def q_sink_wet_export(spark, sf_dir):
     text, which is exactly the set WET emits) — so the hash pins the
     extractor AND the writer AND the reader in one gate."""
     from pdf_ocr_spark.pipeline.extract_job import extract_documents
-    from pdf_ocr_spark.sources.warc import PAGES_DDL, pages_to_warc, warc_pages_batch
+    from pdf_ocr_spark.sources.warc import archive_pages, pages_to_warc
 
     docs = extract_documents(_corpus(spark, "mix_150"))
     wet_in = docs.select(
@@ -6526,9 +6524,7 @@ def q_sink_wet_export(spark, sf_dir):
         F.lit("unknown").alias("lang"),
     )
     archives = pages_to_warc(wet_in.repartition(4, "url"))
-    back = archives.select(F.col("warc").alias("content")).mapInPandas(
-        warc_pages_batch, schema=PAGES_DDL
-    )
+    back = archive_pages(archives)
     return back.select("url", F.md5(F.col("html")).alias("text_md5"))
 
 

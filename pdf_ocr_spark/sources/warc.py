@@ -5,8 +5,14 @@ life as WARC files; this module closes that gap with a from-scratch
 WARC/1.0 reader (ISO 28500 — public format) and a Spark route:
 
     spark.read.format("binaryFile") over *.warc / *.warc.gz
-      → mapInPandas(warc_pages_batch)   # 1 archive → N page rows
+      → archive_pages                   # 1 archive → N page rows
       → (url, warc_ts, html, text, lang) pages table
+
+Every per-archive reader here (pages, CDX, redirects, WARC→WAT, WAT
+rows, revisit rows, robots headers) is a plain Python function of one
+archive's bytes, and every Spark route maps it through the pipeline's
+one Arrow adapter (``extract_job.arrow_map``): no pandas layer in the
+worker.  The writers accumulate one archive per partition the same way.
 
 Scale notes: parallelism is per-FILE (binaryFile does not split inside
 an archive) — Common Crawl ships ~1 GB segments in the tens of
@@ -15,12 +21,14 @@ cluster; a segment parses streamingly (one record in memory at a time).
 ``.warc.gz`` members are handled by a multi-member zlib loop (CC
 compresses each record as its own gzip member precisely so readers can
 stream).  Malformed records are skipped, never raised (poison-row
-promise); truncated tails yield the records before the truncation.
+promise); truncated tails yield the records before the truncation, and
+a record cut short is dropped, never yielded with a partial body.
 """
 
 from __future__ import annotations
 
 import zlib
+from datetime import datetime
 from typing import Iterator, List, Optional, Tuple
 
 _CRLF2 = b"\r\n\r\n"
@@ -95,25 +103,11 @@ def _http_body(payload: bytes) -> bytes:
     return body
 
 
-def iter_warc_records(
-    data: bytes,
-) -> Iterator[Tuple[str, Optional[str], bytes]]:
-    """Yield (target_uri, warc_date, payload_body) for every WARC
-    *response*/*resource* record in one archive (gzipped or plain).
-    Request/metadata/warcinfo records are skipped; malformed records end
-    the scan rather than raising.  Gzipped archives decompress
-    member-by-member (one record in memory at a time, see
-    ``_iter_gzip_members``)."""
-    if data[:2] == b"\x1f\x8b":
-        for member in _iter_gzip_members(data):
-            yield from _iter_records_plain(member)
-        return
-    yield from _iter_records_plain(data)
-
-
-def _iter_records_plain(
-    data: bytes,
-) -> Iterator[Tuple[str, Optional[str], bytes]]:
+def _iter_records_meta(data: bytes) -> Iterator[Tuple[int, int, dict, bytes]]:
+    """Yield (offset, stored_length, warc_headers, payload) for every
+    complete record in an UNCOMPRESSED archive slab.  stored_length spans
+    headers through the record's trailing CRLFCRLF — the exact byte range
+    a reader must fetch."""
     pos = 0
     n = len(data)
     while pos < n:
@@ -130,47 +124,98 @@ def _iter_records_plain(
             pos = hdr_end + 4
             continue
         body_start = hdr_end + 4
-        payload = data[body_start : body_start + length]
-        pos = body_start + length
-        rtype = headers.get("warc-type", "").lower()
+        rec_end = body_start + length
+        if rec_end > n:  # truncated tail: the capture is incomplete
+            break
+        end = rec_end + 4 if data[rec_end : rec_end + 4] == _CRLF2 else rec_end
+        yield start, end - start, headers, data[body_start:rec_end]
+        pos = rec_end
+
+
+def _records(data: bytes) -> Iterator[Tuple[dict, bytes]]:
+    """The one record walker: (warc_headers, payload) for every complete
+    record of an archive, gzipped member-by-member (one record in memory
+    at a time, see ``_iter_gzip_members``) or a plain slab.  A record cut
+    short by a truncated tail ends the walk (see ``_iter_records_meta``)."""
+    slabs = _iter_gzip_members(data) if data[:2] == b"\x1f\x8b" else (data,)
+    for slab in slabs:
+        for _, _, headers, payload in _iter_records_meta(slab):
+            yield headers, payload
+
+
+def _is_capture(headers: dict) -> bool:
+    return headers.get("warc-type", "").lower() in (
+        "response", "resource", "conversion",
+    )
+
+
+def iter_warc_records(
+    data: bytes,
+) -> Iterator[Tuple[str, Optional[str], bytes]]:
+    """Yield (target_uri, warc_date, payload_body) for every WARC
+    *response*/*resource*/*conversion* record in one archive (gzipped or
+    plain).  Request/metadata/warcinfo records are skipped; malformed
+    records end the scan rather than raising."""
+    for headers, payload in _records(data):
         uri = headers.get("warc-target-uri", "")
         # 'conversion' = WET extracted-text records — same shape, bare body
-        if rtype in ("response", "resource", "conversion") and uri:
+        if _is_capture(headers) and uri:
             yield uri, headers.get("warc-date"), _http_body(payload)
+
+
+def _warc_ts(date: Optional[str]):
+    """WARC-Date → naive datetime (the offset is dropped, wall time
+    kept); None when absent or not ISO 8601."""
+    try:
+        return datetime.fromisoformat(date).replace(tzinfo=None)
+    except (TypeError, ValueError):
+        return None
 
 
 PAGES_DDL = "url string, warc_ts timestamp, html binary, text string, lang string"
 
 
-def warc_pages_batch(batches):
-    """mapInPandas body: binaryFile rows (path, content) → page rows."""
-    import pandas as pd
+def _map_archives(archives, rows_of, ddl: str, poison=()):
+    """One map over archive rows: ``rows_of(blob, *passthrough)`` gives
+    one archive's rows, through the pipeline's Arrow adapter
+    (``extract_job.arrow_map``).  A NULL or raising archive skips whole —
+    or emits ``poison`` rows where a route promises one row per archive.
+    Parallelism is per archive, no shuffle."""
+    from pyspark.sql.types import StructType
 
-    for b in batches:
-        rows: List[tuple] = []
-        for blob in b["content"]:
-            try:
-                for uri, date, body in iter_warc_records(bytes(blob)):
-                    ts = None
-                    if date:
-                        try:
-                            ts = pd.Timestamp(date).tz_localize(None)
-                        except (ValueError, TypeError):
-                            ts = None
-                    rows.append((uri, ts, body, None, None))
+    from pdf_ocr_spark.pipeline.extract_job import arrow_map
+
+    def rows_fn(blobs, *passthrough):
+        out: List[tuple] = []
+        for blob, *extra in zip(blobs, *passthrough):
+            try:  # list() first: an archive raising midway adds no rows
+                out.extend(list(rows_of(blob, *extra)))
             except Exception:  # noqa: BLE001 — poison archives skip whole
-                continue
-        yield pd.DataFrame(
-            rows, columns=["url", "warc_ts", "html", "text", "lang"]
-        )
+                out.extend(poison)
+        return out
+
+    schema = StructType.fromDDL(ddl)
+    return archives.mapInArrow(arrow_map(rows_fn, schema), schema)
+
+
+def _page_rows(blob: bytes) -> List[tuple]:
+    return [
+        (uri, _warc_ts(date), body, None, None)
+        for uri, date, body in iter_warc_records(blob)
+    ]
+
+
+def archive_pages(archives):
+    """(warc binary) archive rows → the Common-Crawl-style pages table
+    (ready for ``extract_documents``): one page row per capture record."""
+    return _map_archives(archives.select("warc"), _page_rows, PAGES_DDL)
 
 
 def warc_to_pages(spark, path: str):
-    """WARC files under ``path`` → the Common-Crawl-style pages table
-    (ready for ``extract_documents``): per-file parallel, record-level
-    streaming inside each file."""
-    raw = spark.read.format("binaryFile").load(path).select("content")
-    return raw.mapInPandas(warc_pages_batch, schema=PAGES_DDL)
+    """WARC files under ``path`` → the pages table: per-file parallel,
+    record-level streaming inside each file."""
+    raw = spark.read.format("binaryFile").load(path)
+    return archive_pages(raw.withColumnRenamed("content", "warc"))
 
 
 # ---------------------------------------------------------------------------
@@ -264,41 +309,55 @@ def write_warc_bytes(
     return b"".join(out)
 
 
-def pages_to_warc_batch(batches):
-    """mapInPandas body: pages rows → ONE (n_records, warc) archive for
-    the whole partition (all Arrow batches accumulate — the session's
-    small maxRecordsPerBatch must not fragment the archive, or offsets
-    in a CDX built over it stop matching the stored file).  Timestamps
-    render as ISO-8601 Z; null html rows emit ``conversion`` records
-    from ``text`` (the WET shape) so nothing is silently dropped."""
-    import pandas as pd
-
-    recs = []
-    for b in batches:
-        for url, ts, html, text in zip(
-            b["url"], b["warc_ts"], b["html"], b["text"]
-        ):
-            date = (
-                pd.Timestamp(ts).strftime("%Y-%m-%dT%H:%M:%SZ")
-                if not pd.isna(ts)
-                else "1970-01-01T00:00:00Z"
-            )
-            if html is not None and not (
-                isinstance(html, float) and pd.isna(html)
-            ):
-                recs.append(
-                    write_warc_record(str(url), date, bytes(html))
-                )
-            elif isinstance(text, str) and text:
-                recs.append(
-                    write_warc_record(
-                        str(url), date, text.encode("utf-8"),
-                        warc_type="conversion",
-                    )
-                )
-    yield pd.DataFrame(
-        {"n_records": [len(recs)], "warc": [b"".join(recs)]}
+def _warc_date(ts) -> str:
+    """A page's capture timestamp as the WARC-Date it is written with:
+    ISO-8601 Z, the epoch when NULL."""
+    return (
+        "1970-01-01T00:00:00Z" if ts is None else ts.strftime("%Y-%m-%dT%H:%M:%SZ")
     )
+
+
+def _write_pages(rows) -> Tuple[int, bytes]:
+    """(url, warc_ts, html, text) rows → ONE (n_records, warc) archive.
+    Null html rows emit ``conversion`` records from ``text`` (the WET
+    shape) so nothing is silently dropped; rows with neither emit none."""
+    recs = []
+    for url, ts, html, text in rows:
+        if html is not None:
+            recs.append(write_warc_record(str(url), _warc_date(ts), bytes(html)))
+        elif text:
+            recs.append(
+                write_warc_record(
+                    str(url), _warc_date(ts), text.encode("utf-8"),
+                    warc_type="conversion",
+                )
+            )
+    return len(recs), b"".join(recs)
+
+
+def _write_partitions(pages, write, ddl: str):
+    """One archive per PARTITION: ``write`` gets every row of the
+    partition — all its Arrow batches, streamed — and returns the one
+    archive row.  The session's small maxRecordsPerBatch must not split
+    an archive, or offsets in a CDX built over it stop matching the
+    stored file."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    from pdf_ocr_spark.pipeline.extract_job import _record_batch, _tune_worker
+
+    schema = StructType.fromDDL(ddl)
+
+    def run(batches):
+        _tune_worker()
+        rows = (
+            row
+            for rb in batches
+            for row in zip(*(c.to_pylist() for c in rb.columns))
+        )
+        yield _record_batch([write(rows)], to_arrow_schema(schema))
+
+    return pages.mapInArrow(run, schema)
 
 
 def pages_to_warc(pages):
@@ -306,8 +365,10 @@ def pages_to_warc(pages):
     layout: one ~1 GB segment per write task; size segments by
     repartitioning upstream).  Returns (n_records, warc binary) rows —
     write with any binary sink."""
-    return pages.select("url", "warc_ts", "html", "text").mapInPandas(
-        pages_to_warc_batch, schema="n_records long, warc binary"
+    return _write_partitions(
+        pages.select("url", "warc_ts", "html", "text"),
+        _write_pages,
+        "n_records long, warc binary",
     )
 
 
@@ -373,40 +434,6 @@ def _http_meta(payload: bytes) -> Tuple[Optional[int], Optional[str]]:
     return status, mime
 
 
-def _iter_records_meta(
-    data: bytes, base_offset: int = 0
-) -> Iterator[Tuple[int, int, dict, bytes]]:
-    """Yield (offset, stored_length, warc_headers, payload) for every
-    record in an UNCOMPRESSED archive slab; offsets are archive-absolute
-    via ``base_offset``.  stored_length spans headers through the
-    record's trailing CRLFCRLF — the exact byte range a reader must
-    fetch."""
-    pos = 0
-    n = len(data)
-    while pos < n:
-        start = data.find(b"WARC/", pos)
-        if start < 0:
-            break
-        hdr_end = data.find(_CRLF2, start)
-        if hdr_end < 0:
-            break
-        headers = _parse_headers(data[start:hdr_end])
-        try:
-            length = int(headers.get("content-length", ""))
-        except ValueError:
-            pos = hdr_end + 4
-            continue
-        body_start = hdr_end + 4
-        rec_end = body_start + length
-        if rec_end > n:  # truncated tail: the capture is incomplete
-            break
-        end = rec_end + 4 if data[rec_end : rec_end + 4] == _CRLF2 else rec_end
-        yield base_offset + start, end - start, headers, data[
-            body_start:rec_end
-        ]
-        pos = rec_end
-
-
 def _ts14(warc_date: Optional[str]) -> str:
     """WARC-Date (ISO 8601) → the 14-digit CDX timestamp."""
     digits = "".join(c for c in (warc_date or "") if c.isdigit())
@@ -431,15 +458,14 @@ def cdx_records(data: bytes, filename: str = "") -> List[tuple]:
     rows: List[tuple] = []
 
     def emit(off: int, ln: int, headers: dict, payload: bytes) -> None:
-        rtype = headers.get("warc-type", "").lower()
         uri = headers.get("warc-target-uri", "")
-        if rtype not in ("response", "resource", "conversion") or not uri:
+        if not _is_capture(headers) or not uri:
             return
         status, mime = _http_meta(payload)
         if mime is None:
             ct = headers.get("content-type", "")
             mime = ct.split(";")[0].strip().lower() or None
-            if rtype == "conversion" and mime is None:
+            if headers["warc-type"].lower() == "conversion" and mime is None:
                 mime = "text/plain"
         rows.append(
             (
@@ -483,30 +509,15 @@ CDX_DDL = (
 )
 
 
-def warc_cdx_batch(batches):
-    """mapInPandas body: archive rows (warc binary [, filename]) → CDX
-    rows.  Parallelism is per-ARCHIVE, matching the reader: indexing a
-    crawl is one map over its segment files, no shuffle."""
-    import pandas as pd
-
-    for b in batches:
-        names = b["filename"] if "filename" in b.columns else [""] * len(b)
-        rows: List[tuple] = []
-        for blob, name in zip(b["warc"], names):
-            try:
-                rows.extend(cdx_records(bytes(blob), str(name or "")))
-            except Exception:  # noqa: BLE001 — poison archives skip whole
-                continue
-        yield pd.DataFrame(rows, columns=CDX_COLUMNS)
-
-
 def warc_cdx(archives):
     """(warc binary [, filename string]) rows → the CDX capture index.
     Sort the final index with a range partition on surt_key when
     writing a crawl-wide index (the only shuffle in the job)."""
     cols = [c for c in ("warc", "filename") if c in archives.columns]
-    return archives.select(*cols).mapInPandas(
-        warc_cdx_batch, schema=CDX_DDL
+    return _map_archives(
+        archives.select(*cols),
+        lambda blob, name="": cdx_records(blob, str(name or "")),
+        CDX_DDL,
     )
 
 
@@ -551,15 +562,8 @@ def redirect_records(data: bytes) -> List[tuple]:
     raw Location, absolutized target) for every 3xx response record
     that carries a Location header.  Malformed records skip."""
 
-    def gen() -> Iterator[Tuple[int, int, dict, bytes]]:
-        if data[:2] == b"\x1f\x8b":
-            for member in _iter_gzip_members(data):
-                yield from _iter_records_meta(member)
-        else:
-            yield from _iter_records_meta(data)
-
     rows: List[tuple] = []
-    for _, _, headers, payload in gen():
+    for headers, payload in _records(data):
         if headers.get("warc-type", "").lower() != "response":
             continue
         uri = headers.get("warc-target-uri", "")
@@ -584,26 +588,10 @@ REDIRECT_DDL = (
 )
 
 
-def warc_redirects_batch(batches):
-    """mapInPandas body: archive rows (warc binary) → redirect edges."""
-    import pandas as pd
-
-    for b in batches:
-        rows: List[tuple] = []
-        for blob in b["warc"]:
-            try:
-                rows.extend(redirect_records(bytes(blob)))
-            except Exception:  # noqa: BLE001 — poison archives skip whole
-                continue
-        yield pd.DataFrame(rows, columns=REDIRECT_COLUMNS)
-
-
 def warc_redirects(archives):
     """(warc binary) rows → the crawl's redirect-edge table.  Same
     per-archive parallelism as the reader: one map, no shuffle."""
-    return archives.select("warc").mapInPandas(
-        warc_redirects_batch, schema=REDIRECT_DDL
-    )
+    return _map_archives(archives.select("warc"), redirect_records, REDIRECT_DDL)
 
 
 # ---------------------------------------------------------------------------
@@ -617,10 +605,10 @@ def warc_redirects(archives):
 
 
 def _sniff_pdf(body: bytes) -> bool:
-    """Prefix-only %PDF- magic, whitespace/NUL-tolerant — the same
-    sniff discipline as the extraction pipeline's doc-mode classifier
-    (pipeline/extract_job.py), re-stated locally to keep sources/ free
-    of pipeline imports."""
+    """Prefix-only %PDF- magic, whitespace/NUL-tolerant.  Deliberately
+    NOT the pipeline's ``extract_job.looks_like_pdf``, which also accepts
+    a header inside the first KB: the WAT bytes (and their golden) pin
+    this prefix-only sniff."""
     return body.lstrip(b"\x00\t\r\n\x0c ")[:5] == b"%PDF-"
 
 
@@ -679,54 +667,33 @@ def warc_to_wat_bytes(data: bytes) -> Tuple[int, bytes]:
     identical WAT archives, the same resume/diff property as the
     writer."""
     recs: List[bytes] = []
-    slabs: Iterator[bytes]
-    if data[:2] == b"\x1f\x8b":
-        slabs = _iter_gzip_members(data)
-    else:
-        slabs = iter((data,))
-    for slab in slabs:
-        for _, _, headers, payload in _iter_records_meta(slab):
-            rtype = headers.get("warc-type", "").lower()
-            uri = headers.get("warc-target-uri", "")
-            if rtype not in ("response", "resource", "conversion") or not uri:
-                continue
-            j = wat_payload(headers, payload)
-            recs.append(
-                write_warc_record(
-                    uri,
-                    headers.get("warc-date", "1970-01-01T00:00:00Z"),
-                    j.encode("utf-8"),
-                    warc_type="metadata",
-                    content_type="application/json",
-                )
+    for headers, payload in _records(data):
+        uri = headers.get("warc-target-uri", "")
+        if not _is_capture(headers) or not uri:
+            continue
+        j = wat_payload(headers, payload)
+        recs.append(
+            write_warc_record(
+                uri,
+                headers.get("warc-date", "1970-01-01T00:00:00Z"),
+                j.encode("utf-8"),
+                warc_type="metadata",
+                content_type="application/json",
             )
+        )
     return len(recs), b"".join(recs)
-
-
-def warc_to_wat_batch(batches):
-    """mapInPandas body: (warc binary) archive rows → (n_records, wat
-    binary) WAT archives, one per input archive."""
-    import pandas as pd
-
-    for b in batches:
-        ns: List[int] = []
-        wats: List[bytes] = []
-        for blob in b["warc"]:
-            try:
-                n, wat = warc_to_wat_bytes(bytes(blob))
-            except Exception:  # noqa: BLE001 — poison archives skip whole
-                n, wat = 0, b""
-            ns.append(n)
-            wats.append(wat)
-        yield pd.DataFrame({"n_records": ns, "wat": wats})
 
 
 def warc_to_wat(archives):
     """(warc binary) rows → WAT archives.  Same per-archive parallelism
     as the reader/CDX: one map, no shuffle — at crawl scale this is a
-    pure passthrough stage beside the segment files."""
-    return archives.select("warc").mapInPandas(
-        warc_to_wat_batch, schema="n_records long, wat binary"
+    pure passthrough stage beside the segment files.  One row per
+    archive: a NULL or unreadable one gives (0, empty)."""
+    return _map_archives(
+        archives.select("warc"),
+        lambda blob: [warc_to_wat_bytes(blob)],
+        "n_records long, wat binary",
+        poison=[(0, b"")],
     )
 
 
@@ -748,58 +715,38 @@ def wat_rows(data: bytes) -> List[tuple]:
     import json
 
     rows: List[tuple] = []
-    slabs: Iterator[bytes]
-    if data[:2] == b"\x1f\x8b":
-        slabs = _iter_gzip_members(data)
-    else:
-        slabs = iter((data,))
-    for slab in slabs:
-        for _, _, headers, payload in _iter_records_meta(slab):
-            if headers.get("warc-type", "").lower() != "metadata":
-                continue
-            try:
-                env = json.loads(payload.decode("utf-8"))["Envelope"]
-            except Exception:  # noqa: BLE001 — malformed JSON: skip record
-                continue
-            whm = env.get("WARC-Header-Metadata", {})
-            pm = env.get("Payload-Metadata", {})
-            http = pm.get("HTTP-Response-Metadata", {})
-            hm = http.get("HTML-Metadata")
-            status_s = http.get("Response-Message", {}).get("Status", "")
-            links = [d.get("url", "") for d in (hm or {}).get("Links", [])]
-            rows.append(
-                (
-                    whm.get("WARC-Target-URI", ""),
-                    whm.get("WARC-Type", ""),
-                    int(status_s) if status_s.isdigit() else None,
-                    http.get("Headers", {}).get("Content-Type") or None,
-                    (hm or {}).get("Head", {}).get("Title") or None,
-                    len(links),
-                    hashlib.md5("\n".join(links).encode("utf-8")).hexdigest()
-                    if links
-                    else None,
-                )
+    for headers, payload in _records(data):
+        if headers.get("warc-type", "").lower() != "metadata":
+            continue
+        try:
+            env = json.loads(payload.decode("utf-8"))["Envelope"]
+        except Exception:  # noqa: BLE001 — malformed JSON: skip record
+            continue
+        whm = env.get("WARC-Header-Metadata", {})
+        pm = env.get("Payload-Metadata", {})
+        http = pm.get("HTTP-Response-Metadata", {})
+        hm = http.get("HTML-Metadata")
+        status_s = http.get("Response-Message", {}).get("Status", "")
+        links = [d.get("url", "") for d in (hm or {}).get("Links", [])]
+        rows.append(
+            (
+                whm.get("WARC-Target-URI", ""),
+                whm.get("WARC-Type", ""),
+                int(status_s) if status_s.isdigit() else None,
+                http.get("Headers", {}).get("Content-Type") or None,
+                (hm or {}).get("Head", {}).get("Title") or None,
+                len(links),
+                hashlib.md5("\n".join(links).encode("utf-8")).hexdigest()
+                if links
+                else None,
             )
+        )
     return rows
-
-
-def wat_rows_batch(batches):
-    """mapInPandas body: (wat binary) rows → parsed WAT metadata rows."""
-    import pandas as pd
-
-    for b in batches:
-        rows: List[tuple] = []
-        for blob in b["wat"]:
-            try:
-                rows.extend(wat_rows(bytes(blob)))
-            except Exception:  # noqa: BLE001 — poison archives skip whole
-                continue
-        yield pd.DataFrame(rows, columns=WAT_ROW_COLUMNS)
 
 
 def wat_to_rows(wats):
     """(wat binary) rows → the parsed WAT metadata table."""
-    return wats.select("wat").mapInPandas(wat_rows_batch, schema=WAT_ROW_DDL)
+    return _map_archives(wats.select("wat"), wat_rows, WAT_ROW_DDL)
 
 
 # ---------------------------------------------------------------------------
@@ -816,65 +763,45 @@ _REVISIT_PROFILE = (
 )
 
 
-def pages_to_warc_revisit_batch(batches):
-    """mapInPandas body: marked page rows → ONE archive per partition.
+def _write_revisits(rows) -> Tuple[int, int, bytes]:
+    """Marked page rows → ONE (n_records, n_revisit, warc) archive.
     Keeper rows write full ``response`` records (with their payload
     digest header, as Common Crawl does); duplicate rows write
     ``revisit`` records — empty payload, WARC-Profile
     identical-payload-digest, WARC-Refers-To{,-Target-URI,-Date}
     pointing at the keeper capture (deterministic, because record ids
     derive from (uri, date))."""
-    import pandas as pd
-
     recs: List[bytes] = []
     n_rev = 0
-
-    def iso(ts) -> str:
-        return (
-            pd.Timestamp(ts).strftime("%Y-%m-%dT%H:%M:%SZ")
-            if not pd.isna(ts)
-            else "1970-01-01T00:00:00Z"
-        )
-
-    for b in batches:
-        for url, ts, html, digest, is_rev, r_url, r_ts in zip(
-            b["url"], b["warc_ts"], b["html"], b["digest"],
-            b["is_revisit"], b["refers_url"], b["refers_ts"],
-        ):
-            date = iso(ts)
-            if not is_rev:
-                recs.append(
-                    write_warc_record(
-                        str(url), date, bytes(html),
-                        extra_warc_headers=[
-                            ("WARC-Payload-Digest", f"sha256:{digest}")
-                        ],
-                    )
+    for url, ts, html, digest, is_rev, r_url, r_ts in rows:
+        date = _warc_date(ts)
+        if not is_rev:
+            recs.append(
+                write_warc_record(
+                    str(url), date, bytes(html),
+                    extra_warc_headers=[
+                        ("WARC-Payload-Digest", f"sha256:{digest}")
+                    ],
                 )
-            else:
-                r_date = iso(r_ts)
-                n_rev += 1
-                recs.append(
-                    write_warc_record(
-                        str(url), date, b"",
-                        warc_type="revisit",
-                        content_type="message/http",
-                        extra_warc_headers=[
-                            ("WARC-Profile", _REVISIT_PROFILE),
-                            ("WARC-Payload-Digest", f"sha256:{digest}"),
-                            ("WARC-Refers-To", _record_id(str(r_url), r_date)),
-                            ("WARC-Refers-To-Target-URI", str(r_url)),
-                            ("WARC-Refers-To-Date", r_date),
-                        ],
-                    )
+            )
+        else:
+            r_date = _warc_date(r_ts)
+            n_rev += 1
+            recs.append(
+                write_warc_record(
+                    str(url), date, b"",
+                    warc_type="revisit",
+                    content_type="message/http",
+                    extra_warc_headers=[
+                        ("WARC-Profile", _REVISIT_PROFILE),
+                        ("WARC-Payload-Digest", f"sha256:{digest}"),
+                        ("WARC-Refers-To", _record_id(str(r_url), r_date)),
+                        ("WARC-Refers-To-Target-URI", str(r_url)),
+                        ("WARC-Refers-To-Date", r_date),
+                    ],
                 )
-    yield pd.DataFrame(
-        {
-            "n_records": [len(recs)],
-            "n_revisit": [n_rev],
-            "warc": [b"".join(recs)],
-        }
-    )
+            )
+    return len(recs), n_rev, b"".join(recs)
 
 
 def pages_to_warc_deduped(pages):
@@ -912,9 +839,8 @@ def pages_to_warc_deduped(pages):
         F.col("_k.url").alias("refers_url"),
         F.col("_k.warc_ts").alias("refers_ts"),
     )
-    return marked.mapInPandas(
-        pages_to_warc_revisit_batch,
-        schema="n_records long, n_revisit long, warc binary",
+    return _write_partitions(
+        marked, _write_revisits, "n_records long, n_revisit long, warc binary"
     )
 
 
@@ -933,7 +859,7 @@ def revisit_rows(data: bytes) -> List[tuple]:
     import hashlib
 
     rows = []
-    for _off, _ln, headers, payload in _iter_records_meta(data):
+    for headers, payload in _records(data):
         rtype = headers.get("warc-type", "")
         if rtype not in ("response", "revisit"):
             continue
@@ -957,22 +883,7 @@ def revisit_rows(data: bytes) -> List[tuple]:
 def warc_revisit_rows(archives):
     """Archives → revisit-structure rows (see ``revisit_rows``);
     per-archive map, no shuffle."""
-    import pandas as pd
-
-    def _batch(batches):
-        for b in batches:
-            out = []
-            for blob in b["warc"]:
-                out.extend(revisit_rows(bytes(blob)))
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "warc_type", "url", "date", "digest", "refers_uri",
-                    "refers_date", "refers_id", "body_md5",
-                ],
-            )
-
-    return archives.select("warc").mapInPandas(_batch, schema=REVISIT_ROWS_DDL)
+    return _map_archives(archives.select("warc"), revisit_rows, REVISIT_ROWS_DDL)
 
 
 # ---------------------------------------------------------------------------
@@ -990,122 +901,62 @@ def http_header_records(
     records without the header yield '', repeated headers join with
     ', ' (one ``noindex`` line plus one ``noarchive`` line is common)."""
     out: List[Tuple[str, Optional[str], int, str]] = []
-    chunks = (
-        list(_iter_gzip_members(data))
-        if data[:2] == b"\x1f\x8b"
-        else [data]
-    )
-    for chunk in chunks:
-        pos = 0
-        n = len(chunk)
-        while pos < n:
-            start = chunk.find(b"WARC/", pos)
-            if start < 0:
-                break
-            hdr_end = chunk.find(_CRLF2, start)
-            if hdr_end < 0:
-                break
-            headers = _parse_headers(chunk[start:hdr_end])
-            try:
-                length = int(headers.get("content-length", ""))
-            except ValueError:
-                pos = hdr_end + 4
-                continue
-            body_start = hdr_end + 4
-            payload = chunk[body_start : body_start + length]
-            pos = body_start + length
-            rtype = headers.get("warc-type", "").lower()
-            uri = headers.get("warc-target-uri", "")
-            if rtype != "response" or not uri or not payload.startswith(
-                b"HTTP/"
-            ):
-                continue
-            sep = payload.find(_CRLF2)
-            head = payload[: sep if sep >= 0 else len(payload)]
-            tags = [
-                v.strip().decode("latin-1", "replace")
-                for k, _, v in (line.partition(b":") for line in head.split(b"\r\n"))
-                if k.strip().lower() == b"x-robots-tag"
-            ]
-            line_end = head.find(b"\r\n")
-            status_line = head[: line_end if line_end >= 0 else len(head)]
-            parts = status_line.split(None, 2)
-            try:
-                status = int(parts[1])
-            except (IndexError, ValueError):
-                status = 0
-            out.append(
-                (uri, headers.get("warc-date"), status, ", ".join(tags))
-            )
+    for headers, payload in _records(data):
+        rtype = headers.get("warc-type", "").lower()
+        uri = headers.get("warc-target-uri", "")
+        if rtype != "response" or not uri or not payload.startswith(b"HTTP/"):
+            continue
+        sep = payload.find(_CRLF2)
+        head = payload[: sep if sep >= 0 else len(payload)]
+        tags = [
+            v.strip().decode("latin-1", "replace")
+            for k, _, v in (line.partition(b":") for line in head.split(b"\r\n"))
+            if k.strip().lower() == b"x-robots-tag"
+        ]
+        line_end = head.find(b"\r\n")
+        status_line = head[: line_end if line_end >= 0 else len(head)]
+        parts = status_line.split(None, 2)
+        try:
+            status = int(parts[1])
+        except (IndexError, ValueError):
+            status = 0
+        out.append((uri, headers.get("warc-date"), status, ", ".join(tags)))
     return out
 
 
-def pages_to_warc_headers_batch(batches):
-    """mapInPandas body: pages rows WITH an ``x_robots_tag`` column →
-    one archive per partition; non-null tags become real
-    ``X-Robots-Tag`` response headers on the record's HTTP envelope."""
-    import pandas as pd
-
-    recs = []
-    for b in batches:
-        for url, ts, html, tag in zip(
-            b["url"], b["warc_ts"], b["html"], b["x_robots_tag"]
-        ):
-            date = (
-                pd.Timestamp(ts).strftime("%Y-%m-%dT%H:%M:%SZ")
-                if not pd.isna(ts)
-                else "1970-01-01T00:00:00Z"
-            )
-            extra = (
-                [("X-Robots-Tag", str(tag))]
-                if isinstance(tag, str) and tag
-                else None
-            )
-            recs.append(
-                write_warc_record(
-                    str(url), date, bytes(html),
-                    extra_http_headers=extra,
-                )
-            )
-    yield pd.DataFrame(
-        {"n_records": [len(recs)], "warc": [b"".join(recs)]}
-    )
+def _write_with_headers(rows) -> Tuple[int, bytes]:
+    """(url, warc_ts, html, x_robots_tag) rows → ONE (n_records, warc)
+    archive; non-null tags become real ``X-Robots-Tag`` response headers
+    on the record's HTTP envelope."""
+    recs = [
+        write_warc_record(
+            str(url), _warc_date(ts), bytes(html),
+            extra_http_headers=[("X-Robots-Tag", tag)] if tag else None,
+        )
+        for url, ts, html, tag in rows
+    ]
+    return len(recs), b"".join(recs)
 
 
 def pages_to_warc_with_headers(pages):
     """(url, warc_ts, html, x_robots_tag) → one WARC archive per
     partition, tags written as response headers."""
-    return pages.select(
-        "url", "warc_ts", "html", "x_robots_tag"
-    ).mapInPandas(pages_to_warc_headers_batch,
-                  schema="n_records long, warc binary")
-
-
-def warc_robots_headers_batch(batches):
-    """mapInPandas body: archive rows → one row per response record:
-    (url, status, x_robots_tag).  Per-archive parallelism, no shuffle —
-    the same indexing shape as CDX."""
-    import pandas as pd
-
-    for b in batches:
-        rows: List[tuple] = []
-        for blob in b["warc"]:
-            try:
-                for url, _date, status, tag in http_header_records(
-                    bytes(blob)
-                ):
-                    rows.append((url, status, tag))
-            except Exception:  # noqa: BLE001 — poison archives skip whole
-                continue
-        yield pd.DataFrame(
-            rows, columns=["url", "status", "x_robots_tag"]
-        )
+    return _write_partitions(
+        pages.select("url", "warc_ts", "html", "x_robots_tag"),
+        _write_with_headers,
+        "n_records long, warc binary",
+    )
 
 
 def warc_robots_headers(archives):
-    """(warc binary) rows → (url, status int, x_robots_tag) — the
-    header-channel robots signal a WARC-native indexing gate joins on."""
-    return archives.select("warc").mapInPandas(
-        warc_robots_headers_batch,
-        schema="url string, status int, x_robots_tag string",
+    """(warc binary) rows → (url, status int, x_robots_tag) — one row per
+    response record, the header-channel robots signal a WARC-native
+    indexing gate joins on.  Per-archive parallelism, no shuffle — the
+    same indexing shape as CDX."""
+    return _map_archives(
+        archives.select("warc"),
+        lambda blob: [
+            (url, status, tag) for url, _date, status, tag in http_header_records(blob)
+        ],
+        "url string, status int, x_robots_tag string",
     )

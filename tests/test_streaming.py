@@ -321,7 +321,7 @@ def test_stream_wet_export_incremental_and_idempotent(spark, corpus_rows, tmp_pa
     drain after B lands -> only B's batch directory appears (checkpoint
     resume, no re-export of A); texts parse back from the archives."""
     from pdf_ocr_spark.pipeline.extract_job import extract_documents
-    from pdf_ocr_spark.sources.warc import PAGES_DDL, warc_pages_batch
+    from pdf_ocr_spark.sources.warc import archive_pages
     from pdf_ocr_spark.streaming import stream_wet_export
 
     src = str(tmp_path / "pages_in")
@@ -334,10 +334,7 @@ def test_stream_wet_export_incremental_and_idempotent(spark, corpus_rows, tmp_pa
     q.awaitTermination(120)
 
     def texts_in(path):
-        arcs = spark.read.parquet(path).select(
-            F.col("warc").alias("content")
-        )
-        back = arcs.mapInPandas(warc_pages_batch, schema=PAGES_DDL)
+        back = archive_pages(spark.read.parquet(path))
         return {
             r["url"]: bytes(r["html"]).decode("utf-8") for r in back.collect()
         }
@@ -358,11 +355,7 @@ def test_stream_wet_export_incremental_and_idempotent(spark, corpus_rows, tmp_pa
 
     # WET conversion records carry each page's ORIGINAL capture date
     # (WARC-Date), not a constant export stamp
-    back = (
-        spark.read.parquet(out)
-        .select(F.col("warc").alias("content"))
-        .mapInPandas(warc_pages_batch, schema=PAGES_DDL)
-    )
+    back = archive_pages(spark.read.parquet(out))
     got_ts = {r["url"]: r["warc_ts"] for r in back.collect()}
     exp_ts = {r["url"]: r["warc_ts"].replace(microsecond=0) for r in a}
     assert got_ts and all(got_ts[u] == exp_ts[u] for u in got_ts)

@@ -399,14 +399,13 @@ def test_wat_roundtrip_html_pdf_conversion():
 
 def test_wat_spark_route_matches_kernel(spark):
     from pdf_ocr_spark.sources.warc import (
+        _write_pages,
         pages_to_warc,
-        pages_to_warc_batch,
         warc_to_wat,
         warc_to_wat_bytes,
         wat_rows,
         wat_to_rows,
     )
-    import pandas as pd
     import pyspark.sql.functions as F
 
     pages = spark.range(0, 12).select(
@@ -427,9 +426,10 @@ def test_wat_spark_route_matches_kernel(spark):
         map(tuple, wat_to_rows(warc_to_wat(pages_to_warc(pages.repartition(3, "url")))).collect())
     )
     # kernel twin over the same rows, single archive
-    pdf = pages.toPandas()
-    (arc,) = list(pages_to_warc_batch(iter([pdf])))
-    _, wat = warc_to_wat_bytes(bytes(arc["warc"][0]))
+    _, arc = _write_pages(
+        (r.url, r.warc_ts, r.html, r.text) for r in pages.collect()
+    )
+    _, wat = warc_to_wat_bytes(arc)
     assert got == sorted(wat_rows(wat))
     assert all(r[5] == 1 and r[4].startswith("t") for r in got)
 
@@ -560,3 +560,57 @@ def test_x_robots_tag_header_channel(spark):
         pages_to_warc_with_headers(df)).collect()}
     assert out == {"https://x.test/a": "noindex, nofollow",
                    "https://x.test/b": ""}
+
+
+def _two_records_cut_short():
+    from pdf_ocr_spark.sources.warc import write_warc_record
+
+    body = b"<html><body>" + b"x" * 150 + b"</body></html>"
+    arc = b"".join(
+        write_warc_record(f"https://t.test/{i}", "2025-01-05T00:00:00Z", body)
+        for i in (1, 2)
+    )
+    return arc[:-60]
+
+
+def test_truncated_record_is_dropped_by_every_reader():
+    """A record cut short by a truncated tail is dropped by every reader
+    alike — never yielded with a partial body."""
+    from pdf_ocr_spark.sources.warc import (
+        cdx_records,
+        http_header_records,
+        warc_to_wat_bytes,
+    )
+
+    cut = _two_records_cut_short()
+    assert [u for u, _, _ in iter_warc_records(cut)] == ["https://t.test/1"]
+    assert [r[0] for r in http_header_records(cut)] == ["https://t.test/1"]
+    assert [r[2] for r in cdx_records(cut)] == ["https://t.test/1"]
+    assert warc_to_wat_bytes(cut)[0] == 1
+
+
+def test_revisit_rows_read_gzip_member_archives():
+    from pdf_ocr_spark.sources.warc import revisit_rows, write_warc_bytes
+
+    recs = [(f"https://g.test/{i}", "2025-01-05T00:00:00Z", b"<p>%d</p>" % i)
+            for i in (1, 2)]
+    plain = revisit_rows(write_warc_bytes(recs))
+    assert len(plain) == 2
+    assert revisit_rows(write_warc_bytes(recs, gzip_members=True)) == plain
+
+
+def test_revisit_route_skips_a_null_archive(spark):
+    from pdf_ocr_spark.sources.warc import (
+        revisit_rows,
+        warc_revisit_rows,
+        write_warc_bytes,
+    )
+
+    good = write_warc_bytes(
+        [("https://n.test/1", "2025-01-05T00:00:00Z", b"<p>ok</p>")]
+    )
+    archives = spark.createDataFrame(
+        [(bytearray(good),), (None,)], "warc binary"
+    ).coalesce(1)
+    got = [tuple(r) for r in warc_revisit_rows(archives).collect()]
+    assert got == revisit_rows(good)

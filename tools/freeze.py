@@ -242,13 +242,13 @@ def media_rows():
 
 
 def multimodal_frames() -> pd.DataFrame:
-    from pdf_ocr_spark.operators.multimodal import decode_frames_batch
+    from pdf_ocr_spark.operators.multimodal import _frame_rows
 
-    rows = media_rows()
-    batch = pd.DataFrame({"media_id": [m for m, _ in rows], "blob": [b for _, b in rows]})
-    out = pd.concat(list(decode_frames_batch(iter([batch]))), ignore_index=True)
-    out["feature_sum"] = [round(sum(f), 6) for f in out["feature"]]
-    return out[["media_id", "frame_idx", "feature_sum"]]
+    ids, blobs = zip(*media_rows())
+    return pd.DataFrame(
+        [(m, i, round(sum(f), 6)) for m, i, f in _frame_rows(ids, blobs)],
+        columns=["media_id", "frame_idx", "feature_sum"],
+    )
 
 
 def sink_overlay() -> pd.DataFrame:
@@ -290,19 +290,13 @@ def compression() -> pd.DataFrame:
 
 
 def _pages_to_warc(rows) -> bytes:
-    from pdf_ocr_spark.sources.warc import pages_to_warc_batch
+    from pdf_ocr_spark.sources.warc import _write_pages
 
-    batch = pd.DataFrame(
-        {
-            "url": [r["url"] for r in rows],
-            "warc_ts": [r["warc_ts"] for r in rows],
-            "html": [None if r["html"] is None else bytes(r["html"]) for r in rows],
-            "text": [r["text"] for r in rows],
-        }
+    n, archive = _write_pages(
+        (r["url"], r["warc_ts"], r["html"], r["text"]) for r in rows
     )
-    (archive,) = list(pages_to_warc_batch(iter([batch])))
-    assert int(archive["n_records"][0]) == len(rows)
-    return bytes(archive["warc"][0])
+    assert n == len(rows)
+    return archive
 
 
 def _cdx_frame(archive: bytes, filename: str) -> pd.DataFrame:
