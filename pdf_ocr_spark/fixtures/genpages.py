@@ -1658,7 +1658,6 @@ def make_broken(rng: random.Random, variant: int) -> bytes:
 
 # -- corpus assembly -----------------------------------------------------------------
 
-KINDS = ("pdf_glyph", "pdf_simple", "pdf_scan", "html_page", "broken")
 _REF_PDF_PATH = "/root/reference/japanese_test.pdf"
 
 

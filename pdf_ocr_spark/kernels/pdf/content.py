@@ -289,8 +289,6 @@ class _TextState:
         return t
 
 
-_OPERATOR_RE = re.compile(rb"[A-Za-z'\"][A-Za-z0-9*'\"]*")
-
 # one-pass scanner for content streams: unlike general COS, content has no
 # indirect refs, so numbers need no "<n> <g> R" lookahead — this regex
 # replaces the char-at-a-time Lexer on the hot path (~45% of kernel time)
@@ -336,7 +334,6 @@ _TOK_TDX = _CONTENT_TOK.groupindex["tdx"]
 _TOK_TDY = _CONTENT_TOK.groupindex["tdy"]
 _TOK_NUM = _CONTENT_TOK.groupindex["num"]
 _TOK_NAME = _CONTENT_TOK.groupindex["name"]
-_TOK_DDICT = _CONTENT_TOK.groupindex["ddict"]
 _TOK_HEX = _CONTENT_TOK.groupindex["hex"]
 _TOK_OPEN = _CONTENT_TOK.groupindex["open"]
 _TOK_CLOSE = _CONTENT_TOK.groupindex["close"]

@@ -1351,9 +1351,6 @@ def _encode_symbol_dict_body_huffman(
 # Text region segments (§7.4.4 / §6.4)
 # --------------------------------------------------------------------------
 
-_REFCORNERS = ("BOTTOMLEFT", "TOPLEFT", "BOTTOMRIGHT", "TOPRIGHT")
-
-
 def _text_strips(symbols, instances, refcorner: int, sbstrips: int,
                  transposed: bool, dims=None):
     """Group instances into strips of (S, T, sid, S-extent, inst_idx):

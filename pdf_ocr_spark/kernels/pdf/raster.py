@@ -26,7 +26,7 @@ on degenerate geometry — the kernel no-raise promise extends here.
 
 from __future__ import annotations
 
-from typing import List, Optional, Sequence, Tuple
+from typing import Optional, Sequence, Tuple
 
 DEFAULT_DPI = 200          # the reference v3/v4 default (v2 uses 150)
 MAX_SIDE = 2048            # poison cap: a 20m-wide /MediaBox must not OOM
@@ -242,19 +242,3 @@ def _stroke_segment(
         if e2 < dx:
             err += dx
             ay += sy
-
-
-def raster_rows(
-    doc_pages: Sequence, dpi: int = DEFAULT_DPI
-) -> List[Tuple[int, int, int, int]]:
-    """Helper for observability: (page_num, raster_w, raster_h,
-    ink_pixels) per interpreted page tuple (page_num, PageResult)."""
-    out = []
-    for page_num, res in doc_pages:
-        pgm = rasterize_page(
-            res.glyphs, res.rules, res.image_draws, res.width, res.height, dpi,
-            image_payloads=res.images,
-        )
-        ww, hh, px = parse_pgm(pgm)
-        out.append((page_num, ww, hh, len(px) - px.count(255)))
-    return out

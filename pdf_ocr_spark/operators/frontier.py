@@ -8,11 +8,16 @@ the URL frontier itself never shuffles for the join; the only exchange
 is the per-url argmax over MATCHED rules (a small fraction of the
 frontier).  Matching uses ``regexp_like`` with RE2-safe anchored
 patterns emitted by the kernel, so the DuckDB oracle replays the same
-match on the same regexes."""
+match on the same regexes.
+
+The five kernel parses — ``robots_rules``, ``robots_delays`` and
+``robots_sitemaps`` over robots(domain, body), ``sitemap_urls`` and
+``feed_items`` over (url, body) documents — are ``extract_job.Route``
+values: each names its rows function, schema and key/payload columns
+once, and ``route(df, num_partitions=None)`` runs it through
+``kernel_route``."""
 
 from __future__ import annotations
-
-from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -25,7 +30,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from pdf_ocr_spark.pipeline.extract_job import kernel_route, per_doc
+from pdf_ocr_spark.pipeline.extract_job import Route, per_doc
 
 ROBOTS_RULE_SCHEMA = StructType(
     [
@@ -52,17 +57,10 @@ def _robots_text(body) -> str:
     return body if isinstance(body, str) else body.decode("utf-8", "replace")
 
 
-def robots_rules(
-    robots_df: DataFrame, num_partitions: Optional[int] = None
-) -> DataFrame:
-    """robots(domain, body) → one row per Allow/Disallow rule with its
-    anchored RE2-safe regex and specificity (kernel parse per RFC 9309,
-    including the empty-Disallow allow-all group sentinel)."""
-    return kernel_route(
-        robots_df, robots_rule_rows, ROBOTS_RULE_SCHEMA,
-        key="domain", cols=("domain", "body"),
-        num_partitions=num_partitions,
-    )
+#: robots(domain, body) → one row per Allow/Disallow rule with its
+#: anchored RE2-safe regex and specificity (kernel parse per RFC 9309,
+#: including the empty-Disallow allow-all group sentinel).
+robots_rules = Route(robots_rule_rows, ROBOTS_RULE_SCHEMA, key="domain", payload="body")
 
 
 # case-insensitive scheme (RFC 3986: scheme and host are case-insensitive;
@@ -152,17 +150,10 @@ def crawl_delay_rows(domain, body):
         yield (domain, agent, delay)
 
 
-def robots_delays(
-    robots_df: DataFrame, num_partitions: Optional[int] = None
-) -> DataFrame:
-    """robots(domain, body) → per-agent-group Crawl-delay seconds — the
-    politeness rate limit a frontier scheduler divides each domain's
-    fetch budget by."""
-    return kernel_route(
-        robots_df, crawl_delay_rows, DELAY_SCHEMA,
-        key="domain", cols=("domain", "body"),
-        num_partitions=num_partitions,
-    )
+#: robots(domain, body) → per-agent-group Crawl-delay seconds — the
+#: politeness rate limit a frontier scheduler divides each domain's
+#: fetch budget by.
+robots_delays = Route(crawl_delay_rows, DELAY_SCHEMA, key="domain", payload="body")
 
 
 SITEMAP_SCHEMA = StructType(
@@ -182,16 +173,11 @@ def robots_sitemap_rows(domain, body):
         yield (domain, u, i)
 
 
-def robots_sitemaps(
-    robots_df: DataFrame, num_partitions: Optional[int] = None
-) -> DataFrame:
-    """robots(domain, body) → declared Sitemap URLs (document order) —
-    the frontier-seeding discovery source alongside extracted links."""
-    return kernel_route(
-        robots_df, robots_sitemap_rows, SITEMAP_SCHEMA,
-        key="domain", cols=("domain", "body"),
-        num_partitions=num_partitions,
-    )
+#: robots(domain, body) → declared Sitemap URLs (document order) —
+#: the frontier-seeding discovery source alongside extracted links.
+robots_sitemaps = Route(
+    robots_sitemap_rows, SITEMAP_SCHEMA, key="domain", payload="body"
+)
 
 
 SITEMAP_URL_SCHEMA = StructType(
@@ -212,18 +198,11 @@ def sitemap_url_rows(url, body):
         yield (url, loc, lastmod, kind)
 
 
-def sitemap_urls(
-    sitemaps_df: DataFrame, num_partitions: Optional[int] = None
-) -> DataFrame:
-    """sitemaps(url, body) → discovered URLs: one row per <loc>, with
-    lastmod and whether the entry is a page ('url') or a nested sitemap
-    ('sitemap', which the fetch loop enqueues recursively).  Gzipped
-    documents decompress in-kernel."""
-    return kernel_route(
-        sitemaps_df, sitemap_url_rows, SITEMAP_URL_SCHEMA,
-        key="url", cols=("url", "body"),
-        num_partitions=num_partitions,
-    )
+#: sitemaps(url, body) → discovered URLs: one row per <loc>, with
+#: lastmod and whether the entry is a page ('url') or a nested sitemap
+#: ('sitemap', which the fetch loop enqueues recursively).  Gzipped
+#: documents decompress in-kernel.
+sitemap_urls = Route(sitemap_url_rows, SITEMAP_URL_SCHEMA, payload="body")
 
 
 def fetch_schedule(
@@ -283,18 +262,11 @@ def feed_item_rows(url, body):
         yield (url, link, title, date)
 
 
-def feed_items(
-    feeds_df: DataFrame, num_partitions: Optional[int] = None
-) -> DataFrame:
-    """feeds(url, body) → discovered item URLs with title/date — the
-    third frontier channel next to sitemaps and page links; feeds
-    surface NEW content fastest, so their items seed the high-priority
-    queue.  RSS and Atom both parse; gzip transparent."""
-    return kernel_route(
-        feeds_df, feed_item_rows, FEED_ITEM_SCHEMA,
-        key="url", cols=("url", "body"),
-        num_partitions=num_partitions,
-    )
+#: feeds(url, body) → discovered item URLs with title/date — the
+#: third frontier channel next to sitemaps and page links; feeds
+#: surface NEW content fastest, so their items seed the high-priority
+#: queue.  RSS and Atom both parse; gzip transparent.
+feed_items = Route(feed_item_rows, FEED_ITEM_SCHEMA, payload="body")
 
 
 def resolve_redirects(

@@ -24,21 +24,11 @@ from pyspark.sql.types import (
     DoubleType,
     IntegerType,
     LongType,
-    StringType,
     StructField,
     StructType,
 )
 
 from pdf_ocr_spark.pipeline.extract_job import arrow_map, per_doc
-
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("mime", StringType()),
-        StructField("n_bytes", LongType()),
-        StructField("sha1", StringType()),
-    ]
-)
 
 FRAME_SCHEMA = StructType(
     [

@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from pdf_ocr_spark.pipeline.extract_job import group_map
+
 # reference palette shape: COLORS[idx % len(COLORS)]
 # (/root/reference/pdf_ocr_with_boxes_v2.py:428; 8 colors like config.COLORS)
 COLORS = (
@@ -178,24 +180,6 @@ _SVG_SCHEMA = "url string, page int, svg string"
 _PDF_SCHEMA = "url string, pdf binary, n_pages int"
 
 
-def _group_map(render, ddl: str):
-    """``applyInArrow`` body: one group's rows as column lists →
-    ``render(cols)``'s one output row, typed by ``ddl``."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    from pdf_ocr_spark.pipeline.extract_job import _record_batch, _tune_worker
-
-    arrow_schema = to_arrow_schema(StructType.fromDDL(ddl))
-
-    def run(table):
-        _tune_worker()
-        row = render(table.to_pydict())
-        return pa.Table.from_batches([_record_batch([row], arrow_schema)])
-
-    return run
-
-
 def _overlay_row(g: dict) -> tuple:
     boxes = list(zip(g["text"], g["quad"]))
     svg = overlay_svg(float(g["page_w"][0]), float(g["page_h"][0]), boxes)
@@ -208,7 +192,7 @@ def render_overlays(blocks: DataFrame) -> DataFrame:
     runs on whatever slice you select, never on the extraction hot
     path."""
     return blocks.groupBy("url", "page").applyInArrow(
-        _group_map(_overlay_row, _SVG_SCHEMA), schema=_SVG_SCHEMA
+        group_map(_overlay_row, StructType.fromDDL(_SVG_SCHEMA)), schema=_SVG_SCHEMA
     )
 
 
@@ -230,5 +214,6 @@ def render_double_layer(pages_df: DataFrame) -> DataFrame:
     texts array<string>, quads array<array<array<double>>>) → one
     double-layer PDF per url (pages in order)."""
     return pages_df.groupBy("url").applyInArrow(
-        _group_map(_double_layer_row, _PDF_SCHEMA), schema=_PDF_SCHEMA
+        group_map(_double_layer_row, StructType.fromDDL(_PDF_SCHEMA)),
+        schema=_PDF_SCHEMA,
     )

@@ -20,7 +20,16 @@ table cannot drift apart.  Every kernel route — documents, pages, and
 the side tables (blocks, rasters, HTML metadata, …) — runs through
 :func:`kernel_route`: one salted repartition and one ``mapInArrow``
 stage through the one Arrow adapter, :func:`arrow_map`; the side routes
-isolate poison documents through :func:`per_doc`.
+isolate poison documents through :func:`per_doc`.  Each side route is
+one :class:`Route` value (``extract_blocks = Route(block_rows,
+BLOCK_SCHEMA)``) naming its rows function, schema and key/payload
+columns once; the golden freezer and the streaming feed job read them
+from it.  Grouped stages (the giant-document re-merge, the overlay
+sinks) go through :func:`group_map`, the grouped twin of the adapter.
+
+Giant documents (:func:`extract_documents_split`) take one uncached
+pass: page count → ``explode_outer`` into page ranges → page route →
+``groupBy(url)`` re-merge.
 
 Resume (J3, the north rule): restarts anti-join the input against the
 already-committed output's urls — only the remainder is processed.
@@ -35,6 +44,7 @@ from __future__ import annotations
 
 import functools
 import os
+from dataclasses import dataclass
 from itertools import repeat
 from typing import Callable, Optional
 
@@ -53,7 +63,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from pdf_ocr_spark.pipeline.session import CacheOwner
 
 PAGE_SCHEMA = StructType(
     [
@@ -88,13 +97,6 @@ DOC_SCHEMA = StructType(
 
 
 _WORKER_TUNED = False
-
-# page-count tables persisted by extract_documents_split (the count pass
-# feeds both the ranges join and the failed-giants join); bounded to the
-# most recent call's, so a long-lived driver looping over corpora cannot
-# accumulate cached count tables.
-_split_caches = CacheOwner()
-release_split_cache = _split_caches.release
 
 
 # typed TRANSIENT failure: the OCR engine gave up on a page after retries.
@@ -203,6 +205,22 @@ def arrow_map(rows_fn, schema: StructType):
     return run
 
 
+def group_map(row_fn, schema: StructType):
+    """The grouped twin of :func:`arrow_map`: wraps ``row_fn`` — one
+    group's rows as a dict of column lists in, ONE row tuple out — as an
+    ``applyInArrow`` body whose output is typed by ``schema``."""
+
+    def run(table):
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        _tune_worker()
+        row = row_fn(table.to_pydict())
+        return pa.Table.from_batches([_record_batch([row], to_arrow_schema(schema))])
+
+    return run
+
+
 def per_doc(gate: Optional[str] = None):
     """The one per-document wrapper: turns ``fn(key, payload)`` — a
     generator of row tuples for one document — into a rows function over
@@ -305,9 +323,10 @@ def page_rows(urls, payloads, *page_range) -> list:
     row for a document that failed before it had pages.  ``needs_ocr``
     stays True on OCR'd pages as the was-OCR marker (the text is filled
     in), so lineage counts OCR pages the same on every route.  Optional
-    ``page_lo, page_hi`` columns restrict each row to a page range."""
+    ``page_lo, page_hi`` columns restrict each row to a page range; a
+    NULL range extracts the whole document."""
     rows = []
-    ranges = list(zip(*page_range)) or None
+    ranges = [None if lo is None else (lo, hi) for lo, hi in zip(*page_range)] or None
     for url, kind, status, reason, n_bytes, pages in _parse_batch(
         urls, payloads, ranges
     ):
@@ -394,6 +413,32 @@ def kernel_route(
         )
     df = df.repartition(num_partitions, F.xxhash64(key))
     return df.mapInArrow(arrow_map(rows_fn, schema), schema=schema)
+
+
+@dataclass(frozen=True)
+class Route:
+    """A side route, declared once: ``rows_fn`` over the ``key`` and
+    ``payload`` columns of its input, typed by ``schema``.
+    ``route(pages, num_partitions=None)`` runs it through
+    :func:`kernel_route`; ``tools/freeze.py`` runs ``rows_fn`` in-process
+    over the same columns to build the route's golden."""
+
+    rows_fn: Callable
+    schema: StructType
+    key: str = "url"
+    payload: str = "html"
+
+    @property
+    def cols(self) -> tuple:
+        return (self.key, self.payload)
+
+    def __call__(
+        self, pages_df: DataFrame, num_partitions: Optional[int] = None
+    ) -> DataFrame:
+        return kernel_route(
+            pages_df, self.rows_fn, self.schema, key=self.key, cols=self.cols,
+            num_partitions=num_partitions,
+        )
 
 
 def extract_documents(
@@ -484,15 +529,10 @@ def block_rows(urls, payloads) -> list:
     return rows
 
 
-def extract_blocks(
-    pages_df: DataFrame, num_partitions: Optional[int] = None
-) -> DataFrame:
-    """pages(url, html, …) → block-level table: one row per layout block.
-    Same plan shape as the document route, so the blocks table scales
-    exactly like the hot path."""
-    return kernel_route(
-        pages_df, block_rows, BLOCK_SCHEMA, num_partitions=num_partitions
-    )
+#: pages(url, html, …) → block-level table: one row per layout block.
+#: Same plan shape as the document route, so the blocks table scales
+#: exactly like the hot path.
+extract_blocks = Route(block_rows, BLOCK_SCHEMA)
 
 
 COMPOSITE_SCHEMA = StructType(
@@ -525,15 +565,9 @@ def composite_rows(url, data):
         yield (url, page, idx, kind, text)
 
 
-def extract_composites(
-    pages_df: DataFrame, num_partitions: Optional[int] = None
-) -> DataFrame:
-    """pages(url, html, …) → composite-block table (v4): one row per
-    table/figure with its rendered caption/body/footnote string."""
-    return kernel_route(
-        pages_df, composite_rows, COMPOSITE_SCHEMA,
-        num_partitions=num_partitions,
-    )
+#: pages(url, html, …) → composite-block table (v4): one row per
+#: table/figure with its rendered caption/body/footnote string.
+extract_composites = Route(composite_rows, COMPOSITE_SCHEMA)
 
 
 RASTER_SCHEMA = StructType(
@@ -574,14 +608,9 @@ def raster_rows(url, data):
         yield (url, i, w, h, len(px) - px.count(255), hashlib.md5(pgm).hexdigest())
 
 
-def extract_rasters(
-    pages_df: DataFrame, num_partitions: Optional[int] = None
-) -> DataFrame:
-    """pages(url, html, …) → per-page raster table (S10): dimensions,
-    ink coverage, and bitmap digest of the rendered page."""
-    return kernel_route(
-        pages_df, raster_rows, RASTER_SCHEMA, num_partitions=num_partitions
-    )
+#: pages(url, html, …) → per-page raster table (S10): dimensions,
+#: ink coverage, and bitmap digest of the rendered page.
+extract_rasters = Route(raster_rows, RASTER_SCHEMA)
 
 
 ORIENTATION_SCHEMA = StructType(
@@ -614,14 +643,8 @@ def orientation_rows(url, data):
         yield (url, i, dominant_rotation(v), v[0], v[1] + v[2] + v[3])
 
 
-def detect_orientation(
-    pages_df: DataFrame, num_partitions: Optional[int] = None
-) -> DataFrame:
-    """pages(url, html, …) → per-page orientation verdicts (K4)."""
-    return kernel_route(
-        pages_df, orientation_rows, ORIENTATION_SCHEMA,
-        num_partitions=num_partitions,
-    )
+#: pages(url, html, …) → per-page orientation verdicts (K4).
+detect_orientation = Route(orientation_rows, ORIENTATION_SCHEMA)
 
 
 HTML_TABLE_SCHEMA = StructType(
@@ -648,15 +671,9 @@ def html_table_rows(url, data):
                "\n".join("\t".join(r) for r in t.rows))
 
 
-def extract_html_tables(
-    pages_df: DataFrame, num_partitions: Optional[int] = None
-) -> DataFrame:
-    """pages(url, html, …) → HTML tables (url, table_index, caption,
-    n_rows, n_cols, tsv)."""
-    return kernel_route(
-        pages_df, html_table_rows, HTML_TABLE_SCHEMA,
-        num_partitions=num_partitions,
-    )
+#: pages(url, html, …) → HTML tables (url, table_index, caption,
+#: n_rows, n_cols, tsv).
+extract_html_tables = Route(html_table_rows, HTML_TABLE_SCHEMA)
 
 
 HTML_META_SCHEMA = StructType(
@@ -687,15 +704,9 @@ def html_meta_rows(url, data):
         yield (url, *m)
 
 
-def extract_html_meta(
-    pages_df: DataFrame, num_partitions: Optional[int] = None
-) -> DataFrame:
-    """pages(url, html, …) → head metadata (url, title, description,
-    canonical, lang, og_title, og_image, published, robots)."""
-    return kernel_route(
-        pages_df, html_meta_rows, HTML_META_SCHEMA,
-        num_partitions=num_partitions,
-    )
+#: pages(url, html, …) → head metadata (url, title, description,
+#: canonical, lang, og_title, og_image, published, robots).
+extract_html_meta = Route(html_meta_rows, HTML_META_SCHEMA)
 
 
 JSONLD_SCHEMA = StructType(
@@ -723,14 +734,9 @@ def jsonld_rows(url, data):
         yield (url, *b)
 
 
-def extract_structured_data(
-    pages_df: DataFrame, num_partitions: Optional[int] = None
-) -> DataFrame:
-    """pages(url, html, …) → JSON-LD entities (url, block_index,
-    node_index, ld_type, name, date_published, valid, raw_md5)."""
-    return kernel_route(
-        pages_df, jsonld_rows, JSONLD_SCHEMA, num_partitions=num_partitions
-    )
+#: pages(url, html, …) → JSON-LD entities (url, block_index,
+#: node_index, ld_type, name, date_published, valid, raw_md5).
+extract_structured_data = Route(jsonld_rows, JSONLD_SCHEMA)
 
 
 HREFLANG_SCHEMA = StructType(
@@ -754,14 +760,9 @@ def hreflang_rows(url, data):
         yield (url, i, hreflang, href)
 
 
-def extract_hreflang_links(
-    pages_df: DataFrame, num_partitions: Optional[int] = None
-) -> DataFrame:
-    """pages(url, html, …) → hreflang annotations (url, ord, hreflang,
-    href)."""
-    return kernel_route(
-        pages_df, hreflang_rows, HREFLANG_SCHEMA, num_partitions=num_partitions
-    )
+#: pages(url, html, …) → hreflang annotations (url, ord, hreflang,
+#: href).
+extract_hreflang_links = Route(hreflang_rows, HREFLANG_SCHEMA)
 
 
 MICRODATA_SCHEMA = StructType(
@@ -786,15 +787,9 @@ def microdata_rows(url, data):
         yield (url, *p)
 
 
-def extract_microdata_rows(
-    pages_df: DataFrame, num_partitions: Optional[int] = None
-) -> DataFrame:
-    """pages(url, html, …) → microdata property rows (url, item_index,
-    item_type, prop, value, source)."""
-    return kernel_route(
-        pages_df, microdata_rows, MICRODATA_SCHEMA,
-        num_partitions=num_partitions,
-    )
+#: pages(url, html, …) → microdata property rows (url, item_index,
+#: item_type, prop, value, source).
+extract_microdata_rows = Route(microdata_rows, MICRODATA_SCHEMA)
 
 
 FORM_SCHEMA = StructType(
@@ -818,14 +813,9 @@ def form_rows(url, data):
         yield (url, i, fld.name, fld.field_type, fld.value)
 
 
-def extract_forms(
-    pages_df: DataFrame, num_partitions: Optional[int] = None
-) -> DataFrame:
-    """pages(url, html, …) → AcroForm fields (url, field_index, name,
-    field_type, value)."""
-    return kernel_route(
-        pages_df, form_rows, FORM_SCHEMA, num_partitions=num_partitions
-    )
+#: pages(url, html, …) → AcroForm fields (url, field_index, name,
+#: field_type, value).
+extract_forms = Route(form_rows, FORM_SCHEMA)
 
 
 DOC_INFO_SCHEMA = StructType(
@@ -872,20 +862,10 @@ def outline_rows(url, data):
         yield (url, it.order, it.level, it.title, it.page_num)
 
 
-def extract_doc_info(
-    pages_df: DataFrame, num_partitions: Optional[int] = None
-) -> DataFrame:
-    return kernel_route(
-        pages_df, doc_info_rows, DOC_INFO_SCHEMA, num_partitions=num_partitions
-    )
-
-
-def extract_outline(
-    pages_df: DataFrame, num_partitions: Optional[int] = None
-) -> DataFrame:
-    return kernel_route(
-        pages_df, outline_rows, OUTLINE_SCHEMA, num_partitions=num_partitions
-    )
+#: pages(url, html, …) → trailer /Info metadata, one row per PDF.
+extract_doc_info = Route(doc_info_rows, DOC_INFO_SCHEMA)
+#: pages(url, html, …) → outline (bookmark) items per PDF.
+extract_outline = Route(outline_rows, OUTLINE_SCHEMA)
 
 
 ANNOT_SCHEMA = StructType(
@@ -912,12 +892,8 @@ def annot_rows(url, data):
         yield (url, a.page_num, a.order, a.subtype, a.contents, a.author)
 
 
-def extract_annotations_route(
-    pages_df: DataFrame, num_partitions: Optional[int] = None
-) -> DataFrame:
-    return kernel_route(
-        pages_df, annot_rows, ANNOT_SCHEMA, num_partitions=num_partitions
-    )
+#: pages(url, html, …) → comment-layer annotations per PDF page.
+extract_annotations_route = Route(annot_rows, ANNOT_SCHEMA)
 
 
 LINK_SCHEMA = StructType(
@@ -950,56 +926,41 @@ def link_rows(url, data):
             yield (url, u, i, "html", nf, at)
 
 
-def extract_links(
-    pages_df: DataFrame, num_partitions: Optional[int] = None
-) -> DataFrame:
-    """pages(url, html, …) → outgoing-link edges (url, link, index,
-    source_kind, nofollow, anchor_text)."""
-    return kernel_route(
-        pages_df, link_rows, LINK_SCHEMA, num_partitions=num_partitions
-    )
-
-
-RANGE_SCHEMA = StructType(
-    [
-        StructField("url", StringType()),
-        StructField("n_pages", IntegerType()),
-    ]
-)
+#: pages(url, html, …) → outgoing-link edges (url, link, index,
+#: source_kind, nofollow, anchor_text).
+extract_links = Route(link_rows, LINK_SCHEMA)
 
 
 def page_count_rows(urls, payloads) -> list:
-    """Cheap structural pass over giant PDFs: page count only (xref +
-    page-tree walk, no content decode; 0 on malformed input)."""
+    """Cheap structural pass over giant PDFs: each row passes through
+    with its page count (xref + page-tree walk, no content decode; 0 on
+    malformed or non-PDF input)."""
     from pdf_ocr_spark.kernels.pdf.extract import count_pdf_pages
 
     return [
-        (u, count_pdf_pages(p if p is not None else b""))
+        (u, p, count_pdf_pages(p if p is not None else b""))
         for u, p in zip(urls, payloads)
     ]
 
 
-def _merge_ranges(table):
-    """``groupBy(url).applyInArrow`` body of the giant-document route:
-    one giant's page rows from every range → its document row, through
+def _merged_doc_row(g: dict) -> tuple:
+    """One giant's page rows from every range → its document row, through
     the same :func:`_assemble_doc` as the fused route.  A failed range
     fails the whole document with the greatest failure reason."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    _tune_worker()
-    p = table.to_pydict()
-    reasons = [r for r in p["failure_reason"] if r is not None]
-    row = _assemble_doc(
-        p["url"][0],
-        max(p["content_kind"]),
-        list(zip(p["page"], p["page_text"], p["n_blocks"])),
-        "failed" if "failed" in p["status"] else "ok",
+    reasons = [r for r in g["failure_reason"] if r is not None]
+    return _assemble_doc(
+        g["url"][0],
+        max(g["content_kind"]),
+        list(zip(g["page"], g["page_text"], g["n_blocks"])),
+        "failed" if "failed" in g["status"] else "ok",
         max(reasons, default=None),
-        max(p["n_bytes"]),
-        sum(p["needs_ocr"]),
+        max(g["n_bytes"]),
+        sum(g["needs_ocr"]),
     )
-    return pa.Table.from_batches([_record_batch([row], to_arrow_schema(DOC_SCHEMA))])
+
+
+#: ``groupBy(url).applyInArrow`` body of the giant-document route.
+_merge_ranges = group_map(_merged_doc_row, DOC_SCHEMA)
 
 
 def extract_documents_split(
@@ -1013,15 +974,18 @@ def extract_documents_split(
     exactly like a 1-pager").
 
     Normal rows (payload < ``giant_bytes``) take the fused single-stage
-    path.  Giant rows get a two-phase treatment: a cheap page-count pass,
-    then an explode into (url, page_lo, page_hi) range rows of
-    ``pages_per_task`` pages each — so a 5000-page document becomes ~150
-    independent tasks instead of one straggler — and a groupBy(url)
-    re-merge.  The split threshold is by payload size (known before any
-    parse), the split unit by page count (known after the cheap pass)."""
-    spark = pages_df.sparkSession
+    path.  Giant rows go through one pass: a cheap page-count stage that
+    carries the payload along, an ``explode_outer`` into (url, page_lo,
+    page_hi) range rows of ``pages_per_task`` pages each — so a 5000-page
+    document becomes ~150 independent tasks instead of one straggler —
+    the page route over the ranges, and a groupBy(url) re-merge.  A giant
+    whose count fails (0 pages: malformed, or not a PDF) gets one NULL
+    range, which :func:`page_rows` extracts whole.  The split threshold is
+    by payload size (known before any parse), the split unit by page count
+    (known after the cheap pass).  Nothing is cached and nothing joins:
+    each giant payload is scanned once."""
     if num_partitions is None:
-        num_partitions = max(spark.sparkContext.defaultParallelism, 8)
+        num_partitions = max(pages_df.sparkSession.sparkContext.defaultParallelism, 8)
     src = pages_df.select("url", "html")
     # null-safe: NULL html must take the normal path (extract_documents
     # emits its typed failure row) — a bare length() >= N predicate is NULL
@@ -1030,43 +994,27 @@ def extract_documents_split(
 
     normal_docs = extract_documents(src.filter(~is_giant), num_partitions)
 
-    giants = src.filter(is_giant)
-    # counts (url, n_pages — tiny) feeds BOTH the ranges join and the
-    # failed-giants join; without a persist the expensive count pass (full
-    # structural parse over every multi-MB giant) executes once per
-    # consumer.  Registered for release by the NEXT call (or an explicit
-    # release_split_cache()) so repeated runs hold at most one cache.
-    release_split_cache()
-    counts = _split_caches.cache(
-        giants.mapInArrow(
-            arrow_map(page_count_rows, RANGE_SCHEMA), schema=RANGE_SCHEMA
-        )
+    counted_schema = StructType(
+        [*src.schema.fields, StructField("n_pages", IntegerType())]
     )
+    n_pages = F.col("n_pages")
     ranges = (
-        giants.join(counts, "url")
-        .filter(F.col("n_pages") > 0)
+        src.filter(is_giant)
+        .mapInArrow(arrow_map(page_count_rows, counted_schema), schema=counted_schema)
         .select(
             "url",
             "html",
-            F.explode(
-                F.sequence(F.lit(1), F.col("n_pages"), F.lit(pages_per_task))
+            F.explode_outer(
+                F.when(n_pages > 0, F.sequence(F.lit(1), n_pages, F.lit(pages_per_task)))
             ).alias("page_lo"),
         )
         .withColumn("page_hi", F.col("page_lo") + F.lit(pages_per_task - 1))
     )
-    range_pages = ranges.repartition(
-        num_partitions, F.xxhash64("url", "page_lo")
-    ).mapInArrow(arrow_map(page_rows, PAGE_SCHEMA), schema=PAGE_SCHEMA)
-    # failed count-pass giants (n_pages == 0) still need a failure row
-    failed_giants = (
-        giants.join(counts, "url")
-        .filter(F.col("n_pages") <= 0)
-        .select("url", "html")
-    )
     giant_docs = (
-        range_pages.groupBy("url")
+        ranges.repartition(num_partitions, F.xxhash64("url", "page_lo"))
+        .mapInArrow(arrow_map(page_rows, PAGE_SCHEMA), schema=PAGE_SCHEMA)
+        .groupBy("url")
         .applyInArrow(_merge_ranges, schema=DOC_SCHEMA)
-        .unionByName(extract_documents(failed_giants, num_partitions))
     )
     return normal_docs.unionByName(giant_docs)
 

@@ -7453,7 +7453,7 @@ def q_robots_rules(spark, sf_dir):
     (tools/freeze.py)."""
     from pdf_ocr_spark.operators.frontier import robots_rules
 
-    return robots_rules(_corpus(spark, "robots", "domain", "body"))
+    return robots_rules(_corpus(spark, "robots", *robots_rules.cols))
 
 
 SQL_ROBOTS_RULES = f"""
@@ -7470,7 +7470,7 @@ def q_robots_delays(spark, sf_dir):
     distributed route — oracle = frozen kernel golden."""
     from pdf_ocr_spark.operators.frontier import robots_delays
 
-    return robots_delays(_corpus(spark, "robots", "domain", "body"))
+    return robots_delays(_corpus(spark, "robots", *robots_delays.cols))
 
 
 SQL_ROBOTS_DELAYS = f"""
@@ -7484,7 +7484,7 @@ def q_robots_sitemaps(spark, sf_dir):
     distributed route — oracle = frozen kernel golden."""
     from pdf_ocr_spark.operators.frontier import robots_sitemaps
 
-    return robots_sitemaps(_corpus(spark, "robots", "domain", "body"))
+    return robots_sitemaps(_corpus(spark, "robots", *robots_sitemaps.cols))
 
 
 SQL_ROBOTS_SITEMAPS = f"""
@@ -7500,7 +7500,7 @@ def q_sitemap_urls(spark, sf_dir):
     nothing.  Oracle = frozen kernel golden."""
     from pdf_ocr_spark.operators.frontier import sitemap_urls
 
-    return sitemap_urls(_corpus(spark, "sitemaps", "url", "body"))
+    return sitemap_urls(_corpus(spark, "sitemaps", *sitemap_urls.cols))
 
 
 SQL_SITEMAP_URLS = f"""
@@ -7518,7 +7518,7 @@ def q_robots_frontier(spark, sf_dir):
     a read-back of answers."""
     from pdf_ocr_spark.operators.frontier import frontier_allowed, robots_rules
 
-    rules = robots_rules(_corpus(spark, "robots", "domain", "body"))
+    rules = robots_rules(_corpus(spark, "robots", *robots_rules.cols))
     urls = _corpus(spark, "robots_urls", "url")
     return frontier_allowed(urls, rules, agent="graftbot")
 
@@ -8197,7 +8197,7 @@ def q_feed_items(spark, sf_dir):
     Oracle = frozen kernel golden (tools/freeze.py)."""
     from pdf_ocr_spark.operators.frontier import feed_items
 
-    return feed_items(_corpus(spark, "feeds", "url", "body"))
+    return feed_items(_corpus(spark, "feeds", *feed_items.cols))
 
 
 SQL_FEED_ITEMS = f"""

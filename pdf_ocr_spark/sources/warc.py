@@ -28,7 +28,7 @@ a record cut short is dropped, never yielded with a partial body.
 from __future__ import annotations
 
 import zlib
-from datetime import datetime
+from datetime import datetime, timezone
 from typing import Iterator, List, Optional, Tuple
 
 _CRLF2 = b"\r\n\r\n"
@@ -164,12 +164,15 @@ def iter_warc_records(
 
 
 def _warc_ts(date: Optional[str]):
-    """WARC-Date → naive datetime (the offset is dropped, wall time
-    kept); None when absent or not ISO 8601."""
+    """WARC-Date → naive UTC datetime (a UTC offset is applied before it is
+    dropped); None when absent or not ISO 8601."""
     try:
-        return datetime.fromisoformat(date).replace(tzinfo=None)
+        ts = datetime.fromisoformat(date)
     except (TypeError, ValueError):
         return None
+    if ts.tzinfo is not None:
+        ts = ts.astimezone(timezone.utc).replace(tzinfo=None)
+    return ts
 
 
 PAGES_DDL = "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -320,9 +323,12 @@ def _warc_date(ts) -> str:
 def _write_pages(rows) -> Tuple[int, bytes]:
     """(url, warc_ts, html, text) rows → ONE (n_records, warc) archive.
     Null html rows emit ``conversion`` records from ``text`` (the WET
-    shape) so nothing is silently dropped; rows with neither emit none."""
+    shape) so nothing is silently dropped; rows with neither, or with no
+    url to record, emit none."""
     recs = []
     for url, ts, html, text in rows:
+        if url is None:
+            continue
         if html is not None:
             recs.append(write_warc_record(str(url), _warc_date(ts), bytes(html)))
         elif text:
@@ -770,10 +776,12 @@ def _write_revisits(rows) -> Tuple[int, int, bytes]:
     ``revisit`` records — empty payload, WARC-Profile
     identical-payload-digest, WARC-Refers-To{,-Target-URI,-Date}
     pointing at the keeper capture (deterministic, because record ids
-    derive from (uri, date))."""
+    derive from (uri, date)).  A row with no url writes no record."""
     recs: List[bytes] = []
     n_rev = 0
     for url, ts, html, digest, is_rev, r_url, r_ts in rows:
+        if url is None:
+            continue
         date = _warc_date(ts)
         if not is_rev:
             recs.append(
@@ -927,13 +935,14 @@ def http_header_records(
 def _write_with_headers(rows) -> Tuple[int, bytes]:
     """(url, warc_ts, html, x_robots_tag) rows → ONE (n_records, warc)
     archive; non-null tags become real ``X-Robots-Tag`` response headers
-    on the record's HTTP envelope."""
+    on the record's HTTP envelope; a row with no url writes no record."""
     recs = [
         write_warc_record(
             str(url), _warc_date(ts), bytes(html),
             extra_http_headers=[("X-Robots-Tag", tag)] if tag else None,
         )
         for url, ts, html, tag in rows
+        if url is not None
     ]
     return len(recs), b"".join(recs)
 

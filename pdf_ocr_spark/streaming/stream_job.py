@@ -56,43 +56,43 @@ PAGES_SCHEMA = StructType(
 )
 
 
+def _read_stream(
+    spark: SparkSession, path: str, schema: StructType = PAGES_SCHEMA
+) -> DataFrame:
+    """The parquet files landing under ``path`` as a file-source stream.
+    A crawl WILL contain truncated/garbage files; one must not kill the
+    stream (probed: without ``ignoreCorruptFiles`` the query terminates)."""
+    return (
+        spark.readStream.schema(schema)
+        .option("ignoreCorruptFiles", "true")
+        .parquet(path)
+    )
+
+
 def stream_extract(
     spark: SparkSession,
     input_path: str,
     output_path: str,
     checkpoint_path: str,
     num_partitions: Optional[int] = None,
-    available_now: bool = True,
-    max_files_per_trigger: Optional[int] = None,
-    ignore_corrupt_files: bool = True,
 ):
     """Incremental extraction: new parquet files under ``input_path`` flow
     through the SAME fused extractor as the batch job and append to
-    ``output_path``.  Returns the started StreamingQuery.
+    ``output_path``; the AvailableNow trigger drains what has landed and
+    stops.  Returns the started StreamingQuery.
 
     The checkpoint (file-source log + sink commit log) is the resume
     protocol: a killed run restarts from the last committed micro-batch
     with no anti-join needed and no double-processing."""
-    reader = spark.readStream.schema(PAGES_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    if ignore_corrupt_files:
-        # a crawl WILL contain truncated/garbage files; one must not kill
-        # the stream (probed: without this, the query terminates)
-        reader = reader.option("ignoreCorruptFiles", "true")
-    pages = reader.parquet(input_path)
-
-    docs = extract_documents(pages, num_partitions)
-
-    writer = (
+    docs = extract_documents(_read_stream(spark, input_path), num_partitions)
+    return (
         docs.writeStream.format("parquet")
         .option("path", output_path)
         .option("checkpointLocation", checkpoint_path)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def windowed_event_counts(
@@ -226,7 +226,6 @@ def stream_feed_frontier(
     output_path: str,
     checkpoint_path: str,
     num_partitions: Optional[int] = None,
-    available_now: bool = True,
 ):
     """Streaming frontier discovery from feeds — the operational loop a
     crawler runs continuously: new feed documents (parquet files of
@@ -240,7 +239,7 @@ def stream_feed_frontier(
     State stays bounded: the watermark ages out link-dedup state after
     a day — re-discoveries beyond that are acceptable (the fetch loop's
     snapshot-table anti-join is the durable guard)."""
-    from pdf_ocr_spark.operators.frontier import FEED_ITEM_SCHEMA, feed_item_rows
+    from pdf_ocr_spark.operators.frontier import feed_items
 
     schema = StructType(
         [
@@ -249,37 +248,30 @@ def stream_feed_frontier(
             StructField("fetched_at", TimestampType()),
         ]
     )
-    feeds = (
-        spark.readStream.schema(schema)
-        .option("ignoreCorruptFiles", "true")
-        .parquet(feeds_path)
-    )
     # the batch route's feed parser, with the fetch timestamp passed
     # through onto every item for the watermark
     items = (
         kernel_route(
-            feeds, feed_item_rows,
+            _read_stream(spark, feeds_path, schema), feed_items.rows_fn,
             # a LOCAL schema: StructType.add mutates the receiver, and
-            # FEED_ITEM_SCHEMA is the shared batch-route schema
+            # the route's schema is shared with the batch route
             StructType(
-                list(FEED_ITEM_SCHEMA.fields)
-                + [StructField("fetched_at", TimestampType())]
+                [*feed_items.schema.fields, StructField("fetched_at", TimestampType())]
             ),
-            cols=("url", "body", "fetched_at"),
+            cols=(*feed_items.cols, "fetched_at"),
             num_partitions=num_partitions,
         )
         .withWatermark("fetched_at", "1 day")
         .dropDuplicatesWithinWatermark(["link"])
     )
-    writer = (
+    return (
         items.writeStream.format("parquet")
         .option("path", output_path)
         .option("checkpointLocation", checkpoint_path)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 #: DOC_SCHEMA plus the input row's capture timestamp, passed through the
@@ -319,12 +311,8 @@ def stream_wet_export(
 
     from pdf_ocr_spark.sources.warc import pages_to_warc
 
-    reader = spark.readStream.schema(PAGES_SCHEMA).option(
-        "ignoreCorruptFiles", "true"
-    )
-    pages = reader.parquet(input_path)
     docs = kernel_route(
-        pages, doc_rows, DOC_TS_SCHEMA,
+        _read_stream(spark, input_path), doc_rows, DOC_TS_SCHEMA,
         cols=("url", "html", "warc_ts"), num_partitions=num_partitions,
     )
 
@@ -380,11 +368,7 @@ def stream_quality_gate(
 
     from pdf_ocr_spark.operators.quality import nb_score
 
-    reader = spark.readStream.schema(PAGES_SCHEMA).option(
-        "ignoreCorruptFiles", "true"
-    )
-    pages = reader.parquet(input_path)
-    docs = extract_documents(pages, num_partitions)
+    docs = extract_documents(_read_stream(spark, input_path), num_partitions)
     model_local = [
         (int(r[0]), int(r[1]), int(r[2]), r[3]) for r in model_rows
     ]
@@ -441,10 +425,7 @@ def stream_hot_hosts(
     from pdf_ocr_spark.operators.graph import host_expr
     from pdf_ocr_spark.operators.sketches import cms_counts
 
-    reader = spark.readStream.schema(PAGES_SCHEMA).option(
-        "ignoreCorruptFiles", "true"
-    )
-    pages = reader.parquet(input_path)
+    pages = _read_stream(spark, input_path)
 
     def _emit(batch_df: DataFrame, batch_id: int) -> None:
         sk = cms_counts(

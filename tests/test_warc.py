@@ -614,3 +614,36 @@ def test_revisit_route_skips_a_null_archive(spark):
     ).coalesce(1)
     got = [tuple(r) for r in warc_revisit_rows(archives).collect()]
     assert got == revisit_rows(good)
+
+
+def test_warc_ts_converts_an_offset_to_utc():
+    import datetime
+
+    from pdf_ocr_spark.sources.warc import _warc_ts
+
+    assert _warc_ts("2024-01-01T10:00:00+02:00") == datetime.datetime(2024, 1, 1, 8, 0)
+    assert _warc_ts("2024-01-01T10:00:00Z") == datetime.datetime(2024, 1, 1, 10, 0)
+    assert _warc_ts("2024-01-01T10:00:00") == datetime.datetime(2024, 1, 1, 10, 0)
+    assert _warc_ts(None) is None and _warc_ts("yesterday") is None
+
+
+def test_writers_skip_a_row_without_url():
+    """A NULL url writes no record and is not counted, in every writer —
+    never a page whose target URI is the string 'None'."""
+    from pdf_ocr_spark.sources.warc import (
+        _write_pages,
+        _write_revisits,
+        _write_with_headers,
+    )
+
+    good = ("https://w.test/1", None, b"<p>y</p>")
+    n, arc = _write_pages([(None, None, b"<p>x</p>", None), good + (None,)])
+    assert n == 1 and [u for u, _, _ in iter_warc_records(arc)] == [good[0]]
+    n, arc = _write_with_headers([(None, None, b"<p>x</p>", "noindex"), good + (None,)])
+    assert n == 1 and [u for u, _, _ in iter_warc_records(arc)] == [good[0]]
+    n, n_rev, arc = _write_revisits([
+        (None, None, b"<p>x</p>", "d", True, good[0], None),
+        good + ("d", False, good[0], None),
+    ])
+    assert (n, n_rev) == (1, 0)
+    assert [u for u, _, _ in iter_warc_records(arc)] == [good[0]]

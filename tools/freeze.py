@@ -4,8 +4,10 @@ oracles, which gives them a FULL value-hash correctness gate instead of
 a rows-only check.
 
 Every golden is computed WITHOUT Spark: the same row functions the
-distributed routes run inside ``mapInArrow`` (``pipeline.extract_job``,
-``operators.frontier``), or the kernels and the independent tokenizer
+distributed routes run inside ``mapInArrow`` (a side route's entry names
+its ``extract_job.Route`` value from ``pipeline.extract_job`` or
+``operators.frontier``, which carries the rows function, schema and
+key/payload columns), or the kernels and the independent tokenizer
 twins, run in-process over the repo's own deterministic corpora.  The
 gate therefore compares the DISTRIBUTED pipeline against a local
 execution and never depends on the testdata seeds, nor on any file
@@ -26,6 +28,7 @@ change:
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import os
 import re
@@ -68,8 +71,17 @@ def _run(rows_fn, schema, rows, key="url", col="html") -> pd.DataFrame:
     return pd.DataFrame(rows_fn(keys, payloads), columns=schema.fieldNames())
 
 
-def _route(corpus, rows_fn, schema, sort, key="url", col="html"):
-    return lambda: _sorted(_run(rows_fn, schema, CORPORA[corpus](), key, col), sort)
+def _route_rows(corpus, route, sort) -> pd.DataFrame:
+    """A side route's own rows over ``CORPORA[corpus]``, in-process,
+    sorted by ``sort``."""
+    rows = CORPORA[corpus]()
+    return _sorted(_run(route.rows_fn, route.schema, rows, *route.cols), sort)
+
+
+def _route(corpus, route, sort):
+    """The GOLDENS entry of a side route (``extract_job.Route``);
+    :data:`ROUTE_GOLDENS` lists these entries."""
+    return functools.partial(_route_rows, corpus, route, sort)
 
 
 def _pages(rows) -> pd.DataFrame:
@@ -223,7 +235,8 @@ def extract_quality() -> pd.DataFrame:
 
 
 def blocks() -> pd.DataFrame:
-    out = _run(EJ.block_rows, EJ.BLOCK_SCHEMA, CORPORA["mix_60"]())
+    route = EJ.extract_blocks
+    out = _run(route.rows_fn, route.schema, CORPORA["mix_60"]())
     # bbox exploded into scalar columns: array-typed value hashing differs
     # between engines; four doubles compare exactly
     for i, c in enumerate(["x0", "y0", "x1", "y1"]):
@@ -434,55 +447,40 @@ GOLDENS = {
     "pipeline_e2e": pipeline_e2e,
     "extract_quality": extract_quality,
     "blocks": blocks,
-    "composites": _route("composites", EJ.composite_rows, EJ.COMPOSITE_SCHEMA,
+    "composites": _route("composites", EJ.extract_composites,
                          ["url", "page_num", "block_index"]),
-    "rasters": _route("rasters", EJ.raster_rows, EJ.RASTER_SCHEMA,
-                      ["url", "page_num"]),
-    "orientation": _route("orientation", EJ.orientation_rows,
-                          EJ.ORIENTATION_SCHEMA, ["url", "page_num"]),
-    "link_edges": _route("links", EJ.link_rows, EJ.LINK_SCHEMA,
-                         ["url", "link_index"]),
-    "html_tables": _route("html_tables", EJ.html_table_rows,
-                          EJ.HTML_TABLE_SCHEMA, ["url", "table_index"]),
-    "html_meta": _route("html_meta", EJ.html_meta_rows, EJ.HTML_META_SCHEMA,
-                        "url"),
-    "jsonld": _route("jsonld", EJ.jsonld_rows, EJ.JSONLD_SCHEMA,
+    "rasters": _route("rasters", EJ.extract_rasters, ["url", "page_num"]),
+    "orientation": _route("orientation", EJ.detect_orientation,
+                          ["url", "page_num"]),
+    "link_edges": _route("links", EJ.extract_links, ["url", "link_index"]),
+    "html_tables": _route("html_tables", EJ.extract_html_tables,
+                          ["url", "table_index"]),
+    "html_meta": _route("html_meta", EJ.extract_html_meta, "url"),
+    "jsonld": _route("jsonld", EJ.extract_structured_data,
                      ["url", "block_index", "node_index"]),
-    "microdata": _route("microdata", EJ.microdata_rows, EJ.MICRODATA_SCHEMA,
+    "microdata": _route("microdata", EJ.extract_microdata_rows,
                         ["url", "item_index", "prop"]),
-    "hreflang": _route("hreflang", EJ.hreflang_rows, EJ.HREFLANG_SCHEMA,
-                       ["url", "ord"]),
-    "pdf_forms": _route("forms", EJ.form_rows, EJ.FORM_SCHEMA,
-                        ["url", "field_index"]),
-    "pdf_doc_info": _route("docmeta", EJ.doc_info_rows, EJ.DOC_INFO_SCHEMA,
-                           "url"),
-    "pdf_outline": _route("docmeta", EJ.outline_rows, EJ.OUTLINE_SCHEMA,
-                          ["url", "order"]),
-    "pdf_annotations": _route("annots", EJ.annot_rows, EJ.ANNOT_SCHEMA,
+    "hreflang": _route("hreflang", EJ.extract_hreflang_links, ["url", "ord"]),
+    "pdf_forms": _route("forms", EJ.extract_forms, ["url", "field_index"]),
+    "pdf_doc_info": _route("docmeta", EJ.extract_doc_info, "url"),
+    "pdf_outline": _route("docmeta", EJ.extract_outline, ["url", "order"]),
+    "pdf_annotations": _route("annots", EJ.extract_annotations_route,
                               ["url", "order"]),
     "jpeg_scan_ocr": _scan_ocr("jpeg_scans"),
     "ccitt_scan_ocr": _scan_ocr("ccitt_scans"),
     "jpx_scan_ocr": _scan_ocr("jpx_scans"),
     "jbig2_scan_ocr": _scan_ocr("jbig2_scans"),
-    "jpeg_rasters": _route("jpeg_scans", EJ.raster_rows, EJ.RASTER_SCHEMA,
-                           ["url", "page_num"]),
-    "ccitt_rasters": _route("ccitt_scans", EJ.raster_rows, EJ.RASTER_SCHEMA,
-                            ["url", "page_num"]),
-    "jpx_rasters": _route("jpx_scans", EJ.raster_rows, EJ.RASTER_SCHEMA,
-                          ["url", "page_num"]),
-    "jbig2_rasters": _route("jbig2_scans", EJ.raster_rows, EJ.RASTER_SCHEMA,
-                            ["url", "page_num"]),
-    "robots_rules": _route("robots", FR.robots_rule_rows, FR.ROBOTS_RULE_SCHEMA,
-                           ["domain", "rule_order", "agent"], "domain", "body"),
-    "robots_delays": _route("robots", FR.crawl_delay_rows, FR.DELAY_SCHEMA,
-                            ["domain", "agent"], "domain", "body"),
-    "robots_sitemaps": _route("robots", FR.robots_sitemap_rows, FR.SITEMAP_SCHEMA,
-                              ["domain", "sm_index"], "domain", "body"),
+    "jpeg_rasters": _route("jpeg_scans", EJ.extract_rasters, ["url", "page_num"]),
+    "ccitt_rasters": _route("ccitt_scans", EJ.extract_rasters, ["url", "page_num"]),
+    "jpx_rasters": _route("jpx_scans", EJ.extract_rasters, ["url", "page_num"]),
+    "jbig2_rasters": _route("jbig2_scans", EJ.extract_rasters, ["url", "page_num"]),
+    "robots_rules": _route("robots", FR.robots_rules,
+                           ["domain", "rule_order", "agent"]),
+    "robots_delays": _route("robots", FR.robots_delays, ["domain", "agent"]),
+    "robots_sitemaps": _route("robots", FR.robots_sitemaps, ["domain", "sm_index"]),
     "robots_urls": robots_urls,
-    "sitemap_urls": _route("sitemaps", FR.sitemap_url_rows, FR.SITEMAP_URL_SCHEMA,
-                           ["sitemap", "loc"], "url", "body"),
-    "feed_items": _route("feeds", FR.feed_item_rows, FR.FEED_ITEM_SCHEMA,
-                         ["feed", "link"], "url", "body"),
+    "sitemap_urls": _route("sitemaps", FR.sitemap_urls, ["sitemap", "loc"]),
+    "feed_items": _route("feeds", FR.feed_items, ["feed", "link"]),
     "multimodal_frames": multimodal_frames,
     "sink_overlay": sink_overlay,
     "compression": compression,
@@ -496,6 +494,13 @@ GOLDENS = {
     "unigram_encode": unigram_encode,
     "wordpiece_vocab": wordpiece_vocab,
     "wordpiece_encode": wordpiece_encode,
+}
+
+#: the side-route entries of GOLDENS: name → (corpus, route, sort).
+ROUTE_GOLDENS = {
+    name: build.args
+    for name, build in GOLDENS.items()
+    if isinstance(build, functools.partial) and build.func is _route_rows
 }
 
 
