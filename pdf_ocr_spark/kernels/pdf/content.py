@@ -292,43 +292,53 @@ class _TextState:
 # one-pass scanner for content streams: unlike general COS, content has no
 # indirect refs, so numbers need no "<n> <g> R" lookahead — this regex
 # replaces the char-at-a-time Lexer on the hot path (~45% of kernel time)
+_WS = rb"[\x00\t\n\x0c\r ]"
+_NUM = rb"[+-]?(?:\d+(?:\.\d*)?|\.\d+)"
+_END = rb"(?![A-Za-z0-9*'\"])"  # token boundary after an operator
+# one glyph step: "<hex> Tj tx ty Td/TD"
+_STEP = rb"<[0-9A-Fa-f]*>" + _WS + rb"*Tj" + _WS + rb"+" + _NUM + _WS + rb"+" \
+    + _NUM + _WS + rb"+T[Dd]" + _END
 _CONTENT_TOK = re.compile(
-    rb"""(?P<showtd>(?P<sthex><[0-9A-Fa-f]*>)[\x00\t\n\x0c\r ]*Tj[\x00\t\n\x0c\r ]+
-                  (?P<stx>[+-]?(?:\d+(?:\.\d*)?|\.\d+))[\x00\t\n\x0c\r ]+
-                  (?P<sty>[+-]?(?:\d+(?:\.\d*)?|\.\d+))[\x00\t\n\x0c\r ]+
-                  T[Dd](?![A-Za-z0-9*'"]))
-       | (?P<showtj><[0-9A-Fa-f]*>[\x00\t\n\x0c\r ]*Tj(?![A-Za-z0-9*'"]))
-       | (?P<tdxy>(?P<tdx>[+-]?(?:\d+(?:\.\d*)?|\.\d+))[\x00\t\n\x0c\r ]+
-                  (?P<tdy>[+-]?(?:\d+(?:\.\d*)?|\.\d+))[\x00\t\n\x0c\r ]+
-                  (?P<tdop>T[Dd])(?![A-Za-z0-9*'"]))
-       | (?P<num>[+-]?(?:\d+(?:\.\d*)?|\.\d+))
-       | (?P<name>/[^\x00\t\n\x0c\r /<>()\[\]{}%]*)
-       | (?P<ddict><<)
-       | (?P<hex><[^>]*>?)
-       | (?P<open>\[)
-       | (?P<close>\])
-       | (?P<lit>\()
-       | (?P<op>[A-Za-z'"][A-Za-z0-9*'"]*)
-       | (?P<comment>%[^\r\n]*)
-    """,
-    re.X,
+    rb"(?P<run>(?:" + _STEP + _WS + rb"*)+)"
+    rb"|(?P<showtj><[0-9A-Fa-f]*>" + _WS + rb"*Tj" + _END + rb")"
+    rb"|(?P<tdxy>(?P<tdx>" + _NUM + rb")" + _WS + rb"+(?P<tdy>" + _NUM + rb")"
+    + _WS + rb"+T[Dd]" + _END + rb")"
+    rb"|(?P<num>" + _NUM + rb")"
+    rb"|(?P<name>/[^\x00\t\n\x0c\r /<>()\[\]{}%]*)"
+    rb"|(?P<ddict><<)"
+    rb"|(?P<hex><[^>]*>?)"
+    rb"|(?P<open>\[)"
+    rb"|(?P<close>\])"
+    rb"|(?P<lit>\()"
+    rb"""|(?P<op>[A-Za-z'"][A-Za-z0-9*'"]*)"""
+    rb"|(?P<comment>%[^\r\n]*)"
 )
-# the fused fast paths above collapse the dominant per-glyph token
-# sequences — the full "<CID> Tj tx ty Td/TD" glyph step (ONE match +
-# dispatch instead of 4-5), then "<CID> Tj" and "tx ty Td/TD" alone
-# (WPS-style streams emit both once PER GLYPH) — they only fire on
+# the steps of a matched run, one (hex digits, tx, ty, b"D" or b"d") each;
+# ``_STEP`` captures nothing: captures inside the repeated run cost ~13%
+# of the time to tokenize a glyph-CID stream
+_RUN_STEPS = re.compile(
+    rb"<([0-9A-Fa-f]*)>" + _WS + rb"*Tj" + _WS + rb"+(" + _NUM + rb")" + _WS
+    + rb"+(" + _NUM + rb")" + _WS + rb"+T([Dd])"
+).findall
+# The fused fast paths above collapse the dominant per-glyph token
+# sequences.  ``run`` takes a whole run of glyph steps "<CID> Tj tx ty
+# Td/TD" (per-glyph CID streams are nothing else between BT and ET) as
+# ONE token: the tokenizer yields it once, as the synthetic operator
+# ``_GLYPH_RUN`` whose last operand is the list of (show bytes, tx, ty,
+# is TD) steps, and ``_execute`` shows and advances every step in one
+# branch.  "<CID> Tj" and "tx ty Td/TD" alone (WPS-style streams emit
+# both once PER GLYPH) stay single fused tokens.  They only fire on
 # byte-clean shapes (pure hex, strict numbers, token boundary after the
 # operator), everything else falls through to the general alternatives
-# with identical semantics.  Fusing Tj with the FOLLOWING Td/TD is
-# exact: Td rebuilds the text matrix from the line matrix, so the show
-# advance the standalone Tj would have returned is provably discarded.
-_TOK_SHOWTD = _CONTENT_TOK.groupindex["showtd"]  # lastindex when showtd fires
-_TOK_STHEX = _CONTENT_TOK.groupindex["sthex"]
-_TOK_STX = _CONTENT_TOK.groupindex["stx"]
-_TOK_STY = _CONTENT_TOK.groupindex["sty"]
+# with identical semantics — a comment or any other token between steps
+# ends the run.  Fusing Tj with the FOLLOWING Td/TD is exact: Td rebuilds
+# the text matrix from the line matrix, so the show advance the
+# standalone Tj would have returned is provably discarded.
+_GLYPH_RUN = b"__glyph_run__"
+_TOK_RUN = _CONTENT_TOK.groupindex["run"]  # lastindex when a run fires
 _TOK_SHOWTJ = _CONTENT_TOK.groupindex["showtj"]  # lastindex when showtj fires
 # lastindex reports the group that CLOSED last — for nested groups that
-# is the OUTER one (verified: b"12.5 0 TD" → lastindex == tdxy, not tdop)
+# is the OUTER one (verified: b"12.5 0 TD" → lastindex == tdxy, not tdy)
 _TOK_TDXY = _CONTENT_TOK.groupindex["tdxy"]      # lastindex when tdxy fires
 _TOK_TDX = _CONTENT_TOK.groupindex["tdx"]
 _TOK_TDY = _CONTENT_TOK.groupindex["tdy"]
@@ -384,6 +394,10 @@ def _tokenize_content(data: bytes):
     lex = Lexer(data, 0)  # reused only for strings/dicts (escape handling)
     hex_cache: Dict[bytes, bytes] = {}  # per-glyph CID strings repeat constantly
     num_cache: Dict[bytes, Any] = {}
+    # a glyph step's bytes → its (show bytes, tx, ty, is TD): steps repeat
+    # as much as their CIDs do, so a run's steps are one C-level map
+    step_cache: Dict[Tuple[bytes, ...], Tuple[bytes, Any, Any, bool]] = {}
+    step_get = step_cache.get
     n = len(data)
     pos = 0
     operands: List[Any] = []
@@ -395,42 +409,48 @@ def _tokenize_content(data: bytes):
         if m is None:
             break
         g = m.lastindex  # _TOK_* constants (highest matched group index)
-        if g == _TOK_SHOWTD:  # fused "<hex> Tj tx ty Td/TD" — one per glyph
-            body = m.group(_TOK_STHEX)
-            hb = hex_cache.get(body)
-            if hb is None:
-                hx = body[1 : body.index(b">")]
-                if len(hx) % 2:
-                    hx += b"0"
-                hb = hex_cache[body] = bytes.fromhex(hx.decode("ascii"))
-            cur.append(hb)
-            tok = m.group(_TOK_STX)
-            vx = num_cache.get(tok)
-            if vx is None:
-                vx = num_cache[tok] = float(tok) if b"." in tok else int(tok)
-            tok = m.group(_TOK_STY)
-            vy = num_cache.get(tok)
-            if vy is None:
-                vy = num_cache[tok] = float(tok) if b"." in tok else int(tok)
+        if g == _TOK_RUN:  # fused run of "<hex> Tj tx ty Td/TD" steps
+            found = _RUN_STEPS(data, m.start(), m.end())
+            steps = list(map(step_get, found))
+            if None in steps:
+                for i, s in enumerate(steps):
+                    if s is None:
+                        hx, sx, sy, d = key = found[i]
+                        hb = hex_cache.get(hx)
+                        if hb is None:
+                            hb = hex_cache[hx] = bytes.fromhex(
+                                (hx + b"0" if len(hx) % 2 else hx).decode("ascii")
+                            )
+                        vx = num_cache.get(sx)
+                        if vx is None:
+                            vx = num_cache[sx] = float(sx) if b"." in sx else int(sx)
+                        vy = num_cache.get(sy)
+                        if vy is None:
+                            vy = num_cache[sy] = float(sy) if b"." in sy else int(sy)
+                        steps[i] = step_cache[key] = (hb, vx, vy, d == b"D")
             pos = m.end()
-            # last matched byte distinguishes TD (0x44 'D') from Td
-            tdop = b"TD" if data[pos - 1] == 0x44 else b"Td"
             if stack:
-                # show inside an unterminated array: the unfused stream
-                # appends the hex INTO the array, recovers on Tj, then
-                # yields the Td with just the two numbers — replay that
-                # exactly instead of fusing
+                # a run inside an unterminated array: the unfused stream
+                # appends the first show INTO the array, recovers on Tj,
+                # then yields the Td with just the two numbers — replay
+                # that exactly, then run the remaining steps
+                hb, vx, vy, td = steps.pop(0)
+                cur.append(hb)
                 stack = []
                 cur = operands
                 yield operands, b"Tj"
                 operands.clear()
                 operands.append(vx)
                 operands.append(vy)
-                yield operands, tdop
-            else:
-                cur.append(vx)
-                cur.append(vy)
-                yield operands, (b"TjTD" if tdop == b"TD" else b"TjTd")
+                yield operands, (b"TD" if td else b"Td")
+                operands.clear()
+                if not steps:
+                    continue
+            # stray operands ahead of the run stay in front of the steps
+            # (the unfused stream hands them to the first Tj, which uses
+            # only its last operand)
+            operands.append(steps)
+            yield operands, _GLYPH_RUN
             operands.clear()
             cur = operands
         elif g == _TOK_SHOWTJ:  # fused "<hex> Tj" — one dispatch per glyph
@@ -673,94 +693,87 @@ class ContentInterpreter:
         pending: List[Tuple[float, float, float, float]] = []
         pt: Optional[Tuple[float, float]] = None
 
-        # hot-run cache for streaks of fused glyph steps: every value
-        # _show derives from (tm rotation, ctm, text state) is constant
-        # across consecutive fused tokens — the ONLY ops that run inside
-        # a streak are the fused steps themselves, which change just the
-        # matrix translations — so it is hoisted once per streak and
-        # invalidated by ANY other operator (conservative, hence exact).
-        # The per-glyph float formulas below are copied verbatim from
-        # _show so the emitted Glyph tuples are bit-identical.
-        hot = None
-        a = b = c0 = c1 = c2 = c3 = c4 = c5 = rx = ry = sy = ab = 0.0
-        size = char_sp = hscale = wsp = 0.0
-        decode = fname = None
-        vidx = 0
-        glyphs_append = self.glyphs.append
+        glyphs = self.glyphs
+        glyphs_append = glyphs.append
         new_glyph = tuple.__new__
         votes = self._rot_votes
+        max_glyphs = self.MAX_GLYPHS
 
         for operands, op in _tokenize_content(content):
-            if len(self.glyphs) >= self.MAX_GLYPHS:
+            if len(glyphs) >= max_glyphs:
                 return
-            fused = (op == b"TjTD" or op == b"TjTd") and len(operands) >= 3
-            if not fused:
-                hot = None
             try:
-                if fused:
-                    # fused glyph step: show, then Td/TD.  The show's
-                    # returned advance is discarded on purpose — Td
-                    # rebuilds tm from tlm, exactly as the unfused
-                    # sequence would.  A show failure must not skip the
-                    # Td (parity with the unfused stream), hence the
-                    # inner guard.  Stray operands before the fused run
-                    # ride ahead of the triple, so index from the end.
-                    raw = operands[-3]
+                if op == _GLYPH_RUN:
+                    # a run of glyph steps: show, then Td/TD, per step.
+                    # Every value _show derives from (tm rotation, ctm,
+                    # text state) is constant across the run — steps
+                    # change only the matrix translations — so it is
+                    # hoisted once; the per-glyph float formulas are
+                    # _show's, so the Glyph tuples are bit-identical.
+                    # Each show's returned advance is discarded on
+                    # purpose: Td rebuilds tm from tlm, exactly as the
+                    # unfused sequence would.  A decode failure keeps the
+                    # glyphs it already emitted but skips that step's
+                    # votes and seq advance, never its Td.
                     font = ts.font
-                    if isinstance(raw, bytes) and font is not None \
-                            and ts.size != 0:
-                        if hot is None:
-                            t0_, t1_, t2_, t3_ = tm[0], tm[1], tm[2], tm[3]
-                            c0, c1, c2, c3, c4, c5 = ctm
-                            a = t0_ * c0 + t1_ * c2
-                            b = t0_ * c1 + t1_ * c3
-                            c_ = t2_ * c0 + t3_ * c2
-                            d_ = t2_ * c1 + t3_ * c3
-                            size = ts.size
-                            sy = (c_ * c_ + d_ * d_) ** 0.5 * size
-                            ab = (a * a + b * b) ** 0.5
-                            rise = ts.rise
-                            rx = c_ * rise - self.origin_x
-                            ry = d_ * rise - self.origin_y
-                            char_sp, hscale = ts.char_sp, ts.hscale
-                            wsp = 0.0 if font.two_byte else ts.word_sp
-                            decode, fname = font.decode, font.name
-                            if abs(a) >= abs(b):
-                                vidx = 0 if a >= 0 else 2
-                            else:
-                                vidx = 1 if b > 0 else 3
-                            hot = True
-                        self.n_text_ops += 1
-                        seq = self._seq
-                        try:
-                            t4, t5 = tm[4], tm[5]
-                            e = t4 * c0 + t5 * c2 + c4
-                            f = t4 * c1 + t5 * c3 + c5
-                            for code, uni, w1000 in decode(raw):
-                                extra = char_sp
-                                if wsp and code == 32:
-                                    extra += wsp
-                                gtx = (w1000 * 0.001 * size + extra) * hscale
-                                glyphs_append(new_glyph(
-                                    Glyph,
-                                    (uni, e + rx, f + ry, abs(gtx) * ab, sy,
-                                     fname, seq),
-                                ))
-                                seq += 1
-                                e += gtx * a
-                                f += gtx * b
-                            n_run = seq - self._seq
-                            if n_run:
-                                votes[vidx] += n_run
-                            self._seq = seq
-                        except PDFError:
-                            pass
-                    tx, ty = operands[-2], operands[-1]
-                    if op == b"TjTD":
-                        ts.leading = -ty
-                    tlm = (tlm[0], tlm[1], tlm[2], tlm[3],
-                           tx * tlm[0] + ty * tlm[2] + tlm[4],
-                           tx * tlm[1] + ty * tlm[3] + tlm[5])
+                    size = ts.size
+                    show = font is not None and size != 0
+                    if show:
+                        t0_, t1_, t2_, t3_ = tm[0], tm[1], tm[2], tm[3]
+                        c0, c1, c2, c3, c4, c5 = ctm
+                        a = t0_ * c0 + t1_ * c2
+                        b = t0_ * c1 + t1_ * c3
+                        c_ = t2_ * c0 + t3_ * c2
+                        d_ = t2_ * c1 + t3_ * c3
+                        sy = (c_ * c_ + d_ * d_) ** 0.5 * size
+                        ab = (a * a + b * b) ** 0.5
+                        rise = ts.rise
+                        rx = c_ * rise - self.origin_x
+                        ry = d_ * rise - self.origin_y
+                        char_sp, hscale = ts.char_sp, ts.hscale
+                        wsp = 0.0 if font.two_byte else ts.word_sp
+                        decode, fname = font.decode, font.name
+                        if abs(a) >= abs(b):
+                            vidx = 0 if a >= 0 else 2
+                        else:
+                            vidx = 1 if b > 0 else 3
+                    l0, l1, l2, l3, l4, l5 = tlm
+                    t4, t5 = tm[4], tm[5]
+                    seq = self._seq
+                    n_ops = 0
+                    for raw, tx, ty, is_td in operands[-1]:
+                        if len(glyphs) >= max_glyphs:
+                            break
+                        if show:
+                            n_ops += 1
+                            s = seq
+                            try:
+                                e = t4 * c0 + t5 * c2 + c4
+                                f = t4 * c1 + t5 * c3 + c5
+                                for code, uni, w1000 in decode(raw):
+                                    extra = char_sp
+                                    if wsp and code == 32:
+                                        extra += wsp
+                                    gtx = (w1000 * 0.001 * size + extra) * hscale
+                                    glyphs_append(new_glyph(
+                                        Glyph,
+                                        (uni, e + rx, f + ry, abs(gtx) * ab, sy,
+                                         fname, s),
+                                    ))
+                                    s += 1
+                                    e += gtx * a
+                                    f += gtx * b
+                                votes[vidx] += s - seq
+                                seq = s
+                            except PDFError:
+                                pass  # seq stays: the next step reuses it
+                        if is_td:
+                            ts.leading = -ty
+                        t4 = l4 = tx * l0 + ty * l2 + l4
+                        t5 = l5 = tx * l1 + ty * l3 + l5
+                    self.n_text_ops += n_ops
+                    self._seq = seq
+                    tlm = (l0, l1, l2, l3, l4, l5)
                     tm = tlm
                 elif op == b"Tj" and operands:
                     tm = self._show(operands[-1], ts, tm, ctm)

@@ -19,6 +19,9 @@ is stable across processes and partitions (SURVEY.md §7 hard part (c)).
 
 from __future__ import annotations
 
+from itertools import compress, count, groupby, islice
+from math import isfinite
+from operator import ge, gt, itemgetter
 from typing import Dict, List, NamedTuple, Sequence, Tuple
 
 from pdf_ocr_spark.kernels.pdf.content import Glyph
@@ -79,27 +82,48 @@ def merge_spans(spans: Sequence[str]) -> str:
 # -- line clustering ---------------------------------------------------------
 
 
+_X = itemgetter(1)
+_Y = itemgetter(2)
+_SEQ = itemgetter(6)
+
+
+def _xr_seq(g: Glyph) -> Tuple[float, int]:
+    return (round(g.x, 2), g.seq)
+
+
 def build_lines(glyphs: Sequence[Glyph], page_h: float) -> List[Line]:
     """Cluster glyphs into visual lines.
 
     Works in top-down coordinates (yt = page_h - device_y).  Glyphs whose
     baselines differ by less than ~0.4× the local font size belong to one
-    line; within a line, glyphs sort by (x, seq) and a space is inserted
-    when the horizontal gap exceeds 0.28× font size (word gap)."""
+    line; within a line, glyphs sort by (round(x, 2), seq) and a space is
+    inserted when the horizontal gap exceeds 0.28× font size (word gap)."""
     vis = [g for g in glyphs if g.text]
     if not vis:
         return []
     med_size = _median([g.size for g in vis if g.size > 0], 10.0)
     tol = max(1.2, 0.4 * med_size)
+    seqs = list(map(_SEQ, vis))
+    lines = None
+    # the baseline walk needs seqs strictly increasing in emission order
+    # (as the interpreter emits them) and orderable coordinates; anything
+    # else takes the decorated sort
+    if not any(map(ge, seqs, islice(seqs, 1, None))):
+        lines = _baseline_lines(vis, page_h, tol)
+    if lines is None:
+        lines = _sorted_lines(vis, page_h, tol)
+    out: List[Line] = []
+    for group, yt in lines:
+        _split_line(out, group, yt, page_h, med_size)
+    return out
 
-    # sort by baseline (top-down), then x, then emission order
-    # (decorated tuples: one key build per glyph, no per-compare lambdas;
-    # seq is unique so the trailing fields are never compared).  The
-    # (x_r, seq, g) triple is carried into the per-line sort so each
-    # glyph is decorated (and rounded) exactly once.
+
+def _sorted_lines(vis, page_h, tol):
+    """Lines by the full decorated sort on (round(yt, 2), round(x, 2),
+    seq): the reference order every other path must reproduce."""
     items = sorted(
         [(round((yt := page_h - g.y), 2), round(g.x, 2), g.seq, yt, g)
-         for g in vis]  # listcomp: sorted() materializes anyway, ~10% faster
+         for g in vis]
     )
     lines: List[List[Tuple[float, int, Glyph]]] = []
     anchors: List[float] = []
@@ -109,49 +133,107 @@ def build_lines(glyphs: Sequence[Glyph], page_h: float) -> List[Line]:
         else:
             lines.append([(x_r, seq, g)])
             anchors.append(yt)
-    out: List[Line] = []
+    out = []
     for triples in lines:
-        triples.sort()  # (x_r, seq) — same order as re-decorating would give
-        group = [t[2] for t in triples]
-        sizes = [g.size for g in group if g.size > 0]
-        gsize = _median(sizes, med_size)
-        # split a y-cluster on big horizontal jumps (column gutters / cells)
-        # so the XY-cut can reorder the segments (SURVEY.md K3)
-        split_gap = max(2.2 * gsize, 14.0)
-        segments: List[List[Glyph]] = [[group[0]]]
-        prev_end = group[0].x + group[0].adv  # adv >= 0 by construction
-        for g in group[1:]:
-            if g.x - prev_end > split_gap:
-                segments.append([g])
-            else:
-                segments[-1].append(g)
-            end = g.x + g.adv
-            if end > prev_end:
-                prev_end = end
-        for seg in segments:
-            parts: List[str] = []
-            prev_end = None
-            word_gap = 0.28 * (gsize if gsize > 1.0 else 1.0)
-            for g in seg:
-                if prev_end is not None:
-                    gap = g.x - prev_end
-                    if gap > word_gap and parts and not parts[-1].endswith(" "):
-                        # only synthesize a space between latin-ish
-                        # fragments; CJK never gets synthetic spaces
-                        prev_ch = parts[-1][-1]
-                        if prev_ch.isascii() and g.text[:1].isascii():
-                            parts.append(" ")
-                parts.append(g.text)
-                prev_end = g.x + g.adv
-            text = "".join(parts).strip()
-            if not text:
-                continue
-            x0 = min(g.x for g in seg)
-            x1 = max(g.x + g.adv for g in seg)
-            yts = [page_h - g.y for g in seg]
-            base = _median(yts, 0.0)
-            out.append(Line(text, x0, base - gsize, x1, base, gsize))
+        triples.sort()
+        out.append(([t[2] for t in triples], None))
     return out
+
+
+def _x_order(gs: List[Glyph]) -> List[Glyph]:
+    """Glyphs with distinct seqs → (round(x, 2), seq) order.
+
+    ``round`` is monotone, so glyphs that round alike are contiguous in a
+    stable sort on raw x, and that sort has the wanted order unless seq
+    drops inside such a run — which shows as a drop between neighbours.
+    Only those drops are rounded; a real one takes the decorated sort.
+    Glyphs of one baseline arrive in seq order, so exact-x ties are
+    already right."""
+    srt = sorted(gs, key=_X)
+    seqs = list(map(_SEQ, srt))
+    for i in compress(count(1), map(gt, seqs, islice(seqs, 1, None))):
+        if round(srt[i - 1].x, 2) == round(srt[i].x, 2):
+            return sorted(gs, key=_xr_seq)
+    return srt
+
+
+def _baseline_lines(vis, page_h, tol):
+    """Lines without a per-glyph round or decorated sort, for glyphs in
+    strictly increasing seq order.  Glyphs group by exact baseline (a
+    stable sort keeps each baseline in emission order), each baseline is
+    rounded once, and a baseline joins or starts a line as a whole,
+    exactly as its glyphs would one by one.  Returns None where that
+    does not hold: a NaN coordinate or an infinite baseline (floats stop
+    being an order), or two baselines that round alike (their glyphs
+    interleave by x in the decorated sort)."""
+    x_sum = sum(map(_X, vis))
+    if x_sum != x_sum:  # a NaN x (or inf - inf) somewhere
+        return None
+    lines: List[List] = []  # [glyphs, baseline yt or None when mixed]
+    anchor = last_ytr = None
+    for y, grp in groupby(sorted(vis, key=_Y, reverse=True), _Y):
+        yt = page_h - y
+        ytr = round(yt, 2)
+        if not isfinite(yt) or ytr == last_ytr:
+            return None
+        last_ytr = ytr
+        if lines and abs(yt - anchor) <= tol:
+            lines[-1][0].extend(grp)
+            lines[-1][1] = None
+        else:
+            lines.append([list(grp), yt])
+            anchor = yt
+    return [(_x_order(gs), yt) for gs, yt in lines]
+
+
+def _split_line(out: List[Line], group: List[Glyph], yt, page_h: float,
+                med_size: float) -> None:
+    """Emit one clustered line (glyphs in reading order) as Line
+    segments: a big horizontal jump (column gutter / table cell) splits
+    it so the XY-cut can reorder the segments (SURVEY.md K3), and inside
+    a segment a word gap between latin-ish fragments gets a space (CJK
+    never gets synthetic spaces).  ``yt`` is the line's one baseline, or
+    None when its glyphs sit on several."""
+    sizes = [g.size for g in group if g.size > 0]
+    gsize = _median(sizes, med_size)
+    split_gap = max(2.2 * gsize, 14.0)
+    word_gap = 0.28 * (gsize if gsize > 1.0 else 1.0)
+    g0 = group[0]
+    parts = [g0.text]
+    x0 = g0.x
+    x1 = reach = prev_end = x0 + g0.adv  # reach: max end so far on the line
+    lo = 0
+    for i in range(1, len(group)):
+        text, x, _y, adv = group[i][:4]
+        end = x + adv
+        if x - reach > split_gap:
+            _emit_segment(out, parts, x0, x1, group[lo:i], yt, page_h, gsize)
+            parts = [text]
+            x0, x1, lo = x, end, i
+        else:
+            if x - prev_end > word_gap:
+                prev = parts[-1]
+                if not prev.endswith(" ") and prev[-1].isascii() \
+                        and text[:1].isascii():
+                    parts.append(" ")
+            parts.append(text)
+            if x < x0:
+                x0 = x
+            if end > x1:
+                x1 = end
+        if end > reach:
+            reach = end
+        prev_end = end
+    _emit_segment(out, parts, x0, x1, group[lo:], yt, page_h, gsize)
+
+
+def _emit_segment(out, parts, x0, x1, seg, yt, page_h, gsize):
+    text = "".join(parts).strip()
+    if not text:
+        return
+    if yt is None:  # the segment's median baseline
+        yt = _median([page_h - g.y for g in seg], 0.0)
+    out.append(Line(text, x0, yt - gsize, x1, yt, gsize))
 
 
 # -- XY-cut reading order -----------------------------------------------------

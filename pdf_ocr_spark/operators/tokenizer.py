@@ -204,7 +204,7 @@ def _encode_rows(segment):
     space = re.compile(r"\s+")
     cache: dict = {}
 
-    def rows(ids, texts):
+    def encode_rows(ids, texts):
         out = []
         for doc_id, text in zip(ids, texts):
             toks: List[str] = []
@@ -217,7 +217,7 @@ def _encode_rows(segment):
             out.append((doc_id, len(toks), " ".join(toks)))
         return out
 
-    return rows
+    return encode_rows
 
 
 def _encode_docs(

@@ -186,7 +186,8 @@ def _record_batch(rows: list, arrow_schema):
 def arrow_map(rows_fn, schema: StructType):
     """The one Arrow adapter: wraps a rows function — one plain list per
     input column in, row tuples out — as a ``mapInArrow`` body whose
-    output types come from ``to_arrow_schema(schema)``.  No pandas layer
+    output types come from ``to_arrow_schema(schema)`` and whose name is
+    the rows function's (the plan label).  No pandas layer
     appears in the worker (the pandas adapter it replaced measured 10–18%
     lower pipeline throughput at 8/32 cores on the synthetic corpus).
     Each task calls :func:`_tune_worker` first; without its zip-cache
@@ -202,7 +203,7 @@ def arrow_map(rows_fn, schema: StructType):
                 rows_fn(*(c.to_pylist() for c in rb.columns)), arrow_schema
             )
 
-    return run
+    return _named_after(run, rows_fn)
 
 
 def group_map(row_fn, schema: StructType):
@@ -218,7 +219,15 @@ def group_map(row_fn, schema: StructType):
         row = row_fn(table.to_pydict())
         return pa.Table.from_batches([_record_batch([row], to_arrow_schema(schema))])
 
-    return run
+    return _named_after(run, row_fn)
+
+
+def _named_after(body, fn):
+    """Give a Python stage's body its rows function's name: Spark labels
+    the plan node with the body's ``__name__`` (``MapInArrow
+    doc_rows(url, html)``), so a plan says which rows function runs."""
+    body.__name__ = body.__qualname__ = fn.__name__
+    return body
 
 
 def per_doc(gate: Optional[str] = None):

@@ -27,6 +27,7 @@ a record cut short is dropped, never yielded with a partial body.
 
 from __future__ import annotations
 
+import functools
 import zlib
 from datetime import datetime, timezone
 from typing import Iterator, List, Optional, Tuple
@@ -188,6 +189,7 @@ def _map_archives(archives, rows_of, ddl: str, poison=()):
 
     from pdf_ocr_spark.pipeline.extract_job import arrow_map
 
+    @functools.wraps(rows_of)
     def rows_fn(blobs, *passthrough):
         out: List[tuple] = []
         for blob, *extra in zip(blobs, *passthrough):
@@ -350,7 +352,11 @@ def _write_partitions(pages, write, ddl: str):
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructType
 
-    from pdf_ocr_spark.pipeline.extract_job import _record_batch, _tune_worker
+    from pdf_ocr_spark.pipeline.extract_job import (
+        _named_after,
+        _record_batch,
+        _tune_worker,
+    )
 
     schema = StructType.fromDDL(ddl)
 
@@ -363,7 +369,7 @@ def _write_partitions(pages, write, ddl: str):
         )
         yield _record_batch([write(rows)], to_arrow_schema(schema))
 
-    return pages.mapInArrow(run, schema)
+    return pages.mapInArrow(_named_after(run, write), schema)
 
 
 def pages_to_warc(pages):
@@ -815,9 +821,10 @@ def _write_revisits(rows) -> Tuple[int, int, bytes]:
 def pages_to_warc_deduped(pages):
     """Pages → WARC archives with payload-level dedup AT THE SINK: the
     first capture of each distinct payload (earliest warc_ts, url as a
-    total tie-break) stores the full ``response`` record; every later
-    identical-payload capture stores a ``revisit`` record pointing at
-    it.  Digest = sha256 over the raw body, computed JVM-side.
+    total tie-break, among rows with a url) stores the full ``response``
+    record; every later identical-payload capture stores a ``revisit``
+    record pointing at it.  Digest = sha256 over the raw body, computed
+    JVM-side.
 
     Scale shape: ONE groupBy on the digest (map-side combined min
     struct — only (digest, ts, url) shuffle, never bodies) + one
@@ -830,7 +837,8 @@ def pages_to_warc_deduped(pages):
     keyed = pages.select("url", "warc_ts", "html").withColumn(
         "_digest", F.sha2(F.col("html"), 256)
     )
-    keepers = keyed.groupBy("_digest").agg(
+    # a row without a url writes no record, so it can keep nothing
+    keepers = keyed.where(F.col("url").isNotNull()).groupBy("_digest").agg(
         F.min(F.struct("warc_ts", "url")).alias("_k")
     )
     marked = keyed.join(keepers, "_digest").select(

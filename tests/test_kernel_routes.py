@@ -412,3 +412,31 @@ def test_null_text_encodes_like_the_empty_string_in_every_encoder(spark):
         rows = {r["doc_id"]: (r["n_tokens"], r["tokens"]) for r in encode(docs).collect()}
         assert rows[2] == rows[3] == (0, ""), name
         assert rows[1][0] > 0, name
+
+
+def test_plan_labels_each_python_stage_with_its_rows_function(spark):
+    """A plan names the rows function each Python stage runs, not the
+    adapter's closure: the fused route reads ``doc_rows(``, a side route
+    its own rows function, the giant-document merge its row function."""
+    from pdf_ocr_spark.pipeline.extract_job import (
+        extract_documents,
+        extract_documents_split,
+        extract_html_tables,
+    )
+
+    pages = spark.createDataFrame(
+        [("https://p.test/1", b"<table><tr><td>a</td><td>1</td></tr></table>")],
+        "url string, html binary",
+    )
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    fused = plan(extract_documents(pages))
+    assert "MapInArrow doc_rows(" in fused, fused
+    assert "run(" not in fused, fused
+    tables = plan(extract_html_tables(pages))
+    assert "MapInArrow html_table_rows(" in tables, tables
+    split = plan(extract_documents_split(pages, giant_bytes=1))
+    assert "page_count_rows(" in split and "_merged_doc_row(" in split, split
+    assert "run(" not in split, split

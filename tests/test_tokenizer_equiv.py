@@ -1,9 +1,10 @@
 """Equivalence fuzz for the content-stream tokenizer's fused fast
 paths.
 
-``_tokenize_content`` special-cases the two dominant per-glyph token
-sequences — ``<hex> Tj`` and ``tx ty Td/TD`` — as single fused regex
-alternatives (one match + dispatch each).  A missed edge there would
+``_tokenize_content`` special-cases the dominant per-glyph token
+sequences — a run of ``<hex> Tj tx ty Td/TD`` glyph steps, and ``<hex>
+Tj`` and ``tx ty Td/TD`` alone — as fused regex alternatives (one match
++ dispatch each).  A missed edge there would
 silently reorder/drop operands and corrupt extracted text, so this
 module pins the fused tokenizer against REFERENCE_TOKENIZE, a slow,
 obviously-correct reimplementation of the general one-token-at-a-time
@@ -15,7 +16,7 @@ import zlib
 
 from hypothesis import given, settings, strategies as st
 
-from pdf_ocr_spark.kernels.pdf.content import _tokenize_content
+from pdf_ocr_spark.kernels.pdf.content import _GLYPH_RUN, _tokenize_content
 from pdf_ocr_spark.kernels.pdf.cos import Lexer, Name, PDFError
 
 # -- reference implementation (general grammar only, no fused paths) --------
@@ -152,16 +153,19 @@ def reference_tokenize(data):
 
 
 def _expand_fused(toks):
-    """Expand the whole-glyph-step fused tokens back into the unfused
-    (Tj, Td/TD) pair they are defined to be equivalent to: the show
-    string plus any stray leading operands go to the Tj, the two
-    trailing numbers to the Td/TD — exactly how ``_execute`` consumes
-    them."""
+    """Expand the glyph-run tokens back into the unfused (Tj, Td/TD)
+    pairs they are defined to be equivalent to: any stray leading
+    operands go to the first Tj, then each step is its show string for
+    the Tj and its two numbers for the Td/TD — exactly how ``_execute``
+    consumes them."""
     out = []
     for o, op in toks:
-        if op in (b"TjTD", b"TjTd") and len(o) >= 3:
-            out.append((o[:-2], b"Tj"))
-            out.append((o[-2:], b"TD" if op == b"TjTD" else b"Td"))
+        if op == _GLYPH_RUN:
+            stray = o[:-1]
+            for hb, tx, ty, is_td in o[-1]:
+                out.append((stray + [hb], b"Tj"))
+                out.append(([tx, ty], b"TD" if is_td else b"Td"))
+                stray = []
         else:
             out.append((o, op))
     return out

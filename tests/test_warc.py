@@ -514,6 +514,24 @@ def test_revisit_sink_deterministic_bytes(spark):
     assert a == b
 
 
+
+def test_revisit_sink_keeper_is_never_a_row_without_url(spark):
+    """A NULL-url row writes no record, so it cannot keep a payload: an
+    identical later capture with a url stores the full response, and no
+    record refers to a 'None' target."""
+    from pdf_ocr_spark.sources.warc import pages_to_warc_deduped, revisit_rows
+
+    pages = spark.createDataFrame(
+        [(None, "2025-01-01", bytearray(b"<p>same</p>")),
+         ("https://d.test/a", "2025-01-02", bytearray(b"<p>same</p>"))],
+        "url string, d string, html binary",
+    ).selectExpr("url", "to_timestamp(d) AS warc_ts", "html")
+    arch = pages_to_warc_deduped(pages.repartition(1)).collect()
+    parsed = [r for a in arch for r in revisit_rows(bytes(a["warc"]))]
+    assert [(r[0], r[1]) for r in parsed] == [("response", "https://d.test/a")]
+    assert all(r[4] != "None" for r in parsed)
+    assert sum(a["n_revisit"] for a in arch) == 0
+
 def test_x_robots_tag_header_channel(spark):
     """X-Robots-Tag written into the response envelope reads back via
     http_header_records; the agent-prefix strip never eats the
