@@ -13,15 +13,26 @@ for the OCR branch.
 from __future__ import annotations
 
 import re
-from typing import Any, Dict, List, NamedTuple, Optional, Sequence, Tuple
+from array import array
+from bisect import bisect_right
+from itertools import accumulate
+from typing import Any, Callable, Dict, List, NamedTuple, Optional, Sequence, Tuple
 
 from pdf_ocr_spark.kernels.pdf.cos import (
-    Lexer,
+    HEX,
+    NUM,
+    REGULAR,
+    WS,
     Name,
     PDFDocument,
     PDFError,
-    Ref,
+    PDFNestingError,
     Stream,
+    decode_hex,
+    decode_number,
+    literal_string,
+    parse_name,
+    parse_object,
 )
 from pdf_ocr_spark.kernels.pdf.fonts import Font, load_page_fonts
 
@@ -174,7 +185,7 @@ def inline_image_payload(doc: PDFDocument, dict_bytes: bytes, payload: bytes) ->
     parse/decode failure falls back to the raw payload (the
     pre-existing opaque path)."""
     try:
-        d = Lexer(b"<<" + dict_bytes + b">>").parse_object()
+        d, _ = parse_object(b"<<" + dict_bytes + b">>")
         if not isinstance(d, dict):
             return payload
         full: Dict[str, Any] = {}
@@ -289,22 +300,19 @@ class _TextState:
         return t
 
 
-# one-pass scanner for content streams: unlike general COS, content has no
-# indirect refs, so numbers need no "<n> <g> R" lookahead — this regex
-# replaces the char-at-a-time Lexer on the hot path (~45% of kernel time)
-_WS = rb"[\x00\t\n\x0c\r ]"
-_NUM = rb"[+-]?(?:\d+(?:\.\d*)?|\.\d+)"
+# One-pass scanner for content streams.  Its general alternatives are the
+# COS token grammar of cos.py, without the "<n> <g> R" lookahead: content
+# has no indirect refs.  Strings, dicts and '#' names decode through cos.
 _END = rb"(?![A-Za-z0-9*'\"])"  # token boundary after an operator
 # one glyph step: "<hex> Tj tx ty Td/TD"
-_STEP = rb"<[0-9A-Fa-f]*>" + _WS + rb"*Tj" + _WS + rb"+" + _NUM + _WS + rb"+" \
-    + _NUM + _WS + rb"+T[Dd]" + _END
+_STEP = rb"<[" + HEX + rb"]*>" + WS + rb"*Tj" + WS + rb"+" + NUM + WS + rb"+" \
+    + NUM + WS + rb"+T[Dd]" + _END
 _CONTENT_TOK = re.compile(
-    rb"(?P<run>(?:" + _STEP + _WS + rb"*)+)"
-    rb"|(?P<showtj><[0-9A-Fa-f]*>" + _WS + rb"*Tj" + _END + rb")"
-    rb"|(?P<tdxy>(?P<tdx>" + _NUM + rb")" + _WS + rb"+(?P<tdy>" + _NUM + rb")"
-    + _WS + rb"+T[Dd]" + _END + rb")"
-    rb"|(?P<num>" + _NUM + rb")"
-    rb"|(?P<name>/[^\x00\t\n\x0c\r /<>()\[\]{}%]*)"
+    rb"(?P<run>(?:" + _STEP + WS + rb"*)+)"
+    rb"|(?P<tdxy>(?P<tdx>" + NUM + rb")" + WS + rb"+(?P<tdy>" + NUM + rb")"
+    + WS + rb"+T[Dd]" + _END + rb")"
+    rb"|(?P<num>" + NUM + rb")"
+    rb"|(?P<name>/" + REGULAR + rb"*)"
     rb"|(?P<ddict><<)"
     rb"|(?P<hex><[^>]*>?)"
     rb"|(?P<open>\[)"
@@ -317,63 +325,67 @@ _CONTENT_TOK = re.compile(
 # ``_STEP`` captures nothing: captures inside the repeated run cost ~13%
 # of the time to tokenize a glyph-CID stream
 _RUN_STEPS = re.compile(
-    rb"<([0-9A-Fa-f]*)>" + _WS + rb"*Tj" + _WS + rb"+(" + _NUM + rb")" + _WS
-    + rb"+(" + _NUM + rb")" + _WS + rb"+T([Dd])"
+    rb"<([" + HEX + rb"]*)>" + WS + rb"*Tj" + WS + rb"+(" + NUM + rb")" + WS
+    + rb"+(" + NUM + rb")" + WS + rb"+T([Dd])"
 ).findall
-# The fused fast paths above collapse the dominant per-glyph token
+# The two fused fast paths above collapse the dominant per-glyph token
 # sequences.  ``run`` takes a whole run of glyph steps "<CID> Tj tx ty
 # Td/TD" (per-glyph CID streams are nothing else between BT and ET) as
 # ONE token: the tokenizer yields it once, as the synthetic operator
 # ``_GLYPH_RUN`` whose last operand is the list of (show bytes, tx, ty,
 # is TD) steps, and ``_execute`` shows and advances every step in one
-# branch.  "<CID> Tj" and "tx ty Td/TD" alone (WPS-style streams emit
-# both once PER GLYPH) stay single fused tokens.  They only fire on
-# byte-clean shapes (pure hex, strict numbers, token boundary after the
-# operator), everything else falls through to the general alternatives
-# with identical semantics — a comment or any other token between steps
-# ends the run.  Fusing Tj with the FOLLOWING Td/TD is exact: Td rebuilds
-# the text matrix from the line matrix, so the show advance the
-# standalone Tj would have returned is provably discarded.
+# branch.  "tx ty Td/TD" alone (WPS-style streams emit it once PER
+# GLYPH) stays one fused token.  They only fire on byte-clean shapes
+# (pure hex, strict numbers, token boundary after the operator),
+# everything else falls through to the general alternatives with
+# identical semantics — a comment or any other token between steps ends
+# the run.  Fusing Tj with the FOLLOWING Td/TD is exact: Td rebuilds the
+# text matrix from the line matrix, so the show advance the standalone Tj
+# would have returned is provably discarded.
 _GLYPH_RUN = b"__glyph_run__"
-_TOK_RUN = _CONTENT_TOK.groupindex["run"]  # lastindex when a run fires
-_TOK_SHOWTJ = _CONTENT_TOK.groupindex["showtj"]  # lastindex when showtj fires
-# lastindex reports the group that CLOSED last — for nested groups that
-# is the OUTER one (verified: b"12.5 0 TD" → lastindex == tdxy, not tdy)
-_TOK_TDXY = _CONTENT_TOK.groupindex["tdxy"]      # lastindex when tdxy fires
-_TOK_TDX = _CONTENT_TOK.groupindex["tdx"]
-_TOK_TDY = _CONTENT_TOK.groupindex["tdy"]
-_TOK_NUM = _CONTENT_TOK.groupindex["num"]
-_TOK_NAME = _CONTENT_TOK.groupindex["name"]
-_TOK_HEX = _CONTENT_TOK.groupindex["hex"]
-_TOK_OPEN = _CONTENT_TOK.groupindex["open"]
-_TOK_CLOSE = _CONTENT_TOK.groupindex["close"]
-_TOK_LIT = _CONTENT_TOK.groupindex["lit"]
-_TOK_OP = _CONTENT_TOK.groupindex["op"]
-_TOK_COMMENT = _CONTENT_TOK.groupindex["comment"]
-_NONHEX = re.compile(rb"[^0-9A-Fa-f]")
+# the group indices ``m.lastindex`` reports: the group that CLOSED last,
+# for nested groups the OUTER one (b"12.5 0 TD" → tdxy, not tdy)
+(_TOK_RUN, _TOK_TDXY, _TOK_TDX, _TOK_TDY, _TOK_NUM, _TOK_NAME, _TOK_HEX,
+ _TOK_OPEN, _TOK_CLOSE, _TOK_LIT, _TOK_OP, _TOK_COMMENT) = (
+    _CONTENT_TOK.groupindex[k] for k in (
+        "run", "tdxy", "tdx", "tdy", "num", "name", "hex", "open", "close",
+        "lit", "op", "comment"))
+# what moves a literal string's paren depth: an escape pair (which moves
+# nothing), '(' (group 1) or ')' (group 2)
+_PAREN_STEP = re.compile(rb"\\.|(\()|(\))", re.S)
+
+
+def _later_strings_close(data: bytes, q: int) -> Callable[[int], bool]:
+    """Given that the literal string opened at ``q`` runs unterminated to
+    the end of ``data``: a test of whether one opened at a later '(' closes.
+
+    After that '(' both scans read the same bytes the same way (a '(' is
+    never inside an octal or line-continuation escape), so the later
+    string closes exactly where q's paren depth first falls below its
+    depth just after that '(': a suffix minimum, no rescan."""
+    where = array("q")  # the offset of each paren that moves the depth
+    depth = array("q", [1])  # depth[i]: the depth before paren i
+    for m in _PAREN_STEP.finditer(data, q + 1):
+        if m.lastindex:
+            where.append(m.start())
+            depth.append(depth[-1] + 3 - 2 * m.lastindex)
+    lowest = array("q", accumulate(reversed(depth), min))
+    lowest.reverse()  # lowest[i]: the lowest depth from depth[i] on
+
+    def closes(q2: int) -> bool:
+        i = bisect_right(where, q2)
+        return i < len(where) and lowest[i + 1] < depth[i]
+
+    return closes
 
 
 # the ID token that separates an inline image's dict from its binary
 # payload; one whitespace byte after it belongs to the delimiter
-_INLINE_ID_RE = re.compile(rb"(?<![A-Za-z0-9])ID[\x00\t\n\x0c\r ]")
+_INLINE_ID_RE = re.compile(rb"(?<![A-Za-z0-9])ID" + WS)
+# the EI that ends an inline image: whitespace (or nothing) before it,
+# and whitespace, / [ < ( or nothing after it
+_INLINE_EI_RE = re.compile(rb"(?<![^\x00\t\n\x0c\r ])EI(?![^\x00\t\n\x0c\r /\[<(])")
 WS_BYTES = frozenset(b"\x00\t\n\x0c\r ")
-
-
-def _skip_inline_image(data: bytes, pos: int) -> int:
-    """Skip past an inline image: find EI at a token boundary."""
-    n = len(data)
-    idx = pos
-    while True:
-        idx = data.find(b"EI", idx)
-        if idx < 0:
-            return n
-        before = data[idx - 1 : idx]
-        after = data[idx + 2 : idx + 3]
-        if (not before or before in b"\x00\t\n\x0c\r ") and (
-            not after or after in b"\x00\t\n\x0c\r /[<("
-        ):
-            return idx + 2
-        idx += 2
 
 
 def _tokenize_content(data: bytes):
@@ -391,7 +403,6 @@ def _tokenize_content(data: bytes):
     order) and numeric tokens are memoized per stream: glyph advances /
     positions draw from a small repeating set (font widths × a size), so
     the common number is one dict hit — no parse, no new float."""
-    lex = Lexer(data, 0)  # reused only for strings/dicts (escape handling)
     hex_cache: Dict[bytes, bytes] = {}  # per-glyph CID strings repeat constantly
     num_cache: Dict[bytes, Any] = {}
     # a glyph step's bytes → its (show bytes, tx, ty, is TD): steps repeat
@@ -404,6 +415,8 @@ def _tokenize_content(data: bytes):
     cur = operands
     stack: List[List[Any]] = []  # array nesting (TJ)
     search = _CONTENT_TOK.search
+    # set once a literal string runs unterminated: judges later ones
+    closes: Optional[Callable[[int], bool]] = None
     while pos < n:
         m = search(data, pos)  # C-level skip of whitespace (and junk)
         if m is None:
@@ -418,15 +431,13 @@ def _tokenize_content(data: bytes):
                         hx, sx, sy, d = key = found[i]
                         hb = hex_cache.get(hx)
                         if hb is None:
-                            hb = hex_cache[hx] = bytes.fromhex(
-                                (hx + b"0" if len(hx) % 2 else hx).decode("ascii")
-                            )
+                            hb = hex_cache[hx] = decode_hex(hx)
                         vx = num_cache.get(sx)
                         if vx is None:
-                            vx = num_cache[sx] = float(sx) if b"." in sx else int(sx)
+                            vx = num_cache[sx] = decode_number(sx)
                         vy = num_cache.get(sy)
                         if vy is None:
-                            vy = num_cache[sy] = float(sy) if b"." in sy else int(sy)
+                            vy = num_cache[sy] = decode_number(sy)
                         steps[i] = step_cache[key] = (hb, vx, vy, d == b"D")
             pos = m.end()
             if stack:
@@ -453,32 +464,16 @@ def _tokenize_content(data: bytes):
             yield operands, _GLYPH_RUN
             operands.clear()
             cur = operands
-        elif g == _TOK_SHOWTJ:  # fused "<hex> Tj" — one dispatch per glyph
-            body = m.group()
-            hb = hex_cache.get(body)
-            if hb is None:
-                hx = body[1 : body.index(b">")]
-                if len(hx) % 2:
-                    hx += b"0"
-                hb = hex_cache[body] = bytes.fromhex(hx.decode("ascii"))
-            cur.append(hb)
-            if stack:  # operator inside an unterminated array: recover
-                stack = []
-                cur = operands
-            yield operands, b"Tj"
-            operands.clear()
-            cur = operands
-            pos = m.end()
         elif g == _TOK_TDXY:  # fused "tx ty Td/TD"
             tok = m.group(_TOK_TDX)
             v = num_cache.get(tok)
             if v is None:
-                v = num_cache[tok] = float(tok) if b"." in tok else int(tok)
+                v = num_cache[tok] = decode_number(tok)
             cur.append(v)
             tok = m.group(_TOK_TDY)
             v = num_cache.get(tok)
             if v is None:
-                v = num_cache[tok] = float(tok) if b"." in tok else int(tok)
+                v = num_cache[tok] = decode_number(tok)
             cur.append(v)
             if stack:
                 stack = []
@@ -496,14 +491,15 @@ def _tokenize_content(data: bytes):
             tok = m.group()
             v = num_cache.get(tok)
             if v is None:
-                v = num_cache[tok] = float(tok) if b"." in tok else int(tok)
+                v = num_cache[tok] = decode_number(tok)
             cur.append(v)
             pos = m.end()
         elif g == _TOK_OP:  # operator
             op = m.group()
             pos = m.end()
             if op == b"BI":
-                end = _skip_inline_image(data, pos)
+                ei = _INLINE_EI_RE.search(data, pos)
+                end = ei.end() if ei else n
                 # capture the payload between the ID token and EI and
                 # emit it as a synthetic operator: scanner PDFs that
                 # embed the page scan as an INLINE image (not an
@@ -537,12 +533,8 @@ def _tokenize_content(data: bytes):
         elif g == _TOK_NAME:
             tok = m.group()[1:]
             if b"#" in tok:  # rare '#xx' escapes → slow path
-                lex.pos = m.start()
-                try:
-                    cur.append(lex.parse_object())
-                    pos = lex.pos
-                except PDFError:
-                    pos = m.end()
+                v, pos = parse_name(data, m.start() + 1)
+                cur.append(v)
             else:
                 cur.append(Name(tok.decode("utf-8", "replace")))
                 pos = m.end()
@@ -550,11 +542,9 @@ def _tokenize_content(data: bytes):
             body = m.group()
             hb = hex_cache.get(body)
             if hb is None:
-                raw = body[1:-1] if body.endswith(b">") else body[1:]
-                hx = _NONHEX.sub(b"", raw)
-                if len(hx) % 2:
-                    hx += b"0"
-                hb = hex_cache[body] = bytes.fromhex(hx.decode("ascii"))
+                hb = hex_cache[body] = decode_hex(
+                    body[1:-1] if body.endswith(b">") else body[1:]
+                )
             cur.append(hb)
             pos = m.end()
         elif g == _TOK_OPEN:  # [
@@ -567,23 +557,29 @@ def _tokenize_content(data: bytes):
             cur = stack.pop() if stack else operands
             pos = m.end()
         elif g == _TOK_LIT:  # ( literal string
-            lex.pos = m.start()
-            try:
-                cur.append(lex._parse_literal_string())
-                pos = lex.pos
-            except PDFError:
-                # advance past the failed '(' itself — resuming from the
-                # pre-whitespace scan position would re-attempt the same
-                # failing parse once per leading-whitespace byte
-                pos = m.start() + 1
-                operands = []
-                cur = operands
-                stack = []
+            q = m.start()
+            if closes is None or closes(q):
+                try:
+                    v, pos = literal_string(data, q)
+                    cur.append(v)
+                    continue
+                except PDFError:
+                    # every later '(' would rescan to the end of the
+                    # stream: judge them on this scan's paren depths
+                    closes = _later_strings_close(data, q)
+            # advance past the failed '(' itself — resuming from the
+            # pre-whitespace scan position would re-attempt the same
+            # failing parse once per leading-whitespace byte
+            pos = q + 1
+            operands = []
+            cur = operands
+            stack = []
         else:  # ddict — rare in content (gs/BDC property lists)
-            lex.pos = m.start()
             try:
-                cur.append(lex.parse_object())
-                pos = lex.pos
+                v, pos = parse_object(data, m.start())
+                cur.append(v)
+            except PDFNestingError as e:
+                pos = e.pos  # resume after the levels already parsed
             except PDFError:
                 pos = m.end()
 

@@ -22,11 +22,13 @@ import re
 import zlib
 from typing import Any, Dict, List, Optional, Tuple
 
-WHITESPACE = b"\x00\t\n\x0c\r "
-DELIMITERS = b"()<>[]{}/%"
-_END_TOKEN = WHITESPACE + DELIMITERS
+# The COS token grammar's pieces, declared once; the content-stream
+# tokenizer (content.py) builds its general alternatives from them too.
+WS = rb"[\x00\t\n\x0c\r ]"
+NUM = rb"[+-]?(?:\d+(?:\.\d*)?|\.\d+)"
+REGULAR = rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]"  # a name or keyword byte
+HEX = rb"0-9A-Fa-f"  # the hex digits, as the body of a character class
 
-_NUM_RE = re.compile(rb"[+-]?(?:\d+\.?\d*|\.\d+)")
 _OBJ_HEADER_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b")
 
 
@@ -102,11 +104,7 @@ def _apply_filter(name: str, data: bytes, parms: Any, doc: "PDFDocument") -> byt
                 raise PDFError(f"FlateDecode failed: {e}") from e
         return _apply_predictor(out, parms, doc)
     if name in ("ASCIIHexDecode", "AHx"):
-        body = data.split(b">")[0]
-        hexstr = re.sub(rb"[^0-9A-Fa-f]", b"", body)
-        if len(hexstr) % 2:
-            hexstr += b"0"
-        return bytes.fromhex(hexstr.decode("ascii"))
+        return decode_hex(data.split(b">")[0])
     if name in ("ASCII85Decode", "A85"):
         import base64
 
@@ -248,8 +246,203 @@ def _apply_predictor(data: bytes, parms: Any, doc: "PDFDocument") -> bytes:
     raise PDFError(f"unsupported predictor {pred}")
 
 
+# -- lexer ---------------------------------------------------------------------
+# One match of ``_TOKEN`` skips whitespace and comments and classifies the
+# next token; arrays and dicts nest on an explicit stack.
+
+_SKIP = rb"(?:" + WS + rb"|%[^\r\n]*)*+"  # a comment stops before its EOL
+# a whole number token with no '.' and a value >= 0 (``-0`` too): the
+# object number and the generation of an indirect reference
+_REF_INT = rb"(?:\+?\d++|-0++)(?![\d.])"
+_TOKEN = re.compile(
+    _SKIP + rb"(?:(?P<ref>(?P<obj>" + _REF_INT + rb")" + _SKIP + rb"(?P<gen>"
+    + _REF_INT + rb")" + _SKIP + rb"R(?!" + REGULAR + rb"))"
+    rb"|(?P<num>" + NUM + rb")|(?P<badnum>[+.-])"
+    rb"|(?P<name>/" + REGULAR + rb"*+)|(?P<dict><<)"
+    rb"|(?P<hex><(?P<digits>[^>]*+)>)|(?P<badhex><)"
+    rb"|(?P<lit>\()|(?P<array>\[)|(?P<close>\])"
+    rb"|(?P<kw>" + REGULAR + rb"*+))"  # empty at EOF and at ) > { }
+)
+_KEY = re.compile(_SKIP + rb"(?:(>>)|/(" + REGULAR + rb"*+))")  # in a dict
+_STREAM = re.compile(_SKIP + rb"stream(?:\r\n|[\r\n])?")
+_SKIP_RE = re.compile(_SKIP)
+_REGULAR_RUN = re.compile(REGULAR + rb"*+")
+_NONHEX = re.compile(rb"[^" + HEX + rb"]")
+_PLAIN_STRING = re.compile(rb"\(([^()\\]*+)\)")
+_STRING_SPECIAL = re.compile(rb"[()\\]")
+_OCTAL = re.compile(rb"[0-7]{1,3}")
+_KEYWORDS = {b"true": True, b"false": False, b"null": None}
+_ESCAPES = dict(zip(b"nrtbf()\\", b"\n\r\t\b\f()\\"))
+
+# the most arrays and dicts open at once: a recursive descent parser (two
+# frames a level) parses 499 under CPython's default recursion limit
+MAX_NESTING = 499
+
+
+class PDFNestingError(PDFError):
+    """Nesting deeper than ``MAX_NESTING``; ``pos`` is the offset of the
+    ``[`` or ``<<`` that opened one level too many."""
+
+    def __init__(self, pos: int):
+        super().__init__(f"objects nested deeper than {MAX_NESTING} at {pos}")
+        self.pos = pos
+
+
+def decode_number(tok: bytes) -> Any:
+    return float(tok) if b"." in tok else int(tok)
+
+
+def decode_hex(digits: bytes) -> bytes:
+    """Non-hex bytes are dropped; an odd digit count gets a final 0."""
+    hx = _NONHEX.sub(b"", digits)
+    if len(hx) % 2:
+        hx += b"0"
+    return bytes.fromhex(hx.decode("ascii"))
+
+
+def parse_name(buf: bytes, pos: int) -> Tuple[Name, int]:
+    """The name whose text starts at ``pos``, just after its '/': (Name,
+    end).  A '#' reads ``int(next two bytes, 16)`` whenever two bytes
+    follow it, so it can swallow a delimiter: ``/A# 1`` is ``A\\x01``."""
+    end = _REGULAR_RUN.match(buf, pos).end()
+    out = bytearray()
+    p = pos
+    h = buf.find(b"#", p, end)
+    while h >= 0:
+        out += buf[p:h]
+        p = h + 1
+        try:
+            if h + 2 >= len(buf):
+                raise ValueError
+            out.append(int(buf[h + 1 : h + 3], 16))
+            p = h + 3
+            end = max(end, _REGULAR_RUN.match(buf, p).end())
+        except ValueError:
+            out.append(0x23)
+        h = buf.find(b"#", p, end)
+    out += buf[p:end]
+    return Name(out.decode("utf-8", "replace")), end
+
+
+def literal_string(buf: bytes, pos: int) -> Tuple[bytes, int]:
+    """The literal string whose '(' is at ``pos``: (bytes, end).  Steps
+    from one '(', ')' or '\\' to the next, copying the runs between."""
+    m = _PLAIN_STRING.match(buf, pos)
+    if m is not None:
+        return m.group(1), m.end()
+    out = bytearray()
+    depth = 1
+    p = pos + 1
+    while True:
+        m = _STRING_SPECIAL.search(buf, p)
+        if m is None:
+            break
+        s = m.start()
+        out += buf[p:s]
+        c = buf[s]
+        p = s + 1
+        if c == 0x28:  # (
+            depth += 1
+            out.append(c)
+        elif c == 0x29:  # )
+            depth -= 1
+            if not depth:
+                return bytes(out), p
+            out.append(c)
+        elif p == len(buf):  # a backslash ends the buffer
+            break
+        else:
+            e = buf[p]
+            p += 1
+            if e in _ESCAPES:
+                out.append(_ESCAPES[e])
+            elif 0x30 <= e <= 0x37:  # up to 3 octal digits
+                o = _OCTAL.match(buf, s + 1)
+                out.append(int(o.group(), 8) & 0xFF)
+                p = o.end()
+            elif e == 13:  # line continuation: CR or CR LF
+                if buf[p : p + 1] == b"\n":
+                    p += 1
+            elif e != 10:  # line continuation: LF; else the byte itself
+                out.append(e)
+    raise PDFError("unterminated literal string")
+
+
+def parse_object(buf: bytes, pos: int = 0) -> Tuple[Any, int]:
+    """The object at ``pos``, after any whitespace and comments: (object,
+    end).  A dict followed by ``stream`` is the marker ``("__stream__",
+    dict, data offset)``, which the caller resolves."""
+    stack: List[Tuple[Any, Any]] = []  # enclosing (container, key) pairs
+    cont: Any = None  # the innermost open list or dict
+    key: Any = None  # the innermost dict's key awaiting its value
+    while True:
+        if key is None and cont.__class__ is dict:
+            m = _KEY.match(buf, pos)
+            if m is None:
+                end = _SKIP_RE.match(buf, pos).end()
+                raise PDFError(f"dict key must be a name at {end}")
+            pos = m.end()
+            if m.lastindex == 2:
+                key, pos = parse_name(buf, m.start(2))
+                key = str(key)
+                continue
+            obj = cont
+            s = _STREAM.match(buf, pos)
+            if s is not None:
+                pos = s.end()
+                obj = ("__stream__", cont, pos)
+            cont, key = stack.pop()
+        else:
+            m = _TOKEN.match(buf, pos)
+            g = m.lastgroup
+            pos = m.end()
+            if g == "num":
+                obj = decode_number(m.group(g))
+            elif g == "name":
+                obj, pos = parse_name(buf, m.start(g) + 1)
+            elif g == "ref":
+                obj = Ref(int(m.group("obj")), int(m.group("gen")))
+            elif g == "dict" or g == "array":
+                if len(stack) >= MAX_NESTING:
+                    raise PDFNestingError(m.start(g))
+                stack.append((cont, key))
+                cont, key = {} if g == "dict" else [], None
+                continue
+            elif g == "close":
+                if cont.__class__ is not list:
+                    raise PDFError("unexpected ']'")
+                obj = cont
+                cont, key = stack.pop()
+            elif g == "hex":
+                obj = decode_hex(m.group("digits"))
+            elif g == "lit":
+                obj, pos = literal_string(buf, m.start(g))
+            elif g == "kw":
+                obj = _KEYWORDS.get(m.group(g), PDFError)
+                if obj is PDFError:
+                    kw = m.group(g)
+                    if kw or pos < len(buf):
+                        raise PDFError(f"unexpected keyword {kw!r} at {pos}")
+                    if cont.__class__ is list:
+                        raise PDFError("unterminated array")
+                    raise PDFError("unexpected EOF while parsing object")
+            elif g == "badnum":
+                raise PDFError(f"bad number at {m.start(g)}")
+            else:
+                raise PDFError("unterminated hex string")
+        if cont is None:
+            return obj, pos
+        if key is None:
+            cont.append(obj)
+        else:
+            cont[key] = obj
+            key = None
+
+
+
 class Lexer:
-    """Tokenizer / object parser over a bytes buffer."""
+    """A cursor over a buffer: ``parse_object`` moves ``pos`` past the
+    object it parses."""
 
     __slots__ = ("buf", "pos")
 
@@ -257,219 +450,16 @@ class Lexer:
         self.buf = buf
         self.pos = pos
 
-    # -- low-level ---------------------------------------------------------
-
     def skip_ws(self) -> None:
-        buf, n = self.buf, len(self.buf)
-        while self.pos < n:
-            c = buf[self.pos]
-            if c in WHITESPACE:
-                self.pos += 1
-            elif c == 0x25:  # '%' comment → to end of line
-                while self.pos < n and buf[self.pos] not in (10, 13):
-                    self.pos += 1
-            else:
-                return
-
-    def peek(self) -> int:
-        return self.buf[self.pos] if self.pos < len(self.buf) else -1
-
-    def read_keyword(self) -> bytes:
-        start = self.pos
-        buf, n = self.buf, len(self.buf)
-        while self.pos < n and buf[self.pos] not in _END_TOKEN:
-            self.pos += 1
-        return buf[start : self.pos]
-
-    # -- object parsing ----------------------------------------------------
+        self.pos = _SKIP_RE.match(self.buf, self.pos).end()
 
     def parse_object(self) -> Any:
-        """Parse the next COS object at the current position."""
-        self.skip_ws()
-        c = self.peek()
-        if c < 0:
-            raise PDFError("unexpected EOF while parsing object")
-        ch = bytes((c,))
-        if ch == b"<":
-            if self.buf[self.pos : self.pos + 2] == b"<<":
-                return self._parse_dict_or_stream()
-            return self._parse_hex_string()
-        if ch == b"(":
-            return self._parse_literal_string()
-        if ch == b"/":
-            return self._parse_name()
-        if ch == b"[":
-            return self._parse_array()
-        if ch == b"]":
-            raise PDFError("unexpected ']'")
-        if ch.isdigit() or ch in (b"+", b"-", b"."):
-            return self._parse_number_or_ref()
-        kw = self.read_keyword()
-        if kw == b"true":
-            return True
-        if kw == b"false":
-            return False
-        if kw == b"null":
-            return None
-        raise PDFError(f"unexpected keyword {kw!r} at {self.pos}")
-
-    def _parse_number_or_ref(self) -> Any:
-        m = _NUM_RE.match(self.buf, self.pos)
-        if not m:
-            raise PDFError(f"bad number at {self.pos}")
-        self.pos = m.end()
-        tok = m.group()
-        if b"." in tok:
-            return float(tok)
-        num = int(tok)
-        # lookahead for "<num> <gen> R"
-        save = self.pos
-        self.skip_ws()
-        m2 = _NUM_RE.match(self.buf, self.pos)
-        if m2 and b"." not in m2.group() and int(m2.group()) >= 0 and num >= 0:
-            p2 = m2.end()
-            lex2 = Lexer(self.buf, p2)
-            lex2.skip_ws()
-            if lex2.peek() == 0x52:  # 'R'
-                after = lex2.pos + 1
-                if after >= len(self.buf) or self.buf[after] in _END_TOKEN:
-                    self.pos = after
-                    return Ref(num, int(m2.group()))
-        self.pos = save
-        return num
-
-    def _parse_name(self) -> Name:
-        assert self.buf[self.pos] == 0x2F
-        self.pos += 1
-        start = self.pos
-        buf, n = self.buf, len(self.buf)
-        out = bytearray()
-        while self.pos < n:
-            c = buf[self.pos]
-            if c in _END_TOKEN:
-                break
-            if c == 0x23 and self.pos + 2 < n:  # '#xx' escape
-                try:
-                    out.append(int(buf[self.pos + 1 : self.pos + 3], 16))
-                    self.pos += 3
-                    continue
-                except ValueError:
-                    pass
-            out.append(c)
-            self.pos += 1
-        if not out and start == self.pos:
-            return Name("")
-        return Name(out.decode("utf-8", "replace"))
+        obj, self.pos = parse_object(self.buf, self.pos)
+        return obj
 
     def _parse_literal_string(self) -> bytes:
-        assert self.buf[self.pos] == 0x28
-        self.pos += 1
-        buf, n = self.buf, len(self.buf)
-        out = bytearray()
-        depth = 1
-        while self.pos < n:
-            c = buf[self.pos]
-            if c == 0x5C:  # backslash escape
-                self.pos += 1
-                if self.pos >= n:
-                    break
-                e = buf[self.pos]
-                if e == 0x6E:
-                    out.append(10)
-                elif e == 0x72:
-                    out.append(13)
-                elif e == 0x74:
-                    out.append(9)
-                elif e == 0x62:
-                    out.append(8)
-                elif e == 0x66:
-                    out.append(12)
-                elif e in (0x28, 0x29, 0x5C):
-                    out.append(e)
-                elif 0x30 <= e <= 0x37:  # octal, up to 3 digits
-                    oct_digits = bytes((e,))
-                    for _ in range(2):
-                        if (
-                            self.pos + 1 < n
-                            and 0x30 <= buf[self.pos + 1] <= 0x37
-                        ):
-                            self.pos += 1
-                            oct_digits += bytes((buf[self.pos],))
-                        else:
-                            break
-                    out.append(int(oct_digits, 8) & 0xFF)
-                elif e in (10, 13):  # line continuation
-                    if e == 13 and self.pos + 1 < n and buf[self.pos + 1] == 10:
-                        self.pos += 1
-                else:
-                    out.append(e)
-                self.pos += 1
-            elif c == 0x28:
-                depth += 1
-                out.append(c)
-                self.pos += 1
-            elif c == 0x29:
-                depth -= 1
-                self.pos += 1
-                if depth == 0:
-                    return bytes(out)
-                out.append(c)
-            else:
-                out.append(c)
-                self.pos += 1
-        raise PDFError("unterminated literal string")
-
-    def _parse_hex_string(self) -> bytes:
-        assert self.buf[self.pos] == 0x3C
-        self.pos += 1
-        end = self.buf.find(b">", self.pos)
-        if end < 0:
-            raise PDFError("unterminated hex string")
-        hexstr = re.sub(rb"[^0-9A-Fa-f]", b"", self.buf[self.pos : end])
-        self.pos = end + 1
-        if len(hexstr) % 2:
-            hexstr += b"0"
-        return bytes.fromhex(hexstr.decode("ascii"))
-
-    def _parse_array(self) -> List[Any]:
-        assert self.buf[self.pos] == 0x5B
-        self.pos += 1
-        out: List[Any] = []
-        while True:
-            self.skip_ws()
-            if self.peek() == 0x5D:
-                self.pos += 1
-                return out
-            if self.peek() < 0:
-                raise PDFError("unterminated array")
-            out.append(self.parse_object())
-
-    def _parse_dict_or_stream(self) -> Any:
-        assert self.buf[self.pos : self.pos + 2] == b"<<"
-        self.pos += 2
-        d: Dict[str, Any] = {}
-        while True:
-            self.skip_ws()
-            if self.buf[self.pos : self.pos + 2] == b">>":
-                self.pos += 2
-                break
-            if self.peek() != 0x2F:
-                raise PDFError(f"dict key must be a name at {self.pos}")
-            key = self._parse_name()
-            val = self.parse_object()
-            d[str(key)] = val
-        # stream?
-        save = self.pos
-        self.skip_ws()
-        if self.buf[self.pos : self.pos + 6] == b"stream":
-            self.pos += 6
-            if self.buf[self.pos : self.pos + 2] == b"\r\n":
-                self.pos += 2
-            elif self.pos < len(self.buf) and self.buf[self.pos] in (10, 13):
-                self.pos += 1
-            return ("__stream__", d, self.pos)  # resolved by caller with doc
-        self.pos = save
-        return d
+        s, self.pos = literal_string(self.buf, self.pos)
+        return s
 
 
 class PDFDocument:
@@ -661,14 +651,7 @@ class PDFDocument:
         for m in _OBJ_HEADER_RE.finditer(self.data):
             # require the header to start at a token boundary
             s = m.start()
-            if s > 0 and self.data[s - 1 : s] not in (
-                b"\n",
-                b"\r",
-                b" ",
-                b"\t",
-                b"\x0c",
-                b"\x00",
-            ):
+            if s > 0 and self.data[s - 1] not in b"\x00\t\n\x0c\r ":
                 continue
             self.xref[int(m.group(1))] = ("n", s)
         if "Root" not in self.trailer:
@@ -779,9 +762,7 @@ class PDFDocument:
             header = Lexer(raw, 0)
             pairs = []
             for _ in range(n):
-                header.skip_ws()
                 onum = header.parse_object()
-                header.skip_ws()
                 ooff = header.parse_object()
                 pairs.append((int(onum), int(ooff)))
             table = {}

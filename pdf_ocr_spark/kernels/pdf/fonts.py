@@ -18,12 +18,12 @@ import re
 from typing import Any, Dict, List, Optional, Tuple
 
 from pdf_ocr_spark.kernels.pdf.cos import (
-    Lexer,
     Name,
     PDFDocument,
     PDFError,
     Ref,
     Stream,
+    decode_hex,
 )
 
 # WinAnsiEncoding codes that differ from Latin-1 (PDF 32000-1 Annex D.2).
@@ -94,12 +94,7 @@ def parse_tounicode(data: bytes) -> Dict[int, str]:
     for m in re.finditer(rb"beginbfchar(.*?)endbfchar", data, re.S):
         for pm in re.finditer(rb"<([0-9A-Fa-f]+)>\s*<([0-9A-Fa-f]*)>", m.group(1)):
             src = int(pm.group(1), 16)
-            dst = bytes.fromhex(
-                pm.group(2).decode("ascii")
-                if len(pm.group(2)) % 2 == 0
-                else pm.group(2).decode("ascii") + "0"
-            )
-            out[src] = _utf16(dst)
+            out[src] = _utf16(decode_hex(pm.group(2)))
     for m in re.finditer(rb"beginbfrange(.*?)endbfrange", data, re.S):
         body = m.group(1)
         # form 1: <lo> <hi> <dst>

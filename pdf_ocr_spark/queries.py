@@ -9486,10 +9486,12 @@ def q_tpch_q5ish(spark, sf_dir):
     """TPC-H Q5 shape — local-supplier volume: the 6-table join chain
     (region → nation → customer → orders → lineitem → supplier) with
     the Q5 twist that the SUPPLIER must sit in the CUSTOMER's nation
-    (two independent paths to nation meeting in one equality).  The
-    dimension chain (region/nation/customer is small) broadcasts; only
-    the orders⋈lineitem fact join shuffles — the join-ordering shape
-    Catalyst must get right at 100 TB.  Exact decimal revenue sums."""
+    (two independent paths to nation meeting in one equality).  Only
+    the fixed-size nation and region tables carry a broadcast hint:
+    customer and supplier grow with the scale factor, so their join
+    strategy is left to the planner and AQE (a forced broadcast of
+    either would not fit an executor at 100 TB).  Exact decimal
+    revenue sums."""
     region = _t(spark, sf_dir, "region")
     nation = _t(spark, sf_dir, "nation")
     cust = _t(spark, sf_dir, "customer")
@@ -9507,9 +9509,9 @@ def q_tpch_q5ish(spark, sf_dir):
     )
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(dims), orders.o_custkey == dims.c_custkey)
+        .join(dims, orders.o_custkey == dims.c_custkey)
         .join(
-            F.broadcast(sup),
+            sup,
             (li.l_suppkey == sup.s_suppkey)
             & (sup.s_nationkey == dims.c_nationkey),
         )
@@ -9540,8 +9542,9 @@ GROUP BY r_name, n_name
 def q_tpch_q14ish(spark, sf_dir):
     """TPC-H Q14 shape — promotion revenue share: conditional
     aggregation over the lineitem⋈part join (CASE inside the sum, the
-    filter-inside-aggregate idiom), one month of shipments.  Part
-    broadcasts; the ratio divides two exact decimal sums once."""
+    filter-inside-aggregate idiom), one month of shipments.  Part grows
+    with the scale factor, so its join strategy is left to the planner
+    and AQE; the ratio divides two exact decimal sums once."""
     part = _t(spark, sf_dir, "part")
     li = _t(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-03-01").cast("timestamp"))
@@ -9551,7 +9554,7 @@ def q_tpch_q14ish(spark, sf_dir):
     promo = F.when(
         F.col("p_type").startswith("PROMO"), rev
     ).otherwise(F.lit(0.0))
-    j = li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
+    j = li.join(part, li.l_partkey == part.p_partkey)
     agg = j.agg(
         _dec_sum(promo, 2).alias("promo_revenue"),
         _dec_sum(rev, 2).alias("total_revenue"),

@@ -1,9 +1,9 @@
 """The content interpreter's fused fast paths equal its general path.
 
 ``_tokenize_content`` fuses a run of ``<hex> Tj tx ty Td/TD`` glyph
-steps into one token that ``_execute`` shows in one branch, and ``<hex>
-Tj`` and ``tx ty Td/TD`` alone into one token each.  A ``%c`` comment
-between every two tokens defeats all three, so the same stream with
+steps into one token that ``_execute`` shows in one branch, and ``tx ty
+Td/TD`` alone into one token.  A ``%c`` comment between every two
+tokens defeats both, so the same stream with
 comments runs token by token through the general grammar and ``_show``.
 Both must give the same glyphs (seq included), ``n_text_ops`` and
 flow-direction votes — also when a run starts inside an unterminated

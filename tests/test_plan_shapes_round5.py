@@ -78,3 +78,23 @@ def test_tpch_q5ish_broadcasts_dimensions(spark):
     plan = _plan(Q.q_tpch_q5ish(spark, "/root/testdata/sf0.001"))
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
+
+
+def test_tpch_sf_linear_tables_are_not_forced_to_broadcast(spark):
+    """Only the fixed-size nation and region tables carry a broadcast
+    hint: with size-based broadcasts off, q5ish broadcasts exactly those
+    two and q14ish broadcasts nothing (customer, supplier and part grow
+    with the scale factor)."""
+    import pdf_ocr_spark.queries as Q
+    from tests.conftest import TESTDATA_SF001
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        q5 = _plan(Q.q_tpch_q5ish(spark, TESTDATA_SF001))
+        q14 = _plan(Q.q_tpch_q14ish(spark, TESTDATA_SF001))
+    finally:
+        spark.conf.set(key, old)
+    assert q5.count("BroadcastHashJoin") == 2
+    assert q14.count("BroadcastHashJoin") == 0

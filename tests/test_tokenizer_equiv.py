@@ -2,9 +2,9 @@
 paths.
 
 ``_tokenize_content`` special-cases the dominant per-glyph token
-sequences — a run of ``<hex> Tj tx ty Td/TD`` glyph steps, and ``<hex>
-Tj`` and ``tx ty Td/TD`` alone — as fused regex alternatives (one match
-+ dispatch each).  A missed edge there would
+sequences — a run of ``<hex> Tj tx ty Td/TD`` glyph steps, and ``tx ty
+Td/TD`` alone — as fused regex alternatives (one match + dispatch
+each).  A missed edge there would
 silently reorder/drop operands and corrupt extracted text, so this
 module pins the fused tokenizer against REFERENCE_TOKENIZE, a slow,
 obviously-correct reimplementation of the general one-token-at-a-time
@@ -212,7 +212,7 @@ _EDGES = [
     b"1 2 <41> Tj 5 0 TD",        # stray numbers ahead of the triple
     b"[<41> Tj 5 0 Td",           # inside unterminated array: must unfuse
     b"[(x) <41> Tj 5 0 TD",       # array + string, then the glyph step
-    b"<41> Tj 5 0",               # no trailing op: falls back to showtj
+    b"<41> Tj 5 0",               # no trailing op: the general path
     b"<41> Tj 5 0 TDx",           # op boundary: must NOT fuse the triple
     b"<41>Tj 5 0 TD <42>Tj 6 0 TD <43>Tj",  # a run of fused glyph steps
 ]

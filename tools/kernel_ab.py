@@ -6,8 +6,10 @@ Loads ``pdf_ocr_spark`` from both checkouts into ONE process (the
 package modules are swapped out of ``sys.modules`` between the two
 imports, and each tree keeps its own function objects), builds the
 ``perfbench/inputs.mixed_rows(n_docs, seed)`` corpus (defaults 3000, 1)
-and times, per document kind, ``interpret_page`` and ``build_lines`` on
-pre-parsed pages and ``extract_pdf`` on the raw bytes.  The trees run
+and times, per document kind, the COS layer on the raw bytes (``cos``:
+``PDFDocument``, ``.pages()`` and ``fonts.load_page_fonts`` of every
+page), ``interpret_page`` and ``build_lines`` on pre-parsed pages and
+``extract_pdf`` on the raw bytes.  The trees run
 interleaved (A B, then B A, ...), the GC is set as in a tuned Spark
 worker, and each figure is the minimum process CPU time over ``reps``
 rounds (default 9), so host noise hits both trees alike.
@@ -33,7 +35,7 @@ def _load(root: str) -> dict:
     try:
         mods = {
             name: importlib.import_module(f"pdf_ocr_spark.kernels.pdf.{name}")
-            for name in ("extract", "content", "layout", "cos")
+            for name in ("extract", "content", "layout", "cos", "fonts")
         }
     finally:
         sys.path.remove(root)
@@ -43,7 +45,23 @@ def _load(root: str) -> dict:
         "interpret_page": mods["content"].interpret_page,
         "build_lines": mods["layout"].build_lines,
         "PDFDocument": mods["cos"].PDFDocument,
+        "load_page_fonts": mods["fonts"].load_page_fonts,
     }
+
+
+def _cos(tree: dict):
+    """The COS layer of one document: xref, page tree and page fonts."""
+    PDFDocument, load_page_fonts = tree["PDFDocument"], tree["load_page_fonts"]
+
+    def run(p: bytes) -> None:
+        try:
+            doc = PDFDocument(p)
+            for page in doc.pages():
+                load_page_fonts(doc, page.get("Resources"))
+        except Exception:  # noqa: BLE001 — a broken doc is timed up to its failure
+            pass
+
+    return run
 
 
 def _pages(tree: dict, payloads: list) -> list:
@@ -84,6 +102,7 @@ def main(argv: list) -> None:
         for kind, payloads in kinds.items():
             pages = _pages(tree, payloads)
             work[t, kind] = {
+                "cos": (_cos(tree), [(p,) for p in payloads]),
                 "interpret_page": (tree["interpret_page"], [(d, p) for d, p, _, _ in pages]),
                 "build_lines": (tree["build_lines"], [(g, h) for _, _, g, h in pages]),
                 "extract_pdf": (tree["extract_pdf"], [(p,) for p in payloads]),
@@ -102,7 +121,7 @@ def main(argv: list) -> None:
           f" {os.cpu_count()} cpus")
     total = {"A": 0.0, "B": 0.0}
     for kind in sorted(kinds):
-        for step in ("interpret_page", "build_lines", "extract_pdf"):
+        for step in ("cos", "interpret_page", "build_lines", "extract_pdf"):
             va, vb = best["A", kind, step], best["B", kind, step]
             if step == "extract_pdf":
                 total["A"] += va
