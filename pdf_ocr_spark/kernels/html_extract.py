@@ -2,8 +2,18 @@
 
 Not present in the reference (which is PDF/image-only) — required by the
 engine's north rule for HTML rows of the Common-Crawl-style input table
-(SURVEY.md K5): a stack-based HTML tokenizer feeding per-node text-density
-and link-density scores; the densest subtree is kept as the main content.
+(SURVEY.md K5): per-node text-density and link-density scores pick the
+densest subtree as the main content.
+
+One pass over the page (:func:`_parse`): one compiled regex splits it
+into text runs, tags, comments and whole raw elements (script, style,
+...), and a stack of open elements takes each token in turn.  An
+element's text, link-text and comma totals are running sums read off at
+its end, and its readability points go to its parent and grandparent
+there; no tree is walked afterwards.  Entities are decoded only in runs
+that hold a '&'.  :func:`extract_tables` reads the same parse.  The
+tree-building extractor it replaced is kept as the test oracle
+(``tests/html_extract_oracle.py``).
 
 Pure Python (stdlib ``html`` for entity decoding only); deterministic:
 ties break on document order.  Runs vectorized at the Arrow-batch level
@@ -14,12 +24,14 @@ from __future__ import annotations
 
 import html as _htmllib
 import re
+from operator import attrgetter
 from typing import Dict, List, NamedTuple, Optional, Tuple
 
 _TAG_RE = re.compile(
     r"<(/?)([a-zA-Z][a-zA-Z0-9:-]*)((?:[^>\"']|\"[^\"]*\"|'[^']*')*)(/?)>", re.S
 )
-_WS_RE = re.compile(r"[ \t\r\n\f\v]+")
+# a whitespace run to collapse to one space: every run but a lone space
+_WS_RE = re.compile(r"[\t\r\n\f\v][ \t\r\n\f\v]*+| [ \t\r\n\f\v]++")
 
 # elements whose content is never text
 _RAW_SKIP = {"script", "style", "noscript", "template", "svg", "iframe", "object"}
@@ -39,184 +51,193 @@ _VOID = {
 }
 # boilerplate-indicating containers: penalized in scoring
 _NEGATIVE_TAGS = {"nav", "aside", "footer", "header"}
+# elements whose text earns readability points for their container
+_PARAGRAPHISH = {"p", "pre", "td", "blockquote", "li", "h1", "h2", "h3", "h4", "h5", "h6"}
+
+# One scan of the page, one token a match: a text run (group 1); a
+# comment, doctype or processing instruction, or a raw element from its
+# open tag to its close tag (no group: skipped whole); a tag (groups 2-3:
+# '/' and the name); or a '<' that starts none of these (group 4, text).
+# A tag ends at the first '>' outside quotes.  A raw element's name
+# matches in ASCII upper or lower case, as a lowercased tag name did, and
+# its close tag case-insensitively, as the ``</name\s*>`` search it
+# replaces.
+_ATTRS = r"""[^>"']*+(?:(?:"[^"]*+"|'[^']*+')[^>"']*+)*+"""
+_SCAN_RE = re.compile(
+    r"([^<]++)|<(?:!--.*?(?:-->|\Z)|[!?][^>]*+>?"
+    + f"|(?=[{''.join(sorted({t[0] + t[0].upper() for t in _RAW_SKIP}))}])(?:"
+    + "|".join(
+        rf"{''.join(f'[{c}{c.upper()}]' for c in t)}(?![a-zA-Z0-9:-]){_ATTRS}>"
+        rf".*?(?:(?i:</{t}\s*>)|\Z)"
+        for t in sorted(_RAW_SKIP)
+    )
+    + rf")|(/?)([a-zA-Z][a-zA-Z0-9:-]*+){_ATTRS}>)|(<)",
+    re.S,
+)
+_EOF = ("", "/", "", "")  # closes every element still open
 
 
 class _Node:
+    """One element, built at its open tag.  Its text and bound spans,
+    totals, points and scores are final once its end is read."""
+
     __slots__ = (
-        "tag", "parent", "children", "texts", "order",
-        "text_len", "link_text_len", "p_count", "comma_count", "negative",
+        "tag", "up", "t0", "t1", "b0", "b1", "tl0", "ll0", "cc0",
+        "link", "neg", "pts", "halves", "score", "dense",
     )
 
-    def __init__(self, tag: str, parent: Optional["_Node"], order: int):
+    def __init__(self, tag, up, nt, nb, tl, ll, cc, link, neg):
         self.tag = tag
-        self.parent = parent
-        self.children: List["_Node"] = []
-        self.texts: List[Tuple[int, str]] = []  # (child-slot, text) interleave
-        self.order = order
-        self.text_len = 0
-        self.link_text_len = 0
-        self.p_count = 0
-        self.comma_count = 0
-        self.negative = tag in _NEGATIVE_TAGS
+        self.up = up  # the parent element (None for the root)
+        self.t0 = self.t1 = nt  # its chunks are texts[t0:t1]
+        self.b0 = self.b1 = nb  # its descendants' block bounds[b0:b1]
+        self.tl0, self.ll0, self.cc0 = tl, ll, cc  # running sums at start
+        self.link = link  # an <a> or inside one
+        self.neg = neg  # a boilerplate container or inside one
+        self.pts = 0.0  # readability points from its children
+        self.halves = None  # its children's halves, owed to its parent
+        self.score = self.dense = 0.0
 
 
-def _parse(html_text: str) -> _Node:
-    """Stack-based tolerant HTML parse → lightweight node tree."""
-    root = _Node("#root", None, 0)
+def _parse(html_text: str):
+    """Stack-based tolerant HTML parse in one pass → (nodes, texts,
+    bounds, text length).
+
+    ``texts`` holds the page's text chunks in document order, entities
+    decoded (a blank chunk is one space, dropped while the element it
+    falls in has neither text nor children); node ``n`` holds
+    ``texts[n.t0:n.t1]``.  ``bounds`` holds ``len(texts)`` at the start
+    and the end of every block element, and node ``n`` the block bounds
+    of its descendants in ``bounds[n.b0:n.b1]``.  ``nodes`` lists every
+    element but the void ones in document order, the root first.
+
+    Totals are running sums over the chunks (text length, link text
+    length, commas), so an element's totals are two subtractions at its
+    end.  There it also gives its readability points to its parent, and
+    half to its grandparent in the order a pre-order walk would add them:
+    its own points first, then its children's halves.  ``score`` and
+    ``dense`` end as the element's paragraph score and its no-paragraph
+    fallback score (0.0 when it is not a candidate)."""
+    root = _Node("#root", None, 0, 0, 0, 0, 0, False, False)
+    nodes = [root]
     stack = [root]
-    pos = 0
-    order = 1
-    n = len(html_text)
-    while pos < n:
-        lt = html_text.find("<", pos)
-        if lt < 0:
-            _add_text(stack[-1], html_text[pos:])
-            break
-        if lt > pos:
-            _add_text(stack[-1], html_text[pos:lt])
-        # comments / doctype / CDATA
-        if html_text.startswith("<!--", lt):
-            end = html_text.find("-->", lt + 4)
-            pos = n if end < 0 else end + 3
-            continue
-        if html_text.startswith("<!", lt) or html_text.startswith("<?", lt):
-            end = html_text.find(">", lt + 2)
-            pos = n if end < 0 else end + 1
-            continue
-        m = _TAG_RE.match(html_text, lt)
-        if not m:
-            _add_text(stack[-1], "<")
-            pos = lt + 1
-            continue
-        closing, tag, _attrs, self_close = m.groups()
-        tag = tag.lower()
-        pos = m.end()
-        if closing:
-            # pop to matching open tag if present
-            for i in range(len(stack) - 1, 0, -1):
-                if stack[i].tag == tag:
-                    del stack[i:]
-                    break
-            continue
-        if tag in _RAW_SKIP:
-            close = re.search(rf"</{re.escape(tag)}\s*>", html_text[pos:], re.I)
-            pos = n if close is None else pos + close.end()
-            continue
-        node = _Node(tag, stack[-1], order)
-        order += 1
-        stack[-1].children.append(node)
-        stack[-1].texts.append((len(stack[-1].children), ""))  # slot marker
-        if self_close or tag in _VOID:
-            continue
-        if len(stack) < 200:  # unclosed-tag bombs must not blow recursion later
-            stack.append(node)
-    return root
+    top = root
+    texts: List[str] = []
+    bounds: List[int] = []
+    has_texts = False  # top has a child or a non-blank chunk
+    link = False  # top is an <a> or inside one
+    tl = ll = cc = 0  # running text length, link text length, commas
+    toks = _SCAN_RE.findall(html_text)
+    toks.append(_EOF)
+    for txt, slash, name, lt in toks:
+        if slash:
+            tag = name.lower()
+            if top.tag == tag:
+                cut = len(stack) - 1
+            elif name:
+                cut = 0  # no such element open: the tag is dropped
+                for k in range(len(stack) - 2, 0, -1):
+                    if stack[k].tag == tag:
+                        cut = k
+                        break
+            else:
+                cut = 1  # end of input
+            if cut:
+                nt = len(texts)
+                for node in stack[: cut - 1 : -1]:  # the deepest first
+                    node.t1 = nt
+                    node.b1 = len(bounds)
+                    n = tl - node.tl0
+                    if n:
+                        tag = node.tag
+                        up = node.up
+                        if n >= 25 and tag in _PARAGRAPHISH:
+                            pts = 1.0 + min(cc - node.cc0, 3) + min(n / 90.0, 3.0)
+                            up.pts += pts
+                            if up.halves:
+                                up.halves.append(pts / 2.0)
+                            else:
+                                up.halves = [pts / 2.0]
+                        if node.halves:
+                            for h in node.halves:
+                                up.pts += h
+                        density = (ll - node.ll0) / n
+                        pts = node.pts
+                        if pts:
+                            pts = pts * (1.0 - density)
+                            node.score = pts * 0.2 if node.neg else pts
+                        if n >= 25 and tag in _CANDIDATE_TAGS:
+                            node.dense = n * (1.0 - density)
+                    if node.tag in _BLOCK_TAGS:
+                        bounds.append(nt)
+                del stack[cut:]
+                top = stack[-1]
+                link = top.link
+                has_texts = True
+        elif name:
+            tag = name.lower()
+            nt = len(texts)
+            if tag in _BLOCK_TAGS:
+                bounds.append(nt)
+            has_texts = True
+            if tag not in _VOID:  # a void element holds nothing to keep
+                node = _Node(tag, top, nt, len(bounds), tl, ll, cc,
+                             link or tag == "a", top.neg or tag in _NEGATIVE_TAGS)
+                nodes.append(node)
+                if len(stack) < 200:  # unclosed-tag bombs stay 200 deep
+                    stack.append(node)
+                    top = node
+                    link = node.link
+                    has_texts = False
+        else:
+            if not txt:
+                if not lt:
+                    continue  # comment, declaration or raw element
+                txt = lt
+            elif "&" in txt:
+                txt = _htmllib.unescape(txt)
+                if not txt:
+                    continue
+            core = txt.strip()
+            if not core:
+                if has_texts:
+                    texts.append(" ")
+                continue
+            # whitespace runs inside a chunk count as one character each
+            n = (len(core) if core.isprintable() and "  " not in core
+                 else len(_WS_RE.sub(" ", core)))
+            texts.append(txt)
+            tl += n
+            if link:
+                ll += n
+            cc += txt.count(",")
+            if not txt.isascii():
+                cc += txt.count("，") + txt.count("、")
+            has_texts = True
+    root.t1, root.b1 = len(texts), len(bounds)
+    return nodes, texts, bounds, tl
 
 
-def _add_text(node: _Node, raw: str) -> None:
-    # whitespace runs collapse once more at line-render time, so here a
-    # cheap strip-check routes blank runs to the single-space slot and
-    # only non-blank text pays the regex
-    text = _htmllib.unescape(raw)
-    if not text:
-        return
-    if text.isspace():
-        if node.texts:
-            node.texts.append((len(node.children), " "))
-        return
-    node.texts.append((len(node.children), _WS_RE.sub(" ", text)))
+def _node_text(texts: List[str], node: _Node) -> str:
+    """Whitespace-collapsed subtree text (inline flow, no block breaks)."""
+    return _WS_RE.sub(" ", "".join(texts[node.t0 : node.t1])).strip()
 
 
-def _accumulate(node: _Node, in_link: bool) -> Tuple[int, int, int]:
-    """Bottom-up totals: (text_len, link_text_len, comma_count)."""
-    tl = 0
-    cc = 0
-    for _, t in node.texts:
-        st = t.strip()
-        if st:
-            tl += len(st)
-        cc += t.count(",") + t.count("，") + t.count("、")
-    ll = tl if in_link else 0
-    pc = 0
-    for child in node.children:
-        ctl, cll, ccc = _accumulate(child, in_link or child.tag == "a")
-        tl += ctl
-        ll += cll
-        cc += ccc
-        pc += child.p_count + (1 if child.tag == "p" else 0)
-    node.text_len = tl
-    node.link_text_len = ll
-    node.comma_count = cc
-    node.p_count = pc
-    return tl, ll, cc
-
-
-_PARAGRAPHISH = {"p", "pre", "td", "blockquote", "li", "h1", "h2", "h3", "h4", "h5", "h6"}
-
-
-def _candidate_scores(root: _Node) -> Dict[int, Tuple[float, _Node]]:
-    """Readability scoring: each paragraph-ish node earns points
-    (1 + commas + length/90, capped), contributed to its parent and half
-    to its grandparent; a candidate's final score is scaled by
-    (1 - link_density) and damped under nav/aside/footer ancestry."""
-    raw: Dict[int, float] = {}
-    nodes: Dict[int, _Node] = {}
-
-    def contribute(n: Optional[_Node], pts: float) -> None:
-        if n is None or n.tag == "#root":
-            return
-        raw[n.order] = raw.get(n.order, 0.0) + pts
-        nodes[n.order] = n
-
-    for node in _iter_nodes(root):
-        if node.tag not in _PARAGRAPHISH or node.text_len < 25:
-            continue
-        pts = 1.0 + min(node.comma_count, 3) + min(node.text_len / 90.0, 3.0)
-        contribute(node.parent, pts)
-        contribute(node.parent.parent if node.parent else None, pts / 2.0)
-
-    out: Dict[int, Tuple[float, _Node]] = {}
-    for order, pts in raw.items():
-        node = nodes[order]
-        if node.text_len <= 0:
-            continue
-        link_density = node.link_text_len / node.text_len
-        score = pts * (1.0 - link_density)
-        n: Optional[_Node] = node
-        while n is not None:
-            if n.negative:
-                score *= 0.2
-                break
-            n = n.parent
-        out[order] = (score, node)
+def _render_text(texts: List[str], bounds: List[int], node: _Node) -> List[str]:
+    """The node's text lines: block-level bounds break lines, inline
+    text flows, and a line of blanks waits for the next line."""
+    cuts = bounds[node.b0 : node.b1]
+    if node.tag in _BLOCK_TAGS:
+        cuts.append(node.t1)
+    out: List[str] = []
+    lo = node.t0
+    for hi in cuts:
+        if hi > lo:
+            line = "".join(texts[lo:hi])
+            if line.strip():
+                out.append(_WS_RE.sub(" ", line).strip())
+                lo = hi
     return out
-
-
-def _iter_nodes(node: _Node):
-    yield node
-    for c in node.children:
-        yield from _iter_nodes(c)
-
-
-def _render_text(node: _Node, out: List[str], line: List[str]) -> None:
-    """Emit text: block-level boundaries become newlines, inline flows."""
-    is_block = node.tag in _BLOCK_TAGS
-    if is_block and line and "".join(line).strip():
-        out.append(_WS_RE.sub(" ", "".join(line)).strip())
-        line.clear()
-    slots: Dict[int, List[str]] = {}
-    for slot, t in node.texts:
-        slots.setdefault(slot, []).append(t)
-    # interleave: texts recorded before child i have slot <= i
-    for t in slots.get(0, []):
-        line.append(t)
-    for i, child in enumerate(node.children, 1):
-        _render_text(child, out, line)
-        for t in slots.get(i, []):
-            line.append(t)
-    if is_block and line and "".join(line).strip():
-        out.append(_WS_RE.sub(" ", "".join(line)).strip())
-        line.clear()
 
 
 class HtmlTable(NamedTuple):
@@ -229,32 +250,6 @@ class HtmlTable(NamedTuple):
     rows: List[List[str]]   # cell texts, whitespace-collapsed
 
 
-def _node_text(node: _Node) -> str:
-    """Whitespace-collapsed subtree text (inline flow, no block breaks)."""
-    parts: List[str] = []
-
-    def walk(n: _Node) -> None:
-        slots: Dict[int, List[str]] = {}
-        for slot, t in n.texts:
-            slots.setdefault(slot, []).append(t)
-        parts.extend(slots.get(0, []))
-        for i, child in enumerate(n.children, 1):
-            walk(child)
-            parts.extend(slots.get(i, []))
-
-    walk(node)
-    return _WS_RE.sub(" ", "".join(parts)).strip()
-
-
-def _nearest_table(node: _Node) -> Optional[_Node]:
-    p = node.parent
-    while p is not None:
-        if p.tag == "table":
-            return p
-        p = p.parent
-    return None
-
-
 def extract_tables(data: bytes) -> List[HtmlTable]:
     """Structured <table> extraction — the HTML twin of the PDF
     ruled-grid table blocks (kernels/pdf/layout.py table_regions): one
@@ -262,31 +257,37 @@ def extract_tables(data: bytes) -> List[HtmlTable]:
     row-major cell texts.  Rows are this table's own <tr> (a nested
     table's rows belong to the nested entry; its full text still appears
     inside the enclosing cell).  Never raises; undecodable or tableless
-    input returns [].
+    input returns [].  At most 200 tables per document.
 
-    Poison cap: at most 200 tables per document — a nested-table bomb
-    (<table> x N) otherwise costs O(N²) subtree visits."""
+    One walk over the parse's nodes in document order: each node's
+    nearest enclosing table is its parent's, or the parent itself."""
     try:
-        text = decode_html_bytes(data)
-        root = _parse(text)
-        tables = [n for n in _iter_nodes(root) if n.tag == "table"][:200]
+        nodes, texts, _, _ = _parse(decode_html_bytes(data))
     except Exception:  # noqa: BLE001 — poison input must not raise
         return []
+    if not any(node.tag == "table" for node in nodes):
+        return []
+    owner = {nodes[0]: None}  # node → its nearest table above
+    tables: Dict[_Node, list] = {}  # table → [caption, rows], in order
+    cells: Dict[_Node, List[str]] = {}  # tr → its td/th texts
+    for node in nodes[1:]:
+        tag, up = node.tag, node.up
+        tbl = up if up.tag == "table" else owner[up]
+        owner[node] = tbl
+        if tag == "table":
+            if len(tables) < 200:
+                tables[node] = ["", []]
+        elif tag in ("td", "th"):
+            if up in cells:
+                cells[up].append(_node_text(texts, node))
+        elif tbl in tables:
+            if tag == "tr":
+                tables[tbl][1].append(cells.setdefault(node, []))
+            elif tag == "caption" and not tables[tbl][0]:
+                tables[tbl][0] = _node_text(texts, node)
     out: List[HtmlTable] = []
-    for ti, tbl in enumerate(tables):
-        caption = ""
-        rows: List[List[str]] = []
-        for n in _iter_nodes(tbl):
-            if n is tbl:
-                continue
-            if n.tag == "caption" and not caption and _nearest_table(n) is tbl:
-                caption = _node_text(n)
-            elif n.tag == "tr" and _nearest_table(n) is tbl:
-                cells = [
-                    _node_text(c) for c in n.children if c.tag in ("td", "th")
-                ]
-                if cells:
-                    rows.append(cells)
+    for ti, (caption, rows) in enumerate(tables.values()):
+        rows = [r for r in rows if r]
         out.append(
             HtmlTable(
                 ti,
@@ -316,8 +317,8 @@ def extract_links_attrs(data: bytes) -> List[Tuple[str, bool, str]]:
     ``nofollow`` (rel="nofollow"/"ugc"/"sponsored", the robots link-level
     opt-outs) drives frontier prioritization; ``anchor_text`` (inner
     markup stripped, whitespace collapsed, capped at 200 chars) is the
-    classic target-page relevance label.  Regex tag scan (same grammar
-    as the parser's _TAG_RE), deterministic, never raises."""
+    classic target-page relevance label.  Regex tag scan (_TAG_RE, the
+    parser's tag grammar), deterministic, never raises."""
     try:
         text = decode_html_bytes(data)
     except Exception:  # noqa: BLE001 — bytes-ish inputs only
@@ -537,41 +538,24 @@ def extract_html(data: bytes) -> Tuple[str, str, Optional[str]]:
     """bytes → (main_text, status, failure_reason).
 
     Decodes via :func:`decode_html_bytes` (BOM → UTF-8 → meta-charset →
-    latin-1), parses, scores candidate containers, renders the winner's
-    block-level text joined with '\\n'."""
+    latin-1), parses and scores in one pass (:func:`_parse`), renders
+    the best-scoring element's block-level text joined with '\\n'.  With
+    no paragraph score the densest generic container wins, else the
+    whole page; ties go to the earliest element."""
     if not data:
         return "", "failed", "html_empty"
     try:
-        text = decode_html_bytes(data)
-        root = _parse(text)
-        _accumulate(root, False)
-        if root.text_len == 0:
+        nodes, texts, bounds, text_len = _parse(decode_html_bytes(data))
+        if not text_len:
             return "", "failed", "html_no_text"
-        best: Optional[_Node] = None
-        best_score = 0.0
-        scores = _candidate_scores(root)
-        for order in sorted(scores):  # document order → earliest wins ties
-            s, node = scores[order]
-            if s > best_score:
-                best, best_score = node, s
-        if best is None:
-            # no paragraph structure at all: densest generic container
-            for node in _iter_nodes(root):
-                if node.tag not in _CANDIDATE_TAGS or node.text_len < 25:
-                    continue
-                ld = node.link_text_len / node.text_len
-                s = node.text_len * (1.0 - ld)
-                if s > best_score:
-                    best, best_score = node, s
-        if best is None:
-            best = root
-        out: List[str] = []
-        _render_text(best, out, [])
-        main = "\n".join(x for x in out if x)
-        if not main.strip():
+        best = max(nodes, key=attrgetter("score"))  # the first of equals
+        if not best.score:
+            best = max(nodes, key=attrgetter("dense"))
+        main = "\n".join(_render_text(texts, bounds, best))
+        if not main:
             return "", "failed", "html_no_text"
         return main, "ok", None
-    except (RecursionError, MemoryError) as e:
+    except MemoryError as e:
         return "", "failed", f"html_parse_error: {type(e).__name__}"
 
 
@@ -786,8 +770,8 @@ def extract_microdata(data: bytes) -> List[MicrodataProp]:
                     break
             continue
         if tag in _RAW_SKIP:
-            close = re.search(rf"</{re.escape(tag)}\s*>", text[pos:], re.I)
-            pos = n if close is None else pos + close.end()
+            close = re.compile(rf"</{re.escape(tag)}\s*>", re.I).search(text, pos)
+            pos = n if close is None else close.end()
             continue
         # bare boolean attribute: scan with quoted values blanked so
         # content="... itemscope ..." can't false-positive

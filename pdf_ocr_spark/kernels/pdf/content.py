@@ -304,11 +304,14 @@ class _TextState:
 # COS token grammar of cos.py, without the "<n> <g> R" lookahead: content
 # has no indirect refs.  Strings, dicts and '#' names decode through cos.
 _END = rb"(?![A-Za-z0-9*'\"])"  # token boundary after an operator
-# one glyph step: "<hex> Tj tx ty Td/TD"
-_STEP = rb"<[" + HEX + rb"]*>" + WS + rb"*Tj" + WS + rb"+" + NUM + WS + rb"+" \
-    + NUM + WS + rb"+T[Dd]" + _END
+# one glyph step: "<hex> Tj tx ty Td/TD"; no part of it can give bytes
+# back to the next, so every quantifier is possessive (no backtracking)
+_STEP = rb"<[" + HEX + rb"]*+>" + WS + rb"*+Tj" + WS + rb"++" + NUM + WS + rb"++" \
+    + NUM + WS + rb"++T[Dd]" + _END
 _CONTENT_TOK = re.compile(
-    rb"(?P<run>(?:" + _STEP + WS + rb"*)+)"
+    # whitespace and every byte that starts no token, skipped in one step
+    rb"[^<0-9+\-./\[\](A-Za-z'\"%]*+"
+    rb"(?:(?P<run>(?:" + _STEP + WS + rb"*+)++)"
     rb"|(?P<tdxy>(?P<tdx>" + NUM + rb")" + WS + rb"+(?P<tdy>" + NUM + rb")"
     + WS + rb"+T[Dd]" + _END + rb")"
     rb"|(?P<num>" + NUM + rb")"
@@ -320,6 +323,7 @@ _CONTENT_TOK = re.compile(
     rb"|(?P<lit>\()"
     rb"""|(?P<op>[A-Za-z'"][A-Za-z0-9*'"]*)"""
     rb"|(?P<comment>%[^\r\n]*)"
+    rb"|[+.-]|\Z)"  # a sign or dot that starts no number; the end
 )
 # the steps of a matched run, one (hex digits, tx, ty, b"D" or b"d") each;
 # ``_STEP`` captures nothing: captures inside the repeated run cost ~13%
@@ -344,12 +348,14 @@ _RUN_STEPS = re.compile(
 # would have returned is provably discarded.
 _GLYPH_RUN = b"__glyph_run__"
 # the group indices ``m.lastindex`` reports: the group that CLOSED last,
-# for nested groups the OUTER one (b"12.5 0 TD" → tdxy, not tdy)
-(_TOK_RUN, _TOK_TDXY, _TOK_TDX, _TOK_TDY, _TOK_NUM, _TOK_NAME, _TOK_HEX,
- _TOK_OPEN, _TOK_CLOSE, _TOK_LIT, _TOK_OP, _TOK_COMMENT) = (
+# for nested groups the OUTER one (b"12.5 0 TD" → tdxy, not tdy); None for
+# a skipped sign or dot and at the end.  A match starts at the skipped
+# bytes before its token: read the token's own span with the group index.
+(_TOK_RUN, _TOK_TDXY, _TOK_TDX, _TOK_TDY, _TOK_NUM, _TOK_NAME, _TOK_DDICT,
+ _TOK_HEX, _TOK_OPEN, _TOK_CLOSE, _TOK_LIT, _TOK_OP, _TOK_COMMENT) = (
     _CONTENT_TOK.groupindex[k] for k in (
-        "run", "tdxy", "tdx", "tdy", "num", "name", "hex", "open", "close",
-        "lit", "op", "comment"))
+        "run", "tdxy", "tdx", "tdy", "num", "name", "ddict", "hex", "open",
+        "close", "lit", "op", "comment"))
 # what moves a literal string's paren depth: an escape pair (which moves
 # nothing), '(' (group 1) or ')' (group 2)
 _PAREN_STEP = re.compile(rb"\\.|(\()|(\))", re.S)
@@ -414,16 +420,17 @@ def _tokenize_content(data: bytes):
     operands: List[Any] = []
     cur = operands
     stack: List[List[Any]] = []  # array nesting (TJ)
-    search = _CONTENT_TOK.search
+    match = _CONTENT_TOK.match  # always matches below the end
     # set once a literal string runs unterminated: judges later ones
     closes: Optional[Callable[[int], bool]] = None
+    # the dicts still open where the last dict parse failed (their end
+    # offsets): a parse from any of them fails alike
+    failed_dicts: frozenset = frozenset()
     while pos < n:
-        m = search(data, pos)  # C-level skip of whitespace (and junk)
-        if m is None:
-            break
+        m = match(data, pos)  # C-level skip of whitespace (and junk)
         g = m.lastindex  # _TOK_* constants (highest matched group index)
         if g == _TOK_RUN:  # fused run of "<hex> Tj tx ty Td/TD" steps
-            found = _RUN_STEPS(data, m.start(), m.end())
+            found = _RUN_STEPS(data, m.start(g), m.end())
             steps = list(map(step_get, found))
             if None in steps:
                 for i, s in enumerate(steps):
@@ -488,14 +495,14 @@ def _tokenize_content(data: bytes):
             pos = m.end()
             continue
         elif g == _TOK_NUM:
-            tok = m.group()
+            tok = m.group(g)
             v = num_cache.get(tok)
             if v is None:
                 v = num_cache[tok] = decode_number(tok)
             cur.append(v)
             pos = m.end()
         elif g == _TOK_OP:  # operator
-            op = m.group()
+            op = m.group(g)
             pos = m.end()
             if op == b"BI":
                 ei = _INLINE_EI_RE.search(data, pos)
@@ -531,15 +538,15 @@ def _tokenize_content(data: bytes):
             operands.clear()  # reuse — consumer is done with it (see doc)
             cur = operands
         elif g == _TOK_NAME:
-            tok = m.group()[1:]
+            tok = m.group(g)[1:]
             if b"#" in tok:  # rare '#xx' escapes → slow path
-                v, pos = parse_name(data, m.start() + 1)
+                v, pos = parse_name(data, m.start(g) + 1)
                 cur.append(v)
             else:
                 cur.append(Name(tok.decode("utf-8", "replace")))
                 pos = m.end()
         elif g == _TOK_HEX:
-            body = m.group()
+            body = m.group(g)
             hb = hex_cache.get(body)
             if hb is None:
                 hb = hex_cache[body] = decode_hex(
@@ -557,7 +564,7 @@ def _tokenize_content(data: bytes):
             cur = stack.pop() if stack else operands
             pos = m.end()
         elif g == _TOK_LIT:  # ( literal string
-            q = m.start()
+            q = m.start(g)
             if closes is None or closes(q):
                 try:
                     v, pos = literal_string(data, q)
@@ -574,14 +581,20 @@ def _tokenize_content(data: bytes):
             operands = []
             cur = operands
             stack = []
-        else:  # ddict — rare in content (gs/BDC property lists)
+        elif g == _TOK_DDICT:  # rare in content (gs/BDC property lists)
+            if m.end() in failed_dicts:
+                pos = m.end()
+                continue
             try:
-                v, pos = parse_object(data, m.start())
+                v, pos = parse_object(data, m.start(g))
                 cur.append(v)
             except PDFNestingError as e:
                 pos = e.pos  # resume after the levels already parsed
-            except PDFError:
+            except PDFError as e:
+                failed_dicts = frozenset(e.open_at)
                 pos = m.end()
+        else:  # a sign or dot that starts no number, or the end
+            pos = m.end()
 
 
 def _add_rule(

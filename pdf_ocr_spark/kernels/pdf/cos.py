@@ -25,7 +25,7 @@ from typing import Any, Dict, List, Optional, Tuple
 # The COS token grammar's pieces, declared once; the content-stream
 # tokenizer (content.py) builds its general alternatives from them too.
 WS = rb"[\x00\t\n\x0c\r ]"
-NUM = rb"[+-]?(?:\d+(?:\.\d*)?|\.\d+)"
+NUM = rb"[+-]?+(?:\d++(?:\.\d*+)?+|\.\d++)"  # possessive: what follows never extends it
 REGULAR = rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]"  # a name or keyword byte
 HEX = rb"0-9A-Fa-f"  # the hex digits, as the body of a character class
 
@@ -371,72 +371,81 @@ def literal_string(buf: bytes, pos: int) -> Tuple[bytes, int]:
 def parse_object(buf: bytes, pos: int = 0) -> Tuple[Any, int]:
     """The object at ``pos``, after any whitespace and comments: (object,
     end).  A dict followed by ``stream`` is the marker ``("__stream__",
-    dict, data offset)``, which the caller resolves."""
-    stack: List[Tuple[Any, Any]] = []  # enclosing (container, key) pairs
+    dict, data offset)``, which the caller resolves.  A ``PDFError``
+    carries ``open_at``: the end offsets of the ``[`` and ``<<`` still
+    open where the parse failed.  A parse from any of them fails the
+    same way (a ``PDFNestingError`` aside), so a caller that resumes
+    scanning need not try them again."""
+    stack: List[Tuple[Any, Any, Any]] = []  # enclosing (container, key, at)
     cont: Any = None  # the innermost open list or dict
     key: Any = None  # the innermost dict's key awaiting its value
-    while True:
-        if key is None and cont.__class__ is dict:
-            m = _KEY.match(buf, pos)
-            if m is None:
-                end = _SKIP_RE.match(buf, pos).end()
-                raise PDFError(f"dict key must be a name at {end}")
-            pos = m.end()
-            if m.lastindex == 2:
-                key, pos = parse_name(buf, m.start(2))
-                key = str(key)
-                continue
-            obj = cont
-            s = _STREAM.match(buf, pos)
-            if s is not None:
-                pos = s.end()
-                obj = ("__stream__", cont, pos)
-            cont, key = stack.pop()
-        else:
-            m = _TOKEN.match(buf, pos)
-            g = m.lastgroup
-            pos = m.end()
-            if g == "num":
-                obj = decode_number(m.group(g))
-            elif g == "name":
-                obj, pos = parse_name(buf, m.start(g) + 1)
-            elif g == "ref":
-                obj = Ref(int(m.group("obj")), int(m.group("gen")))
-            elif g == "dict" or g == "array":
-                if len(stack) >= MAX_NESTING:
-                    raise PDFNestingError(m.start(g))
-                stack.append((cont, key))
-                cont, key = {} if g == "dict" else [], None
-                continue
-            elif g == "close":
-                if cont.__class__ is not list:
-                    raise PDFError("unexpected ']'")
+    at: Any = None  # the end offset of the innermost container's opener
+    try:
+        while True:
+            if key is None and cont.__class__ is dict:
+                m = _KEY.match(buf, pos)
+                if m is None:
+                    end = _SKIP_RE.match(buf, pos).end()
+                    raise PDFError(f"dict key must be a name at {end}")
+                pos = m.end()
+                if m.lastindex == 2:
+                    key, pos = parse_name(buf, m.start(2))
+                    key = str(key)
+                    continue
                 obj = cont
-                cont, key = stack.pop()
-            elif g == "hex":
-                obj = decode_hex(m.group("digits"))
-            elif g == "lit":
-                obj, pos = literal_string(buf, m.start(g))
-            elif g == "kw":
-                obj = _KEYWORDS.get(m.group(g), PDFError)
-                if obj is PDFError:
-                    kw = m.group(g)
-                    if kw or pos < len(buf):
-                        raise PDFError(f"unexpected keyword {kw!r} at {pos}")
-                    if cont.__class__ is list:
-                        raise PDFError("unterminated array")
-                    raise PDFError("unexpected EOF while parsing object")
-            elif g == "badnum":
-                raise PDFError(f"bad number at {m.start(g)}")
+                s = _STREAM.match(buf, pos)
+                if s is not None:
+                    pos = s.end()
+                    obj = ("__stream__", cont, pos)
+                cont, key, at = stack.pop()
             else:
-                raise PDFError("unterminated hex string")
-        if cont is None:
-            return obj, pos
-        if key is None:
-            cont.append(obj)
-        else:
-            cont[key] = obj
-            key = None
+                m = _TOKEN.match(buf, pos)
+                g = m.lastgroup
+                pos = m.end()
+                if g == "num":
+                    obj = decode_number(m.group(g))
+                elif g == "name":
+                    obj, pos = parse_name(buf, m.start(g) + 1)
+                elif g == "ref":
+                    obj = Ref(int(m.group("obj")), int(m.group("gen")))
+                elif g == "dict" or g == "array":
+                    if len(stack) >= MAX_NESTING:
+                        raise PDFNestingError(m.start(g))
+                    stack.append((cont, key, at))
+                    cont, key, at = {} if g == "dict" else [], None, pos
+                    continue
+                elif g == "close":
+                    if cont.__class__ is not list:
+                        raise PDFError("unexpected ']'")
+                    obj = cont
+                    cont, key, at = stack.pop()
+                elif g == "hex":
+                    obj = decode_hex(m.group("digits"))
+                elif g == "lit":
+                    obj, pos = literal_string(buf, m.start(g))
+                elif g == "kw":
+                    obj = _KEYWORDS.get(m.group(g), PDFError)
+                    if obj is PDFError:
+                        kw = m.group(g)
+                        if kw or pos < len(buf):
+                            raise PDFError(f"unexpected keyword {kw!r} at {pos}")
+                        if cont.__class__ is list:
+                            raise PDFError("unterminated array")
+                        raise PDFError("unexpected EOF while parsing object")
+                elif g == "badnum":
+                    raise PDFError(f"bad number at {m.start(g)}")
+                else:
+                    raise PDFError("unterminated hex string")
+            if cont is None:
+                return obj, pos
+            if key is None:
+                cont.append(obj)
+            else:
+                cont[key] = obj
+                key = None
+    except PDFError as e:
+        e.open_at = [a for _, _, a in stack[1:]] + [at] if stack else []
+        raise
 
 
 

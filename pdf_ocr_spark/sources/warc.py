@@ -831,7 +831,10 @@ def pages_to_warc_deduped(pages):
     digest-keyed join back, then the per-partition archive map.  The
     keeper table is distinct-payload-sized; at crawl scale this is the
     same shuffle the exact-dedup stage already pays, and the archives
-    shrink by the duplicate payload bytes."""
+    shrink by the duplicate payload bytes.  Within an archive the records
+    are in capture order (warc_ts, then url, then digest), so for one
+    partition layout the archive bytes do not depend on the join AQE
+    picks; which partition a row lands in still may."""
     from pyspark.sql import functions as F
 
     keyed = pages.select("url", "warc_ts", "html").withColumn(
@@ -855,8 +858,13 @@ def pages_to_warc_deduped(pages):
         F.col("_k.url").alias("refers_url"),
         F.col("_k.warc_ts").alias("refers_ts"),
     )
+    # the join hands rows over in the order of whichever side AQE builds
+    # on; capture order (ties: url, then payload) fixes the record order
+    # within each partition, not which partition a row lands in
     return _write_partitions(
-        marked, _write_revisits, "n_records long, n_revisit long, warc binary"
+        marked.sortWithinPartitions("warc_ts", "url", "digest"),
+        _write_revisits,
+        "n_records long, n_revisit long, warc binary",
     )
 
 

@@ -1,13 +1,17 @@
 """Hostile content streams cost linear time and keep the rest of the page.
 
-Two shapes used to stall a task or blank a page:
+Four shapes used to stall a task or blank a page:
 
 * an unterminated literal string followed by many '(' bytes: every
   later '(' rescanned to the end of the stream, so the cost grew with
   the square of the stream;
 * arrays and dicts nested deeper than the Python stack allows: the
   recursive parse raised ``RecursionError``, which escaped the content
-  tokenizer and came back as a page with empty text.
+  tokenizer and came back as a page with empty text;
+* dicts that fail to parse below the nesting cap: every dict still open
+  at the failure was parsed again from its own '<<';
+* a long whitespace run: the tokenizer tried every token alternative at
+  each whitespace byte.
 
 Literal strings after an unterminated one are judged on its paren depths
 (checked against the reference tokenizer of test_tokenizer_equiv.py);
@@ -20,7 +24,7 @@ from hypothesis import given, settings, strategies as st
 
 from pdf_ocr_spark.fixtures import genpages
 from pdf_ocr_spark.kernels.pdf.content import _tokenize_content
-from pdf_ocr_spark.kernels.pdf.cos import MAX_NESTING, Lexer, PDFError
+from pdf_ocr_spark.kernels.pdf.cos import MAX_NESTING, Lexer, Name, PDFError
 from pdf_ocr_spark.kernels.pdf.extract import extract_pdf
 from test_tokenizer_equiv import _both
 
@@ -113,3 +117,36 @@ def test_a_megabyte_of_nested_dicts_tokenizes_in_linear_time():
     text, cpu = _text(_HELLO + data + _X)
     assert text.split() == ["Hello", "world", "x"]
     assert cpu <= 2.0
+
+
+def _tokens(data: bytes):
+    return [(list(o), op) for o, op in _tokenize_content(data)]
+
+
+def test_dicts_open_at_a_failed_parse_are_not_parsed_again():
+    """A block of dicts nested 498 deep (under the cap) that a ']' breaks:
+    a parse from any dict still open at the failure fails the same way,
+    so each is tried once, not once per enclosing '<<'.  16 blocks took
+    7.1 s and now take a linear pass, with the same tokens."""
+    block = b"<< /A " * 498 + b"] "
+    toks, cpu = _cpu(_tokens, block * 16 + b" 1 0 0 RG")
+    assert toks == [([Name("A")] * (498 * 16) + [1, 0, 0], b"RG")]
+    assert cpu <= 0.5
+    got, ref = _both(block * 2 + b" 1 0 0 RG")
+    assert got == ref
+
+
+def test_16mb_of_whitespace_tokenizes_in_linear_time():
+    """Whitespace is skipped in one regex step before the token, also
+    when what follows it starts no token (a lone sign) or is the end.
+    Each stream holds 16 MB of whitespace."""
+    ws = b" \n\t\r\x00\x0c" * ((16 << 20) // 6)
+    half = ws[: len(ws) // 2]
+    for data, want in (
+        (b"BT (x) Tj" + ws + b"ET", [([], b"BT"), ([b"x"], b"Tj"), ([], b"ET")]),
+        (b"(x) Tj" + half + b"+" + half + b"1 w", [([b"x"], b"Tj"), ([1], b"w")]),
+        (b"(x) Tj" + ws, [([b"x"], b"Tj")]),
+    ):
+        toks, cpu = _cpu(_tokens, data)
+        assert toks == want
+        assert cpu <= 0.5

@@ -495,3 +495,53 @@ def test_hreflang_corpus_decoy_and_reciprocity_shapes():
     c1 = [v for u, v in by_url.items() if "/hl/0001/" in u]
     assert sum(1 for v in c1 if v == []) == 1
     assert sum(1 for v in c1 if v) == len(c1) - 1
+
+
+# -- hostile pages: linear time, and the result of the replaced extractor ------------
+
+
+def _min_cpu(fn, page, runs=2):
+    import time
+
+    best = None
+    for _ in range(runs):
+        t0 = time.process_time()
+        out = fn(page)
+        cpu = time.process_time() - t0
+        best = cpu if best is None else min(best, cpu)
+    return out, best
+
+
+def test_script_bomb_page_costs_linear_time():
+    """32,000 tiny <script> elements before 2 MB of text (2.7 MB): each
+    script body was skipped by searching a copy of the rest of the page,
+    7.1 s for this page.  The raw element is now one token of the scan;
+    the microdata scan searches for the close tag from its cursor."""
+    import html_extract_oracle as oracle
+    from pdf_ocr_spark.kernels.html_extract import extract_microdata, extract_tables
+
+    page = (b"<html><body>" + b"<script>x</script>" * 32000 + b"<div><p>"
+            + b"word, " * 350000 + b"</p></div></body></html>")
+    got, cpu = _min_cpu(extract_html, page)
+    assert cpu <= 0.3, cpu
+    assert got[1] == "ok"
+    assert got == oracle.extract_html(page)
+    assert _min_cpu(extract_tables, page)[1] <= 0.3
+    assert _min_cpu(extract_microdata, page)[1] <= 0.5
+
+
+def test_deep_unclosed_div_page_costs_linear_time():
+    """100k unclosed <div>: the stack stays 200 deep and the rest are
+    leaves, so the cost grows with the page (the replaced extractor took
+    56 s here, rejoining its whole pending line at every leaf).  Checked
+    against it on a 3,000-deep page of the same shape."""
+    import html_extract_oracle as oracle
+
+    def page(depth):
+        return (b"<div>" * depth + b"<p>the deepest paragraph, with words enough</p>"
+                + b"text, " * 2000)
+
+    got, cpu = _min_cpu(extract_html, page(100_000))
+    assert cpu <= 1.0, cpu
+    assert got[1] == "ok"
+    assert extract_html(page(3000)) == oracle.extract_html(page(3000))

@@ -1,4 +1,4 @@
-"""In-process A/B of the PDF kernels of two checkouts.
+"""In-process A/B of the PDF and HTML kernels of two checkouts.
 
     python tools/kernel_ab.py <checkout_a> <checkout_b> [n_docs] [seed] [reps]
 
@@ -6,10 +6,13 @@ Loads ``pdf_ocr_spark`` from both checkouts into ONE process (the
 package modules are swapped out of ``sys.modules`` between the two
 imports, and each tree keeps its own function objects), builds the
 ``perfbench/inputs.mixed_rows(n_docs, seed)`` corpus (defaults 3000, 1)
-and times, per document kind, the COS layer on the raw bytes (``cos``:
+and times, per PDF kind, the COS layer on the raw bytes (``cos``:
 ``PDFDocument``, ``.pages()`` and ``fonts.load_page_fonts`` of every
 page), ``interpret_page`` and ``build_lines`` on pre-parsed pages and
-``extract_pdf`` on the raw bytes.  The trees run
+``extract_pdf`` on the raw bytes; and ``extract_html`` and
+``extract_tables`` on the corpus's other payloads (kind ``html``) and on
+the ``ingest_commit`` pages, ``perfbench/inputs.html_rows(5500, seed)``
+(kind ``html_rows``).  The trees run
 interleaved (A B, then B A, ...), the GC is set as in a tuned Spark
 worker, and each figure is the minimum process CPU time over ``reps``
 rounds (default 9), so host noise hits both trees alike.
@@ -37,6 +40,7 @@ def _load(root: str) -> dict:
             name: importlib.import_module(f"pdf_ocr_spark.kernels.pdf.{name}")
             for name in ("extract", "content", "layout", "cos", "fonts")
         }
+        html = importlib.import_module("pdf_ocr_spark.kernels.html_extract")
     finally:
         sys.path.remove(root)
     assert mods["content"].__file__.startswith(os.path.abspath(root))
@@ -46,6 +50,8 @@ def _load(root: str) -> dict:
         "build_lines": mods["layout"].build_lines,
         "PDFDocument": mods["cos"].PDFDocument,
         "load_page_fonts": mods["fonts"].load_page_fonts,
+        "extract_html": html.extract_html,
+        "extract_tables": html.extract_tables,
     }
 
 
@@ -89,14 +95,17 @@ def main(argv: list) -> None:
     opts = [int(v) for v in argv[3:6]]
     n, seed, reps = opts + [3000, 1, 9][len(opts):]
     sys.path.insert(0, os.path.join(a, "perfbench"))
-    from inputs import mixed_rows
+    from inputs import html_rows, mixed_rows
 
     trees = {"A": _load(a), "B": _load(b)}
     kinds: dict = {}
+    htmls: dict = {"html": [], "html_rows": [r["html"] for r in html_rows(5500, seed)]}
     for r in mixed_rows(n, seed):
         p = r["html"]
         if p and p[:5] == b"%PDF-":
             kinds.setdefault(r["url"].split("/")[-2], []).append(p)
+        elif p:
+            htmls["html"].append(p)
     work = {}
     for t, tree in trees.items():
         for kind, payloads in kinds.items():
@@ -107,12 +116,18 @@ def main(argv: list) -> None:
                 "build_lines": (tree["build_lines"], [(g, h) for _, _, g, h in pages]),
                 "extract_pdf": (tree["extract_pdf"], [(p,) for p in payloads]),
             }
+        for kind, payloads in htmls.items():
+            work[t, kind] = {
+                step: (tree[step], [(p,) for p in payloads])
+                for step in ("extract_html", "extract_tables")
+            }
+    order = sorted(kinds) + list(htmls)
     gc.collect()
     gc.freeze()
     gc.set_threshold(200_000, 100, 100)  # as extract_job._tune_worker sets it
     best: dict = {}
     for rep in range(reps):
-        for kind in sorted(kinds):
+        for kind in order:
             for t in ("A", "B") if rep % 2 == 0 else ("B", "A"):
                 for step, (fn, items) in work[t, kind].items():
                     v = _cpu(fn, items)
@@ -120,8 +135,8 @@ def main(argv: list) -> None:
     print(f"{n} docs, seed {seed}, min process CPU s of {reps} interleaved rounds,"
           f" {os.cpu_count()} cpus")
     total = {"A": 0.0, "B": 0.0}
-    for kind in sorted(kinds):
-        for step in ("cos", "interpret_page", "build_lines", "extract_pdf"):
+    for kind in order:
+        for step in work["A", kind]:
             va, vb = best["A", kind, step], best["B", kind, step]
             if step == "extract_pdf":
                 total["A"] += va
