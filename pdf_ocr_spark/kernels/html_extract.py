@@ -75,6 +75,36 @@ _SCAN_RE = re.compile(
     re.S,
 )
 _EOF = ("", "/", "", "")  # closes every element still open
+# past the page's last '>': a text run, a '<!' or '<?' that takes the rest
+# (comment or declaration), or a stray '<'
+_TAIL_RE = re.compile(r"([^<]++)|<[!?].*|(<)", re.S)
+
+
+def _scan(text: str) -> list:
+    """``_SCAN_RE.findall(text)`` in linear time.  A tag or raw element
+    needs a '>' after its '<', so none starts past the page's last '>';
+    there each '<' would retry the tag patterns to the end of the page.
+    So :data:`_SCAN_RE` reads the tokens that start before it (one may
+    run on to the end: a comment or raw element left open) and
+    :data:`_TAIL_RE` the rest."""
+    end = text.rfind(">") + 1
+    if text.find("<", end) < 0:
+        return _SCAN_RE.findall(text)
+    toks = []
+    pos = 0
+    for m in _SCAN_RE.finditer(text):
+        if m.start() >= end:
+            break
+        toks.append(m.groups(""))
+        pos = m.end()
+    toks += [(t, "", "", lt) for t, lt in _TAIL_RE.findall(text, pos)]
+    return toks
+
+
+def _tags(text: str):
+    """``_TAG_RE.finditer(text)`` stopped at the page's last '>', where
+    every tag ends: past it each '<' would retry to the end of the page."""
+    return _TAG_RE.finditer(text, 0, text.rfind(">") + 1)
 
 
 class _Node:
@@ -127,7 +157,7 @@ def _parse(html_text: str):
     has_texts = False  # top has a child or a non-blank chunk
     link = False  # top is an <a> or inside one
     tl = ll = cc = 0  # running text length, link text length, commas
-    toks = _SCAN_RE.findall(html_text)
+    toks = _scan(html_text)
     toks.append(_EOF)
     for txt, slash, name, lt in toks:
         if slash:
@@ -325,7 +355,7 @@ def extract_links_attrs(data: bytes) -> List[Tuple[str, bool, str]]:
         return []
     out: List[Tuple[str, bool, str]] = []
     seen = set()
-    for m in _TAG_RE.finditer(text):
+    for m in _tags(text):
         closing, tag, attrs, _ = m.groups()
         if closing or tag.lower() != "a":
             continue
@@ -355,7 +385,9 @@ def extract_links_attrs(data: bytes) -> List[Tuple[str, bool, str]]:
         elif om is not None:
             end = om.start()
         if end is not None:
-            inner = _TAG_RE.sub(" ", text[m.end() : end])
+            inner = text[m.end() : end]
+            k = inner.rfind(">") + 1  # the tags end by it (see _tags)
+            inner = _TAG_RE.sub(" ", inner[:k]) + inner[k:]
             anchor = _WS_RE.sub(" ", _htmllib.unescape(inner)).strip()[:200]
         out.append((href, nofollow, anchor))
     return out
@@ -424,7 +456,7 @@ def extract_metadata(data: bytes) -> HtmlMeta:
         ("title", "description", "canonical", "lang",
          "og_title", "og_image", "meta_date", "time_date", "robots")
     )
-    for m in _TAG_RE.finditer(text):
+    for m in _tags(text):
         closing, tag, attrs, _ = m.groups()
         if closing:
             continue
@@ -497,7 +529,7 @@ def extract_hreflang(data: bytes) -> List[Tuple[str, str]]:
     except Exception:  # noqa: BLE001 — bytes-ish inputs only
         return []
     out: List[Tuple[str, str]] = []
-    for m in _TAG_RE.finditer(text):
+    for m in _tags(text):
         closing, tag, attrs, _ = m.groups()
         if closing or tag.lower() != "link":
             continue
@@ -631,7 +663,7 @@ def extract_jsonld(data: bytes) -> List[JsonLdBlock]:
         return []
     out: List[JsonLdBlock] = []
     bi = 0
-    for m in _TAG_RE.finditer(text):
+    for m in _tags(text):
         closing, tag, attrs, _ = m.groups()
         if closing or tag.lower() != "script":
             continue
@@ -720,6 +752,7 @@ def extract_microdata(data: bytes) -> List[MicrodataProp]:
     item_types: dict = {}
     pos = 0
     n = len(text)
+    last = text.rfind(">") + 1  # no tag matches past it (see _tags)
 
     def nearest_item() -> Optional[int]:
         for fr in reversed(stack):
@@ -750,7 +783,7 @@ def extract_microdata(data: bytes) -> List[MicrodataProp]:
             end = text.find(">", lt + 2)
             pos = n if end < 0 else end + 1
             continue
-        m = _TAG_RE.match(text, lt)
+        m = _TAG_RE.match(text, lt, last)
         if not m:
             for cap in captures:
                 cap[3].append("<")

@@ -48,6 +48,8 @@ from dataclasses import dataclass
 from itertools import repeat
 from typing import Callable, Optional
 
+from pyspark import TaskContext
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -183,7 +185,7 @@ def _record_batch(rows: list, arrow_schema):
     )
 
 
-def arrow_map(rows_fn, schema: StructType):
+def arrow_map(rows_fn, schema: StructType, tally=None):
     """The one Arrow adapter: wraps a rows function — one plain list per
     input column in, row tuples out — as a ``mapInArrow`` body whose
     output types come from ``to_arrow_schema(schema)`` and whose name is
@@ -191,7 +193,8 @@ def arrow_map(rows_fn, schema: StructType):
     appears in the worker (the pandas adapter it replaced measured 10–18%
     lower pipeline throughput at 8/32 cores on the synthetic corpus).
     Each task calls :func:`_tune_worker` first; without its zip-cache
-    stamp every task paid about 250 ms CPU on a 4-core box."""
+    stamp every task paid about 250 ms CPU on a 4-core box.  A ``tally``
+    (:class:`LineageTally`) receives the lineage of the DOC_SCHEMA rows."""
 
     def run(batches):
         from pyspark.sql.pandas.types import to_arrow_schema
@@ -199,14 +202,15 @@ def arrow_map(rows_fn, schema: StructType):
         _tune_worker()
         arrow_schema = to_arrow_schema(schema)
         for rb in batches:
-            yield _record_batch(
-                rows_fn(*(c.to_pylist() for c in rb.columns)), arrow_schema
-            )
+            rows = rows_fn(*(c.to_pylist() for c in rb.columns))
+            if tally is not None and rows:
+                tally.add({TaskContext.get().partitionId(): LineageTally.row(rows)})
+            yield _record_batch(rows, arrow_schema)
 
     return _named_after(run, rows_fn)
 
 
-def group_map(row_fn, schema: StructType):
+def group_map(row_fn, schema: StructType, tally=None):
     """The grouped twin of :func:`arrow_map`: wraps ``row_fn`` — one
     group's rows as a dict of column lists in, ONE row tuple out — as an
     ``applyInArrow`` body whose output is typed by ``schema``."""
@@ -217,9 +221,34 @@ def group_map(row_fn, schema: StructType):
 
         _tune_worker()
         row = row_fn(table.to_pydict())
+        if tally is not None:
+            tally.add({TaskContext.get().partitionId(): LineageTally.row([row])})
         return pa.Table.from_batches([_record_batch([row], to_arrow_schema(schema))])
 
     return _named_after(run, row_fn)
+
+
+class LineageTally(AccumulatorParam):
+    """``{part_id: (n_docs, n_pages, n_failed, n_ocr_pages, n_bytes,
+    failure_kinds)}``, each partition's :func:`doc_lineage_metrics` row.
+    Spark applies a result task's updates once, failed attempts' never."""
+
+    def zero(self, value) -> dict:
+        return {}
+
+    def addInPlace(self, acc: dict, more: dict) -> dict:
+        for pid, row in more.items():
+            old = acc.get(pid)
+            acc[pid] = row if old is None else (
+                *(a + b for a, b in zip(old[:5], row[:5])), old[5] | row[5]
+            )
+        return acc
+
+    @staticmethod
+    def row(rows: list) -> tuple:  # of DOC_SCHEMA row tuples
+        return (len(rows), sum(r[3] for r in rows), sum(r[6] == "failed" for r in rows),
+                sum(r[9] for r in rows), sum(r[8] for r in rows),
+                frozenset(r[7].split(":")[0] for r in rows if r[7] is not None))
 
 
 def _named_after(body, fn):
@@ -408,6 +437,7 @@ def kernel_route(
     key: str = "url",
     cols: tuple = ("url", "html"),
     num_partitions: Optional[int] = None,
+    tally=None,
 ) -> DataFrame:
     """The shared plan shape of every kernel extraction route: scan
     pruned to ``cols`` → ONE salted repartition on ``xxhash64(key)``
@@ -421,7 +451,7 @@ def kernel_route(
             pages_df.sparkSession.sparkContext.defaultParallelism, 8
         )
     df = df.repartition(num_partitions, F.xxhash64(key))
-    return df.mapInArrow(arrow_map(rows_fn, schema), schema=schema)
+    return df.mapInArrow(arrow_map(rows_fn, schema, tally), schema=schema)
 
 
 @dataclass(frozen=True)
@@ -451,7 +481,7 @@ class Route:
 
 
 def extract_documents(
-    pages_df: DataFrame, num_partitions: Optional[int] = None
+    pages_df: DataFrame, num_partitions: Optional[int] = None, tally=None
 ) -> DataFrame:
     """Full pipeline: pages table → document-level extraction results.
 
@@ -459,7 +489,8 @@ def extract_documents(
     mapInArrow stage (parse + batched OCR + per-doc assembly).  A single
     shuffle total; no groupBy, no second Arrow round-trip, no pandas
     layer in the worker."""
-    return kernel_route(pages_df, doc_rows, DOC_SCHEMA, num_partitions=num_partitions)
+    return kernel_route(pages_df, doc_rows, DOC_SCHEMA, num_partitions=num_partitions,
+                        tally=tally)
 
 
 def extract_pages(
@@ -977,6 +1008,7 @@ def extract_documents_split(
     num_partitions: Optional[int] = None,
     giant_bytes: int = 4 << 20,
     pages_per_task: int = 32,
+    tally=None,
 ) -> DataFrame:
     """Skew-bounded variant of :func:`extract_documents` for corpora with
     GIANT documents (SURVEY.md §4.1: "a 1000-page PDF blocks the loop
@@ -1001,7 +1033,7 @@ def extract_documents_split(
     # for NULL payloads and silently drops the row from BOTH branches
     is_giant = F.coalesce(F.length("html"), F.lit(0)) >= giant_bytes
 
-    normal_docs = extract_documents(src.filter(~is_giant), num_partitions)
+    normal_docs = extract_documents(src.filter(~is_giant), num_partitions, tally)
 
     counted_schema = StructType(
         [*src.schema.fields, StructField("n_pages", IntegerType())]
@@ -1019,11 +1051,12 @@ def extract_documents_split(
         )
         .withColumn("page_hi", F.col("page_lo") + F.lit(pages_per_task - 1))
     )
+    merge = group_map(_merged_doc_row, DOC_SCHEMA, tally) if tally else _merge_ranges
     giant_docs = (
         ranges.repartition(num_partitions, F.xxhash64("url", "page_lo"))
         .mapInArrow(arrow_map(page_rows, PAGE_SCHEMA), schema=PAGE_SCHEMA)
         .groupBy("url")
-        .applyInArrow(_merge_ranges, schema=DOC_SCHEMA)
+        .applyInArrow(merge, schema=DOC_SCHEMA)
     )
     return normal_docs.unionByName(giant_docs)
 
@@ -1259,7 +1292,7 @@ def run_job(
     spark: SparkSession,
     input_path: str,
     done: Optional[DataFrame],
-    commit: Callable[[DataFrame, int, DataFrame], None],
+    commit: Callable[[DataFrame, Callable, DataFrame], None],
     num_partitions: Optional[int] = None,
     partition_buckets: Optional[int] = None,
     split_giants: bool = False,
@@ -1273,33 +1306,43 @@ def run_job(
     over ``giant_bytes`` when ``split_giants``), drop text the table
     already holds when ``content_dedup`` (:func:`dedup_incremental`) and
     add the Iceberg-style ``url_bucket = xxhash64(url) % N`` column when
-    ``partition_buckets=N``.  The doc rows are materialized once, counted
-    and handed to ``commit(docs, n, raw_scan)``, the format's own writes
-    in its own order (``raw_scan``: the input before the resume filter).
-    Returns the number of documents APPENDED (0 on a fully-resumed
-    rerun) — no re-scan of the output table."""
+    ``partition_buckets=N``.  ``commit(docs, lineage, raw_scan)`` is the
+    format's writes (``raw_scan``: the input before the resume filter).
+    Its docs write is the one extraction; its last Python stage tallies
+    the lineage (:class:`LineageTally`), so only after it does
+    ``lineage()`` give ``(n, sidecar)``: a crash between them leaves docs
+    without lineage, never the reverse.  Returns the number of documents
+    APPENDED (0 on a fully-resumed rerun)."""
+    tally = spark.sparkContext.accumulator({}, LineageTally())
     raw_scan = read_pages(spark, input_path, input_format)
     pages = raw_scan if done is None else resume_filter(raw_scan, done)
-    if split_giants:
-        docs = extract_documents_split(pages, num_partitions, giant_bytes=giant_bytes)
-    else:
-        docs = extract_documents(pages, num_partitions)
-    if content_dedup:
+    extract = (functools.partial(extract_documents_split, giant_bytes=giant_bytes)
+               if split_giants else extract_documents)
+    docs = extract(pages, num_partitions, tally=None if content_dedup else tally)
+    if content_dedup:  # rows end in a JVM window: a pass-through tallies them
         docs = dedup_incremental(docs, history=done)
+        docs = docs.mapInArrow(arrow_map(_same_rows, DOC_SCHEMA, tally), DOC_SCHEMA)
     if partition_buckets:
         docs = docs.withColumn(
             "url_bucket",
             F.pmod(F.xxhash64("url"), F.lit(partition_buckets)).cast("int"),
         )
-    # materialize once; the count, sidecar and table all derive from the
-    # cached rows (SURVEY.md §4.2 double-execution caveat)
-    docs = docs.persist()
-    try:
-        n = docs.count()  # materializes the cache; appended count, no rescan
-        commit(docs, n, raw_scan)
-    finally:
-        docs.unpersist()
-    return n
+
+    def lineage():
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        schema = doc_lineage_metrics(docs).schema  # analysis only, no job
+        rows = [(p, *r[:5], sorted(r[5])) for p, r in sorted(tally.value.items())]
+        table = pa.Table.from_batches([_record_batch(rows, to_arrow_schema(schema))])
+        return sum(r[1] for r in rows), spark.createDataFrame(table, schema).coalesce(1)
+
+    commit(docs, lineage, raw_scan)
+    return sum(r[0] for r in tally.value.values())
+
+
+def _same_rows(*cols) -> list:
+    return list(zip(*cols))
 
 
 def write_docs(docs: DataFrame, path: str, mode: str) -> None:
@@ -1323,22 +1366,21 @@ def run_extraction(
     input_format: str = "parquet",
 ) -> int:
     """Checkpointable batch run (:func:`run_job`) against a plain parquet
-    directory: resume against its rows, append to it.  Returns the number
-    of documents appended."""
+    directory: resume against its rows, append to it, then its lineage to
+    ``sidecar_path``.  Returns the number of documents appended.  A crash
+    before the sidecar append leaves docs without lineage rows; the rerun
+    resumes from whatever rows the table holds."""
 
-    def commit(docs: DataFrame, n: int, raw_scan: DataFrame) -> None:
-        # ORDER MATTERS: the resume plan reads output_path, so appending
-        # to it invalidates the cached docs — the sidecar therefore
-        # commits first (an orphan sidecar entry after a mid-write crash
-        # is harmless lineage; on real Iceberg both writes share one
-        # transaction).
+    def commit(docs: DataFrame, lineage: Callable, raw_scan: DataFrame) -> None:
+        write_docs(docs, output_path, "append")
         if sidecar_path is not None:
-            doc_lineage_metrics(docs).withColumn(
+            lineage()[1].withColumn(
                 "run_output", F.lit(output_path)
             ).write.mode("append").parquet(sidecar_path)
-        write_docs(docs, output_path, "append")
 
-    done = spark.read.parquet(output_path) if _parquet_exists(output_path) else None
+    # a declared schema reads no footers (one job less); url_bucket is still found
+    reader = spark.read.schema("url string, failure_reason string")
+    done = reader.parquet(output_path) if _parquet_exists(output_path) else None
     return run_job(
         spark, input_path, done, commit, num_partitions=num_partitions,
         partition_buckets=partition_buckets, split_giants=split_giants,

@@ -19,9 +19,9 @@ never poison the table (the directory-listing append mode can't promise
 that).  The manifest is committed via write-temp + ``os.rename`` —
 atomic on POSIX; on real object storage this maps to Iceberg's
 metadata-pointer swap.  The sidecar commits in the SAME manifest as its
-data, closing the orphan-sidecar window of the plain parquet table
+data, closing the window of the plain parquet table
 (:func:`~pdf_ocr_spark.pipeline.extract_job.run_extraction`, which
-appends its sidecar before its data).
+appends its sidecar after its data).
 
 A compaction manifest may carry ``replaces: [run_id, ...]`` — readers
 then skip the superseded run dirs (see :func:`compact_table`), which is
@@ -40,8 +40,8 @@ externally (one driver per table), as with any Hive-style table.
 One run driver, :func:`~pdf_ocr_spark.pipeline.extract_job.run_job`,
 serves every table format; each entry point supplies only its committed
 rows and its commit step.  :func:`run_extraction_snapshot` resumes from
-this log's current snapshot and commits data + sidecars to a fresh run
-dir, then the manifest rename.  :func:`run_extraction_iceberg` resumes
+this log's current snapshot and writes data, then sidecars, to a fresh
+run dir, then the manifest rename.  :func:`run_extraction_iceberg` resumes
 from a REAL Iceberg catalog table and commits with
 ``writeTo(table).create()``/``.append()`` when the iceberg-spark-runtime
 jar is on the classpath (:func:`iceberg_available`), with this log as
@@ -53,6 +53,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import uuid
 from typing import List, Optional
 
@@ -60,7 +61,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_ocr_spark.pipeline.extract_job import (
-    doc_lineage_metrics,
     input_split_lineage,
     run_job,
     write_docs,
@@ -207,8 +207,6 @@ def expire_snapshots(table_path: str, keep_from_seq: int) -> List[str]:
 
     Single-writer assumption as for commits: run maintenance from the
     table's one driver."""
-    import shutil
-
     replaced_at: dict = {}
     for m in committed_manifests(table_path):
         for r in m.get("replaces", []):
@@ -238,8 +236,6 @@ def remove_orphan_runs(table_path: str) -> List[str]:
     that crashed before their commit rename.  Safe because readers and
     resume only ever see committed dirs; run it only while no writer is
     active (single-writer assumption).  Returns the removed run ids."""
-    import shutil
-
     data_root = os.path.join(table_path, "data")
     if not os.path.isdir(data_root):
         return []
@@ -270,23 +266,19 @@ def compact_table(
     replaced_already = set()
     for m in manifests:
         replaced_already.update(m.get("replaces", []))
-    live = [
-        m["run_id"] for m in manifests
+    live = {
+        m["run_id"]: m["n_docs"] for m in manifests
         if m.get("n_docs", 0) > 0 and m["run_id"] not in replaced_already
-    ]
+    }
     if len(live) < min_runs:
         return 0
-    df = read_snapshot_table(spark, table_path)
     run_id = "compact-" + uuid.uuid4().hex[:12]
     run_dir = os.path.join(table_path, "data", run_id)
-    df = df.persist()
-    try:
-        n = df.count()
-        # keeps the prunable url_bucket layout when the table has one
-        write_docs(df.coalesce(target_partitions), run_dir, "overwrite")
-        commit_run(table_path, run_id, n, replaces=live)
-    finally:
-        df.unpersist()
+    # keeps the prunable url_bucket layout when the table has one
+    df = read_snapshot_table(spark, table_path).coalesce(target_partitions)
+    write_docs(df, run_dir, "overwrite")
+    n = sum(live.values())  # each manifest counts its run's rows: no count job
+    commit_run(table_path, run_id, n, replaces=list(live))
     return n
 
 
@@ -303,8 +295,9 @@ def run_extraction_snapshot(
 ) -> int:
     """Checkpointable batch run (:func:`~pdf_ocr_spark.pipeline.extract_job.run_job`)
     against a snapshot-log table: resume against the committed snapshot,
-    write data + sidecars to a fresh run dir, then the ATOMIC manifest
-    commit.  Returns the number of documents appended by this run.
+    write data, then sidecars, to a fresh run dir (removed again if the
+    run appends nothing), then the ATOMIC manifest commit.  Returns the
+    number of documents appended by this run.
 
     ``content_dedup=True`` additionally drops documents whose extracted
     text already exists in the committed table (cross-run incremental
@@ -318,10 +311,13 @@ def run_extraction_snapshot(
     run_id = uuid.uuid4().hex[:16]
     run_dir = os.path.join(table_path, "data", run_id)
 
-    def commit(docs: DataFrame, n: int, raw_scan: DataFrame) -> None:
-        if n > 0:
-            write_docs(docs, run_dir, "overwrite")  # fresh dir: overwrite=create
-            doc_lineage_metrics(docs).withColumn(
+    def commit(docs: DataFrame, lineage, raw_scan: DataFrame) -> None:
+        write_docs(docs, run_dir, "overwrite")  # fresh dir: overwrite=create
+        n, sidecar = lineage()
+        if n == 0:  # nothing appended: no run dir, as if never written
+            shutil.rmtree(run_dir, ignore_errors=True)
+        else:
+            sidecar.withColumn(
                 "run_id", F.lit(run_id)
             ).write.mode("overwrite").parquet(os.path.join(run_dir, "_sidecar"))
             # cheap column-pruned probe: is this a file-scan source?
@@ -409,7 +405,9 @@ def run_extraction_iceberg(
     Resume reads the table's current snapshot, so a crashed append —
     which never committed — is invisible, exactly like an orphan run
     dir.  The commit is ``writeTo(...).create()`` on the first run and
-    ``.append()`` after (one atomic Iceberg commit each).  Lineage goes
+    ``.append()`` after (one atomic Iceberg commit each).  The data
+    append is the run's one extraction, so a fully-resumed rerun commits
+    an empty append (a snapshot that adds no files).  Lineage goes
     to ``<table>_lineage`` (or ``lineage_table``) as a second append; it
     trails the data commit, so a crash between the two loses only
     observability rows, never data consistency."""
@@ -422,11 +420,11 @@ def run_extraction_iceberg(
     exists = _table_exists(spark, table_ident)
     run_id = uuid.uuid4().hex[:16]
 
-    def commit(docs: DataFrame, n: int, raw_scan: DataFrame) -> None:
-        if n > 0 or not exists:
-            _append_to_table(docs, table_ident, create=not exists)
+    def commit(docs: DataFrame, lineage, raw_scan: DataFrame) -> None:
+        _append_to_table(docs, table_ident, create=not exists)
+        n, lin = lineage()
         if n > 0:
-            lin = doc_lineage_metrics(docs).withColumn("run_id", F.lit(run_id))
+            lin = lin.withColumn("run_id", F.lit(run_id))
             lt = lineage_table or f"{table_ident}_lineage"
             _append_to_table(lin, lt, create=not _table_exists(spark, lt))
 

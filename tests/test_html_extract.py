@@ -1,5 +1,7 @@
 """Unit tests for the readability-style boilerplate stripper (K5)."""
 
+import pytest
+
 from pdf_ocr_spark.kernels.html_extract import extract_html
 
 
@@ -545,3 +547,31 @@ def test_deep_unclosed_div_page_costs_linear_time():
     assert cpu <= 1.0, cpu
     assert got[1] == "ok"
     assert extract_html(page(3000)) == oracle.extract_html(page(3000))
+
+
+@pytest.mark.parametrize("shape", [b"<a ", b'<a x="y" '], ids=["bare", "quoted"])
+def test_unclosed_tag_runs_cost_linear_time(shape):
+    """A '<' and a tag name with no '>' after them: each such tag used to
+    retry the tag patterns to the end of the page (``extract_html`` 1.04 s
+    at 10,000 bare ``<a ``, ``extract_metadata`` 4.1 s at 5,000).  Every
+    tag search now stops at the page's last '>', so doubling the run
+    costs under 3x (plus 10 ms for timer grain on the near-free scans)."""
+    from pdf_ocr_spark.kernels import html_extract as h
+
+    for fn in (h.extract_html, h.extract_tables, h.extract_metadata,
+               h.extract_links_attrs, h.extract_hreflang, h.extract_jsonld,
+               h.extract_microdata):
+        cost = [_min_cpu(fn, b"<p>" + shape * n)[1] for n in (20_000, 40_000)]
+        assert cost[1] < 3 * cost[0] + 0.01, (fn.__name__, cost)
+
+
+@pytest.mark.parametrize("page", [
+    "<!-- x><a ", "<p>a</p>tail<b c", "<script>x>y<a ", "<!x><a", "<p><!--",
+    "x>y<?php", "<a>b</a><", "<style>p{}</style><a href", "a>b<!-- c",
+])
+def test_scan_past_the_last_gt_matches_the_full_scan(page):
+    """The tokens past the page's last '>' (read without the tag
+    patterns) and the one spanning it equal the full scan's."""
+    from pdf_ocr_spark.kernels.html_extract import _SCAN_RE, _scan
+
+    assert _scan(page) == _SCAN_RE.findall(page)
