@@ -375,15 +375,14 @@ def extract_links_attrs(data: bytes) -> List[Tuple[str, bool, str]]:
         )
         # capture ends at </a> OR at the next <a …> open tag — HTML5
         # auto-closes an unclosed anchor there, and without the bound an
-        # unclosed <a> would swallow the NEXT anchor's text as its own
-        cm = _A_CLOSE_RE.search(text, m.end())
+        # unclosed <a> would swallow the NEXT anchor's text as its own.
+        # The </a> search stops at that open tag, so a page of unclosed
+        # anchors costs linear time, not a search to the end per anchor.
         om = _A_OPEN_RE.search(text, m.end())
+        bound = len(text) if om is None else om.start()
+        cm = _A_CLOSE_RE.search(text, m.end(), bound)
+        end = cm.start() if cm else (om.start() if om else None)
         anchor = ""
-        end = None
-        if cm is not None and (om is None or cm.start() < om.start()):
-            end = cm.start()
-        elif om is not None:
-            end = om.start()
         if end is not None:
             inner = text[m.end() : end]
             k = inner.rfind(">") + 1  # the tags end by it (see _tags)

@@ -6,9 +6,11 @@ verbatim in the DuckDB oracle.
 
 from __future__ import annotations
 
-import pandas as pd
+import unicodedata
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StringType
 
 from pdf_ocr_spark.operators.dedup import fingerprint
 
@@ -90,28 +92,37 @@ SYMBOL_PATTERN = r"#|\.\.\.|…"
 SENTENCE_PATTERN = r"[.!?]"
 
 
+def _gopher_signals(t: Column) -> dict:
+    """The Gopher signals of text column ``t`` by output name, ending in
+    the gate itself (``passes_gopher``).  Catalyst's common-subexpression
+    elimination dedups the repeated regexp scans."""
+    words = F.regexp_count(t, F.lit(WORD_PATTERN_SPLIT))
+    per_word = F.greatest(words, F.lit(1))
+    n_lines = F.regexp_count(t, F.lit(r"\n")) + 1
+    s = {
+        "n_words": words,
+        "mean_word_len": F.regexp_count(t, F.lit(WORD_CHAR_PATTERN)) / per_word,
+        "symbol_ratio": F.regexp_count(t, F.lit(SYMBOL_PATTERN)) / per_word,
+        "bullet_frac": F.regexp_count(t, F.lit(BULLET_LINE_PATTERN)) / n_lines,
+        "ellipsis_frac": F.regexp_count(t, F.lit(ELLIPSIS_LINE_PATTERN)) / n_lines,
+        "alpha_word_frac": F.regexp_count(t, F.lit(ALPHA_WORD_PATTERN)) / per_word,
+    }
+    s["passes_gopher"] = (
+        (words >= 50) & (words <= 100_000)
+        & (s["mean_word_len"] >= 3.0) & (s["mean_word_len"] <= 10.0)
+        & (s["symbol_ratio"] <= 0.1)
+        & (s["bullet_frac"] <= 0.9)
+        & (s["ellipsis_frac"] <= 0.3)
+        & (s["alpha_word_frac"] >= 0.8)
+    )
+    return s
+
+
 def gopher_pass_expr(t: Column) -> Column:
     """The Gopher gate as ONE boolean column expression — the single
     source of truth shared by :func:`gopher_quality` (per-document) and
-    :func:`domain_reputation` (site-level rollup).  Catalyst's common-
-    subexpression elimination dedups the repeated regexp scans when the
-    caller also projects the individual signals."""
-    words = F.regexp_count(t, F.lit(WORD_PATTERN_SPLIT))
-    word_chars = F.regexp_count(t, F.lit(WORD_CHAR_PATTERN))
-    n_lines = F.regexp_count(t, F.lit(r"\n")) + 1
-    symbols = F.regexp_count(t, F.lit(SYMBOL_PATTERN))
-    bullet_lines = F.regexp_count(t, F.lit(BULLET_LINE_PATTERN))
-    ellipsis_lines = F.regexp_count(t, F.lit(ELLIPSIS_LINE_PATTERN))
-    alpha_words = F.regexp_count(t, F.lit(ALPHA_WORD_PATTERN))
-    mwl = word_chars / F.greatest(words, F.lit(1))
-    return (
-        (words >= 50) & (words <= 100_000)
-        & (mwl >= 3.0) & (mwl <= 10.0)
-        & (symbols / F.greatest(words, F.lit(1)) <= 0.1)
-        & (bullet_lines / n_lines <= 0.9)
-        & (ellipsis_lines / n_lines <= 0.3)
-        & (alpha_words / F.greatest(words, F.lit(1)) >= 0.8)
-    )
+    :func:`domain_reputation` (site-level rollup)."""
+    return _gopher_signals(t)["passes_gopher"]
 
 
 def gopher_quality(
@@ -128,29 +139,14 @@ def gopher_quality(
       * ellipsis-ended line fraction <= 0.3
       * >= 80% of words contain an alphabetic character
     """
-    t = F.col(text_col)
-    words = F.regexp_count(t, F.lit(WORD_PATTERN_SPLIT))
-    word_chars = F.regexp_count(t, F.lit(WORD_CHAR_PATTERN))
-    n_lines = F.regexp_count(t, F.lit(r"\n")) + 1
-    symbols = F.regexp_count(t, F.lit(SYMBOL_PATTERN))
-    bullet_lines = F.regexp_count(t, F.lit(BULLET_LINE_PATTERN))
-    ellipsis_lines = F.regexp_count(t, F.lit(ELLIPSIS_LINE_PATTERN))
-    alpha_words = F.regexp_count(t, F.lit(ALPHA_WORD_PATTERN))
-    mwl = word_chars / F.greatest(words, F.lit(1))
-    sym_ratio = symbols / F.greatest(words, F.lit(1))
-    bullet_frac = bullet_lines / n_lines
-    ellipsis_frac = ellipsis_lines / n_lines
-    alpha_frac = alpha_words / F.greatest(words, F.lit(1))
-    passes = gopher_pass_expr(t)
+    s = _gopher_signals(F.col(text_col))
+    ratios = ("mean_word_len", "symbol_ratio", "bullet_frac", "ellipsis_frac",
+              "alpha_word_frac")
     return docs.select(
         F.col(id_col),
-        words.alias("n_words"),
-        F.round(mwl, 4).alias("mean_word_len"),
-        F.round(sym_ratio, 4).alias("symbol_ratio"),
-        F.round(bullet_frac, 4).alias("bullet_frac"),
-        F.round(ellipsis_frac, 4).alias("ellipsis_frac"),
-        F.round(alpha_frac, 4).alias("alpha_word_frac"),
-        passes.alias("passes_gopher"),
+        s["n_words"].alias("n_words"),
+        *(F.round(s[k], 4).alias(k) for k in ratios),
+        s["passes_gopher"].alias("passes_gopher"),
     )
 
 
@@ -846,25 +842,20 @@ def mojibake_corrupt_expr(col: Column) -> Column:
 
 
 def nfc_normalize(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Unicode NFC normalization via an Arrow-batched pandas UDF (Spark
-    has no normalization built-in; this is the sanctioned python path —
+    """Unicode NFC normalization via a scalar Arrow UDF (Spark has no
+    normalization built-in; this is the sanctioned python path —
     vectorized, never per-row).  The DuckDB oracle replays it with its
     native nfc_normalize(), so the gate cross-checks two independent
     NFC implementations (python unicodedata vs utf8proc)."""
-    from pyspark.sql.functions import pandas_udf
+    from pdf_ocr_spark.pipeline.extract_job import arrow_scalar
 
-    # NOTE: annotations are postponed (module-level future import), so the
-    # hint strings must resolve against module globals — hence the
-    # module-level ``import pandas as pd`` below the stdlib imports
-    @pandas_udf("string")
-    def _nfc(s: pd.Series) -> pd.Series:
-        import unicodedata
+    return docs.withColumn(
+        text_col, arrow_scalar(_nfc, StringType())(F.col(text_col))
+    )
 
-        return s.map(
-            lambda t: unicodedata.normalize("NFC", t) if t is not None else None
-        )
 
-    return docs.withColumn(text_col, _nfc(F.col(text_col)))
+def _nfc(t):
+    return unicodedata.normalize("NFC", t) if t is not None else None
 
 
 # ---------------------------------------------------------------------------
@@ -1312,7 +1303,7 @@ def chunk_passages(
     Plan at 100 TB: pure per-row fan-out — sequence → transform →
     posexplode, all inside whole-stage codegen; NO shuffle at all (the
     chunk table inherits the corpus partitioning, exactly what the
-    downstream embedding/indexing stage wants to mapInPandas over)."""
+    downstream embedding/indexing stage wants to mapInArrow over)."""
     step = chunk_words - overlap
     if step <= 0:
         raise ValueError("overlap must be smaller than chunk_words")
@@ -1539,23 +1530,15 @@ def compression_signals(
     templated pages compress abnormally well, binary junk abnormally
     badly.  Returns (id, n_bytes, compression_ratio).
 
-    Arrow-batched pandas UDF (zlib runs at C speed; the batch transfer
-    is the only Python cost) — the same deliberate exception as NFC:
-    no built-in expression can compress.  Zero shuffle; ratio is a
-    pure per-row function so the operator composes map-side into any
-    gate stack."""
-    from pyspark.sql.functions import pandas_udf
+    Scalar Arrow UDF (zlib runs at C speed; the batch transfer is the
+    only Python cost) — the same deliberate exception as NFC: no
+    built-in expression can compress.  Zero shuffle; ratio is a pure
+    per-row function so the operator composes map-side into any gate
+    stack."""
+    from pdf_ocr_spark.kernels.textstats import compression_ratio
+    from pdf_ocr_spark.pipeline.extract_job import arrow_scalar
 
-    @pandas_udf("double")
-    def _ratio(s: pd.Series) -> pd.Series:
-        from pdf_ocr_spark.kernels.textstats import compression_ratio
-
-        return s.map(
-            lambda v: compression_ratio(
-                bytes(v) if v is not None else b""
-            )
-        )
-
+    _ratio = arrow_scalar(compression_ratio, DoubleType())
     col = F.col(data_col)
     data = F.when(
         col.isNotNull(), col.cast("binary")

@@ -32,7 +32,9 @@ pass: page count → ``explode_outer`` into page ranges → page route →
 ``groupBy(url)`` re-merge.
 
 Resume (J3, the north rule): restarts anti-join the input against the
-already-committed output's urls — only the remainder is processed.
+already-committed output's urls — only the remainder is processed.  A
+replayed streaming micro-batch resumes the same way
+(:func:`append_extraction`).
 
 Per-row invariant vs the reference: byte-identical extracted text per url
 (page text = blocks joined '\\n', v2:684-686; doc text = concatenated
@@ -48,15 +50,19 @@ from dataclasses import dataclass
 from itertools import repeat
 from typing import Callable, Optional
 
+import pyarrow as pa
 from pyspark import TaskContext
 from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.functions import arrow_udf
+from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
 from pyspark.sql.window import Window
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
     BooleanType,
+    DataType,
     DoubleType,
     IntegerType,
     LongType,
@@ -176,8 +182,6 @@ def _tune_worker() -> None:
 
 def _record_batch(rows: list, arrow_schema):
     """Row tuples → one RecordBatch typed by ``arrow_schema``."""
-    import pyarrow as pa
-
     cols = list(zip(*rows)) if rows else [()] * len(arrow_schema)
     return pa.RecordBatch.from_arrays(
         [pa.array(c, f.type) for c, f in zip(cols, arrow_schema)],
@@ -197,8 +201,6 @@ def arrow_map(rows_fn, schema: StructType, tally=None):
     (:class:`LineageTally`) receives the lineage of the DOC_SCHEMA rows."""
 
     def run(batches):
-        from pyspark.sql.pandas.types import to_arrow_schema
-
         _tune_worker()
         arrow_schema = to_arrow_schema(schema)
         for rb in batches:
@@ -216,9 +218,6 @@ def group_map(row_fn, schema: StructType, tally=None):
     ``applyInArrow`` body whose output is typed by ``schema``."""
 
     def run(table):
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-
         _tune_worker()
         row = row_fn(table.to_pydict())
         if tally is not None:
@@ -226,6 +225,19 @@ def group_map(row_fn, schema: StructType, tally=None):
         return pa.Table.from_batches([_record_batch([row], to_arrow_schema(schema))])
 
     return _named_after(run, row_fn)
+
+
+def arrow_scalar(value_fn, return_type: DataType):
+    """The scalar twin of :func:`arrow_map`: ``value_fn`` (one value
+    in, one out) as a scalar ``arrow_udf`` (``ArrowEvalPython``, no
+    pandas layer) named after it; each batch calls :func:`_tune_worker`."""
+
+    def run(values: pa.Array) -> pa.Array:
+        _tune_worker()
+        out = [value_fn(v) for v in values.to_pylist()]
+        return pa.array(out, to_arrow_type(return_type))
+
+    return arrow_udf(_named_after(run, value_fn), return_type)
 
 
 class LineageTally(AccumulatorParam):
@@ -1290,35 +1302,33 @@ def read_pages(
 
 def run_job(
     spark: SparkSession,
-    input_path: str,
+    pages: DataFrame,
     done: Optional[DataFrame],
-    commit: Callable[[DataFrame, Callable, DataFrame], None],
+    commit: Callable[[DataFrame, Callable], None],
     num_partitions: Optional[int] = None,
     partition_buckets: Optional[int] = None,
     split_giants: bool = False,
     giant_bytes: int = 4 << 20,
-    input_format: str = "parquet",
     content_dedup: bool = False,
 ) -> int:
-    """The one checkpointed run behind every table format: read the
-    pages, anti-join them against ``done`` (the table's committed rows;
-    None for an empty table), extract the remainder (page-range-split
-    over ``giant_bytes`` when ``split_giants``), drop text the table
-    already holds when ``content_dedup`` (:func:`dedup_incremental`) and
-    add the Iceberg-style ``url_bucket = xxhash64(url) % N`` column when
-    ``partition_buckets=N``.  ``commit(docs, lineage, raw_scan)`` is the
-    format's writes (``raw_scan``: the input before the resume filter).
-    Its docs write is the one extraction; its last Python stage tallies
-    the lineage (:class:`LineageTally`), so only after it does
+    """The one checkpointed run behind every table format and every
+    streamed micro-batch: anti-join ``pages`` against ``done`` (the
+    table's committed rows; None for an empty table), extract the
+    remainder (page-range-split over ``giant_bytes`` when
+    ``split_giants``), drop text the table already holds when
+    ``content_dedup`` (:func:`dedup_incremental`) and add the
+    Iceberg-style ``url_bucket = xxhash64(url) % N`` column when
+    ``partition_buckets=N``.  ``commit(docs, lineage)`` is the format's
+    writes.  Its docs write is the one extraction; its last Python stage
+    tallies the lineage (:class:`LineageTally`), so only after it does
     ``lineage()`` give ``(n, sidecar)``: a crash between them leaves docs
     without lineage, never the reverse.  Returns the number of documents
     APPENDED (0 on a fully-resumed rerun)."""
     tally = spark.sparkContext.accumulator({}, LineageTally())
-    raw_scan = read_pages(spark, input_path, input_format)
-    pages = raw_scan if done is None else resume_filter(raw_scan, done)
+    todo = pages if done is None else resume_filter(pages, done)
     extract = (functools.partial(extract_documents_split, giant_bytes=giant_bytes)
                if split_giants else extract_documents)
-    docs = extract(pages, num_partitions, tally=None if content_dedup else tally)
+    docs = extract(todo, num_partitions, tally=None if content_dedup else tally)
     if content_dedup:  # rows end in a JVM window: a pass-through tallies them
         docs = dedup_incremental(docs, history=done)
         docs = docs.mapInArrow(arrow_map(_same_rows, DOC_SCHEMA, tally), DOC_SCHEMA)
@@ -1329,16 +1339,19 @@ def run_job(
         )
 
     def lineage():
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-
         schema = doc_lineage_metrics(docs).schema  # analysis only, no job
         rows = [(p, *r[:5], sorted(r[5])) for p, r in sorted(tally.value.items())]
-        table = pa.Table.from_batches([_record_batch(rows, to_arrow_schema(schema))])
-        return sum(r[1] for r in rows), spark.createDataFrame(table, schema).coalesce(1)
+        return sum(r[1] for r in rows), local_frame(spark, rows, schema)
 
-    commit(docs, lineage, raw_scan)
+    commit(docs, lineage)
     return sum(r[0] for r in tally.value.values())
+
+
+def local_frame(spark: SparkSession, rows: list, schema: StructType) -> DataFrame:
+    """Driver-side ``rows`` as a one-partition DataFrame (one file when
+    written); building it runs no job."""
+    table = pa.Table.from_batches([_record_batch(rows, to_arrow_schema(schema))])
+    return spark.createDataFrame(table, schema).coalesce(1)
 
 
 def _same_rows(*cols) -> list:
@@ -1354,6 +1367,43 @@ def write_docs(docs: DataFrame, path: str, mode: str) -> None:
     writer.parquet(path)
 
 
+def append_extraction(
+    spark: SparkSession,
+    pages: DataFrame,
+    output_path: str,
+    sidecar_path: Optional[str] = None,
+    num_partitions: Optional[int] = None,
+    partition_buckets: Optional[int] = None,
+    split_giants: bool = False,
+    giant_bytes: int = 4 << 20,
+) -> int:
+    """:func:`run_job` over ``pages`` against a plain parquet directory
+    (:func:`run_extraction`, each ``stream_extract`` micro-batch):
+    resume against its rows, append to it, then the lineage to
+    ``sidecar_path``.  Returns the number of documents appended.  A
+    crash before the sidecar append leaves docs without lineage rows.
+    A file sink's table is refused: readers list only the files in its
+    ``_spark_metadata`` log, so appended rows would be unread."""
+    if os.path.isdir(os.path.join(output_path, "_spark_metadata")):
+        raise ValueError(f"{output_path} has a file sink's _spark_metadata log")
+
+    def commit(docs: DataFrame, lineage: Callable) -> None:
+        write_docs(docs, output_path, "append")
+        if sidecar_path is not None:
+            lineage()[1].withColumn(
+                "run_output", F.lit(output_path)
+            ).write.mode("append").parquet(sidecar_path)
+
+    # a declared schema reads no footers (one job less); url_bucket is still found
+    reader = spark.read.schema("url string, failure_reason string")
+    done = reader.parquet(output_path) if _parquet_exists(output_path) else None
+    return run_job(
+        spark, pages, done, commit, num_partitions=num_partitions,
+        partition_buckets=partition_buckets, split_giants=split_giants,
+        giant_bytes=giant_bytes,
+    )
+
+
 def run_extraction(
     spark: SparkSession,
     input_path: str,
@@ -1365,26 +1415,11 @@ def run_extraction(
     giant_bytes: int = 4 << 20,
     input_format: str = "parquet",
 ) -> int:
-    """Checkpointable batch run (:func:`run_job`) against a plain parquet
-    directory: resume against its rows, append to it, then its lineage to
-    ``sidecar_path``.  Returns the number of documents appended.  A crash
-    before the sidecar append leaves docs without lineage rows; the rerun
-    resumes from whatever rows the table holds."""
-
-    def commit(docs: DataFrame, lineage: Callable, raw_scan: DataFrame) -> None:
-        write_docs(docs, output_path, "append")
-        if sidecar_path is not None:
-            lineage()[1].withColumn(
-                "run_output", F.lit(output_path)
-            ).write.mode("append").parquet(sidecar_path)
-
-    # a declared schema reads no footers (one job less); url_bucket is still found
-    reader = spark.read.schema("url string, failure_reason string")
-    done = reader.parquet(output_path) if _parquet_exists(output_path) else None
-    return run_job(
-        spark, input_path, done, commit, num_partitions=num_partitions,
-        partition_buckets=partition_buckets, split_giants=split_giants,
-        giant_bytes=giant_bytes, input_format=input_format,
+    """Checkpointable batch run: :func:`append_extraction` of the pages
+    under ``input_path``.  Returns the number of documents appended."""
+    return append_extraction(
+        spark, read_pages(spark, input_path, input_format), output_path,
+        sidecar_path, num_partitions, partition_buckets, split_giants, giant_bytes,
     )
 
 

@@ -38,11 +38,12 @@ with an optimistic metadata-pointer swap; coordinate concurrent writers
 externally (one driver per table), as with any Hive-style table.
 
 One run driver, :func:`~pdf_ocr_spark.pipeline.extract_job.run_job`,
-serves every table format; each entry point supplies only its committed
-rows and its commit step.  :func:`run_extraction_snapshot` resumes from
-this log's current snapshot and writes data, then sidecars, to a fresh
-run dir, then the manifest rename.  :func:`run_extraction_iceberg` resumes
-from a REAL Iceberg catalog table and commits with
+serves every table format; each entry point supplies only its pages
+(``read_pages``), its committed rows and its commit step.
+:func:`run_extraction_snapshot` resumes from this log's current snapshot
+and writes data, then sidecars, to a fresh run dir, then the manifest
+rename.  :func:`run_extraction_iceberg` resumes from a REAL Iceberg
+catalog table and commits with
 ``writeTo(table).create()``/``.append()`` when the iceberg-spark-runtime
 jar is on the classpath (:func:`iceberg_available`), with this log as
 the always-available fallback; without the jar it is covered by seam
@@ -62,6 +63,8 @@ from pyspark.sql import functions as F
 
 from pdf_ocr_spark.pipeline.extract_job import (
     input_split_lineage,
+    local_frame,
+    read_pages,
     run_job,
     write_docs,
 )
@@ -85,6 +88,18 @@ def committed_manifests(table_path: str) -> List[dict]:
     return out
 
 
+def _live_runs(manifests: List[dict]) -> dict:
+    """``{run_id: n_docs}`` of the runs that hold rows and that no later
+    compaction replaced, in commit order."""
+    replaced = set()
+    for m in manifests:
+        replaced.update(m.get("replaces", []))
+    return {
+        m["run_id"]: m["n_docs"] for m in manifests
+        if m.get("n_docs", 0) > 0 and m["run_id"] not in replaced
+    }
+
+
 class SnapshotExpiredError(RuntimeError):
     """A time-travel read named a snapshot whose data files were
     deleted by :func:`expire_snapshots` — the read cannot be served."""
@@ -101,14 +116,7 @@ def committed_data_dirs(
     manifests = committed_manifests(table_path)
     if as_of_seq is not None:
         manifests = [m for m in manifests if m["seq"] <= as_of_seq]
-    replaced = set()
-    for m in manifests:
-        replaced.update(m.get("replaces", []))
-    dirs = [
-        os.path.join(table_path, "data", m["run_id"])
-        for m in manifests
-        if m.get("n_docs", 0) > 0 and m["run_id"] not in replaced
-    ]
+    dirs = [os.path.join(table_path, "data", r) for r in _live_runs(manifests)]
     missing = [
         d for d in dirs
         if not os.path.isdir(d) or os.path.exists(os.path.join(d, "_EXPIRED"))
@@ -141,17 +149,23 @@ def read_snapshot_table(
     return out
 
 
-def read_snapshot_sidecar(spark: SparkSession, table_path: str) -> Optional[DataFrame]:
-    """Lineage sidecars of EVERY committed run, including runs later
-    superseded by a compaction — lineage is history, not table state."""
+def _read_run_side_dirs(
+    spark: SparkSession, table_path: str, name: str
+) -> Optional[DataFrame]:
+    """The ``<run dir>/<name>`` files of EVERY committed run, including
+    runs later superseded by a compaction — lineage is history, not
+    table state.  None when no run wrote one."""
     dirs = [
-        os.path.join(table_path, "data", m["run_id"], "_sidecar")
+        os.path.join(table_path, "data", m["run_id"], name)
         for m in committed_manifests(table_path)
     ]
     dirs = [d for d in dirs if os.path.isdir(d)]
-    if not dirs:
-        return None
-    return spark.read.parquet(*dirs)
+    return spark.read.parquet(*dirs) if dirs else None
+
+
+def read_snapshot_sidecar(spark: SparkSession, table_path: str) -> Optional[DataFrame]:
+    """Lineage sidecars of every committed run (:func:`_read_run_side_dirs`)."""
+    return _read_run_side_dirs(spark, table_path, "_sidecar")
 
 
 def read_snapshot_splits(spark: SparkSession, table_path: str) -> Optional[DataFrame]:
@@ -159,14 +173,7 @@ def read_snapshot_splits(spark: SparkSession, table_path: str) -> Optional[DataF
     presented which url range TO the run (recorded from the raw scan,
     before the resume filter — ``input_file_name()`` only resolves on a
     single-source plan).  Absent for in-memory inputs."""
-    dirs = [
-        os.path.join(table_path, "data", m["run_id"], "_sidecar_splits")
-        for m in committed_manifests(table_path)
-    ]
-    dirs = [d for d in dirs if os.path.isdir(d)]
-    if not dirs:
-        return None
-    return spark.read.parquet(*dirs)
+    return _read_run_side_dirs(spark, table_path, "_sidecar_splits")
 
 
 def commit_run(
@@ -262,14 +269,7 @@ def compact_table(
     either the old set or the compacted one, never both.  Superseded
     dirs stay on disk (time-travel/GC territory).  Returns the number of
     rows compacted (0 = nothing to do)."""
-    manifests = committed_manifests(table_path)
-    replaced_already = set()
-    for m in manifests:
-        replaced_already.update(m.get("replaces", []))
-    live = {
-        m["run_id"]: m["n_docs"] for m in manifests
-        if m.get("n_docs", 0) > 0 and m["run_id"] not in replaced_already
-    }
+    live = _live_runs(committed_manifests(table_path))
     if len(live) < min_runs:
         return 0
     run_id = "compact-" + uuid.uuid4().hex[:12]
@@ -310,8 +310,9 @@ def run_extraction_snapshot(
     from the last committed snapshot and re-extracts the lost work."""
     run_id = uuid.uuid4().hex[:16]
     run_dir = os.path.join(table_path, "data", run_id)
+    pages = read_pages(spark, input_path, input_format)
 
-    def commit(docs: DataFrame, lineage, raw_scan: DataFrame) -> None:
+    def commit(docs: DataFrame, lineage) -> None:
         write_docs(docs, run_dir, "overwrite")  # fresh dir: overwrite=create
         n, sidecar = lineage()
         if n == 0:  # nothing appended: no run dir, as if never written
@@ -320,17 +321,11 @@ def run_extraction_snapshot(
             sidecar.withColumn(
                 "run_id", F.lit(run_id)
             ).write.mode("overwrite").parquet(os.path.join(run_dir, "_sidecar"))
-            # cheap column-pruned probe: is this a file-scan source?
-            # (running the full split aggregation just to test emptiness
-            # would scan url+length(html) twice — once here, once below)
-            has_files = (
-                raw_scan.select(F.input_file_name().alias("f"))
-                .filter(F.col("f") != "")
-                .limit(1)
-                .count()
-            )
-            if has_files:
-                input_split_lineage(raw_scan).withColumn(
+            # one row per input file, none for an in-memory source
+            splits = input_split_lineage(pages)
+            rows = splits.collect()
+            if rows:
+                local_frame(spark, rows, splits.schema).withColumn(
                     "run_id", F.lit(run_id)
                 ).write.mode("overwrite").parquet(
                     os.path.join(run_dir, "_sidecar_splits")
@@ -339,10 +334,10 @@ def run_extraction_snapshot(
         commit_run(table_path, run_id, n)
 
     return run_job(
-        spark, input_path, read_snapshot_table(spark, table_path), commit,
+        spark, pages, read_snapshot_table(spark, table_path), commit,
         num_partitions=num_partitions, partition_buckets=partition_buckets,
         split_giants=split_giants, giant_bytes=giant_bytes,
-        input_format=input_format, content_dedup=content_dedup,
+        content_dedup=content_dedup,
     )
 
 
@@ -420,7 +415,7 @@ def run_extraction_iceberg(
     exists = _table_exists(spark, table_ident)
     run_id = uuid.uuid4().hex[:16]
 
-    def commit(docs: DataFrame, lineage, raw_scan: DataFrame) -> None:
+    def commit(docs: DataFrame, lineage) -> None:
         _append_to_table(docs, table_ident, create=not exists)
         n, lin = lineage()
         if n > 0:
@@ -430,6 +425,6 @@ def run_extraction_iceberg(
 
     done = spark.table(table_ident) if exists else None
     return run_job(
-        spark, input_path, done, commit, num_partitions=num_partitions,
-        input_format=input_format,
+        spark, read_pages(spark, input_path, input_format), done, commit,
+        num_partitions=num_partitions,
     )

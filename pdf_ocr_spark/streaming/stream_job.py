@@ -2,15 +2,15 @@
 
 The reference is a batch tool (SURVEY.md §1.3), but a web-scale crawl is
 an unbounded source: new WARC-derived parquet files land continuously.
-This module re-expresses the batch pipeline as an incremental streaming
-job — same kernels, same fused ``mapInArrow`` stage — where Spark's
-checkpoint tracks which input files are already processed (the streaming
-twin of the batch resume anti-join, ``extract_job.resume_filter``):
+Spark's checkpoint tracks which input files each micro-batch read; every
+entry point drains what has landed and stops (:func:`_drain`):
 
-* :func:`stream_extract` — file-source ``readStream`` over the pages
-  table → fused extractor → parquet ``writeStream``.  With
-  ``Trigger.AvailableNow`` it drains everything new and stops, giving
-  exactly-once incremental batches driven entirely by the checkpoint.
+* :func:`stream_extract` — each micro-batch runs the batch run's commit
+  (resume anti-join, fused extractor, ``write_docs`` append) into the
+  batch run's table, so a replay resumes like a batch rerun.
+* :func:`stream_wet_export`, :func:`stream_quality_gate`,
+  :func:`stream_hot_hosts` — one ``batch=<id>`` directory per
+  micro-batch, overwritten on replay (:func:`_per_batch_dirs`).
 * :func:`windowed_event_counts` — watermarked tumbling-window counts
   (late data handled by the watermark), the streaming analogue of the
   hourly-rollup batch query.
@@ -22,7 +22,8 @@ twin of the batch resume anti-join, ``extract_job.resume_filter``):
 
 from __future__ import annotations
 
-from typing import Iterator, Optional, Tuple
+import os
+from typing import Callable, Iterator, Optional, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -39,6 +40,7 @@ from pyspark.sql.types import (
 
 from pdf_ocr_spark.pipeline.extract_job import (
     DOC_SCHEMA,
+    append_extraction,
     doc_rows,
     extract_documents,
     kernel_route,
@@ -69,6 +71,28 @@ def _read_stream(
     )
 
 
+def _drain(writer, checkpoint_path: str):
+    """Start a ``DataStreamWriter`` that processes what has landed and
+    stops (AvailableNow).  Returns the started query."""
+    return writer.option("checkpointLocation", checkpoint_path).trigger(
+        availableNow=True
+    ).start()
+
+
+def _per_batch_dirs(stream: DataFrame, output_path: str, checkpoint_path: str,
+                    rows: Callable[[DataFrame], DataFrame]):
+    """Micro-batch ``<id>`` overwrites ``<output_path>/batch=<id>`` with
+    ``rows(batch)``: a replayed micro-batch rewrites its own output, so
+    checkpoint plus directory layout give exactly-once output."""
+
+    def _emit(batch_df: DataFrame, batch_id: int) -> None:
+        rows(batch_df).write.mode("overwrite").parquet(
+            os.path.join(output_path, f"batch={batch_id}")
+        )
+
+    return _drain(stream.writeStream.foreachBatch(_emit), checkpoint_path)
+
+
 def stream_extract(
     spark: SparkSession,
     input_path: str,
@@ -76,23 +100,21 @@ def stream_extract(
     checkpoint_path: str,
     num_partitions: Optional[int] = None,
 ):
-    """Incremental extraction: new parquet files under ``input_path`` flow
-    through the SAME fused extractor as the batch job and append to
-    ``output_path``; the AvailableNow trigger drains what has landed and
-    stops.  Returns the started StreamingQuery.
+    """Incremental extraction into the batch run's docs table: each
+    micro-batch of new files under ``input_path`` runs
+    ``run_extraction``'s commit (``extract_job.append_extraction``), so
+    a batch run and every reader see the streamed rows.  A replayed
+    micro-batch resumes like a batch rerun: it appends only retried
+    ``ocr_failed`` rows (``canonical_docs`` resolves them), at one read
+    of the table's ``(url, failure_reason)`` per micro-batch.  Returns
+    the started StreamingQuery."""
 
-    The checkpoint (file-source log + sink commit log) is the resume
-    protocol: a killed run restarts from the last committed micro-batch
-    with no anti-join needed and no double-processing."""
-    docs = extract_documents(_read_stream(spark, input_path), num_partitions)
-    return (
-        docs.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    def _commit(batch_df: DataFrame, batch_id: int) -> None:
+        append_extraction(batch_df.sparkSession, batch_df, output_path,
+                          num_partitions=num_partitions)
+
+    stream = _read_stream(spark, input_path).writeStream.foreachBatch(_commit)
+    return _drain(stream, checkpoint_path)
 
 
 def windowed_event_counts(
@@ -210,7 +232,14 @@ def running_totals_stateful(pages: DataFrame) -> DataFrame:
     """Custom stateful streaming operator: cumulative per-lang doc/byte
     totals via ``applyInPandasWithState``.  Input needs columns
     (lang string, n_bytes long); each micro-batch emits the updated
-    running totals for the langs it touched."""
+    running totals for the langs it touched.
+
+    This is the engine's one pandas stage.  Its Arrow successor,
+    ``transformWithState``, runs only with the RocksDB state-store
+    provider, and that provider is a session-wide setting
+    (``spark.sql.streaming.stateStore.providerClass``): choosing it here
+    would move every stateful stream of the session, the watermarked
+    windows and dedups included, onto RocksDB."""
     return pages.groupBy("lang").applyInPandasWithState(
         _totals_fn,
         outputStructType=_TOTALS_SCHEMA,
@@ -264,13 +293,10 @@ def stream_feed_frontier(
         .withWatermark("fetched_at", "1 day")
         .dropDuplicatesWithinWatermark(["link"])
     )
-    return (
-        items.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        items.writeStream.format("parquet").option("path", output_path)
+        .outputMode("append"),
+        checkpoint_path,
     )
 
 
@@ -301,14 +327,8 @@ def stream_wet_export(
     Crawl's WET product; null capture timestamps render as the epoch
     (``pages_to_warc``'s null contract).
 
-    ``foreachBatch`` is the pattern for sinks Spark has no streaming
-    writer for (a custom archive format); idempotence comes from
-    writing each batch into its own ``batch=<id>`` subdirectory with
-    mode=overwrite — a retried micro-batch overwrites its own output
-    instead of appending duplicates, so checkpoint + directory layout
-    together give exactly-once archives.  Returns the started query."""
-    import os as _os
-
+    The archives go to exactly-once ``batch=<id>`` directories
+    (:func:`_per_batch_dirs`).  Returns the started query."""
     from pdf_ocr_spark.sources.warc import pages_to_warc
 
     docs = kernel_route(
@@ -316,10 +336,9 @@ def stream_wet_export(
         cols=("url", "html", "warc_ts"), num_partitions=num_partitions,
     )
 
-    def _emit(batch_df: DataFrame, batch_id: int) -> None:
-        wet_in = (
-            batch_df.filter(F.length("extracted_text") > 0)
-            .select(
+    def _archives(batch_df: DataFrame) -> DataFrame:
+        return pages_to_warc(
+            batch_df.filter(F.length("extracted_text") > 0).select(
                 "url",
                 "warc_ts",
                 F.lit(None).cast("binary").alias("html"),
@@ -327,16 +346,8 @@ def stream_wet_export(
                 F.lit("unknown").alias("lang"),
             )
         )
-        pages_to_warc(wet_in).write.mode("overwrite").parquet(
-            _os.path.join(output_path, f"batch={batch_id}")
-        )
 
-    return (
-        docs.writeStream.foreachBatch(_emit)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _per_batch_dirs(docs, output_path, checkpoint_path, _archives)
 
 
 def stream_quality_gate(
@@ -361,11 +372,8 @@ def stream_quality_gate(
     The threshold is a FIXED offline-calibrated constant, not a
     per-batch quantile — a per-batch cut would make row fate depend on
     micro-batch boundaries, breaking the retry-idempotence contract.
-    ``foreachBatch`` + per-batch ``batch=<id>`` overwrite directories
-    give exactly-once output exactly like ``stream_wet_export``.
-    Returns the started query."""
-    import os as _os
-
+    Rows go to exactly-once ``batch=<id>`` directories
+    (:func:`_per_batch_dirs`).  Returns the started query."""
     from pdf_ocr_spark.operators.quality import nb_score
 
     docs = extract_documents(_read_stream(spark, input_path), num_partitions)
@@ -373,9 +381,8 @@ def stream_quality_gate(
         (int(r[0]), int(r[1]), int(r[2]), r[3]) for r in model_rows
     ]
 
-    def _emit(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        model = sess.createDataFrame(
+    def _kept(batch_df: DataFrame) -> DataFrame:
+        model = batch_df.sparkSession.createDataFrame(
             model_local,
             schema="bucket int, pos_cnt long, neg_cnt long, weight decimal(18,6)",
         )
@@ -383,21 +390,13 @@ def stream_quality_gate(
             batch_df, model, text_col="extracted_text", id_col="url",
             buckets=buckets,
         )
-        kept = (
+        return (
             batch_df.join(scored, "url")
             .filter(F.col("nb_score") > threshold)
             .select("url", "extracted_text", "nb_score")
         )
-        kept.write.mode("overwrite").parquet(
-            _os.path.join(output_path, f"batch={batch_id}")
-        )
 
-    return (
-        docs.writeStream.foreachBatch(_emit)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _per_batch_dirs(docs, output_path, checkpoint_path, _kept)
 
 
 def stream_hot_hosts(
@@ -411,12 +410,11 @@ def stream_hot_hosts(
     """Streaming heavy-hitter sketch over arriving pages: every
     micro-batch builds its own Count-Min counter table for the batch's
     HOSTS (bounded: ≤ d·w rows per batch no matter the traffic) and
-    writes it into a ``batch=<id>`` subdirectory with mode=overwrite —
-    the ``stream_wet_export`` exactly-once pattern: a retried
-    micro-batch overwrites its own output instead of double-counting,
-    which is precisely the failure mode a naive streaming counter
-    accumulator has (at-least-once replay inflates counts; a FIXED
-    per-batch sketch directory cannot).
+    writes it into an exactly-once ``batch=<id>`` directory
+    (:func:`_per_batch_dirs`): a retried micro-batch overwrites its own
+    output instead of double-counting, which is precisely the failure
+    mode a naive streaming counter accumulator has (at-least-once replay
+    inflates counts; a FIXED per-batch sketch directory cannot).
 
     The live "who is hot right now" view is :func:`merged_host_sketch`
     — CMS mergeability (groupBy sum over the batch dirs) means the
@@ -425,26 +423,14 @@ def stream_hot_hosts(
     from pdf_ocr_spark.operators.graph import host_expr
     from pdf_ocr_spark.operators.sketches import cms_counts
 
-    pages = _read_stream(spark, input_path)
+    def _sketch(batch_df: DataFrame) -> DataFrame:
+        hosts = batch_df.select(host_expr(F.col("url")).alias("item"))
+        return cms_counts(
+            hosts.filter(F.col("item") != ""), "item", d=d, w=w
+        ).coalesce(1)
 
-    def _emit(batch_df: DataFrame, batch_id: int) -> None:
-        sk = cms_counts(
-            batch_df.select(host_expr(F.col("url")).alias("item")).filter(
-                F.col("item") != ""
-            ),
-            "item",
-            d=d,
-            w=w,
-        )
-        sk.coalesce(1).write.mode("overwrite").parquet(
-            f"{output_path}/batch={batch_id}"
-        )
-
-    return (
-        pages.writeStream.foreachBatch(_emit)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    return _per_batch_dirs(
+        _read_stream(spark, input_path), output_path, checkpoint_path, _sketch
     )
 
 

@@ -3,6 +3,7 @@ document without losing its neighbours, and ``arrow_map`` types the rows
 from the route's Spark schema."""
 
 import importlib
+import re
 
 import pyarrow as pa
 import pytest
@@ -393,6 +394,39 @@ def test_moved_stage_runs_on_arrow_and_matches_its_rows_fn(spark, stage):
         expected = [_split_archive(r) for r in expected]
     assert sorted(map(_plain, got), key=repr) == sorted(map(_plain, expected), key=repr)
     assert got  # every case exercises real rows
+
+
+def _scalar_nfc(spark):
+    from pdf_ocr_spark.operators.text_analysis import _nfc, nfc_normalize
+
+    docs = [(1, "e\u0301cole Å"), (2, None), (3, "")]
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    return nfc_normalize(df), [(i, _nfc(t)) for i, t in docs]
+
+
+def _scalar_compression(spark):
+    from pdf_ocr_spark.kernels.textstats import compression_ratio
+    from pdf_ocr_spark.operators.text_analysis import compression_signals
+
+    pages = [("u1", b"<p>" + b"abc" * 50), ("u2", None), ("u3", b"\x00\xff")]
+    df = spark.createDataFrame(
+        [(u, None if b is None else bytearray(b)) for u, b in pages],
+        "url string, html binary",
+    )
+    return compression_signals(df), [
+        (u, len(b or b""), compression_ratio(b or b"")) for u, b in pages
+    ]
+
+
+@pytest.mark.parametrize("stage", ["nfc", "compression"])
+def test_scalar_udf_runs_on_arrow_and_matches_its_value_fn(spark, stage):
+    """The two scalar Python UDFs run as scalar Arrow UDFs (eval type
+    250), not pandas ones (200), and give their value function's rows."""
+    df, expected = globals()[f"_scalar_{stage}"](spark)
+    got = [tuple(r) for r in df.collect()]
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert re.findall(r"ArrowEvalPython .*, (\d+)$", plan, re.M) == ["250"], plan
+    assert sorted(got, key=repr) == sorted(expected, key=repr)
 
 
 def test_null_text_encodes_like_the_empty_string_in_every_encoder(spark):

@@ -72,6 +72,79 @@ def test_stream_extract_incremental_resume(spark, corpus_rows, tmp_path):
     assert spark.read.parquet(out).count() == len(corpus_rows)
 
 
+def test_batch_run_resumes_from_a_streamed_table(spark, corpus_rows, tmp_path):
+    """The streamed docs table is the batch run's table: after a stream
+    over chunk A, ``run_extraction`` over A+B into the same directory
+    appends only B's urls, and a plain parquet read sees every url once
+    (a file sink's ``_spark_metadata`` log would hide the batch rows)."""
+    from pdf_ocr_spark.pipeline.extract_job import run_extraction
+    from pdf_ocr_spark.streaming import stream_extract
+
+    src, out = str(tmp_path / "pages_in"), str(tmp_path / "docs_out")
+    a, b = corpus_rows[:60], corpus_rows[60:]
+    _write_chunk(a, os.path.join(src, "chunk-a.parquet"))
+    stream_extract(spark, src, out, str(tmp_path / "ckpt"), 4).awaitTermination(120)
+    _write_chunk(b, os.path.join(src, "chunk-b.parquet"))
+
+    assert run_extraction(spark, src, out, num_partitions=4) == len(b)
+    urls = [r["url"] for r in spark.read.parquet(out).select("url").collect()]
+    assert sorted(urls) == sorted(r["url"] for r in corpus_rows)
+
+
+def test_replayed_micro_batch_appends_nothing(spark, corpus_rows, tmp_path):
+    """A micro-batch whose commit never reached the checkpoint is run
+    again on restart; the resume anti-join makes the replay append
+    nothing, as it makes a batch rerun idempotent (this corpus has no
+    transient ``ocr_failed`` row, which a replay would retry)."""
+    from pdf_ocr_spark.streaming import stream_extract
+
+    src, out = str(tmp_path / "pages_in"), str(tmp_path / "docs_out")
+    ckpt = str(tmp_path / "ckpt")
+    _write_chunk(corpus_rows[:60], os.path.join(src, "chunk-a.parquet"))
+    stream_extract(spark, src, out, ckpt, 4).awaitTermination(120)
+    assert spark.read.parquet(out).count() == 60
+
+    commits = os.path.join(ckpt, "commits")
+    last = str(max(int(n) for n in os.listdir(commits) if n.isdigit()))
+    for name in (last, f".{last}.crc"):
+        if os.path.exists(os.path.join(commits, name)):
+            os.remove(os.path.join(commits, name))
+    q = stream_extract(spark, src, out, ckpt, 4)
+    q.awaitTermination(120)
+    assert [p["numInputRows"] for p in q.recentProgress] == [60]  # replayed
+    assert os.path.exists(os.path.join(commits, last))
+    assert spark.read.parquet(out).count() == 60
+
+
+def test_file_sink_table_is_refused(spark, corpus_rows, tmp_path):
+    """A docs directory with a file sink's ``_spark_metadata`` log lists
+    only that log's files, so rows appended to it are read by no one:
+    ``run_extraction`` and ``stream_extract`` both refuse it and write
+    nothing there."""
+    from pyspark.errors import StreamingQueryException
+
+    from pdf_ocr_spark.pipeline.extract_job import run_extraction
+    from pdf_ocr_spark.streaming import stream_extract
+    from pdf_ocr_spark.streaming.stream_job import _read_stream
+
+    src, out = str(tmp_path / "pages_in"), str(tmp_path / "docs_out")
+    _write_chunk(corpus_rows[:20], os.path.join(src, "chunk-a.parquet"))
+    _read_stream(spark, src).select("url").writeStream.format("parquet").option(
+        "path", out
+    ).option("checkpointLocation", str(tmp_path / "sink_ckpt")).trigger(
+        availableNow=True
+    ).start().awaitTermination(120)
+    before = sorted(os.listdir(out))
+    _write_chunk(corpus_rows[20:40], os.path.join(src, "chunk-b.parquet"))
+
+    with pytest.raises(ValueError, match="_spark_metadata"):
+        run_extraction(spark, src, out, num_partitions=4)
+    q = stream_extract(spark, src, out, str(tmp_path / "ckpt"), 4)
+    with pytest.raises(StreamingQueryException, match="_spark_metadata"):
+        q.awaitTermination(120)
+    assert sorted(os.listdir(out)) == before
+
+
 def test_windowed_event_counts_matches_batch(spark, tmp_path):
     """The watermarked streaming rollup over a finite file source equals
     the equivalent batch aggregation (no late data in the fixture)."""
