@@ -1,18 +1,32 @@
 """Text-analysis operators: language ID, quality scoring, token counting,
-fingerprinting — all as JVM-side column expressions (regexp_count +
+fingerprinting — as JVM-side column expressions (regexp_count +
 arithmetic) so they run inside whole-stage codegen AND are reproducible
 verbatim in the DuckDB oracle.
+
+One exception: the Gopher n-gram repetition counts
+(:func:`ngram_repetition_stats`) run as one Arrow pass over the
+JVM-normalized text.  As column expressions they need array HOFs
+(sort + fold per n-gram family), which Spark interprets and never
+codegens; the fracs and the gate over those counts stay expressions.
 """
 
 from __future__ import annotations
 
 import unicodedata
+from collections import Counter
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, StringType
+from pyspark.sql.types import (
+    DoubleType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
-from pdf_ocr_spark.operators.dedup import fingerprint
+from pdf_ocr_spark.operators.dedup import fingerprint, normalized
+from pdf_ocr_spark.pipeline.extract_job import arrow_map, arrow_scalar
 
 # token pattern: word runs, number runs, or one non-space symbol (RE2-safe:
 # works identically under Java regex and DuckDB's RE2)
@@ -260,9 +274,8 @@ def _word_ngrams(words: Column, n: int) -> Column:
     which is O(W) per ELEMENT (O(W²) per doc) whenever ``words`` is an
     inlined expression rather than an attribute.  Named intermediate
     columns do NOT protect against that: Catalyst's predicate pushdown
-    substitutes aliases into filter conditions (e.g. a consumer's
-    .filter('passes_repetition')), re-inlining split(text) into the
-    lambda body — measured 82 s vs 6 s on 4k docs at sf0.1."""
+    substitutes aliases into filter conditions, re-inlining split(text)
+    into the lambda body — measured 82 s vs 6 s on 4k docs at sf0.1."""
     length = F.size(words) - (n - 1)
     zipped = F.arrays_zip(*[F.slice(words, k, length) for k in range(1, n + 1)])
     grams = F.transform(
@@ -273,41 +286,32 @@ def _word_ngrams(words: Column, n: int) -> Column:
     )
 
 
-def _top_run(grams: Column) -> Column:
-    """struct(cnt, gram) of the most frequent element — linear per row:
-    ONE fold over the sorted array tracking (prev, current run, best).
-    Sorted order + strictly-greater replacement make the winner the
-    lexicographically-smallest among count ties.  The fold references
-    only its lambda variables, so the sort expression is evaluated ONCE
-    per row (an outer expression indexed inside a lambda — e.g.
-    element_at(sorted, i) — would re-evaluate the sort per element:
-    O(W² log W), the trap this shape exists to avoid).  No explode, no
-    shuffle — the 100-TB-safe shape for a per-document statistic (the
-    oracle replays it RELATIONALLY via unnest+groupBy: two independent
-    implementations must agree)."""
-    init = F.struct(
-        F.lit("").alias("prev"),
-        F.lit(0).alias("run"),
-        F.lit(0).alias("cnt"),
-        F.lit("").alias("gram"),
-    )
-
-    def step(acc, x):
-        newrun = F.when(x == acc["prev"], acc["run"] + 1).otherwise(F.lit(1))
-        better = newrun > acc["cnt"]
-        return F.struct(
-            x.alias("prev"),
-            newrun.alias("run"),
-            F.when(better, newrun).otherwise(acc["cnt"]).alias("cnt"),
-            F.when(better, x).otherwise(acc["gram"]).alias("gram"),
-        )
-
-    return F.aggregate(
-        F.array_sort(grams),
-        init,
-        step,
-        lambda acc: F.struct(acc["cnt"].alias("cnt"), acc["gram"].alias("gram")),
-    )
+def ngram_counts(ids, norms) -> list:
+    """Rows function of :func:`ngram_repetition_stats`: per normalized
+    text, ``(id, nchars, top2..top4, total5, distinct5, …, total10,
+    distinct10)``.  ``top{n}`` is ``cnt × len(gram)`` of the most frequent
+    word n-gram, the lexicographically smallest gram among count ties
+    (Spark's string order is code-point order, as Python's is).  Words
+    come from splitting on ``" "`` exactly as Spark's ``split(norm, ' ')``
+    does; ``str.split()`` would also split on whitespace that Java's
+    ``\\s`` leaves inside a word (U+00A0).  Grams are counted as word
+    tuples (one-to-one with the joined grams: no word holds a space) and
+    only the tied ones are joined.  A NULL text counts as empty."""
+    out = []
+    for doc_id, norm in zip(ids, norms):
+        norm = norm or ""
+        words = norm.split(" ")
+        row = [doc_id, len(norm)]
+        for n in TOP_NGRAM_THRESHOLDS:
+            counts = Counter(zip(*(words[k:] for k in range(n))))
+            top = max(counts.values(), default=0)
+            grams = (" ".join(g) for g, c in counts.items() if c == top)
+            row.append(top * len(min(grams, default="")))
+        for n in DUP_NGRAM_THRESHOLDS:
+            grams = list(zip(*(words[k:] for k in range(n))))
+            row += [len(grams), len(set(grams))]
+        out.append(tuple(row))
+    return out
 
 
 def ngram_repetition_stats(
@@ -319,57 +323,31 @@ def ngram_repetition_stats(
     weighted duplicated-n-gram fraction — plus the combined
     ``passes_repetition`` gate at the paper's thresholds.
 
-    Everything is computed WITHIN each row (array HOFs over the word
-    list: sort + run-length fold, O(W log W) per doc) — no explode and
-    no shuffle, so at 100 TB this is a pure codegen'd scan like the
-    other quality gates, not a 9×-corpus n-gram exchange.
-
-    EVERY multiply-referenced expression is bound as a NAMED column in
-    its own projection layer (norm text → word array → gram arrays →
-    top structs / distinct sizes → fracs → gate).  Two traps live here:
-    (1) a raw expression referenced inside a lambda is re-evaluated per
-    array element — O(W²) per doc; (2) HOF expressions are interpreted
-    (no whole-stage codegen), so codegen's common-subexpression
-    elimination never sees them — a ``top['cnt'] * length(top['gram'])``
-    that inlines ``top`` re-runs the whole sort+fold per reference, and
-    a frac used both as an output column and in the pass gate doubles
-    that again (measured 3.1× end-to-end on sf0.1).  Catalyst's
-    CollapseProject keeps the layers separate because the aliased
-    expressions are non-cheap and multiply referenced."""
-    norm_expr = F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " "))
-    prep = docs.select(F.col(id_col), norm_expr.alias("_norm")).select(
-        F.col(id_col),
-        F.length("_norm").alias("_nchars"),
-        F.split(F.col("_norm"), " ").alias("_words"),
+    Per row, no shuffle: the text is normalized JVM-side
+    (:func:`~pdf_ocr_spark.operators.dedup.normalized`), ONE
+    ``mapInArrow`` pass (:func:`ngram_counts`) returns the integer
+    counts, and the fracs, ``round`` and gate stay column expressions,
+    so every float is Spark's.  The counts are Python because as column
+    expressions they are array HOFs, which Spark interprets and never
+    codegens.  The Python stage is also a barrier: a consumer's filter
+    on ``passes_repetition`` cannot re-inline the statistics."""
+    counts_schema = StructType(
+        [docs.schema[id_col], StructField("_nchars", LongType())]
+        + [StructField(f"_top{n}", LongType()) for n in TOP_NGRAM_THRESHOLDS]
+        + [
+            StructField(f"_{k}{n}", LongType())
+            for n in DUP_NGRAM_THRESHOLDS
+            for k in ("sz", "dsz")
+        ]
     )
-    words = F.col("_words")
-    # layer 1: each n-gram array built exactly once
-    gram_cols = [F.col(id_col), F.col("_nchars")]
-    for n in TOP_NGRAM_THRESHOLDS:
-        gram_cols.append(_word_ngrams(words, n).alias(f"_g{n}"))
-    for n in DUP_NGRAM_THRESHOLDS:
-        gram_cols.append(_word_ngrams(words, n).alias(f"_g{n}"))
-    grams_df = prep.select(*gram_cols)
-    # layer 2: one sort+fold per top family, one array_distinct per dup
-    stat_cols = [F.col(id_col), F.col("_nchars")]
-    for n in TOP_NGRAM_THRESHOLDS:
-        stat_cols.append(_top_run(F.col(f"_g{n}")).alias(f"_top{n}"))
-    for n in DUP_NGRAM_THRESHOLDS:
-        stat_cols.append(F.size(f"_g{n}").alias(f"_sz{n}"))
-        stat_cols.append(
-            F.size(F.array_distinct(F.col(f"_g{n}"))).alias(f"_dsz{n}")
-        )
-    stats_df = grams_df.select(*stat_cols)
-    # layer 3: fracs from named stats
+    stats_df = docs.select(
+        F.col(id_col), normalized(F.col(text_col)).alias("_norm")
+    ).mapInArrow(arrow_map(ngram_counts, counts_schema), counts_schema)
     nchars = F.col("_nchars")
     frac_cols = [F.col(id_col)]
     for n in TOP_NGRAM_THRESHOLDS:
-        top = F.col(f"_top{n}")
         frac_cols.append(
-            F.when(
-                nchars > 0,
-                F.round(top["cnt"] * F.length(top["gram"]) / nchars, 6),
-            )
+            F.when(nchars > 0, F.round(F.col(f"_top{n}") / nchars, 6))
             .otherwise(F.lit(0.0))
             .alias(f"top{n}_frac")
         )
@@ -384,7 +362,7 @@ def ngram_repetition_stats(
             .alias(f"dup{n}_frac")
         )
     fracs_df = stats_df.select(*frac_cols)
-    # layer 4: gate over named fracs (cheap attribute refs only)
+    # gate over named fracs (cheap attribute refs only)
     gates = [
         F.col(f"top{n}_frac") <= thr for n, thr in TOP_NGRAM_THRESHOLDS.items()
     ]
@@ -847,8 +825,6 @@ def nfc_normalize(docs: DataFrame, text_col: str = "text") -> DataFrame:
     vectorized, never per-row).  The DuckDB oracle replays it with its
     native nfc_normalize(), so the gate cross-checks two independent
     NFC implementations (python unicodedata vs utf8proc)."""
-    from pdf_ocr_spark.pipeline.extract_job import arrow_scalar
-
     return docs.withColumn(
         text_col, arrow_scalar(_nfc, StringType())(F.col(text_col))
     )
@@ -873,8 +849,7 @@ def word_ngrams_expr(col: Column, n: int = 13) -> Column:
     former ``transform(sequence(1, m), i -> array_join(slice(words, i,
     n)))`` closed over the split expression, re-evaluated per element:
     O(W²) per doc."""
-    norm = F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
-    return F.array_distinct(_word_ngrams(F.split(norm, " "), n))
+    return F.array_distinct(_word_ngrams(F.split(normalized(col), " "), n))
 
 
 def contaminated_docs(
@@ -912,7 +887,7 @@ def norm_words_expr(col: Column) -> Column:
     """Whitespace-normalized lowercase word array (split on single
     spaces after run-collapse) — the shared tokenization for the LM
     quality filter; DuckDB twin: str_split of the same normalization."""
-    return F.split(F.trim(F.regexp_replace(F.lower(col), r"\s+", " ")), " ")
+    return F.split(normalized(col), " ")
 
 
 LM_BOS = "<s>"
@@ -1536,7 +1511,6 @@ def compression_signals(
     per-row function so the operator composes map-side into any gate
     stack."""
     from pdf_ocr_spark.kernels.textstats import compression_ratio
-    from pdf_ocr_spark.pipeline.extract_job import arrow_scalar
 
     _ratio = arrow_scalar(compression_ratio, DoubleType())
     col = F.col(data_col)

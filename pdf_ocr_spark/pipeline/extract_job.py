@@ -1011,10 +1011,6 @@ def _merged_doc_row(g: dict) -> tuple:
     )
 
 
-#: ``groupBy(url).applyInArrow`` body of the giant-document route.
-_merge_ranges = group_map(_merged_doc_row, DOC_SCHEMA)
-
-
 def extract_documents_split(
     pages_df: DataFrame,
     num_partitions: Optional[int] = None,
@@ -1063,12 +1059,11 @@ def extract_documents_split(
         )
         .withColumn("page_hi", F.col("page_lo") + F.lit(pages_per_task - 1))
     )
-    merge = group_map(_merged_doc_row, DOC_SCHEMA, tally) if tally else _merge_ranges
     giant_docs = (
         ranges.repartition(num_partitions, F.xxhash64("url", "page_lo"))
         .mapInArrow(arrow_map(page_rows, PAGE_SCHEMA), schema=PAGE_SCHEMA)
         .groupBy("url")
-        .applyInArrow(merge, schema=DOC_SCHEMA)
+        .applyInArrow(group_map(_merged_doc_row, DOC_SCHEMA, tally), schema=DOC_SCHEMA)
     )
     return normal_docs.unionByName(giant_docs)
 
@@ -1138,9 +1133,7 @@ def dedup_extracted(docs: DataFrame, mark_only: bool = False) -> DataFrame:
 
 
 def dedup_incremental(
-    new_docs: DataFrame,
-    history: Optional[DataFrame] = None,
-    mark_only: bool = False,
+    new_docs: DataFrame, history: Optional[DataFrame] = None
 ) -> DataFrame:
     """Cross-RUN content dedup — the streaming-crawl pattern where each
     appended batch must not duplicate anything already committed: drop
@@ -1169,7 +1162,7 @@ def dedup_incremental(
             .join(hist_fp, F.col("_fp") == F.col("fp"), "left_anti")
             .drop("_fp")
         )
-    return dedup_extracted(new_docs, mark_only=mark_only)
+    return dedup_extracted(new_docs)
 
 
 def input_split_lineage(pages_df: DataFrame) -> DataFrame:

@@ -2982,8 +2982,8 @@ FROM f GROUP BY 1, 2
 
 def q_ngram_repetition(spark, sf_dir):
     """Gopher §A1.1 n-gram repetition gate: top-2/3/4-gram char fraction
-    + duplicated-5..10-gram fraction, per-row array HOFs (sorted run-
-    length fold — no explode/shuffle).  Every third doc is self-
+    + duplicated-5..10-gram fraction, counted per row in one Arrow pass
+    over the normalized text (no explode/shuffle).  Every third doc is self-
     concatenated so the duplicated-n-gram signals actually fire.  The
     oracle replays the SAME statistics RELATIONALLY (unnest → groupBy →
     window) — two independent implementations must agree."""
@@ -3394,7 +3394,7 @@ def q_filter_funnel(spark, sf_dir):
 
     SEMI-JOIN PUSHDOWN down the funnel: each stage's (expensive)
     statistics run only on the PRIOR stage's survivors — the n-gram
-    folds never touch Gopher rejects, the LM scorer never touches
+    counts never touch Gopher rejects, the LM scorer never touches
     repetition rejects.  Per-row gates make this provably
     output-identical to scoring everything (the oracle scores the full
     universe relationally and must hash-match).  The five funnel counts
@@ -3433,17 +3433,10 @@ def q_filter_funnel(spark, sf_dir):
         .select("doc_id"),
         "doc_id",
     ).repartition(par))
-    # The repetition gate is cached as a (doc_id, flag) projection and
-    # filtered FROM the cache: filtering the raw stats frame would let
-    # predicate pushdown substitute the full 9-family n-gram expression
-    # tree into the filter condition, re-evaluating each family 2-3×
-    # (HOFs are interpreted — codegen CSE never sees them).  The cache
-    # boundary keeps the layered 1×-per-family evaluation.
-    rep_gate = _qcache(
-        T.ngram_repetition_stats(d1).select("doc_id", "passes_repetition")
-    )
     d2 = _qcache(d1.join(
-        rep_gate.filter(F.col("passes_repetition")).select("doc_id"),
+        T.ngram_repetition_stats(d1)
+        .filter(F.col("passes_repetition"))
+        .select("doc_id"),
         "doc_id",
     ).repartition(par))
     vocab = T.lm_word_counts(docs, min_count=2)  # corpus-general LM

@@ -87,10 +87,14 @@ def test_giant_range_merge_matches_page_route_semantics():
     from pyspark.sql.pandas.types import to_arrow_schema
 
     from pdf_ocr_spark.pipeline.extract_job import (
+        DOC_SCHEMA,
         OCR_FAILED_REASON,
         PAGE_SCHEMA,
-        _merge_ranges,
+        _merged_doc_row,
+        group_map,
     )
+
+    _merge_ranges = group_map(_merged_doc_row, DOC_SCHEMA)
 
     def merged(rows):
         table = pa.Table.from_pylist(

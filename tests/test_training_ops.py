@@ -410,6 +410,35 @@ def test_ngram_repetition_stats_pinned(spark):
     # 2-grams: [x y, y x, x y, y x] -> both cnt 2; norm len 9; 'x y' wins
     assert r3["top2_frac"] == round(2 * 3 / 9, 6)
 
+    edge = spark.createDataFrame(
+        [
+            (4, None),  # NULL text: all zero, passes
+            # U+00A0 is not Java \s: 3 words 'x\xa0y' (not 6), norm len 11;
+            # 2-grams: ['x\xa0y x\xa0y'] x2 (7 chars); 3-gram: the whole text
+            (5, "x\u00a0y x\u00a0y x\u00a0y"),
+            # norm 'ü ö ü ö éé à éé à' (17 chars); 2-grams 'ü ö' and
+            # 'éé à' both occur twice -> code-point min 'éé à' (4 chars),
+            # not the first-seen 'ü ö' (3); 3-grams all once -> 'à éé à'
+            (6, "ü ö ü ö ÉÉ à ÉÉ à"),
+        ],
+        "doc_id long, text string",
+    )
+    stats = ngram_repetition_stats(edge)
+    got = {r["doc_id"]: r for r in stats.collect()}
+    # one Python stage counts; no interpreted HOF and no shuffle around it
+    plan = stats._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow ngram_counts(") == 1
+    assert not any(op in plan for op in ("aggregate(", "transform(", "arrays_zip", "Exchange"))
+    fracs = [c for c in got[4].asDict() if c.endswith("_frac")]
+    assert len(fracs) == 9
+    assert all(got[4][c] == 0.0 for c in fracs)
+    assert got[4]["passes_repetition"] is True
+    assert got[5]["top2_frac"] == round(2 * 7 / 11, 6)
+    assert got[5]["top3_frac"] == 1.0 and got[5]["top4_frac"] == 0.0
+    assert got[5]["passes_repetition"] is False
+    assert got[6]["top2_frac"] == round(2 * 4 / 17, 6)
+    assert got[6]["top3_frac"] == round(6 / 17, 6)
+
     import time
 
     long_doc = spark.createDataFrame(
