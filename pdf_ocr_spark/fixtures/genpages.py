@@ -21,7 +21,7 @@ import datetime
 import os
 import random
 import zlib
-from typing import Dict, List, Optional, Tuple
+from typing import Callable, Dict, List, Optional, Tuple
 
 from pdf_ocr_spark.kernels.ocr_stub import STUB_MARKER
 
@@ -94,6 +94,24 @@ class _PdfWriter:
 
     def add_stream(self, dict_extra: bytes, data: bytes, compress: bool = True) -> int:
         return self.add(self.stream_body(dict_extra, data, compress))
+
+    def page_tree(
+        self,
+        catalog: int,
+        pages: int,
+        kids: List[int],
+        media: bytes = b"612 792",
+        extra: bytes = b"",
+    ) -> bytes:
+        """Fill the reserved catalog (plus ``extra`` entries) and the one
+        ``/Pages`` node over ``kids``, then build the file."""
+        self.fill(catalog, b"<< /Type /Catalog /Pages %d 0 R%s >>" % (pages, extra))
+        self.fill(
+            pages,
+            b"<< /Type /Pages /Kids [%s] /Count %d /MediaBox [0 0 %s] >>"
+            % (b" ".join(b"%d 0 R" % n for n in kids), len(kids), media),
+        )
+        return self.build(catalog)
 
     def build(self, root_num: int) -> bytes:
         out = bytearray(b"%PDF-1.7\n%\xe2\xe3\xcf\xd3\n")
@@ -246,14 +264,7 @@ def make_glyph_pdf(
                 % (pages_num, content_num, font_num)
             )
         )
-    w.fill(catalog, b"<< /Type /Catalog /Pages %d 0 R >>" % pages_num)
-    kids = b" ".join(b"%d 0 R" % n for n in page_nums)
-    w.fill(
-        pages_num,
-        b"<< /Type /Pages /Kids [%s] /Count %d /MediaBox [0 0 %.2f %.2f] >>"
-        % (kids, len(page_nums), media[0], media[1]),
-    )
-    return w.build(catalog)
+    return w.page_tree(catalog, pages_num, page_nums, b"%.2f %.2f" % media)
 
 
 # -- simple-font PDFs (literal strings, TJ arrays) -------------------------------
@@ -329,14 +340,7 @@ def make_simple_pdf(
                 % (pages_num, content_num, font_num)
             )
         )
-    w.fill(catalog, b"<< /Type /Catalog /Pages %d 0 R >>" % pages_num)
-    kids = b" ".join(b"%d 0 R" % n for n in page_nums)
-    w.fill(
-        pages_num,
-        b"<< /Type /Pages /Kids [%s] /Count %d /MediaBox [0 0 %.2f %.2f] >>"
-        % (kids, len(page_nums), media[0], media[1]),
-    )
-    return w.build(catalog)
+    return w.page_tree(catalog, pages_num, page_nums, b"%.2f %.2f" % media)
 
 
 def _escape_literal_bytes(raw: bytes) -> bytes:
@@ -389,22 +393,16 @@ def make_form_pdf(rng: random.Random) -> bytes:
         b"<< /Fields [%d 0 R %d 0 R %d 0 R %d 0 R %d 0 R %d 0 R] >>"
         % (f1, f2, cb, ch, parent, note)
     )
-    w.fill(
-        catalog,
-        b"<< /Type /Catalog /Pages %d 0 R /AcroForm %d 0 R >>"
-        % (pages_num, acro),
-    )
-    w.fill(
-        pages_num,
-        b"<< /Type /Pages /Kids [%d 0 R] /Count 1 /MediaBox [0 0 612 792] >>"
-        % page,
-    )
-    return w.build(catalog)
+    return w.page_tree(catalog, pages_num, [page], extra=b" /AcroForm %d 0 R" % acro)
 
 
-def gen_form_rows(n: int, seed: int = 17) -> List[dict]:
-    """Corpus for the pdf_forms query: AcroForm PDFs plus formless PDFs
-    and HTML pages (which must emit nothing)."""
+def _decoy_rows(
+    n: int, seed: int, path: str, kind: str,
+    make: Callable[[random.Random], bytes], plain_line: str,
+) -> List[dict]:
+    """Every third row is a decoy: an HTML page (every sixth) or a one-line
+    PDF without the feature (kind ``plain``); the rest are ``make(rng)``
+    under ``kind``."""
     rows: List[dict] = []
     for i in range(n):
         rng = random.Random((seed << 18) ^ i)
@@ -412,16 +410,22 @@ def gen_form_rows(n: int, seed: int = 17) -> List[dict]:
             if i % 6 == 5:
                 payload, _ = make_html_page(rng, "en")
             else:
-                payload = make_simple_pdf([["formless page"]])
-            kind = "plain"
+                payload = make_simple_pdf([[plain_line]])
+            row_kind = "plain"
         else:
-            payload = make_form_pdf(rng)
-            kind = "form"
+            payload = make(rng)
+            row_kind = kind
         rows.append(
-            dict(url=f"https://example.test/forms/{kind}/{i:05d}",
-                 html=payload, kind=kind)
+            dict(url=f"https://example.test/{path}/{row_kind}/{i:05d}",
+                 html=payload, kind=row_kind)
         )
     return rows
+
+
+def gen_form_rows(n: int, seed: int = 17) -> List[dict]:
+    """Corpus for the pdf_forms query: AcroForm PDFs plus formless PDFs
+    and HTML pages (which must emit nothing)."""
+    return _decoy_rows(n, seed, "forms", "form", make_form_pdf, "formless page")
 
 
 def make_outline_pdf(rng: random.Random) -> bytes:
@@ -480,18 +484,9 @@ def make_outline_pdf(rng: random.Random) -> bytes:
         b"<< /Type /Outlines /First %d 0 R /Last %d 0 R /Count 3 >>"
         % (ch1, ch2),
     )
-    w.fill(
-        catalog,
-        b"<< /Type /Catalog /Pages %d 0 R /Outlines %d 0 R >>"
-        % (pages_num, outlines),
+    pdf = w.page_tree(
+        catalog, pages_num, page_nums, extra=b" /Outlines %d 0 R" % outlines
     )
-    kids = b" ".join(b"%d 0 R" % n for n in page_nums)
-    w.fill(
-        pages_num,
-        b"<< /Type /Pages /Kids [%s] /Count %d /MediaBox [0 0 612 792] >>"
-        % (kids, len(page_nums)),
-    )
-    pdf = w.build(catalog)
     # splice /Info into the trailer (the writer has no Info hook)
     return pdf.replace(b"trailer\n<<", b"trailer\n<< /Info %d 0 R" % info, 1)
 
@@ -499,23 +494,7 @@ def make_outline_pdf(rng: random.Random) -> bytes:
 def gen_docmeta_rows(n: int, seed: int = 19) -> List[dict]:
     """Corpus for pdf_doc_info / pdf_outline: outline PDFs plus plain
     (info-less, outline-less) PDFs and HTML decoys."""
-    rows: List[dict] = []
-    for i in range(n):
-        rng = random.Random((seed << 18) ^ i)
-        if i % 3 == 2:
-            if i % 6 == 5:
-                payload, _ = make_html_page(rng, "en")
-            else:
-                payload = make_simple_pdf([["plain page"]])
-            kind = "plain"
-        else:
-            payload = make_outline_pdf(rng)
-            kind = "outline"
-        rows.append(
-            dict(url=f"https://example.test/docmeta/{kind}/{i:05d}",
-                 html=payload, kind=kind)
-        )
-    return rows
+    return _decoy_rows(n, seed, "docmeta", "outline", make_outline_pdf, "plain page")
 
 
 def make_annot_pdf(rng: random.Random) -> bytes:
@@ -562,36 +541,13 @@ def make_annot_pdf(rng: random.Random) -> bytes:
                 % (pages_num, content, font, annots)
             )
         )
-    w.fill(catalog, b"<< /Type /Catalog /Pages %d 0 R >>" % pages_num)
-    kids = b" ".join(b"%d 0 R" % n for n in page_nums)
-    w.fill(
-        pages_num,
-        b"<< /Type /Pages /Kids [%s] /Count %d /MediaBox [0 0 612 792] >>"
-        % (kids, len(page_nums)),
-    )
-    return w.build(catalog)
+    return w.page_tree(catalog, pages_num, page_nums)
 
 
 def gen_annot_rows(n: int, seed: int = 23) -> List[dict]:
     """Corpus for the pdf_annotations query: annotated PDFs plus
     annotation-free PDFs and HTML decoys (emit nothing)."""
-    rows: List[dict] = []
-    for i in range(n):
-        rng = random.Random((seed << 18) ^ i)
-        if i % 3 == 2:
-            if i % 6 == 5:
-                payload, _ = make_html_page(rng, "en")
-            else:
-                payload = make_simple_pdf([["clean page"]])
-            kind = "plain"
-        else:
-            payload = make_annot_pdf(rng)
-            kind = "annot"
-        rows.append(
-            dict(url=f"https://example.test/annots/{kind}/{i:05d}",
-                 html=payload, kind=kind)
-        )
-    return rows
+    return _decoy_rows(n, seed, "annots", "annot", make_annot_pdf, "clean page")
 
 
 # -- scanned (image-only) PDFs ---------------------------------------------------
@@ -602,22 +558,34 @@ def make_scan_pdf(page_texts: List[str]) -> bytes:
     to the OCR branch (P8 classification,
     /root/reference/pdf_ocr_with_boxes_v3.py:118-128).  The stub ground
     truth rides inside the image stream after STUB_MARKER."""
-    media = (612.0, 792.0)
+
+    def image(w: _PdfWriter, pno: int, text: str):
+        fake_scan = STUB_MARKER + text.encode("utf-8") + b"\x00" + b"\xff" * 64
+        return 1275, 1650, b"/ColorSpace /DeviceGray /BitsPerComponent 8", fake_scan
+
+    return _image_pages_pdf(page_texts, image)
+
+
+def _image_pages_pdf(
+    page_texts: List[str],
+    image: Callable[[_PdfWriter, int, str], Tuple[int, int, bytes, bytes]],
+) -> bytes:
+    """One page per text, each drawing one full-page image XObject.
+    ``image(w, pno, text)`` (``pno`` 1-based) returns the image's
+    ``(width, height, dict tail, payload)`` and may add objects to ``w``
+    first; the payload is stored as given."""
     w = _PdfWriter()
     catalog = w.reserve()
     pages_num = w.reserve()
     page_nums = []
-    for text in page_texts:
-        fake_scan = STUB_MARKER + text.encode("utf-8") + b"\x00" + b"\xff" * 64
+    for pno, text in enumerate(page_texts, 1):
+        iw, ih, tail, payload = image(w, pno, text)
         img_num = w.add_stream(
-            b"/Type /XObject /Subtype /Image /Width 1275 /Height 1650"
-            b" /ColorSpace /DeviceGray /BitsPerComponent 8",
-            fake_scan,
+            b"/Type /XObject /Subtype /Image /Width %d /Height %d %s" % (iw, ih, tail),
+            payload,
             compress=False,
         )
-        content_num = w.add_stream(
-            b"", b"q\n612 0 0 792 0 0 cm\n/Im1 Do\nQ\n"
-        )
+        content_num = w.add_stream(b"", b"q\n612 0 0 792 0 0 cm\n/Im1 Do\nQ\n")
         page_nums.append(
             w.add(
                 b"<< /Type /Page /Parent %d 0 R /Contents %d 0 R"
@@ -625,14 +593,20 @@ def make_scan_pdf(page_texts: List[str]) -> bytes:
                 % (pages_num, content_num, img_num)
             )
         )
-    w.fill(catalog, b"<< /Type /Catalog /Pages %d 0 R >>" % pages_num)
-    kids = b" ".join(b"%d 0 R" % n for n in page_nums)
-    w.fill(
-        pages_num,
-        b"<< /Type /Pages /Kids [%s] /Count %d /MediaBox [0 0 %.2f %.2f] >>"
-        % (kids, len(page_nums), media[0], media[1]),
-    )
-    return w.build(catalog)
+    return w.page_tree(catalog, pages_num, page_nums, b"612.00 792.00")
+
+
+def _filtered(
+    codec: bytes, payload: bytes, truncate: bool, flate_wrap: bool
+) -> Tuple[bytes, bytes]:
+    """``(/Filter entry, stream bytes)`` for a ``codec`` payload: cut to
+    its first third when ``truncate``, zlib-wrapped under
+    ``[/FlateDecode codec]`` when ``flate_wrap``."""
+    if truncate:
+        payload = payload[: max(4, len(payload) // 3)]
+    if flate_wrap:
+        return b"/Filter [/FlateDecode %s]" % codec, zlib.compress(payload)
+    return b"/Filter %s" % codec, payload
 
 
 def make_scan_pdf_inline(page_texts: List[str]) -> bytes:
@@ -648,7 +622,6 @@ def make_scan_pdf_inline(page_texts: List[str]) -> bytes:
     emits real P5."""
     import re as _re
 
-    media = (612.0, 792.0)
     w = _PdfWriter()
     catalog = w.reserve()
     pages_num = w.reserve()
@@ -680,14 +653,7 @@ def make_scan_pdf_inline(page_texts: List[str]) -> bytes:
                 % (pages_num, content_num)
             )
         )
-    w.fill(catalog, b"<< /Type /Catalog /Pages %d 0 R >>" % pages_num)
-    kids = b" ".join(b"%d 0 R" % n for n in page_nums)
-    w.fill(
-        pages_num,
-        b"<< /Type /Pages /Kids [%s] /Count %d /MediaBox [0 0 %.2f %.2f] >>"
-        % (kids, len(page_nums), media[0], media[1]),
-    )
-    return w.build(catalog)
+    return w.page_tree(catalog, pages_num, page_nums, b"612.00 792.00")
 
 
 def make_scan_pdf_jpeg(page_texts: List[str], corrupt_page: int = 0,
@@ -723,12 +689,7 @@ def make_scan_pdf_jpeg(page_texts: List[str], corrupt_page: int = 0,
     )
     from pdf_ocr_spark.kernels.pixelcode import text_to_pixels
 
-    media = (612.0, 792.0)
-    w = _PdfWriter()
-    catalog = w.reserve()
-    pages_num = w.reserve()
-    page_nums = []
-    for pno, text in enumerate(page_texts, 1):
+    def image(w: _PdfWriter, pno: int, text: str):
         iw, ih, px = text_to_pixels(text)
         colorspace = b"/DeviceGray"
         bpc = 8
@@ -754,31 +715,10 @@ def make_scan_pdf_jpeg(page_texts: List[str], corrupt_page: int = 0,
             payload = encode_gray(px, iw, ih, quality=90)
         if pno == corrupt_page:
             payload = payload[: max(16, len(payload) * 2 // 3)]
-        img_num = w.add_stream(
-            b"/Type /XObject /Subtype /Image /Width %d /Height %d"
-            b" /ColorSpace %s /BitsPerComponent %d"
-            b" /Filter /DCTDecode" % (iw, ih, colorspace, bpc),
-            payload,
-            compress=False,
-        )
-        content_num = w.add_stream(
-            b"", b"q\n612 0 0 792 0 0 cm\n/Im1 Do\nQ\n"
-        )
-        page_nums.append(
-            w.add(
-                b"<< /Type /Page /Parent %d 0 R /Contents %d 0 R"
-                b" /Resources << /XObject << /Im1 %d 0 R >> >> >>"
-                % (pages_num, content_num, img_num)
-            )
-        )
-    w.fill(catalog, b"<< /Type /Catalog /Pages %d 0 R >>" % pages_num)
-    kids = b" ".join(b"%d 0 R" % n for n in page_nums)
-    w.fill(
-        pages_num,
-        b"<< /Type /Pages /Kids [%s] /Count %d /MediaBox [0 0 %.2f %.2f] >>"
-        % (kids, len(page_nums), media[0], media[1]),
-    )
-    return w.build(catalog)
+        tail = b"/ColorSpace %s /BitsPerComponent %d /Filter /DCTDecode"
+        return iw, ih, tail % (colorspace, bpc), payload
+
+    return _image_pages_pdf(page_texts, image)
 
 
 # -- HTML pages ------------------------------------------------------------------
@@ -959,13 +899,7 @@ def _one_page_pdf(content: bytes, image_body: Optional[bytes] = None) -> bytes:
         b"<< /Type /Page /Parent %d 0 R /Contents %d 0 R /Resources << %s >> >>"
         % (pages_num, content_num, res)
     )
-    w.fill(catalog, b"<< /Type /Catalog /Pages %d 0 R >>" % pages_num)
-    w.fill(
-        pages_num,
-        b"<< /Type /Pages /Kids [%d 0 R] /Count 1 /MediaBox [0 0 612 792] >>"
-        % page_num,
-    )
-    return w.build(catalog)
+    return w.page_tree(catalog, pages_num, [page_num])
 
 
 def gen_raster_rows(n: int = 60, n_vector: int = 5) -> List[dict]:
@@ -1005,54 +939,49 @@ def make_scan_pdf_ccitt(
     pre-filter chain; ``corrupt_page`` (1-based, 0 = none) truncates
     that page's stream mid-data: the decoder must raise cleanly and the
     payload fall back to opaque bytes (fingerprint OCR), never crash."""
-    import zlib as _zlib
-
     from pdf_ocr_spark.kernels.pdf.ccitt import encode_g4
     from pdf_ocr_spark.kernels.pixelcode import text_to_pixels
 
-    media = (612.0, 792.0)
-    w = _PdfWriter()
-    catalog = w.reserve()
-    pages_num = w.reserve()
-    page_nums = []
-    for pno, text in enumerate(page_texts, 1):
+    def image(w: _PdfWriter, pno: int, text: str):
         iw, ih, px = text_to_pixels(text)
-        payload = encode_g4(px, iw, ih)
-        if pno == corrupt_page:
-            payload = payload[: max(4, len(payload) // 3)]
+        filt, payload = _filtered(
+            b"/CCITTFaxDecode", encode_g4(px, iw, ih), pno == corrupt_page, flate_wrap
+        )
         parms = b"<< /K -1 /Columns %d /Rows %d /BlackIs1 false >>" % (iw, ih)
         if flate_wrap:
-            filt = b"/Filter [/FlateDecode /CCITTFaxDecode]"
-            parms = b"/DecodeParms [null %s]" % parms
-            payload = _zlib.compress(payload)
-        else:
-            filt = b"/Filter /CCITTFaxDecode"
-            parms = b"/DecodeParms %s" % parms
-        img_num = w.add_stream(
-            b"/Type /XObject /Subtype /Image /Width %d /Height %d"
-            b" /ColorSpace /DeviceGray /BitsPerComponent 1 %s %s"
-            % (iw, ih, filt, parms),
-            payload,
-            compress=False,
-        )
-        content_num = w.add_stream(
-            b"", b"q\n612 0 0 792 0 0 cm\n/Im1 Do\nQ\n"
-        )
-        page_nums.append(
-            w.add(
-                b"<< /Type /Page /Parent %d 0 R /Contents %d 0 R"
-                b" /Resources << /XObject << /Im1 %d 0 R >> >> >>"
-                % (pages_num, content_num, img_num)
+            parms = b"[null %s]" % parms
+        tail = b"/ColorSpace /DeviceGray /BitsPerComponent 1 %s /DecodeParms %s"
+        return iw, ih, tail % (filt, parms), payload
+
+    return _image_pages_pdf(page_texts, image)
+
+
+def _scan_rows(
+    n_docs: int, seed: int, codec: str, label: str, day: int,
+    make: Callable[[int, List[str], int], bytes],
+) -> List[dict]:
+    """Doc ``d`` has ``1 + d % 3`` pages, each ``"<label> doc d page p"``
+    over one random en/zh sentence; ``make(d, texts, corrupt_page)``
+    builds its PDF, and the last doc truncates page 1."""
+    rng = random.Random(seed)
+    rows = []
+    for d in range(n_docs):
+        texts = [
+            f"{label} doc {d} page {p + 1}\n"
+            + _sentence(rng, ("en", "zh")[(d + p) % 2])
+            for p in range(1 + d % 3)
+        ]
+        rows.append(
+            dict(
+                url=f"https://example.test/docs/{codec}scan/{d:06d}",
+                warc_ts=datetime.datetime(2025, 1, day, 0, 0, d),
+                html=make(d, texts, 1 if d == n_docs - 1 else 0),
+                text="",
+                lang="en",
+                kind=f"pdf_{codec}_scan",
             )
         )
-    w.fill(catalog, b"<< /Type /Catalog /Pages %d 0 R >>" % pages_num)
-    kids = b" ".join(b"%d 0 R" % n for n in page_nums)
-    w.fill(
-        pages_num,
-        b"<< /Type /Pages /Kids [%s] /Count %d /MediaBox [0 0 %.2f %.2f] >>"
-        % (kids, len(page_nums), media[0], media[1]),
-    )
-    return w.build(catalog)
+    return rows
 
 
 def gen_ccitt_scan_rows(n_docs: int = 10) -> List[dict]:
@@ -1061,31 +990,12 @@ def gen_ccitt_scan_rows(n_docs: int = 10) -> List[dict]:
     doc zlib-wraps its fax streams (filter chain), one carries a
     truncated stream (decode must fail loudly, extract must not).
     Deterministic — same rows every call."""
-    rng = random.Random(0xCC17)
-    rows = []
-    for d in range(n_docs):
-        n_pages = 1 + d % 3
-        texts = []
-        for p in range(n_pages):
-            lang = ("en", "zh")[(d + p) % 2]
-            texts.append(
-                f"fax doc {d} page {p + 1}\n" + _sentence(rng, lang)
-            )
-        corrupt = 1 if d == n_docs - 1 else 0  # last doc: page 1 truncated
-        flate = d == n_docs - 2                # second-to-last: filter chain
-        rows.append(
-            dict(
-                url=f"https://example.test/docs/ccittscan/{d:06d}",
-                warc_ts=datetime.datetime(2025, 1, 4, 0, 0, d),
-                html=make_scan_pdf_ccitt(
-                    texts, corrupt_page=corrupt, flate_wrap=flate
-                ),
-                text="",
-                lang="en",
-                kind="pdf_ccitt_scan",
-            )
-        )
-    return rows
+    return _scan_rows(
+        n_docs, 0xCC17, "ccitt", "fax", 4,
+        lambda d, texts, corrupt: make_scan_pdf_ccitt(
+            texts, corrupt_page=corrupt, flate_wrap=d == n_docs - 2
+        ),
+    )
 
 
 def gen_jpeg_scan_rows(n_docs: int = 17) -> List[dict]:
@@ -1097,17 +1007,8 @@ def gen_jpeg_scan_rows(n_docs: int = 17) -> List[dict]:
     Adobe CMYK (4-component, inverted samples); the last doc carries a
     truncated progressive page 1 (decode must fail loudly, extract must
     not).  Deterministic — same rows every call."""
-    rng = random.Random(0xDC7)
-    rows = []
-    for d in range(n_docs):
-        n_pages = 1 + d % 3
-        texts = []
-        for p in range(n_pages):
-            lang = ("en", "zh")[(d + p) % 2]
-            texts.append(
-                f"scan doc {d} page {p + 1}\n" + _sentence(rng, lang)
-            )
-        corrupt = 1 if d == n_docs - 1 else 0  # last doc: page 1 truncated
+
+    def pdf(d: int, texts: List[str], corrupt: int) -> bytes:
         if d in (11, 12) or d == n_docs - 1:
             coding = "progressive"
         elif d == 13 and d < n_docs - 2:
@@ -1118,18 +1019,9 @@ def gen_jpeg_scan_rows(n_docs: int = 17) -> List[dict]:
             coding = "cmyk"
         else:
             coding = "baseline"
-        rows.append(
-            dict(
-                url=f"https://example.test/docs/jpegscan/{d:06d}",
-                warc_ts=datetime.datetime(2025, 1, 3, 0, 0, d),
-                html=make_scan_pdf_jpeg(texts, corrupt_page=corrupt,
-                                        coding=coding),
-                text="",
-                lang="en",
-                kind="pdf_jpeg_scan",
-            )
-        )
-    return rows
+        return make_scan_pdf_jpeg(texts, corrupt_page=corrupt, coding=coding)
+
+    return _scan_rows(n_docs, 0xDC7, "jpeg", "scan", 3, pdf)
 
 
 def gen_orientation_rows(n: int = 40) -> List[dict]:
@@ -1808,54 +1700,21 @@ def make_scan_pdf_jpx(
     ``corrupt_page`` (1-based, 0 = none) truncates that page's stream
     mid-data: the decoder must raise cleanly and the payload fall back
     to opaque bytes (fingerprint OCR), never crash."""
-    import zlib as _zlib
-
     from pdf_ocr_spark.kernels.pdf.jp2 import encode_gray as _jp2_encode
     from pdf_ocr_spark.kernels.pixelcode import text_to_pixels
 
-    media = (612.0, 792.0)
-    w = _PdfWriter()
-    catalog = w.reserve()
-    pages_num = w.reserve()
-    page_nums = []
-    for pno, text in enumerate(page_texts, 1):
+    def image(w: _PdfWriter, pno: int, text: str):
         # cols=32 keeps the EBCOT bitplane loops cheap per fixture page
         iw, ih, px = text_to_pixels(text, cols=32)
-        payload = _jp2_encode(
-            iw, ih, px, levels=2, jp2_wrap=not raw_codestream
+        filt, payload = _filtered(
+            b"/JPXDecode",
+            _jp2_encode(iw, ih, px, levels=2, jp2_wrap=not raw_codestream),
+            pno == corrupt_page,
+            flate_wrap,
         )
-        if pno == corrupt_page:
-            payload = payload[: max(4, len(payload) // 3)]
-        if flate_wrap:
-            filt = b"/Filter [/FlateDecode /JPXDecode]"
-            payload = _zlib.compress(payload)
-        else:
-            filt = b"/Filter /JPXDecode"
-        img_num = w.add_stream(
-            b"/Type /XObject /Subtype /Image /Width %d /Height %d"
-            b" /ColorSpace /DeviceGray /BitsPerComponent 8 %s"
-            % (iw, ih, filt),
-            payload,
-            compress=False,
-        )
-        content_num = w.add_stream(
-            b"", b"q\n612 0 0 792 0 0 cm\n/Im1 Do\nQ\n"
-        )
-        page_nums.append(
-            w.add(
-                b"<< /Type /Page /Parent %d 0 R /Contents %d 0 R"
-                b" /Resources << /XObject << /Im1 %d 0 R >> >> >>"
-                % (pages_num, content_num, img_num)
-            )
-        )
-    w.fill(catalog, b"<< /Type /Catalog /Pages %d 0 R >>" % pages_num)
-    kids = b" ".join(b"%d 0 R" % n for n in page_nums)
-    w.fill(
-        pages_num,
-        b"<< /Type /Pages /Kids [%s] /Count %d /MediaBox [0 0 %.2f %.2f] >>"
-        % (kids, len(page_nums), media[0], media[1]),
-    )
-    return w.build(catalog)
+        return iw, ih, b"/ColorSpace /DeviceGray /BitsPerComponent 8 %s" % filt, payload
+
+    return _image_pages_pdf(page_texts, image)
 
 
 def gen_jpx_scan_rows(n_docs: int = 6) -> List[dict]:
@@ -1972,21 +1831,15 @@ def make_scan_pdf_jbig2(
     (1-based, 0 = none) truncates that page's stream mid-data: the
     decoder must raise cleanly and the payload fall back to opaque
     bytes (fingerprint OCR), never crash."""
-    import zlib as _zlib
-
     from pdf_ocr_spark.kernels.pdf.jbig2 import (
         encode_bilevel,
         encode_bilevel_mmr,
     )
     from pdf_ocr_spark.kernels.pixelcode import text_to_pixels
 
-    media = (612.0, 792.0)
-    w = _PdfWriter()
-    catalog = w.reserve()
-    pages_num = w.reserve()
-    page_nums = []
-    for pno, text in enumerate(page_texts, 1):
+    def image(w: _PdfWriter, pno: int, text: str):
         iw, ih, px = text_to_pixels(text)
+        parms = b""
         if coding == "symbol":
             payload = _marker_to_symbol_page(iw, ih, px)
         elif coding == "symbol_transposed":
@@ -2009,46 +1862,19 @@ def make_scan_pdf_jbig2(
             symbols, inst = _marker_runs(iw, ih, px)
             glob, payload = encode_symbol_page_globals(
                 iw, ih, symbols, inst)
-        else:
-            payload = encode_bilevel(iw, ih, px)
-        if pno == corrupt_page:
-            payload = payload[: max(4, len(payload) // 3)]
-        parms = b""
-        if coding == "symbol_globals":
             # shared symbol dictionary rides in a Flate-compressed
             # JBIG2Globals stream (ISO 32000-1 7.4.7)
             glob_num = w.add_stream(b"", glob, compress=True)
             parms = b" /DecodeParms << /JBIG2Globals %d 0 R >>" % glob_num
-        if flate_wrap:
-            filt = b"/Filter [/FlateDecode /JBIG2Decode]"
-            payload = _zlib.compress(payload)
         else:
-            filt = b"/Filter /JBIG2Decode"
-        img_num = w.add_stream(
-            b"/Type /XObject /Subtype /Image /Width %d /Height %d"
-            b" /ColorSpace /DeviceGray /BitsPerComponent 1 %s%s"
-            % (iw, ih, filt, parms),
-            payload,
-            compress=False,
+            payload = encode_bilevel(iw, ih, px)
+        filt, payload = _filtered(
+            b"/JBIG2Decode", payload, pno == corrupt_page, flate_wrap
         )
-        content_num = w.add_stream(
-            b"", b"q\n612 0 0 792 0 0 cm\n/Im1 Do\nQ\n"
-        )
-        page_nums.append(
-            w.add(
-                b"<< /Type /Page /Parent %d 0 R /Contents %d 0 R"
-                b" /Resources << /XObject << /Im1 %d 0 R >> >> >>"
-                % (pages_num, content_num, img_num)
-            )
-        )
-    w.fill(catalog, b"<< /Type /Catalog /Pages %d 0 R >>" % pages_num)
-    kids = b" ".join(b"%d 0 R" % n for n in page_nums)
-    w.fill(
-        pages_num,
-        b"<< /Type /Pages /Kids [%s] /Count %d /MediaBox [0 0 %.2f %.2f] >>"
-        % (kids, len(page_nums), media[0], media[1]),
-    )
-    return w.build(catalog)
+        tail = b"/ColorSpace /DeviceGray /BitsPerComponent 1 %s%s" % (filt, parms)
+        return iw, ih, tail, payload
+
+    return _image_pages_pdf(page_texts, image)
 
 
 def gen_jbig2_scan_rows(n_docs: int = 16) -> List[dict]:
@@ -2064,18 +1890,8 @@ def gen_jbig2_scan_rows(n_docs: int = 16) -> List[dict]:
     doc carries a truncated symbol-coded stream on page 1 (decode must
     fail loudly, extract must not).
     Deterministic — same rows every call."""
-    rng = random.Random(0x1B162)
-    rows = []
-    for d in range(n_docs):
-        n_pages = 1 + d % 3
-        texts = []
-        for p in range(n_pages):
-            lang = ("en", "zh")[(d + p) % 2]
-            texts.append(
-                f"jbig2 doc {d} page {p + 1}\n" + _sentence(rng, lang)
-            )
-        corrupt = 1 if d == n_docs - 1 else 0
-        flate = d == n_docs - 2
+
+    def pdf(d: int, texts: List[str], corrupt: int) -> bytes:
         if d in (7, 8) or d == n_docs - 1:
             coding = "symbol"
         elif d == 9:
@@ -2092,20 +1908,11 @@ def gen_jbig2_scan_rows(n_docs: int = 16) -> List[dict]:
             coding = "mmr"
         else:
             coding = "generic"
-        rows.append(
-            dict(
-                url=f"https://example.test/docs/jbig2scan/{d:06d}",
-                warc_ts=datetime.datetime(2025, 1, 6, 0, 0, d),
-                html=make_scan_pdf_jbig2(
-                    texts, corrupt_page=corrupt, flate_wrap=flate,
-                    coding=coding,
-                ),
-                text="",
-                lang="en",
-                kind="pdf_jbig2_scan",
-            )
+        return make_scan_pdf_jbig2(
+            texts, corrupt_page=corrupt, flate_wrap=d == n_docs - 2, coding=coding
         )
-    return rows
+
+    return _scan_rows(n_docs, 0x1B162, "jbig2", "jbig2", 6, pdf)
 
 
 def gen_microdata_rows(n: int, seed: int = 31) -> List[dict]:

@@ -63,7 +63,6 @@ from pyspark.sql import functions as F
 
 from pdf_ocr_spark.pipeline.extract_job import (
     input_split_lineage,
-    local_frame,
     read_pages,
     run_job,
     write_docs,
@@ -172,7 +171,7 @@ def read_snapshot_splits(spark: SparkSession, table_path: str) -> Optional[DataF
     """Input-split lineage of every committed run: which input file
     presented which url range TO the run (recorded from the raw scan,
     before the resume filter — ``input_file_name()`` only resolves on a
-    single-source plan).  Absent for in-memory inputs."""
+    single-source plan).  None until a committed run appends docs."""
     return _read_run_side_dirs(spark, table_path, "_sidecar_splits")
 
 
@@ -321,15 +320,12 @@ def run_extraction_snapshot(
             sidecar.withColumn(
                 "run_id", F.lit(run_id)
             ).write.mode("overwrite").parquet(os.path.join(run_dir, "_sidecar"))
-            # one row per input file, none for an in-memory source
-            splits = input_split_lineage(pages)
-            rows = splits.collect()
-            if rows:
-                local_frame(spark, rows, splits.schema).withColumn(
-                    "run_id", F.lit(run_id)
-                ).write.mode("overwrite").parquet(
-                    os.path.join(run_dir, "_sidecar_splits")
-                )
+            # one row per input file: read_pages is always a file scan
+            input_split_lineage(pages).withColumn(
+                "run_id", F.lit(run_id)
+            ).coalesce(1).write.mode("overwrite").parquet(
+                os.path.join(run_dir, "_sidecar_splits")
+            )
         # the commit point — everything above is invisible until here
         commit_run(table_path, run_id, n)
 

@@ -64,15 +64,14 @@ def test_commit_and_resume_job_budget(spark, corpus_parquet, tmp_path):
 
 
 def test_snapshot_commit_job_budget(spark, corpus_parquet, tmp_path):
-    """A snapshot commit of the 100-doc corpus runs at most 7 jobs (8
-    with a probe job for file-scan input before the split lineage): its
-    split rows, one per input file, are collected once and written only
-    when there are any."""
+    """A snapshot commit of the 100-doc corpus runs at most 6 jobs: its
+    split rows, one per input file, are written straight from the scan's
+    aggregate, with no collect."""
     table = str(tmp_path / "table")
     run = lambda: snapshot_log.run_extraction_snapshot(spark, corpus_parquet, table)  # noqa: E731
     n, commit_jobs = _jobs(spark, "snapshot_budget_commit", run)
     assert n == 100
-    assert commit_jobs <= 7, commit_jobs
+    assert commit_jobs <= 6, commit_jobs
     splits = snapshot_log.read_snapshot_splits(spark, table).collect()
     assert [(r["input_file"].rsplit("/", 1)[1], r["n_rows"]) for r in splits] == [
         ("pages.parquet", 100)

@@ -210,18 +210,35 @@ def test_content_dedup_across_runs(spark, tmp_path):
     assert {r["url"] for r in t2.collect()} == urls1 | {html_rows[3]["url"]}
 
 
+def _warc_segments(spark, corpus_parquet, tmp_path) -> str:
+    """The corpus rewritten as two WARC archives (``seg-<i>.warc``)."""
+    from pdf_ocr_spark.sources.warc import pages_to_warc
+
+    src = tmp_path / "warcs"
+    src.mkdir()
+    pages = spark.read.parquet(corpus_parquet).repartition(2, "url")
+    for i, r in enumerate(pages_to_warc(pages).collect()):
+        (src / f"seg-{i}.warc").write_bytes(bytes(r.warc))
+    return str(src)
+
+
 def test_input_split_lineage_sidecar(spark, corpus_parquet, tmp_path):
     """Each committed run records which input file contributed which url
-    range (the north-rule 'input split' lineage facet)."""
+    range (the north-rule 'input split' lineage facet), for parquet and
+    for raw WARC input alike."""
     from pdf_ocr_spark.pipeline.snapshot_log import read_snapshot_splits
 
-    table = str(tmp_path / "stable")
-    run_extraction_snapshot(spark, corpus_parquet, table, num_partitions=4)
-    splits = read_snapshot_splits(spark, table)
-    assert splits is not None
-    rows = splits.collect()
-    assert sum(r["n_rows"] for r in rows) == 100
-    for r in rows:
-        assert r["input_file"].endswith(".parquet")
-        assert r["min_url"] <= r["max_url"] and r["n_bytes"] > 0
-        assert r["run_id"]
+    warcs = _warc_segments(spark, corpus_parquet, tmp_path)
+    for fmt, src, n_files in (("parquet", corpus_parquet, 1), ("warc", warcs, 2)):
+        table = str(tmp_path / f"stable-{fmt}")
+        n = run_extraction_snapshot(spark, src, table, num_partitions=4, input_format=fmt)
+        assert n == 100
+        splits = read_snapshot_splits(spark, table)
+        assert splits is not None
+        rows = splits.collect()
+        assert len(rows) == n_files
+        assert sum(r["n_rows"] for r in rows) == n
+        for r in rows:
+            assert r["input_file"].endswith("." + fmt)
+            assert r["min_url"] <= r["max_url"] and r["n_bytes"] > 0
+            assert r["run_id"]
